@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 # the driver may load this file by path from any cwd — make the
 # sibling package importable regardless
@@ -1458,19 +1459,15 @@ def q_media_plans(spark: SparkSession, sf: str) -> DataFrame:
     # r20 (guide §2.6): the pHash kernel feeds NO pair/cluster stage —
     # it is the one payload kernel outside the mcluster dependency
     # chain — so its materialization is submitted from a background
-    # thread here and joined after connected_components below: the
-    # heaviest kernel (measured 0.73 s, the slot's largest single
-    # branch) runs concurrently with the CC jobs instead of serially
-    # inside the final union count. The thread is the checkpoint's
+    # thread right before connected_components below and joined after
+    # it: the heaviest kernel (measured 0.73 s, the slot's largest
+    # single branch) runs concurrently with the CC jobs instead of
+    # serially inside the final union count. The thread is the checkpoint's
     # ONLY consumer until result() returns (the r19 lazy-checkpoint
     # race needs concurrent consumers).
     ph_hashes = multimodal.perceptual_hash(
         with_variants, method="phash"
     ).localCheckpoint(eager=False)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    _ph_pool = _TPE(max_workers=1)
-    _ph_fut = _ph_pool.submit(ph_hashes.count)
     ph = ph_hashes.select(
         F.lit("phash").alias("tag"),
         "media_id",
@@ -1544,12 +1541,13 @@ def q_media_plans(spark: SparkSession, sf: str) -> DataFrame:
     )
     # join the background pHash materialization before returning: the
     # final union count must read its checkpoint blocks, not race a
-    # second materialization of the same lazy checkpoint
-    try:
+    # second materialization of the same lazy checkpoint. Leaving the
+    # block by an exception also waits for the pool, so no job or
+    # thread outlives the call.
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        ph_done = pool.submit(ph_hashes.count)
         mcluster_cc = dedup.connected_components(medges)
-    finally:
-        _ph_fut.result()
-        _ph_pool.shutdown()
+        ph_done.result()
     mcluster = mcluster_cc.select(
         F.lit("mcluster").alias("tag"),
         F.col("node").alias("media_id"),
@@ -1677,18 +1675,17 @@ def q_corpus_sample(spark: SparkSession, sf: str) -> DataFrame:
     # builds the remaining (lazy) branches. The chain probe's lazy
     # checkpoint has ONE consumer until its future resolves (no r19
     # lazy-race), and each pooled job's plans/results are identical to
-    # the serial construction.
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    _pool = _TPE(max_workers=2)
-    try:
-        _f_docs = _pool.submit(
+    # the serial construction. The block spans every consumer up to the
+    # last result(), so an exception anywhere in it still waits for the
+    # pooled jobs before it propagates.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        _f_docs = pool.submit(
             lambda: load_table(spark, sf, "documents")
             .filter(F.col("doc_id").isNotNull())
             .withColumn("__fp", stable_fingerprint("text"))
             .localCheckpoint()
         )
-        _f_prof = _pool.submit(
+        _f_prof = pool.submit(
             lambda: cleaning.profile_table(
                 load_table(spark, sf, "orders").select(*_PROFILE_COLS)
             )
@@ -1720,135 +1717,134 @@ def q_corpus_sample(spark: SparkSession, sf: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n"), F.sum("__id").alias("sum_ids")
             ).select("tag", "grp", "n", "sum_ids")
 
-        _f_split = _pool.submit(_build_split)
-    except BaseException:
-        _pool.shutdown(wait=True)
-        raise
-    # main thread: build the lazy branches below while the pooled
-    # profile scans and the chain-probe count run; both futures are
-    # resolved right before the branches that consume them
-    samp = corpus_prep.stratified_sample(
-        docs, "doc_id", "lang", _SAMPLE_FRACTIONS,
-        default_fraction=_SAMPLE_DEFAULT, seed=_SAMPLE_SEED,
-    )
-    mix = corpus_prep.domain_mix(
-        docs, "doc_id", "lang", _MIX_COUNTS, seed=_MIX_SEED
-    )
+        _f_split = pool.submit(_build_split)
+        # main thread: build the lazy branches below while the pooled
+        # profile scans and the chain-probe count run; both futures are
+        # resolved right before the branches that consume them
+        samp = corpus_prep.stratified_sample(
+            docs, "doc_id", "lang", _SAMPLE_FRACTIONS,
+            default_fraction=_SAMPLE_DEFAULT, seed=_SAMPLE_SEED,
+        )
+        mix = corpus_prep.domain_mix(
+            docs, "doc_id", "lang", _MIX_COUNTS, seed=_MIX_SEED
+        )
 
-    def digest(df: DataFrame, tag: str) -> DataFrame:
-        return corpus_prep.sample_summary(df, "doc_id", "lang").select(
-            F.lit(tag).alias("tag"),
-            F.col("lang").alias("grp"),
+        def digest(df: DataFrame, tag: str) -> DataFrame:
+            return corpus_prep.sample_summary(df, "doc_id", "lang").select(
+                F.lit(tag).alias("tag"),
+                F.col("lang").alias("grp"),
+                F.col("n_kept").alias("n"),
+                "sum_ids",
+            )
+
+        head = (
+            corpus_prep.interleave(docs, "doc_id", seed=_SHUF_SEED)
+            .select("doc_id")
+            .limit(_HEAD_N)
+        )
+        head = head.select(
+            F.lit("head").alias("tag"),
+            F.col("doc_id").cast("string").alias("grp"),
+            # partition-less window = single-task sort, deliberately: the
+            # frame is the LIMIT'd head (_HEAD_N rows), not the corpus —
+            # the WindowExec warning it prints is about a bounded frame
+            F.row_number()
+            .over(
+                Window.orderBy(
+                    corpus_prep.sample_key("doc_id", _SHUF_SEED),
+                    F.col("doc_id"),
+                )
+            )
+            .cast("bigint")
+            .alias("n"),
+            F.lit(None).cast("bigint").alias("sum_ids"),
+        )
+        # r6 widening: temperature mix (α=0.5 — per-lang quota ∝ √n,
+        # integer-quantized weights so the allocation is oracle-exact) and
+        # greedy char-budget fill per lang (token_budget_take with
+        # length(text) as the budget unit)
+        temp = corpus_prep.domain_mix_temperature(
+            docs, "doc_id", "lang", total_out=_TEMP_TOTAL, alpha=0.5,
+            seed=_TEMP_SEED,
+        )
+        budget = corpus_prep.token_budget_take(
+            docs.withColumn("__chars", F.length("text")),
+            "doc_id",
+            "lang",
+            "__chars",
+            budget=_BUDGET_CHARS,
+            seed=_BUDGET_SEED,
+        )
+        old_snap = docs.filter(F.col("doc_id") % 7 != 1)
+        new_snap = docs.filter(F.col("doc_id") % 7 != 2).withColumn(
+            "text",
+            F.when(
+                F.col("doc_id") % 7 == 3,
+                F.concat(F.col("text"), F.lit(" r6drift")),
+            ).otherwise(F.col("text")),
+        )
+        diff = corpus_prep.corpus_diff(
+            old_snap, new_snap, "doc_id", "text"
+        ).select(
+            F.lit("diff").alias("tag"),
+            F.col("change").alias("grp"),
+            F.col("doc_id").cast("bigint").alias("n"),
+            F.lit(None).cast("bigint").alias("sum_ids"),
+        )
+        # r6 widening: declarative data-quality checks (cleaning.
+        # data_checks — the dbt-test/Deequ idea) over pinned orders
+        # columns. grp = kind|target|sample_key; n = violation count.
+        # The accepted-values check deliberately omits 'P' so the slot
+        # exercises a FAILING check with a deterministic sample value.
+        checks = cleaning.data_checks(
+            load_table(spark, sf, "orders").select(
+                "o_orderkey", "o_custkey", "o_orderstatus"
+            ),
+            unique=[["o_orderkey"], ["o_orderstatus"]],
+            non_null=["o_custkey"],
+            accepted={"o_orderstatus": ["O", "F"]},
+            ranges={"o_orderkey": (1, 10**9)},
+        ).select(
+            F.lit("check").alias("tag"),
+            F.concat_ws(
+                "|", "check", "target", F.coalesce("sample_key", F.lit("-"))
+            ).alias("grp"),
+            F.col("n_violations").alias("n"),
+            F.lit(None).cast("bigint").alias("sum_ids"),
+        )
+        # r8 widening: leakage-safe split — cluster map = exact-fingerprint
+        # groups (rep = min doc_id per normalized-content group), so every
+        # exact duplicate lands in its representative's split; grp = split
+        # name, same kept-count + id-checksum digest as sample/mix — built
+        # by the pooled _build_split above (its chain-probe count ran
+        # concurrently with the profile scans); joined here, right where
+        # the serial construction produced it.
+        split = _f_split.result()
+        # r8 widening: uniform per-source cap (prefilter=True exercises the
+        # scale path; output is bit-identical to the plain window — the
+        # oracle twin IS the plain window, so the prefix-exactness argument
+        # is hash-checked every round, not just asserted)
+        capped = corpus_prep.cap_per_group(
+            docs, "doc_id", "source", _CAP_N, seed=_CAP_SEED, prefilter=True
+        )
+        cap = corpus_prep.sample_summary(capped, "doc_id", "source").select(
+            F.lit("cap").alias("tag"),
+            F.col("source").alias("grp"),
             F.col("n_kept").alias("n"),
             "sum_ids",
         )
-
-    head = (
-        corpus_prep.interleave(docs, "doc_id", seed=_SHUF_SEED)
-        .select("doc_id")
-        .limit(_HEAD_N)
-    )
-    head = head.select(
-        F.lit("head").alias("tag"),
-        F.col("doc_id").cast("string").alias("grp"),
-        # partition-less window = single-task sort, deliberately: the
-        # frame is the LIMIT'd head (_HEAD_N rows), not the corpus —
-        # the WindowExec warning it prints is about a bounded frame
-        F.row_number()
-        .over(
-            Window.orderBy(
-                corpus_prep.sample_key("doc_id", _SHUF_SEED), F.col("doc_id")
-            )
+        prof = _f_prof.result().select(
+            F.lit("profile").alias("tag"),
+            F.concat_ws(
+                "|",
+                "col_name",
+                F.col("n_rows").cast("string"),
+                F.coalesce("min_str", F.lit("<null>")),
+                F.coalesce("max_str", F.lit("<null>")),
+            ).alias("grp"),
+            F.col("n_nulls").alias("n"),
+            F.col("n_distinct").alias("sum_ids"),
         )
-        .cast("bigint")
-        .alias("n"),
-        F.lit(None).cast("bigint").alias("sum_ids"),
-    )
-    # r6 widening: temperature mix (α=0.5 — per-lang quota ∝ √n,
-    # integer-quantized weights so the allocation is oracle-exact) and
-    # greedy char-budget fill per lang (token_budget_take with
-    # length(text) as the budget unit)
-    temp = corpus_prep.domain_mix_temperature(
-        docs, "doc_id", "lang", total_out=_TEMP_TOTAL, alpha=0.5,
-        seed=_TEMP_SEED,
-    )
-    budget = corpus_prep.token_budget_take(
-        docs.withColumn("__chars", F.length("text")),
-        "doc_id",
-        "lang",
-        "__chars",
-        budget=_BUDGET_CHARS,
-        seed=_BUDGET_SEED,
-    )
-    old_snap = docs.filter(F.col("doc_id") % 7 != 1)
-    new_snap = docs.filter(F.col("doc_id") % 7 != 2).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 7 == 3,
-            F.concat(F.col("text"), F.lit(" r6drift")),
-        ).otherwise(F.col("text")),
-    )
-    diff = corpus_prep.corpus_diff(old_snap, new_snap, "doc_id", "text").select(
-        F.lit("diff").alias("tag"),
-        F.col("change").alias("grp"),
-        F.col("doc_id").cast("bigint").alias("n"),
-        F.lit(None).cast("bigint").alias("sum_ids"),
-    )
-    # r6 widening: declarative data-quality checks (cleaning.
-    # data_checks — the dbt-test/Deequ idea) over pinned orders
-    # columns. grp = kind|target|sample_key; n = violation count.
-    # The accepted-values check deliberately omits 'P' so the slot
-    # exercises a FAILING check with a deterministic sample value.
-    checks = cleaning.data_checks(
-        load_table(spark, sf, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus"
-        ),
-        unique=[["o_orderkey"], ["o_orderstatus"]],
-        non_null=["o_custkey"],
-        accepted={"o_orderstatus": ["O", "F"]},
-        ranges={"o_orderkey": (1, 10**9)},
-    ).select(
-        F.lit("check").alias("tag"),
-        F.concat_ws(
-            "|", "check", "target", F.coalesce("sample_key", F.lit("-"))
-        ).alias("grp"),
-        F.col("n_violations").alias("n"),
-        F.lit(None).cast("bigint").alias("sum_ids"),
-    )
-    # r8 widening: leakage-safe split — cluster map = exact-fingerprint
-    # groups (rep = min doc_id per normalized-content group), so every
-    # exact duplicate lands in its representative's split; grp = split
-    # name, same kept-count + id-checksum digest as sample/mix — built
-    # by the pooled _build_split above (its chain-probe count ran
-    # concurrently with the profile scans); joined here, right where
-    # the serial construction produced it.
-    split = _f_split.result()
-    _pool.shutdown()
-    # r8 widening: uniform per-source cap (prefilter=True exercises the
-    # scale path; output is bit-identical to the plain window — the
-    # oracle twin IS the plain window, so the prefix-exactness argument
-    # is hash-checked every round, not just asserted)
-    capped = corpus_prep.cap_per_group(
-        docs, "doc_id", "source", _CAP_N, seed=_CAP_SEED, prefilter=True
-    )
-    cap = corpus_prep.sample_summary(capped, "doc_id", "source").select(
-        F.lit("cap").alias("tag"),
-        F.col("source").alias("grp"),
-        F.col("n_kept").alias("n"),
-        "sum_ids",
-    )
-    prof = _f_prof.result().select(
-        F.lit("profile").alias("tag"),
-        F.concat_ws(
-            "|",
-            "col_name",
-            F.col("n_rows").cast("string"),
-            F.coalesce("min_str", F.lit("<null>")),
-            F.coalesce("max_str", F.lit("<null>")),
-        ).alias("grp"),
-        F.col("n_nulls").alias("n"),
-        F.col("n_distinct").alias("sum_ids"),
-    )
     return (
         digest(samp, "sample")
         .unionByName(digest(mix, "mix"))

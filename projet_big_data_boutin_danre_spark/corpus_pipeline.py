@@ -48,7 +48,8 @@ tools/scale_probe.py).
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+import functools
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -988,31 +989,6 @@ def incremental_ingest(
     fp_path = f"{out_root}/fingerprints"
     docs_path = f"{out_root}/docs"
     bands_path = f"{out_root}/band_buckets"
-    # geometry-encoded layer name: a filter's bit positions are only
-    # meaningful under the (k, hex_chars) that built it, and a PROBE
-    # against a filter of different geometry produces silent false
-    # negatives — the one failure mode Bloom admission must never
-    # have. Encoding the geometry in the path makes a constant change
-    # self-healing: the old layer is simply absent under the new name
-    # and the filter rebuilds from the fingerprint layer.
-    bloom_hex = bloom_ops.HEX_CHARS_DEFAULT
-    if bloom_guard:
-        # rebuild-on-fill grows the geometry; probe/build must follow
-        # the largest layer present (see _discover_bloom_geometry)
-        bloom_hex = (
-            _discover_bloom_geometry(spark, out_root)
-            or bloom_ops.HEX_CHARS_DEFAULT
-        )
-    bloom_path = _bloom_layer_path(out_root, bloom_hex)
-    url_bloom_hex = bloom_ops.HEX_CHARS_DEFAULT
-    if url_bloom:
-        url_bloom_hex = (
-            _discover_bloom_geometry(spark, out_root, layer="url_bloom")
-            or bloom_ops.HEX_CHARS_DEFAULT
-        )
-    url_bloom_path = _bloom_layer_path(
-        out_root, url_bloom_hex, layer="url_bloom"
-    )
     # text index (r16): presence-driven, like the filter-freshness
     # rule — a discovered index is maintained by every admitting batch
     # and read by the verify stage; no knob, opt out = delete the
@@ -1266,7 +1242,6 @@ def incremental_ingest(
         n_domain_blocked = before_b - batch.count()
 
     n_url_skipped = 0
-    batch_urls = None
     # heal-coverage base (r17, ADVICE medium): id frames computed
     # BEFORE each within-batch keeper drop, accumulated so
     # prior_batch_ids below can cover batch-composition-dependent
@@ -1328,7 +1303,6 @@ def incremental_ingest(
     arrived = new_docs.count()
     n_near_skipped = 0
     n_near_rescued = 0
-    batch_bands = None
     if near_dup:
         if "__nd" in batch.columns or "__ndr" in batch.columns:
             raise ValueError(
@@ -1422,11 +1396,6 @@ def incremental_ingest(
             n_near_rescued += n_raw_nonkeep - n_wb_blocked
     n_media_skipped = 0
     n_video_no_duration = 0
-    batch_mhashes = None
-    batch_vside = None
-    batch_awins = None
-    batch_vside_app = None
-    batch_awins_app = None
     if media_guard:
         if media_col not in batch.columns:
             raise ValueError(
@@ -1518,27 +1487,19 @@ def incremental_ingest(
             # full set (shrinking it would shrink n_a and INFLATE the
             # probe's Jaccard); n_frames was stamped above from the
             # full set, so a capped hash can only lower similarity.
-            batch_vside_app = batch_vside
-            batch_awins_app = batch_awins
-            if media_max_bucket is not None:
-                vhot = (
-                    batch_vside.groupBy("hash64")
+            def _capped(df: DataFrame, key: str) -> DataFrame:
+                if media_max_bucket is None:
+                    return df
+                hot = (
+                    df.groupBy(key)
                     .agg(F.count(F.lit(1)).alias("__df"))
                     .filter(F.col("__df") > int(media_max_bucket))
-                    .select("hash64")
+                    .select(key)
                 )
-                batch_vside_app = batch_vside.join(
-                    F.broadcast(vhot), "hash64", "left_anti"
-                )
-                ahot = (
-                    batch_awins.groupBy("hash32")
-                    .agg(F.count(F.lit(1)).alias("__df"))
-                    .filter(F.col("__df") > int(media_max_bucket))
-                    .select("hash32")
-                )
-                batch_awins_app = batch_awins.join(
-                    F.broadcast(ahot), "hash32", "left_anti"
-                )
+                return df.join(F.broadcast(hot), key, "left_anti")
+
+            batch_vside_app = _capped(batch_vside, "hash64")
+            batch_awins_app = _capped(batch_awins, "hash32")
         else:
             # legacy (r12) shape — kinds=(): every payload hashes as
             # an image; the caller owns kind routing
@@ -1592,31 +1553,67 @@ def incremental_ingest(
         n_media_skipped += mmembers.filter(
             F.col("node") != F.col("component")
         ).count()
+    # The guard sidecars in their crash-commit order — each appends
+    # after docs → ids → fingerprints and before the text-index tail,
+    # so a crash anywhere before a sidecar's append leaves that batch
+    # invisible to its guard only until the replay's id-absence heal
+    # below backfills it. Media rows append their capped views
+    # (media_max_bucket) on both paths, so a heal cannot smuggle the
+    # over-common hashes past the append-time cap; NULL-band image
+    # rows (unreadable payloads) carry no evidence and stay out.
+    sidecars: list[_Sidecar] = []
+    if near_dup:
+        sidecars.append(
+            _Sidecar("band_buckets", batch_bands, "id", "healed_bands",
+                     batch_bands)
+        )
+    if media_guard:
+        sidecars.append(
+            _Sidecar("media_bands",
+                     batch_mhashes.filter(F.col("band0").isNotNull()),
+                     id_col, "healed_media", batch_mhashes)
+        )
+    if media_routed:
+        sidecars += [
+            _Sidecar("media_vframes", batch_vside_app, id_col,
+                     "healed_video", batch_vside),
+            _Sidecar("media_awins", batch_awins_app, id_col,
+                     "healed_audio", batch_awins),
+        ]
+    if url_guard:
+        sidecars.append(
+            _Sidecar("url_keys", batch_urls, id_col, "healed_urls",
+                     batch_urls)
+        )
     if bucketed and spark.catalog.tableExists(fp_table):
         seen = spark.table(fp_table).select("fingerprint")
     elif not bucketed and _exists(spark, fp_path):
         seen = spark.read.parquet(fp_path).select("fingerprint")
     else:
         seen = None
-    n_bloom_fastpath = 0
-    blm = None  # probe-time filter, reused by the write path below
+    # the two Bloom lineages — each a cache of one key layer, probed
+    # in front of its exact join when the knob is on, and maintained
+    # by every admitting batch whenever the layer is present
+    fp_filter = _BloomLineage(
+        spark, out_root, "bloom", "fingerprint",
+        keys=None if seen is None else (lambda: seen),
+        guard=bloom_guard, max_fill=bloom_max_fill,
+    )
+    url_history = url_guard and _exists(spark, url_keys_path)
+
+    def url_keys() -> DataFrame:
+        return spark.read.parquet(url_keys_path).select("canonical_url")
+
+    url_filter = _BloomLineage(
+        spark, out_root, "url_bloom", "canonical_url",
+        keys=url_keys if url_history else None,
+        guard=url_bloom, max_fill=url_bloom_max_fill,
+    )
     if seen is not None and bloom_guard:
         # Bloom pre-filter: map-side probe (k broadcast joins, zero
         # batch exchanges); only the "maybe seen" residue pays the
-        # exact anti-join. A missing/unreadable filter (crash during
-        # its overwrite) rebuilds from the authoritative fingerprint
-        # layer — the filter is a cache, never the source of truth.
-        blm = _read_bloom_layer(spark, bloom_path)
-        if blm is None:
-            blm = bloom_ops.bloom_build(
-                seen, "fingerprint", hex_chars=bloom_hex
-            ).localCheckpoint()
-        probed = bloom_ops.bloom_probe(
-            batch, blm, "fingerprint", hex_chars=bloom_hex
-        ).localCheckpoint()
-        definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        n_bloom_fastpath = definite.count()
+        # exact anti-join
+        definite, maybe = fp_filter.probe(batch)
         admitted = definite.unionByName(
             maybe.join(seen, "fingerprint", "left_anti")
         )
@@ -1624,9 +1621,7 @@ def incremental_ingest(
         admitted = batch.join(seen, "fingerprint", "left_anti")
     else:
         admitted = batch
-    n_url_bloom_fastpath = 0
-    ublm = None  # url-bloom probe-time filter, reused by the write path
-    if url_guard and _exists(spark, url_keys_path):
+    if url_history:
         # URL history probe: a ONE-column scan of the url_keys
         # sidecar probed by the BROADCAST batch keys — the
         # lsh_seen_ids/phash_seen_ids inversion (r15 advisor): a
@@ -1643,58 +1638,29 @@ def incremental_ingest(
             # cost grows with lake size unmitigated (the sidecar SCAN
             # — measured exponent 0.55 to 32M rows, SCALE.md §r15;
             # the band/media probes read constant-width sidecars,
-            # the fingerprint guard already has bloom_guard). The
-            # batch's canonical urls are probed map-side first;
-            # "definitely new" urls cannot be history hits, so only
+            # the fingerprint guard already has bloom_guard). Only
             # the "maybe" residue joins the sidecar scan — and a
             # batch with NO maybes (the novel-stream common case)
-            # skips the corpus-sized scan entirely. False positives
-            # cost one confirmed join row; false negatives are
-            # impossible by the merge-before-docs write order below.
-            ublm = _read_bloom_layer(spark, url_bloom_path)
-            if ublm is None:
-                # absent/torn filter: rebuild from the authoritative
-                # url_keys layer — the filter is a cache, never the
-                # source of truth
-                ublm = bloom_ops.bloom_build(
-                    spark.read.parquet(url_keys_path).select(
-                        "canonical_url"
-                    ),
-                    "canonical_url",
-                    hex_chars=url_bloom_hex,
-                ).localCheckpoint()
-            uprobed = bloom_ops.bloom_probe(
-                batch_urls, ublm, "canonical_url",
-                hex_chars=url_bloom_hex,
-            ).localCheckpoint()
-            probe_urls = uprobed.filter(F.col("maybe_seen")).drop(
-                "maybe_seen"
-            )
-            n_url_bloom_fastpath = uprobed.filter(
-                ~F.col("maybe_seen")
-            ).count()
+            # skips the corpus-sized scan entirely.
+            _, probe_urls = url_filter.probe(batch_urls)
             if probe_urls.first() is None:
                 probe_urls = None
         if probe_urls is not None:
             url_hits = (
-                spark.read.parquet(url_keys_path)
-                .select("canonical_url")
+                url_keys()
                 .join(F.broadcast(probe_urls), "canonical_url")
                 .select(id_col)
                 .distinct()
             )
-            uf = admitted.join(
-                url_hits.withColumn("__ug", F.lit(True)), id_col, "left"
-            ).localCheckpoint()
-            n_url_skipped += uf.filter(F.col("__ug")).count()
-            admitted = uf.filter(F.col("__ug").isNull()).drop("__ug")
+            admitted, n_hit, _ = _flag_drop(
+                admitted, url_hits, id_col, "__ug"
+            )
+            n_url_skipped += n_hit
     if near_dup and _exists(spark, bands_path):
         # history probe: batch band rows BROADCAST against a
         # two-column scan of the persisted band layer — history is
         # never shuffled or text-read per batch (lsh_seen_ids plan
-        # notes). Checkpoint first so the semi (count) + anti
-        # (filter) pair below doesn't re-run the fingerprint guard
-        # subplan twice.
+        # notes).
         seen_b = spark.read.parquet(bands_path)
         rescued_ids = None
         if near_dup_verify is None:
@@ -1751,36 +1717,16 @@ def incremental_ingest(
                 # every one of these would have been blocked, so the
                 # count is the knob's measured value per batch (and
                 # the tuning signal for the Jaccard threshold). Ids
-                # only, batch-bounded; joined below in the same
-                # flag-join that counts the blocks.
+                # only, batch-bounded; counted by the same flag-join
+                # that counts the blocks (rescued rows stay admitted).
                 rescued_ids = cand_pairs.select(F.col(id_col)).join(
                     near_hits, id_col, "left_anti"
-                )
-        # ONE flag-join (the id-guard trick): count + filter both read
-        # the checkpointed result instead of paying a semi and an anti
-        # join over the guard subplan separately; the rescued flag
-        # rides the same join (rescued rows stay admitted — the flag
-        # only feeds the counter)
-        nd_flagged = admitted.join(
-            near_hits.withColumn("__nd", F.lit(True)), id_col, "left"
+                ).distinct()
+        admitted, n_hit, n_rescued = _flag_drop(
+            admitted, near_hits, id_col, "__nd", rescued=rescued_ids
         )
-        if rescued_ids is not None:
-            nd_flagged = nd_flagged.join(
-                rescued_ids.distinct().withColumn("__ndr", F.lit(True)),
-                id_col,
-                "left",
-            )
-        nd_flagged = nd_flagged.localCheckpoint()
-        if rescued_ids is not None:
-            nd_counts = nd_flagged.agg(
-                F.count("__nd").alias("b"), F.count("__ndr").alias("r")
-            ).first()
-            n_near_skipped += int(nd_counts["b"])
-            n_near_rescued += int(nd_counts["r"])
-            nd_flagged = nd_flagged.drop("__ndr")
-        else:
-            n_near_skipped += nd_flagged.filter(F.col("__nd")).count()
-        admitted = nd_flagged.filter(F.col("__nd").isNull()).drop("__nd")
+        n_near_skipped += n_hit
+        n_near_rescued += n_rescued
     if media_guard:
         # media history probes: batch hash rows BROADCAST against the
         # constant-width media sidecars (history never shuffled or
@@ -1789,51 +1735,41 @@ def incremental_ingest(
         # per-modality hit sets UNION into ONE flag-join (the same
         # shape as the near_dup guard above), so the payload-bearing
         # admitted frame is materialized once, not once per modality.
-        media_hits = None
+        media_hits = []
         if _exists(spark, media_bands_path):
-            media_hits = multimodal.phash_seen_ids(
+            media_hits.append(multimodal.phash_seen_ids(
                 batch_mhashes,
                 spark.read.parquet(media_bands_path),
                 id_col=id_col,
                 max_hamming=media_max_hamming,
                 max_bucket=media_max_bucket,
-            )
+            ))
         if media_routed and _exists(spark, media_vframes_path):
-            vhits = multimodal.vhash_seen_ids(
+            media_hits.append(multimodal.vhash_seen_ids(
                 batch_vside,
                 spark.read.parquet(media_vframes_path),
                 id_col=id_col,
                 min_jaccard=media_video_min_jaccard,
                 max_bucket=media_max_bucket,
-            )
-            media_hits = (
-                vhits
-                if media_hits is None
-                else media_hits.unionByName(vhits)
-            )
+            ))
         if media_routed and _exists(spark, media_awins_path):
-            ahits = multimodal.audio_seen_ids(
+            media_hits.append(multimodal.audio_seen_ids(
                 batch_awins,
                 spark.read.parquet(media_awins_path),
                 id_col=id_col,
                 min_votes=media_audio_min_votes,
                 max_bucket=media_max_bucket,
-            )
-            media_hits = (
-                ahits
-                if media_hits is None
-                else media_hits.unionByName(ahits)
-            )
-        if media_hits is not None:
-            md_flagged = admitted.join(
-                media_hits.distinct().withColumn("__md", F.lit(True)),
+            ))
+        if media_hits:
+            admitted, n_hit, _ = _flag_drop(
+                admitted,
+                functools.reduce(
+                    lambda a, b: a.unionByName(b), media_hits
+                ).distinct(),
                 id_col,
-                "left",
-            ).localCheckpoint()
-            n_media_skipped += md_flagged.filter(F.col("__md")).count()
-            admitted = md_flagged.filter(
-                F.col("__md").isNull()
-            ).drop("__md")
+                "__md",
+            )
+            n_media_skipped += n_hit
     # crash-replay guard: ids already admitted are never re-appended
     # even if their fingerprint append didn't land
     prior_ids = None
@@ -1926,138 +1862,38 @@ def incremental_ingest(
         # sets if an input file changed between jobs
         admitted = admitted.localCheckpoint()
         n_admitted = admitted.count()
-    # bands-sidecar heal (near_dup lakes): same proof obligation as
-    # the fingerprint heal, one crash window later — a doc row (and
-    # possibly its fingerprint) landed but the bands append did not,
-    # leaving the doc invisible to the near-dup guard. Candidates
-    # come from the PRE-guard batch ids (batch_bands), not from
+    # sidecar heals, one per guard sidecar in commit order: same proof
+    # obligation as the fingerprint heal, one crash window later — a
+    # doc row (and possibly its fingerprint) landed but the sidecar
+    # append did not, leaving the doc invisible to that guard.
+    # Candidates come from the PRE-guard batch rows, not from
     # `flagged`: a replay after a fingerprint-append crash is caught
-    # by the fp guard and never reaches the id guard, but its bands
-    # may still be missing. Proof = id present in the admitted-id set
-    # AND absent from the bands layer's own id column; the healed
-    # rows are the replayed batch's bands (shares the fp heal's
-    # re-crawl-during-crash-window residual).
-    healable_bands = None
-    if near_dup and prior_ids is not None:
-        hb = batch_bands.join(
-            F.broadcast(prior_batch_ids.withColumnRenamed(id_col, "id")),
-            "id",
+    # by the fp guard and never reaches the id guard, but its sidecar
+    # rows may still be missing. Proof = id present in the
+    # admitted-id set AND absent from the sidecar's own id column;
+    # the healed rows are the replayed batch's rows (shares the fp
+    # heal's re-crawl-during-crash-window residual). A lake without
+    # prior ids has nothing to heal.
+    healed = {s.healed_key: 0 for s in sidecars}
+    heal_frames: dict[str, DataFrame] = {}
+    for s in sidecars if prior_batch_ids is not None else []:
+        path = f"{out_root}/{s.layer}"
+        h = s.rows.join(
+            F.broadcast(prior_batch_ids.withColumnRenamed(id_col, s.id_col)),
+            s.id_col,
             "left_semi",
         )
-        if _exists(spark, bands_path):
-            hb = hb.join(
-                spark.read.parquet(bands_path)
-                .select("id")
-                .dropDuplicates(),
-                "id",
+        if _exists(spark, path):
+            h = h.join(
+                spark.read.parquet(path).select(s.id_col).dropDuplicates(),
+                s.id_col,
                 "left_anti",
             )
-        healable_bands = hb.localCheckpoint()
-    n_healed_bands = (
-        healable_bands.select("id").distinct().count()
-        if healable_bands is not None
-        else 0
-    )
-    if n_healed_bands:
-        healable_bands.write.mode("append").parquet(bands_path)
-    # media-sidecar heal: same proof obligation as the bands heal —
-    # a doc row landed but its media-hash append did not, leaving the
-    # image invisible to the perceptual guard. Candidates = the
-    # batch's hash rows whose id is already admitted AND absent from
-    # the media sidecar's own id column.
-    healable_media = None
-    if media_guard and prior_ids is not None:
-        hm = batch_mhashes.filter(F.col("band0").isNotNull()).join(
-            F.broadcast(prior_batch_ids), id_col, "left_semi"
-        )
-        if _exists(spark, media_bands_path):
-            hm = hm.join(
-                spark.read.parquet(media_bands_path)
-                .select(id_col)
-                .dropDuplicates(),
-                id_col,
-                "left_anti",
-            )
-        healable_media = hm.localCheckpoint()
-    n_healed_media = (
-        healable_media.select(id_col).distinct().count()
-        if healable_media is not None
-        else 0
-    )
-    if n_healed_media:
-        healable_media.write.mode("append").parquet(media_bands_path)
-    # video / audio sidecar heals (r13): the same id-absence proof,
-    # one sidecar each — a doc row landed but the frame-hash or
-    # window-hash append did not, leaving the video/audio invisible
-    # to its guard until the replay backfills it.
-    healable_video = None
-    healable_audio = None
-    if media_guard and media_routed and prior_ids is not None:
-        # heals append the same capped view the normal append path
-        # writes (media_max_bucket) — a healed batch must not smuggle
-        # the over-common hashes past the append-time cap
-        hv = batch_vside_app.join(
-            F.broadcast(prior_batch_ids), id_col, "left_semi"
-        )
-        if _exists(spark, media_vframes_path):
-            hv = hv.join(
-                spark.read.parquet(media_vframes_path)
-                .select(id_col)
-                .dropDuplicates(),
-                id_col,
-                "left_anti",
-            )
-        healable_video = hv.localCheckpoint()
-        ha = batch_awins_app.join(
-            F.broadcast(prior_batch_ids), id_col, "left_semi"
-        )
-        if _exists(spark, media_awins_path):
-            ha = ha.join(
-                spark.read.parquet(media_awins_path)
-                .select(id_col)
-                .dropDuplicates(),
-                id_col,
-                "left_anti",
-            )
-        healable_audio = ha.localCheckpoint()
-    n_healed_video = (
-        healable_video.select(id_col).distinct().count()
-        if healable_video is not None
-        else 0
-    )
-    if n_healed_video:
-        healable_video.write.mode("append").parquet(media_vframes_path)
-    n_healed_audio = (
-        healable_audio.select(id_col).distinct().count()
-        if healable_audio is not None
-        else 0
-    )
-    if n_healed_audio:
-        healable_audio.write.mode("append").parquet(media_awins_path)
-    # url-keys heal: same id-absence proof, one more sidecar — a doc
-    # row landed but its url-key append did not, leaving the doc's
-    # canonical url invisible to the URL guard until replay backfills
-    healable_urls = None
-    if url_guard and prior_ids is not None:
-        hu = batch_urls.join(
-            F.broadcast(prior_batch_ids), id_col, "left_semi"
-        )
-        if _exists(spark, url_keys_path):
-            hu = hu.join(
-                spark.read.parquet(url_keys_path)
-                .select(id_col)
-                .dropDuplicates(),
-                id_col,
-                "left_anti",
-            )
-        healable_urls = hu.localCheckpoint()
-    n_healed_urls = (
-        healable_urls.select(id_col).distinct().count()
-        if healable_urls is not None
-        else 0
-    )
-    if n_healed_urls:
-        healable_urls.write.mode("append").parquet(url_keys_path)
+        h = h.localCheckpoint()
+        healed[s.healed_key] = h.select(s.id_col).distinct().count()
+        if healed[s.healed_key]:
+            h.write.mode("append").parquet(path)
+            heal_frames[s.layer] = h
     # text-index heal (r16): same id-absence proof, one more sidecar —
     # a doc row landed but its index append did not, leaving the text
     # invisible to the verify stage's pruned read until backfilled.
@@ -2264,6 +2100,7 @@ def incremental_ingest(
             )
         else:
             healable.write.mode("append").parquet(fp_path)
+            heal_frames["fingerprints"] = healable
     # Running total (r14, verdict #3): the corpus-sized docs layer is
     # NEVER re-counted on the normal path — at 100 TB a per-batch
     # parquet count is a full-layer file listing, exactly the
@@ -2366,21 +2203,8 @@ def incremental_ingest(
         layer_inc = {"docs": adm_p}
         if not bucketed:
             layer_inc["fingerprints"] = adm_p
-        if near_dup:
-            layer_inc["band_buckets"] = max(_parts(batch_bands), p_shuffle)
-        if media_guard:
-            layer_inc["media_bands"] = max(
-                _parts(batch_mhashes), p_shuffle
-            )
-            if media_routed:
-                layer_inc["media_vframes"] = max(
-                    _parts(batch_vside), p_shuffle
-                )
-                layer_inc["media_awins"] = max(
-                    _parts(batch_awins), p_shuffle
-                )
-        if url_guard:
-            layer_inc["url_keys"] = max(_parts(batch_urls), p_shuffle)
+        for s in sidecars:
+            layer_inc[s.layer] = max(_parts(s.bound), p_shuffle)
         if line_census:
             # the census append is an aggregate — exchange-width bound
             layer_inc["line_census"] = p_shuffle
@@ -2397,14 +2221,6 @@ def incremental_ingest(
             layer_inc[tkey] = min(8, max(n_admitted, 1))
             if n_healed_text:
                 layer_inc[tkey] += min(8, n_healed_text)
-        heal_appends = {
-            "band_buckets": (n_healed_bands, healable_bands),
-            "media_bands": (n_healed_media, healable_media),
-            "media_vframes": (n_healed_video, healable_video),
-            "media_awins": (n_healed_audio, healable_audio),
-            "url_keys": (n_healed_urls, healable_urls),
-            "fingerprints": (0 if bucketed else n_healed, healable),
-        }
         adm_digest = _lake_docs_digest(admitted, id_col)
         if adm_digest == last_digest and n_admitted == last_n:
             # replayed batch: its increment already landed
@@ -2413,11 +2229,8 @@ def incremental_ingest(
             files_acc = dict(files_acc)
             for layer, inc in layer_inc.items():
                 files_acc[layer] = files_acc.get(layer, 0) + inc
-            for layer, (healed, hframe) in heal_appends.items():
-                if healed and hframe is not None:
-                    files_acc[layer] = (
-                        files_acc.get(layer, 0) + _parts(hframe)
-                    )
+            for layer, hframe in heal_frames.items():
+                files_acc[layer] = files_acc.get(layer, 0) + _parts(hframe)
             n_total_docs = base_total + n_admitted
             _write_lake_stats(
                 spark, stats_path, n_total_docs, adm_digest, n_admitted,
@@ -2443,109 +2256,13 @@ def incremental_ingest(
         # re-sends of their content ride the fastpath past the exact
         # join. Opting out of maintenance = delete the filter layer
         # (it is a cache; the next guarded batch rebuilds it).
-        maintain_fp_filter = bloom_guard
-        if not maintain_fp_filter:
-            g = _discover_bloom_geometry(spark, out_root)
-            if g is not None:
-                maintain_fp_filter = True
-                bloom_hex = g
-                bloom_path = _bloom_layer_path(out_root, g)
-        if maintain_fp_filter:
-            # bloom BEFORE the docs/fingerprint appends (the census
-            # ordering rule): bits for keys that end up never landing
-            # are harmless false positives, while bloom-after-docs
-            # could leave admitted fingerprints missing from the
-            # filter — a false negative that would let a later
-            # duplicate skip the exact join. Merge is per-word
-            # bit_or: replaying the same batch is a no-op.
-            new_bits = bloom_ops.bloom_build(
-                admitted, "fingerprint", hex_chars=bloom_hex
-            )
-            # Reuse the probe-time filter: when the sidecar was
-            # missing/unreadable, the probe rebuilt it from the
-            # fingerprint layer, and re-reading disk here would
-            # return None and overwrite the sidecar with only THIS
-            # batch's bits — historical fingerprints would then probe
-            # maybe_seen=false and ride the fastpath past the exact
-            # join (false negatives, duplicate admission). The probe
-            # filter carries every historical bit by construction.
-            old_blm = blm
-            if old_blm is None:
-                old_blm = _read_bloom_layer(spark, bloom_path)
-            if old_blm is None and seen is not None:
-                # knob-off maintenance on a TORN filter over a lake
-                # with history: writing this batch's bits alone would
-                # manufacture exactly the false negatives this rule
-                # exists to prevent — rebuild from the authoritative
-                # layer first (rare: torn overwrite + knob off)
-                old_blm = bloom_ops.bloom_build(
-                    seen, "fingerprint", hex_chars=bloom_hex
-                ).localCheckpoint()
-            merged = (
-                bloom_ops.bloom_merge(old_blm, new_bits)
-                if old_blm is not None
-                else new_bits
-            ).localCheckpoint()  # materialize BEFORE overwriting its own input path
-            # coalesced write (r16, verdict #4 follow-through): the
-            # filter is MB-scale, but an uncoalesced write leaves one
-            # file per shuffle partition — every later batch then pays
-            # that many opens (requests, on object stores) just to
-            # read the filter. Few large files cost the same to scan
-            # (parquet splits by maxPartitionBytes) and a fraction of
-            # the requests. Narrow on the checkpointed frame — no
-            # recompute, no extra shuffle.
-            merged.coalesce(8).write.mode("overwrite").parquet(bloom_path)
-        maintain_url_filter = url_guard and url_bloom
-        if url_guard and not url_bloom:
-            g = _discover_bloom_geometry(spark, out_root, layer="url_bloom")
-            if g is not None:
-                maintain_url_filter = True
-                url_bloom_hex = g
-                url_bloom_path = _bloom_layer_path(
-                    out_root, g, layer="url_bloom"
-                )
-        if maintain_url_filter:
-            # url-bloom merge BEFORE the docs/url_keys appends — the
-            # census ordering rule again: bits for urls that never
-            # land are harmless false positives, while merge-after-
-            # append could leave admitted urls missing from the
-            # filter, a false negative that would let a later
-            # re-crawl of that url skip the sidecar scan and admit.
-            # The folded rows are exactly the keeper urls the append
-            # block writes below. Reuse the probe-time filter when
-            # disk was unreadable (the r13 fingerprint-bloom lesson:
-            # re-reading would return None and overwrite history's
-            # bits with only this batch's).
-            new_ubits = bloom_ops.bloom_build(
-                batch_urls.join(
-                    admitted.select(id_col), id_col, "left_semi"
-                ),
-                "canonical_url",
-                hex_chars=url_bloom_hex,
-            )
-            old_ublm = ublm
-            if old_ublm is None and _exists(spark, url_keys_path):
-                old_ublm = _read_bloom_layer(spark, url_bloom_path)
-                if old_ublm is None:
-                    # torn/absent filter discovered at write time on a
-                    # lake WITH history: rebuild from the key layer so
-                    # historical urls keep their bits
-                    old_ublm = bloom_ops.bloom_build(
-                        spark.read.parquet(url_keys_path).select(
-                            "canonical_url"
-                        ),
-                        "canonical_url",
-                        hex_chars=url_bloom_hex,
-                    ).localCheckpoint()
-            umerged = (
-                bloom_ops.bloom_merge(old_ublm, new_ubits)
-                if old_ublm is not None
-                else new_ubits
-            ).localCheckpoint()
-            # same coalesced-write rationale as the fingerprint
-            # lineage above
-            umerged.coalesce(8).write.mode("overwrite").parquet(
-                url_bloom_path
+        # Both merges run BEFORE the docs append (the census ordering
+        # rule); the url filter folds exactly the keeper urls the
+        # url_keys append writes below.
+        fp_filter.merge(admitted)
+        if url_guard:
+            url_filter.merge(
+                batch_urls.join(admitted.select(id_col), id_col, "left_semi")
             )
         if line_census:
             # census BEFORE the docs append: a crash after this lands
@@ -2588,40 +2305,16 @@ def incremental_ingest(
             admitted.select("fingerprint", id_col).write.mode(
                 "append"
             ).parquet(fp_path)
-        if near_dup:
-            # bands last (docs → ids → fingerprints → bands): a crash
-            # anywhere before this lands is healed on replay by the
-            # guards above + the bands backfill
-            batch_bands.join(
-                admitted.select(F.col(id_col).alias("id")),
-                "id",
+        # then the guard sidecars in list order (bands → media →
+        # vframes → awins → url keys): a crash before any of these
+        # lands is healed on replay by the guards above + that
+        # sidecar's id-absence backfill
+        for s in sidecars:
+            s.rows.join(
+                admitted.select(F.col(id_col).alias(s.id_col)),
+                s.id_col,
                 "left_semi",
-            ).write.mode("append").parquet(bands_path)
-        if media_guard:
-            # media hashes after docs, like bands: a crash before this
-            # lands is healed on replay by the id-absence backfill
-            # above (NULL-band rows — unreadable payloads — carry no
-            # evidence and stay out of the sidecar)
-            batch_mhashes.filter(F.col("band0").isNotNull()).join(
-                admitted.select(id_col), id_col, "left_semi"
-            ).write.mode("append").parquet(media_bands_path)
-            if media_routed:
-                # the video/audio sidecars follow the same ordering
-                # rule; a crash between any two appends is healed by
-                # each sidecar's own id-absence backfill on replay
-                batch_vside_app.join(
-                    admitted.select(id_col), id_col, "left_semi"
-                ).write.mode("append").parquet(media_vframes_path)
-                batch_awins_app.join(
-                    admitted.select(id_col), id_col, "left_semi"
-                ).write.mode("append").parquet(media_awins_path)
-        if url_guard:
-            # url keys last, like the other guard sidecars: a crash
-            # before this lands is healed on replay by the id-absence
-            # backfill above
-            batch_urls.join(
-                admitted.select(id_col), id_col, "left_semi"
-            ).write.mode("append").parquet(url_keys_path)
+            ).write.mode("append").parquet(f"{out_root}/{s.layer}")
         if text_idx_n is not None:
             # maintain-if-present (the filter-freshness rule): a lake
             # that carries a text index gets this batch's (id, text)
@@ -2643,90 +2336,12 @@ def incremental_ingest(
                 .write.mode("append")
                 .parquet(text_idx_tail)
             )
-    n_bloom_fill_pct = 0
-    n_bloom_rebuilt_hex = 0
-    n_bloom_rebuild_due = 0
-    if bloom_guard:
-        # saturation auto-check (rebuild-on-fill): fpp ≈ fill^k, so
-        # past bloom_max_fill the fastpath stops proving keys new and
-        # every batch pays the exact join anyway — grow the geometry
-        # one step and rebuild from the authoritative fingerprint
-        # layer, which at this point includes this batch (the appends
-        # above landed). One step per batch bounds the rebuild cost;
-        # a still-saturated filter grows again next batch.
-        # ``bloom_rebuild_mode="defer"`` (r13, verdict #5) moves the
-        # rebuild OFF the admission path entirely: the batch only
-        # reports saturation (``bloom_rebuild_due``) and the operator
-        # runs :func:`maintain_lake` on their own schedule — the guard
-        # degrades gracefully to "maybe" (extra exact-join work, never
-        # wrong admission) until then, and no single batch ever pays a
-        # full fingerprint-layer rescan mid-admission.
-        # The FILL CHECK runs whether or not this batch admitted
-        # anything (r13 advisor): a saturated lake receiving
-        # all-duplicate batches pays full exact-join traffic on every
-        # one of them, and an operator scheduling maintain_lake off
-        # ``bloom_rebuild_due`` must see the owed rebuild — only the
-        # merge (above) and the sync rebuild stay gated on admission,
-        # since they exist to fold NEW keys in.
-        cur = _read_bloom_layer(spark, bloom_path)
-        if cur is not None:
-            fill = float(
-                bloom_ops.bloom_fill_stats(cur, bloom_hex).first()[
-                    "fill_frac"
-                ]
-            )
-            if (
-                n_admitted
-                and fill > bloom_max_fill
-                and bloom_rebuild_mode == "sync"
-            ):
-                res = bloom_rebuild(
-                    spark, out_root, bloom_hex + 1,
-                    catalog_prefix=catalog_prefix,
-                )
-                n_bloom_rebuilt_hex = bloom_hex + 1
-                fill = res["fill_frac"]
-            if fill > bloom_max_fill:
-                n_bloom_rebuild_due = (
-                    n_bloom_rebuilt_hex or bloom_hex
-                ) + 1
-            n_bloom_fill_pct = int(round(fill * 100))
-    n_url_bloom_fill_pct = 0
-    n_url_bloom_rebuilt_hex = 0
-    n_url_bloom_rebuild_due = 0
-    if url_bloom:
-        # the same rebuild-on-fill / defer contract as the
-        # fingerprint filter, but with a STRICTER fill target
-        # (url_bloom_max_fill, default 0.1): this filter's whole
-        # value is skipping the sidecar scan OUTRIGHT, which needs
-        # fpp·|batch| < 1 — at the fingerprint lineage's 0.5 target
-        # fpp ≈ 6% and a 5k-url batch would always carry false
-        # positives, triggering the scan it exists to avoid (measured,
-        # SCALE.md §r15 bloom). A saturated filter still only answers
-        # "maybe" more often (never wrong admission), so deferral
-        # stays safe
-        ucur = _read_bloom_layer(spark, url_bloom_path)
-        if ucur is not None:
-            ufill = float(
-                bloom_ops.bloom_fill_stats(ucur, url_bloom_hex).first()[
-                    "fill_frac"
-                ]
-            )
-            if (
-                n_admitted
-                and ufill > url_bloom_max_fill
-                and bloom_rebuild_mode == "sync"
-            ):
-                ures = bloom_rebuild(
-                    spark, out_root, url_bloom_hex + 1, layer="url_bloom"
-                )
-                n_url_bloom_rebuilt_hex = url_bloom_hex + 1
-                ufill = ures["fill_frac"]
-            if ufill > url_bloom_max_fill:
-                n_url_bloom_rebuild_due = (
-                    n_url_bloom_rebuilt_hex or url_bloom_hex
-                ) + 1
-            n_url_bloom_fill_pct = int(round(ufill * 100))
+    # saturation check on each guarded filter (rebuild-on-fill, or
+    # the owed rebuild reported under bloom_rebuild_mode="defer") —
+    # after the appends, so a sync rebuild includes this batch's keys
+    sync_rebuild = bloom_rebuild_mode == "sync"
+    fp_report = fp_filter.report(n_admitted, sync_rebuild, catalog_prefix)
+    url_report = url_filter.report(n_admitted, sync_rebuild, catalog_prefix)
     out = {
         "arrived": arrived,
         "admitted": n_admitted,
@@ -2745,22 +2360,18 @@ def incremental_ingest(
         out["near_dup_skipped"] = n_near_skipped
         out["near_dup_blocked"] = n_near_skipped
         out["near_dup_rescued"] = n_near_rescued
-        out["healed_bands"] = n_healed_bands
+        out["healed_bands"] = healed["healed_bands"]
     if media_guard:
         out["media_skipped"] = n_media_skipped
-        out["healed_media"] = n_healed_media
+        out["healed_media"] = healed["healed_media"]
         if media_routed:
-            out["healed_video"] = n_healed_video
-            out["healed_audio"] = n_healed_audio
+            out["healed_video"] = healed["healed_video"]
+            out["healed_audio"] = healed["healed_audio"]
             out["video_no_duration"] = n_video_no_duration
     if url_guard:
         out["url_skipped"] = n_url_skipped
-        out["healed_urls"] = n_healed_urls
-    if url_bloom:
-        out["url_bloom_fastpath"] = n_url_bloom_fastpath
-        out["url_bloom_fill_pct"] = n_url_bloom_fill_pct
-        out["url_bloom_rebuilt_hex"] = n_url_bloom_rebuilt_hex
-        out["url_bloom_rebuild_due"] = n_url_bloom_rebuild_due
+        out["healed_urls"] = healed["healed_urls"]
+    out.update(url_report)
     if url_blocklist:
         out["domain_blocked"] = n_domain_blocked
     if compact_above_files is not None:
@@ -2784,12 +2395,205 @@ def incremental_ingest(
         out["contaminated_skipped"] = n_contaminated
     if gopher_gate or max_top_ngram_frac or max_dup_ngram_frac:
         out["quality_rejected"] = n_quality_rejected
-    if bloom_guard:
-        out["bloom_fastpath"] = n_bloom_fastpath
-        out["bloom_fill_pct"] = n_bloom_fill_pct
-        out["bloom_rebuilt_hex"] = n_bloom_rebuilt_hex
-        out["bloom_rebuild_due"] = n_bloom_rebuild_due
+    out.update(fp_report)
     return out
+
+
+@dataclass(frozen=True)
+class _Sidecar:
+    """One guard sidecar of :func:`incremental_ingest`'s commit list:
+    a layer under the lake root that stores one batch-derived row set
+    per admitted doc, keyed by ``id_col``. The ingest walks the list
+    once to heal (id-absence backfill), once to append after the
+    fingerprints, and once to account the append's files."""
+
+    layer: str  # layer name under the lake root; also its file-count key
+    rows: DataFrame  # the batch rows this sidecar appends (and heals)
+    id_col: str  # the rows' doc-id column
+    healed_key: str  # report counter for the id-absence backfill
+    # checkpointed frame whose partition count (or the shuffle width)
+    # bounds the files one append of ``rows`` can write
+    bound: DataFrame
+
+
+class _BloomLineage:
+    """One lake Bloom filter inside :func:`incremental_ingest` — the
+    fingerprint filter (layer ``bloom``, a cache of the fingerprint
+    layer) or the url filter (``url_bloom``, a cache of ``url_keys``).
+    Both run the same lifecycle; they differ only in key column, key
+    layer and fill target.
+
+    Geometry lives in the layer name: a filter's bit positions are only
+    meaningful under the (k, hex_chars) that built it, and a PROBE
+    against a filter of different geometry produces silent false
+    negatives — the one failure mode Bloom admission must never have.
+    Rebuild-on-fill grows the geometry, so a guarded call follows the
+    largest layer present (:func:`_discover_bloom_geometry`), and a
+    constant change is self-healing: the old layer is simply absent
+    under the new name and the filter rebuilds from its key layer.
+
+    ``keys`` returns the authoritative key layer (``None``: the lake
+    has no history for this lineage yet); ``guard`` is the knob, which
+    gates the probe and the fill report but never the merge (the
+    freshness rule)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        out_root: str,
+        layer: str,
+        key_col: str,
+        keys: Callable[[], DataFrame] | None,
+        guard: bool,
+        max_fill: float,
+    ) -> None:
+        self.spark = spark
+        self.out_root = out_root
+        self.layer = layer
+        self.key_col = key_col
+        self.keys = keys
+        self.guard = guard
+        self.max_fill = max_fill
+        self.filter = None  # probe-time filter, reused by the merge
+        self.fastpath = 0
+        hex_chars = (
+            _discover_bloom_geometry(spark, out_root, layer) if guard else None
+        )
+        self._at(hex_chars or bloom_ops.HEX_CHARS_DEFAULT)
+
+    def _at(self, hex_chars: int) -> None:
+        self.hex = hex_chars
+        self.path = _bloom_layer_path(self.out_root, hex_chars, self.layer)
+
+    def _build(self, df: DataFrame) -> DataFrame:
+        return bloom_ops.bloom_build(df, self.key_col, hex_chars=self.hex)
+
+    def probe(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Split ``df`` map-side (k broadcast joins, zero exchanges)
+        into ("definitely new", "maybe seen") rows; only the second
+        needs the exact join (no false negatives by construction).
+        A missing or unreadable filter (crash during its overwrite)
+        is rebuilt from the key layer — the filter is a cache, never
+        the source of truth."""
+        self.filter = _read_bloom_layer(self.spark, self.path)
+        if self.filter is None:
+            self.filter = self._build(self.keys()).localCheckpoint()
+        probed = bloom_ops.bloom_probe(
+            df, self.filter, self.key_col, hex_chars=self.hex
+        ).localCheckpoint()
+        definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        self.fastpath = definite.count()
+        return definite, probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+
+    def merge(self, new_keys: DataFrame) -> None:
+        """Fold ``new_keys`` into the filter, BEFORE the docs append:
+        bits for keys that never land are harmless false positives,
+        while merge-after-append could leave admitted keys missing from
+        the filter — a false negative letting a later duplicate skip
+        the exact join. Per-word bit_or, so a replay is a no-op. With
+        the knob off, a PRESENT filter is still maintained at its
+        discovered geometry; an absent one stays absent."""
+        if not self.guard:
+            hex_chars = _discover_bloom_geometry(
+                self.spark, self.out_root, self.layer
+            )
+            if hex_chars is None:
+                return
+            self._at(hex_chars)
+        # Reuse the probe-time filter: when the sidecar was missing or
+        # unreadable the probe rebuilt it, and re-reading disk here
+        # would return None and overwrite the sidecar with only THIS
+        # batch's bits — historical keys would then probe new and ride
+        # the fastpath past the exact join. A torn filter found only
+        # now (knob off) is rebuilt from the key layer for the same
+        # reason.
+        old = self.filter
+        if old is None:
+            old = _read_bloom_layer(self.spark, self.path)
+        if old is None and self.keys is not None:
+            old = self._build(self.keys()).localCheckpoint()
+        new_bits = self._build(new_keys)
+        merged = (
+            bloom_ops.bloom_merge(old, new_bits) if old is not None
+            else new_bits
+        ).localCheckpoint()  # materialize BEFORE overwriting its input
+        # coalesced write (r16, verdict #4 follow-through): the filter
+        # is MB-scale, but an uncoalesced write leaves one file per
+        # shuffle partition — every later batch then pays that many
+        # opens (requests, on object stores) just to read the filter
+        merged.coalesce(8).write.mode("overwrite").parquet(self.path)
+
+    def report(
+        self, n_admitted: int, sync: bool, catalog_prefix: str | None
+    ) -> dict[str, int]:
+        """The guarded lineage's counters: ``<layer>_fastpath``,
+        ``_fill_pct``, ``_rebuilt_hex`` and ``_rebuild_due`` (empty
+        with the knob off). Saturation check, after the appends: fpp ≈
+        fill^k, so past ``max_fill`` the fastpath stops proving keys
+        new — grow the geometry one step and rebuild from the key
+        layer (which now includes this batch) when ``sync``, or only
+        report the owed rebuild (``rebuild_due``) and leave the rescan
+        to :func:`maintain_lake` — a saturated filter answers "maybe"
+        more often, never wrongly. The fill check runs on
+        zero-admission batches too (r13 advisor: an all-duplicate
+        stream on a saturated lake is exactly the traffic a deferred
+        rebuild relieves); only the sync rebuild needs new keys."""
+        if not self.guard:
+            return {}
+        fill_pct = rebuilt = due = 0
+        cur = _read_bloom_layer(self.spark, self.path)
+        if cur is not None:
+            fill = _bloom_fill(cur, self.hex)
+            if n_admitted and fill > self.max_fill and sync:
+                rebuilt = self.hex + 1
+                fill = bloom_rebuild(
+                    self.spark, self.out_root, rebuilt,
+                    catalog_prefix=catalog_prefix, layer=self.layer,
+                )["fill_frac"]
+            if fill > self.max_fill:
+                due = (rebuilt or self.hex) + 1
+            fill_pct = int(round(fill * 100))
+        return {
+            f"{self.layer}_fastpath": self.fastpath,
+            f"{self.layer}_fill_pct": fill_pct,
+            f"{self.layer}_rebuilt_hex": rebuilt,
+            f"{self.layer}_rebuild_due": due,
+        }
+
+
+def _flag_drop(
+    df: DataFrame,
+    hits: DataFrame,
+    id_col: str,
+    flag: str,
+    rescued: DataFrame | None = None,
+) -> tuple[DataFrame, int, int]:
+    """Drop the rows of ``df`` whose id is in ``hits`` with ONE
+    flag-join (the id-guard trick): the count and the filter both read
+    one checkpoint instead of a semi and an anti join each re-running
+    the guard subplan. ``rescued`` ids ride the same join under
+    ``<flag>r`` and stay kept — that flag only counts. Returns
+    ``(kept, n_dropped, n_rescued)``."""
+    flagged = df.join(hits.withColumn(flag, F.lit(True)), id_col, "left")
+    rflag = f"{flag}r"
+    if rescued is not None:
+        flagged = flagged.join(
+            rescued.withColumn(rflag, F.lit(True)), id_col, "left"
+        )
+    flagged = flagged.localCheckpoint()
+    if rescued is not None:
+        row = flagged.agg(F.count(flag), F.count(rflag)).first()
+        n_dropped, n_rescued = int(row[0]), int(row[1])
+    else:
+        n_dropped, n_rescued = flagged.filter(F.col(flag)).count(), 0
+    kept = flagged.filter(F.col(flag).isNull()).drop(flag, rflag)
+    return kept, n_dropped, n_rescued
+
+
+def _bloom_fill(blm: DataFrame, hex_chars: int) -> float:
+    return float(
+        bloom_ops.bloom_fill_stats(blm, hex_chars).first()["fill_frac"]
+    )
 
 
 def _lake_docs_digest(df: DataFrame, id_col: str) -> int:
@@ -4166,11 +3970,7 @@ def maintain_lake(
             spark, _bloom_layer_path(out_root, hex_cur, layer=layer)
         )
         if cur is not None:
-            fill_probe = float(
-                bloom_ops.bloom_fill_stats(cur, hex_cur).first()[
-                    "fill_frac"
-                ]
-            )
+            fill_probe = _bloom_fill(cur, hex_cur)
             if fill_probe <= max_fill:
                 # fresh filter: the check was the only cost
                 return {

@@ -27,11 +27,12 @@ _ROWS_PER_SLICE = 50_000
 def tiny_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` for BOUNDED driver-local
     rows: identical pickle serialization and schema verification, but
-    sliced by row count (``len(rows) // 50k + 1``) instead of one slice
-    per core, so executing the relation costs one Python worker
-    round-trip — not ``defaultParallelism`` of them — on every action
-    that reads it. Use for driver-side model state (component mappings,
-    partition offsets, profile/marker rows); never for real data."""
+    sliced by row count (``max(1, len(rows) // 50_000)`` slices)
+    instead of one slice per core, so executing the relation costs one
+    Python worker round-trip — not ``defaultParallelism`` of them — on
+    every action that reads it. Use for driver-side model state
+    (component mappings, partition offsets, profile/marker rows); never
+    for real data."""
     n_slices = max(1, len(rows) // _ROWS_PER_SLICE)
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n_slices), schema

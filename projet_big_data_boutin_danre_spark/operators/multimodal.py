@@ -104,20 +104,22 @@ def extract_features(media: DataFrame, target_partitions: int | None = None) -> 
     if target_partitions is None:
         spark = media.sparkSession
         target_partitions = spark.sparkContext.defaultParallelism
-        try:
+        # Spark Connect frames carry no JVM plan to estimate: keep the
+        # repartition there
+        jdf = getattr(media, "_jdf", None)
+        if jdf is not None:
+            # private API: Catalyst's size estimate of the optimized plan
             est_bytes = int(
-                media._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
+                jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-            one_part = int(
+            # Spark's own byte-string parser, so "128MB" and "134217728b"
+            # read the way Spark itself reads the conf
+            java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+            one_part = java_utils.byteStringAsBytes(
                 spark.conf.get("spark.sql.files.maxPartitionBytes")
             )
             if est_bytes <= one_part:
                 target_partitions = 0
-        except Exception:
-            pass  # no estimate (e.g. Connect): keep the repartition
     if target_partitions:
         media = media.repartition(target_partitions)
 

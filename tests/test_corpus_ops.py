@@ -209,13 +209,24 @@ def test_cosine_topk_exact(spark):
     assert abs(top.cosine - 0.9 / math.sqrt(0.81 + 0.01)) < 1e-6
 
 
-def test_cosine_topk_cogroup_band_prereduce_parity(spark):
+def test_cosine_topk_cogroup_band_prereduce_parity(spark, monkeypatch):
     """The r20 per-slice top-k pre-reduce in cosine_topk_cogroup must
     be bit-identical to the closure path on a HOSTILE input: clusters
     of cosines within one rounding quantum of each other (so the band
     must keep every round-equal tie candidate for the neighbor_id
     tie-break) plus a zero vector whose cosines are NaN (which Spark's
-    desc window ranks ABOVE every double — the band must keep them)."""
+    desc window ranks ABOVE every double — the band must keep them).
+    On an input without such ties the cogroup stage must emit only the
+    band — about k rows per (slice, query) — into the ranking window,
+    never the full |slice|x|q| cross."""
+    emitted = {}
+    rank_topk = similarity._rank_topk
+
+    def spy(scored, k, round_to):
+        emitted["scored"] = scored
+        return rank_topk(scored, k, round_to)
+
+    monkeypatch.setattr(similarity, "_rank_topk", spy)
     rows = []
     for i in range(60):
         ang = 0.5 + (i % 7) * 1e-7  # near-identical cosine clusters
@@ -231,11 +242,22 @@ def test_cosine_topk_cogroup_band_prereduce_parity(spark):
     )
     assert cg.exceptAll(cl).count() == 0
     assert cl.exceptAll(cg).count() == 0
-    # the pre-reduce must actually reduce: every (slice, query) emits
-    # at most the epsilon band, never the full |slice|x|q| cross
     n_q = q.count()
-    scored_rows = cg.count()
-    assert scored_rows == 3 * n_q  # k rows per query survived ranking
+    assert cg.count() == 3 * n_q  # k rows per query survived ranking
+    # the pre-reduce must actually reduce: on distinct angles every
+    # (slice, query) emits the k best rows plus at most one round-equal
+    # tie (the mirror neighbor at the same angular distance)
+    spread = spark.createDataFrame(
+        [(i, [math.cos(i * 0.05), math.sin(i * 0.05)] + [0.0] * 6)
+         for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    sq = spread.filter(F.col("vec_id") % 3 == 0)
+    similarity.cosine_topk_cogroup(
+        spread, sq, "vec_id", "embedding", k=3, n_parts=4
+    )
+    # bound: n_parts * (k + 1) rows per query; the cross is 59 per query
+    assert emitted["scored"].count() <= 4 * (3 + 1) * sq.count()
 
 
 def test_lang_id_and_quality(spark):
@@ -267,6 +289,31 @@ def test_multimodal_features_deterministic(spark):
     assert f[1] == f[2]  # same payload -> same stub features
     assert len(f[1]) == multimodal.FEATURE_DIM
     assert all(0.0 <= x <= 1.0 for x in f[1])
+
+
+def test_extract_features_size_gate_reads_byte_strings(spark, tmp_path):
+    """The size gate parses spark.sql.files.maxPartitionBytes the way
+    Spark does: with Spark's default spelling "128MB", an input smaller
+    than one scan partition keeps its partitioning (no round-robin
+    exchange), and a bound below the input size still repartitions."""
+    path = str(tmp_path / "media")
+    spark.createDataFrame(
+        [(1, "image", b"abc"), (2, "audio", b"defg")],
+        "media_id long, kind string, payload binary",
+    ).write.parquet(path)
+    media = spark.read.parquet(path)
+
+    def plan(bound: str) -> str:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", bound)
+        out = multimodal.extract_features(media)
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        assert "RoundRobinPartitioning" not in plan("128MB")
+        assert "RoundRobinPartitioning" in plan("16b")
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def test_perceptual_hash_properties(spark):

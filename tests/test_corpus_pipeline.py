@@ -19,6 +19,8 @@ from projet_big_data_boutin_danre_spark.operators import (
 )
 from projet_big_data_boutin_danre_spark.sources.readers import load_table
 
+from ingest_docs import _BASE, _av_docs, _av_payloads, _near_docs
+
 # Long-running lake-lifecycle / maintenance / property battery
 # (r20): excluded from the default pytest run so the driver's
 # verification window fits; opt in with `-m slow` (the round-close
@@ -685,41 +687,6 @@ def test_ingest_mode_switch_refuses_loudly(spark, tmp_path):
         incremental_ingest(spark, docs, root)
 
 
-def test_ingest_heal_ignores_changed_content_under_reused_id(spark, tmp_path):
-    """The backfill's proof obligation: 'fingerprint absent + id
-    present' is NOT enough — a re-crawl can ship CHANGED content
-    under a stable id, and appending that content's fingerprint
-    (content never admitted!) would permanently block it under any
-    future id. The heal must key on the id's absence from the
-    sidecar's own id column."""
-    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
-        incremental_ingest,
-    )
-
-    root = str(tmp_path / "lake_recrawl")
-    b1 = spark.createDataFrame(
-        [(1, "alpha content")], "doc_id long, text string"
-    )
-    r1 = incremental_ingest(spark, b1, root)
-    assert r1["admitted"] == 1
-    # re-crawl: same id, NEW content — doc row is correctly skipped
-    # (id already admitted) and, critically, NOT treated as a heal
-    b2 = spark.createDataFrame(
-        [(1, "omega content")], "doc_id long, text string"
-    )
-    r2 = incremental_ingest(spark, b2, root)
-    assert r2["admitted"] == 0
-    assert r2["healed_fingerprints"] == 0
-    # the new content later arrives under a fresh id: must be ADMITTED
-    # (its fingerprint never legitimately entered the sidecar)
-    b3 = spark.createDataFrame(
-        [(50, "omega content")], "doc_id long, text string"
-    )
-    r3 = incremental_ingest(spark, b3, root)
-    assert r3["admitted"] == 1
-    assert r3["total_docs"] == 2
-
-
 def test_quality_model_gate_is_deterministic_and_monotone(spark, tmp_path, sf0001):
     """quality_model_min_p: the learned-filter leg of the gate stage.
     The classifier gate must (a) only ever REMOVE docs relative to the
@@ -1018,17 +985,6 @@ def test_recipe_cap_split_and_shard_split(spark, sf0001, tmp_path):
     assert not os.path.exists(bad_root)
 
 
-def _near_docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-_BASE = (
-    "the quick brown fox jumps over the lazy dog while the rain in "
-    "spain falls mainly on the plain and a stitch in time saves nine "
-    "for every good boy does fine across the wide river delta"
-)
-
-
 def test_near_dup_ingest_blocks_perturbed_recrawls(spark, tmp_path):
     """near_dup=True closes the exact-guard gap: a trivially-perturbed
     copy of admitted content is blocked in a LATER batch (history band
@@ -1103,40 +1059,6 @@ def test_near_dup_ingest_recipe_is_lake_identity(spark, tmp_path):
             spark, _near_docs(spark, [(2, _BASE)]), root,
             near_dup=True, lsh_bands=2,
         )
-
-
-def test_near_dup_ingest_heals_missing_bands_on_replay(spark, tmp_path):
-    """Crash window: docs/fingerprints landed, bands append did not.
-    The replay must backfill the bands (healed_bands) so the near-dup
-    guard regains sight of the batch — and a perturbed copy arriving
-    after the heal is blocked."""
-    import shutil
-
-    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
-        incremental_ingest,
-    )
-
-    root = str(tmp_path / "lake_nd_heal")
-    incremental_ingest(
-        spark, _near_docs(spark, [(1, _BASE)]), root, near_dup=True
-    )
-    # simulate the crash: bands append lost
-    shutil.rmtree(f"{root}/band_buckets")
-    # before the heal, the guard is blind — but the exact guards
-    # still hold, so the replay admits nothing AND rebuilds the bands
-    r = incremental_ingest(
-        spark, _near_docs(spark, [(1, _BASE)]), root, near_dup=True
-    )
-    assert r["admitted"] == 0
-    assert r["healed_bands"] == 1
-    # sight restored: the perturbed copy is blocked again
-    r2 = incremental_ingest(
-        spark,
-        _near_docs(spark, [(9, _BASE.replace("fox", "wolf"))]),
-        root,
-        near_dup=True,
-    )
-    assert r2["admitted"] == 0 and r2["near_dup_skipped"] == 1
 
 
 def test_bands_heal_covers_within_batch_keeper_losers(spark, tmp_path):
@@ -2394,63 +2316,6 @@ def test_discover_bloom_geometry_fails_loud(spark, tmp_path):
         _discover_bloom_geometry(spark, "bogus-scheme://not/a/lake")
 
 
-def test_streaming_ingest_exposes_full_batch_knob_surface():
-    """r12 advisor: the two faces of the same pipeline must expose
-    the same knob surface — a batch-face knob missing from
-    streaming_ingest (bloom_max_fill was, pre-r13) means streaming
-    lakes silently run defaults they cannot tune. Locks names AND
-    defaults, so the next knob cannot ship half-surfaced."""
-    import inspect
-
-    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
-        incremental_ingest,
-        streaming_ingest,
-    )
-
-    batch = inspect.signature(incremental_ingest).parameters
-    stream = inspect.signature(streaming_ingest).parameters
-    batch_knobs = {
-        n: p.default for n, p in batch.items() if n not in ("spark", "new_docs")
-    }
-    stream_knobs = {
-        n: p.default
-        for n, p in stream.items()
-        # stream_df/checkpoint/on_report are the streaming face's
-        # source + delivery mechanisms, not pipeline knobs;
-        # maintain_due (r17) / maintain_max_layers_per_batch (r18) /
-        # index_compact_above_files (r19) are the on_report-side
-        # maintenance POLICY — they change when (and how much of)
-        # maintain_lake runs, never what any batch admits, so they
-        # are delivery-side by the same rule
-        if n not in ("stream_df", "checkpoint", "on_report",
-                     "maintain_due", "maintain_max_layers_per_batch",
-                     "index_compact_above_files")
-    }
-    assert batch_knobs == stream_knobs
-
-
-def _av_docs(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, text string, payload binary, kind string, "
-        "duration_ms long",
-    )
-
-
-def _av_payloads():
-    import random
-
-    rng = random.Random(13)
-    vid = bytes(rng.randrange(256) for _ in range(1000))
-    aud = bytes(rng.randrange(256) for _ in range(600))
-    img = bytes(rng.randrange(256) for _ in range(600))
-
-    def fresh(n):
-        return bytes(rng.randrange(256) for _ in range(n))
-
-    return vid, aud, img, fresh
-
-
 def test_media_guard_routes_video_and_audio(spark, tmp_path):
     """r13 verdict #2: with a kind column, media_guard blocks
     re-encoded duplicate VIDEOS (frame-set Jaccard vs the
@@ -2525,42 +2390,6 @@ def test_media_guard_routes_video_and_audio(spark, tmp_path):
         spark, _av_docs(spark, b3), root, media_guard=True
     )
     assert r3["admitted"] == 2 and r3["media_skipped"] == 2
-
-
-def test_media_guard_video_audio_heal_on_replay(spark, tmp_path):
-    """Crash window per modality: docs landed but the video/audio
-    sidecar append did not — the replay backfills (healed_video /
-    healed_audio) and each guard regains sight."""
-    import shutil
-
-    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
-        incremental_ingest,
-    )
-
-    vid, aud, img, fresh = _av_payloads()
-    root = str(tmp_path / "lake_av_heal")
-    b1 = [
-        (1, "video alpha", vid, "video", 5000),
-        (2, "audio alpha", aud, "audio", None),
-    ]
-    incremental_ingest(spark, _av_docs(spark, b1), root, media_guard=True)
-    shutil.rmtree(f"{root}/media_vframes")
-    shutil.rmtree(f"{root}/media_awins")
-    rep = incremental_ingest(
-        spark, _av_docs(spark, b1), root, media_guard=True
-    )
-    assert rep["admitted"] == 0
-    assert rep["healed_video"] == 1 and rep["healed_audio"] == 1
-    r2 = incremental_ingest(
-        spark,
-        _av_docs(spark, [
-            (10, "video omega", vid[:100] + b"~" + vid[101:], "video", 5000),
-            (11, "audio omega", aud[64:], "audio", None),
-        ]),
-        root,
-        media_guard=True,
-    )
-    assert r2["admitted"] == 0 and r2["media_skipped"] == 2
 
 
 def test_media_guard_routing_is_lake_identity(spark, tmp_path):

@@ -1,12 +1,13 @@
-"""Dump .explain("formatted") for every declared query to plans/r20/.
+"""Dump .explain("formatted") for every declared query to plans/<round>/.
 
-Usage: python tools/dump_plans_r20.py [suffix] [query ...]
-Writes plans/r20/<name>_<suffix>.txt (suffix default "before").
+Usage: python tools/dump_plans.py --round rNN [suffix] [query ...]
+Writes plans/<round>/<name>_<suffix>.txt (suffix default "before").
 Also prints a one-line shape summary per query: #Exchange, join nodes,
 BatchEvalPython/ArrowEvalPython presence, #WholeStageCodegen spans.
 """
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -18,12 +19,17 @@ from projet_big_data_boutin_danre_spark.session import get_spark
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", required=True,
+                    help="plan directory under plans/, e.g. r21")
+    ap.add_argument("suffix", nargs="?", default="before")
+    ap.add_argument("queries", nargs="*", help="only these queries")
+    args = ap.parse_args()
+    suffix, only = args.suffix, set(args.queries)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r20",
+        "plans", args.round,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan_dump")
