@@ -11,12 +11,19 @@ Reference behaviors re-expressed:
 - S4 Parquet scan (``dags/lib/compute_usage.py:34,67``): native, with
   column pruning + predicate pushdown for free.
 
-All readers take explicit schemas — inference is opt-in via
-``schema=None`` and flagged for non-production use.
+The raw-format readers (CSV, JSON, ORC) take explicit schemas;
+inference is opt-in via ``schema=None`` and flagged for non-production
+use. The Parquet readers infer from the footers: ``read_parquet_lake``
+on every call, ``load_table`` once per file listing and inference-conf
+key, after which it reads with the remembered schema pinned (no Spark
+job; see ``_read_parquet``).
 """
 
 from __future__ import annotations
 
+import warnings
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -46,7 +53,7 @@ def _ship_package(spark: SparkSession) -> None:
     then dies with ModuleNotFoundError. addPyFile of a package zip is
     the standard Spark remedy and reaches every current and future
     executor; once per SparkContext, best-effort (a failure leaves
-    the normal run-from-repo-root path working as before)."""
+    the normal run-from-repo-root path working as before, and warns)."""
     sc = spark.sparkContext
     if getattr(sc, "_pbd_pkg_shipped", False):
         return
@@ -70,9 +77,79 @@ def _ship_package(spark: SparkSession) -> None:
                         full = os.path.join(dirpath, fn)
                         zf.write(full, os.path.relpath(full, root))
         sc.addPyFile(zpath)
-    except Exception:
-        pass  # best-effort: see docstring
+    except (OSError, Py4JError) as e:  # best-effort: see docstring
+        warnings.warn(
+            f"engine package not shipped to Python workers "
+            f"({type(e).__name__}: {e})",
+            RuntimeWarning,
+            stacklevel=3,
+        )
     sc._pbd_pkg_shipped = True
+
+
+# SQL confs that change the schema Parquet inference returns, or which
+# footers it reads: part of the schema memo's key.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+
+def _list_files(spark: SparkSession, path: str) -> tuple | None:
+    """(path, length, modification time) of every file under ``path``,
+    from one driver-side Hadoop listing; None if the path is absent."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return None
+    # listStatus walk: one round-trip per directory, where the
+    # recursive listFiles iterator costs several per file
+    files, dirs = [], [p]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            else:
+                files.append((
+                    st.getPath().toString(), st.getLen(),
+                    st.getModificationTime(),
+                ))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job when
+    the same files were read before under the same inference confs.
+
+    Spark launches one inference job per Parquet read, even for a file
+    it just opened. The schema it inferred is remembered on the
+    SparkContext (so a context restart infers again), one entry per
+    path, valid while the path's file listing and the values of
+    ``_INFERENCE_CONFS`` are unchanged; a hit reads with that schema
+    pinned, which launches no job. Schemas are cached, never frames:
+    every call builds a fresh relation with fresh attribute ids, so a
+    table loaded twice still self-joins unambiguously."""
+    # listed before the read: a file replaced in between, or a racing
+    # thread's entry, leaves a key the next listing no longer matches
+    files = _list_files(spark, path)
+    if files is None:  # Spark raises its usual missing-path error
+        return spark.read.parquet(path)
+    sc = spark.sparkContext
+    memo = getattr(sc, "_pbd_parquet_schemas", None)
+    if memo is None:
+        memo = sc._pbd_parquet_schemas = {}
+    key = (files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = memo.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (key, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -96,6 +173,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     wall time is taken as the same UTC instant the oracle sees), so
     downstream operators see ONE timestamp type whichever generator
     wrote the data.
+
+    The Parquet read infers the schema once per file listing and
+    inference-conf values, then reads with it pinned (``_read_parquet``),
+    so reopening an unchanged table launches no Spark job.
     """
     # timestamp formatting (date_format), naive-string parsing
     # (to_timestamp, timestamp-vs-string comparisons) all follow the
@@ -106,7 +187,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ship_package(spark)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     # TIMESTAMP_NTZ → TIMESTAMP under the UTC session pin: same

@@ -31,6 +31,19 @@ def test_queries_run_at_sf0001(spark, sf0001):
         assert df.count() >= 0, name
 
 
+@pytest.mark.parametrize("slot", ["two_step_lookup", "point_lookup"])
+def test_warm_slot_plans_without_a_job(spark, sf0001, slot):
+    """A slot opened a second time plans from the remembered table
+    schemas: no Spark job runs before its action."""
+    fn = entrymod.queries()[slot]
+    n = fn(spark, sf0001).count()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df = fn(spark, sf0001)
+    assert dag.nextJobId() == before
+    assert df.count() == n
+
+
 @pytest.mark.parametrize(
     "slot, module, func",
     [

@@ -7,10 +7,16 @@ from __future__ import annotations
 
 import gzip
 import json
+import shutil
+from collections import Counter
 
+import pytest
+from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
 
+from projet_big_data_boutin_danre_spark.sources import readers
 from projet_big_data_boutin_danre_spark.sources.readers import (
+    load_table,
     read_csv_gz,
     read_json_ads,
     read_parquet_lake,
@@ -19,6 +25,100 @@ from projet_big_data_boutin_danre_spark.sources.sinks import (
     write_json,
     write_parquet,
 )
+
+
+def _copy_tables(sf_dir, tmp_path, *names):
+    """Writable copies of testdata tables (the originals are read-only)."""
+    for n in names:
+        shutil.copy(f"{sf_dir}/{n}.parquet", tmp_path / f"{n}.parquet")
+    return str(tmp_path)
+
+
+def _jobs_launched(spark, fn):
+    """(fn's result, Spark jobs submitted while it ran)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - before
+
+
+def test_load_table_second_open_launches_no_job(spark, sf0001, tmp_path):
+    sf = _copy_tables(sf0001, tmp_path, "customer")
+    plain = spark.read.parquet(f"{sf}/customer.parquet")
+    _, first_jobs = _jobs_launched(
+        spark, lambda: load_table(spark, sf, "customer")
+    )
+    df, jobs = _jobs_launched(spark, lambda: load_table(spark, sf, "customer"))
+    assert first_jobs >= 1  # the inference job the memo saves
+    assert jobs == 0
+    assert df.schema == plain.schema  # nullability included
+    assert sorted(df.collect()) == sorted(plain.collect())
+
+
+def test_load_table_sees_a_replaced_file(spark, sf0001, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = _copy_tables(sf0001, tmp_path, "region")
+    before = load_table(spark, sf, "region")
+    path = f"{sf}/region.parquet"
+    t = pq.read_table(path)
+    pq.write_table(
+        t.append_column("r_code", pa.array(range(t.num_rows), pa.int64())),
+        path,
+    )
+    after = load_table(spark, sf, "region")
+    assert after.columns == [*before.columns, "r_code"]
+    assert sorted(r["r_code"] for r in after.collect()) == list(
+        range(t.num_rows)
+    )
+
+
+def test_schema_memo_keys_on_inference_confs(spark, sf0001, tmp_path):
+    # load_table casts TIMESTAMP_NTZ away afterwards, so look at the
+    # helper's own output
+    path = f"{_copy_tables(sf0001, tmp_path, 'orders')}/orders.parquet"
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        ntz = readers._read_parquet(spark, path)
+        spark.conf.set(key, "false")
+        ltz, jobs = _jobs_launched(
+            spark, lambda: readers._read_parquet(spark, path)
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert dict(ntz.dtypes)["o_orderdate"] == "timestamp_ntz"
+    assert dict(ltz.dtypes)["o_orderdate"] == "timestamp"
+    assert jobs >= 1  # inferred again, not served from the memo
+
+
+def test_load_table_twice_self_joins(spark, sf0001, tmp_path):
+    sf = _copy_tables(sf0001, tmp_path, "customer")
+    a = load_table(spark, sf, "customer")
+    b = load_table(spark, sf, "customer")
+    # customers whose key equals another customer's nation key: with one
+    # shared relation both sides would resolve to the same attributes
+    joined = a.join(b, a["c_custkey"] == b["c_nationkey"]).count()
+    rows = a.collect()
+    per_nation = Counter(r["c_nationkey"] for r in rows)
+    assert joined == sum(per_nation[r["c_custkey"]] for r in rows) > 0
+
+
+def test_ship_package_failure_warns(spark, sf0001, monkeypatch):
+    load_table(spark, sf0001, "region")  # the real package ships first
+    sc = spark.sparkContext
+
+    def refuse(path):
+        raise Py4JError("addPyFile refused")
+
+    monkeypatch.setattr(sc, "addPyFile", refuse)
+    # undone (flag restored) by monkeypatch after the test
+    monkeypatch.delattr(sc, "_pbd_pkg_shipped")
+    with pytest.warns(RuntimeWarning, match="Py4JError"):
+        df = load_table(spark, sf0001, "region")
+    assert df.count() > 0
 
 
 def test_read_csv_gz_pinned_schema(spark, tmp_path):
