@@ -59,6 +59,8 @@ from .functions.localdf import tiny_df
 from .operators import bloom as bloom_ops
 from .operators import corpus_prep, dedup, lm, multimodal, text
 from .operators import urls as urls_ops
+from .sources.readers import JVM_ERRORS, child_names, path_exists, read_layer
+from .sources.readers import data_file_count as _data_file_count
 
 
 @dataclass(frozen=True)
@@ -199,28 +201,6 @@ class CorpusRecipe:
     seed: int = 42
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
-
-
-def _dir_exists(spark: SparkSession, path: str) -> bool:
-    """Point existence probe (one ``FileSystem.exists`` — HEAD-shaped
-    on object stores), unlike :func:`_exists`, whose
-    ``read.parquet(...).schema`` pays a recursive leaf listing plus a
-    footer read. Use this where only PRESENCE matters and the caller
-    is specifically avoiding listings (the ``trust_marker``
-    maintenance path); ``_exists`` stays the right probe where
-    "present but unreadable" must also count as absent."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
 def apply_ngram_caps(
     docs: DataFrame,
     id_col: str,
@@ -326,9 +306,10 @@ def run_corpus_pipeline(
 
     def stage(name: str, build) -> DataFrame:
         path = layer(name)
-        if force or not _exists(spark, path):
+        out = None if force else read_layer(spark, path)
+        if out is None:
             build().write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
+            out = spark.read.parquet(path)
         counts[name] = out.count()
         return out
 
@@ -574,13 +555,15 @@ def run_corpus_pipeline(
     )
 
     shards_path = layer("shards")
-    if force or not _exists(spark, shards_path):
+    shards = None if force else read_layer(spark, shards_path)
+    if shards is None:
         corpus_prep.write_training_shards(
             chunks, "chunk_key", shards_path,
             seed=recipe.seed, n_shards=recipe.n_shards,
             manifest=True,
         )
-    counts["shards"] = spark.read.parquet(shards_path).count()
+        shards = spark.read.parquet(shards_path)
+    counts["shards"] = shards.count()
     return counts
 
 
@@ -1072,8 +1055,9 @@ def incremental_ingest(
     url_keys_path = f"{out_root}/url_keys"
     marker_path = f"{out_root}/_lake_mode"
     recorded = None
-    if _exists(spark, marker_path):
-        row = spark.read.parquet(marker_path).head()
+    marker = read_layer(spark, marker_path)
+    if marker is not None:
+        row = marker.head()
         if row is None:
             # schema-readable but zero rows: an interrupted marker
             # overwrite — refuse clearly instead of a None-subscript
@@ -1128,8 +1112,10 @@ def incremental_ingest(
         # no marker: a pre-marker (legacy) lake, or a brand-new one.
         # Legacy lakes keep the conservative heuristics; new lakes
         # stamp the marker before anything else is written.
-        if bucketed and not spark.catalog.tableExists(fp_table) and _exists(
-            spark, fp_path
+        if (
+            bucketed
+            and not spark.catalog.tableExists(fp_table)
+            and read_layer(spark, fp_path) is not None
         ):
             raise ValueError(
                 f"lake at {out_root} has path-mode fingerprints but "
@@ -1140,8 +1126,8 @@ def incremental_ingest(
             )
         if (
             not bucketed
-            and not _exists(spark, fp_path)
-            and _exists(spark, docs_path)
+            and read_layer(spark, fp_path) is None
+            and read_layer(spark, docs_path) is not None
         ):
             # an UNMARKED docs layer with no path-mode fingerprints is
             # either a catalog-mode lake (whose guards this call would
@@ -1587,10 +1573,10 @@ def incremental_ingest(
         )
     if bucketed and spark.catalog.tableExists(fp_table):
         seen = spark.table(fp_table).select("fingerprint")
-    elif not bucketed and _exists(spark, fp_path):
-        seen = spark.read.parquet(fp_path).select("fingerprint")
     else:
-        seen = None
+        seen = None if bucketed else read_layer(spark, fp_path)
+        if seen is not None:
+            seen = seen.select("fingerprint")
     # the two Bloom lineages — each a cache of one key layer, probed
     # in front of its exact join when the knob is on, and maintained
     # by every admitting batch whenever the layer is present
@@ -1599,7 +1585,7 @@ def incremental_ingest(
         keys=None if seen is None else (lambda: seen),
         guard=bloom_guard, max_fill=bloom_max_fill,
     )
-    url_history = url_guard and _exists(spark, url_keys_path)
+    url_history = url_guard and read_layer(spark, url_keys_path) is not None
 
     def url_keys() -> DataFrame:
         return spark.read.parquet(url_keys_path).select("canonical_url")
@@ -1656,12 +1642,12 @@ def incremental_ingest(
                 admitted, url_hits, id_col, "__ug"
             )
             n_url_skipped += n_hit
-    if near_dup and _exists(spark, bands_path):
+    seen_b = read_layer(spark, bands_path) if near_dup else None
+    if seen_b is not None:
         # history probe: batch band rows BROADCAST against a
         # two-column scan of the persisted band layer — history is
         # never shuffled or text-read per batch (lsh_seen_ids plan
         # notes).
-        seen_b = spark.read.parquet(bands_path)
         rescued_ids = None
         if near_dup_verify is None:
             near_hits = dedup.lsh_seen_ids(
@@ -1736,26 +1722,33 @@ def incremental_ingest(
         # shape as the near_dup guard above), so the payload-bearing
         # admitted frame is materialized once, not once per modality.
         media_hits = []
-        if _exists(spark, media_bands_path):
+        seen_m = read_layer(spark, media_bands_path)
+        if seen_m is not None:
             media_hits.append(multimodal.phash_seen_ids(
                 batch_mhashes,
-                spark.read.parquet(media_bands_path),
+                seen_m,
                 id_col=id_col,
                 max_hamming=media_max_hamming,
                 max_bucket=media_max_bucket,
             ))
-        if media_routed and _exists(spark, media_vframes_path):
+        seen_v = (
+            read_layer(spark, media_vframes_path) if media_routed else None
+        )
+        if seen_v is not None:
             media_hits.append(multimodal.vhash_seen_ids(
                 batch_vside,
-                spark.read.parquet(media_vframes_path),
+                seen_v,
                 id_col=id_col,
                 min_jaccard=media_video_min_jaccard,
                 max_bucket=media_max_bucket,
             ))
-        if media_routed and _exists(spark, media_awins_path):
+        seen_a = (
+            read_layer(spark, media_awins_path) if media_routed else None
+        )
+        if seen_a is not None:
             media_hits.append(multimodal.audio_seen_ids(
                 batch_awins,
-                spark.read.parquet(media_awins_path),
+                seen_a,
                 id_col=id_col,
                 min_votes=media_audio_min_votes,
                 max_bucket=media_max_bucket,
@@ -1776,8 +1769,10 @@ def incremental_ingest(
     prior_batch_ids = None
     if bucketed and spark.catalog.tableExists(id_table):
         prior_ids = spark.table(id_table).select(id_col)
-    elif not bucketed and _exists(spark, docs_path):
-        prior_ids = spark.read.parquet(docs_path).select(id_col)
+    elif not bucketed:
+        prior_ids = read_layer(spark, docs_path)
+        if prior_ids is not None:
+            prior_ids = prior_ids.select(id_col)
     healable = None
     if prior_ids is not None:
         if "__prior" in admitted.columns:
@@ -1844,8 +1839,10 @@ def incremental_ingest(
         fp_ids = None
         if bucketed and spark.catalog.tableExists(fp_table):
             fp_ids = spark.table(fp_table).select(id_col)
-        elif not bucketed and _exists(spark, fp_path):
-            fp_ids = spark.read.parquet(fp_path).select(id_col)
+        elif not bucketed:
+            fp_ids = read_layer(spark, fp_path)
+            if fp_ids is not None:
+                fp_ids = fp_ids.select(id_col)
         healable = (
             flagged.filter(F.col("__prior"))
             .select("fingerprint", id_col)
@@ -1883,9 +1880,10 @@ def incremental_ingest(
             s.id_col,
             "left_semi",
         )
-        if _exists(spark, path):
+        side = read_layer(spark, path)
+        if side is not None:
             h = h.join(
-                spark.read.parquet(path).select(s.id_col).dropDuplicates(),
+                side.select(s.id_col).dropDuplicates(),
                 s.id_col,
                 "left_anti",
             )
@@ -1939,17 +1937,14 @@ def incremental_ingest(
         # instead of bucket existence probes or the quarter-coverage
         # root read; only ids the tail cannot answer proceed to the
         # base-layer check below.
-        if _exists(spark, text_idx_tail):
+        tail = read_layer(spark, text_idx_tail)
+        if tail is not None:
             try:
                 ht_ids = ht_ids.join(
-                    spark.read.parquet(text_idx_tail).select(
-                        F.col(id_col)
-                    ),
-                    id_col,
-                    "left_anti",
+                    tail.select(F.col(id_col)), id_col, "left_anti"
                 ).localCheckpoint()
-            except Exception:
-                pass
+            except JVM_ERRORS:
+                pass  # unreadable tail rows: the base check below answers
         hbks = [int(r["tb"]) for r in ht_ids.select("tb").distinct().collect()]
         if hbks:
             if len(hbks) * 4 >= int(text_idx_n):
@@ -2001,33 +1996,28 @@ def incremental_ingest(
                     }
                 )
                 base_alive = any(
-                    _dir_exists(spark, f"{text_idx_path}/tb={b}")
+                    path_exists(spark, f"{text_idx_path}/tb={b}")
                     for b in sample
                 )
-                if base_alive and _dir_exists(spark, ids_p):
-                    try:
-                        _sdf = spark.read.parquet(ids_p)
-                        id_sources.append(
-                            _sdf.select(
-                                F.col(_sdf.columns[0]).alias(id_col)
-                            )
-                        )
-                    except Exception:
-                        # unreadable sidecar: fall through to the
-                        # root read — absence degrades, never lies
-                        pass
-                if not id_sources:
-                    try:
-                        id_sources.append(
-                            spark.read.parquet(text_idx_path).select(
-                                F.col(id_col)
-                            )
-                        )
-                    except Exception:
-                        # unreadable/absent base: every remaining
-                        # candidate (tail already consulted above) is
-                        # missing and the backfill restores them
-                        pass
+                # an unreadable sidecar falls through to the root
+                # read — absence degrades, never lies
+                _sdf = (
+                    read_layer(spark, ids_p)
+                    if base_alive and path_exists(spark, ids_p)
+                    else None
+                )
+                if _sdf is not None:
+                    id_sources.append(
+                        _sdf.select(F.col(_sdf.columns[0]).alias(id_col))
+                    )
+                else:
+                    # an unreadable/absent base leaves id_sources
+                    # empty: every remaining candidate (tail already
+                    # consulted above) is missing and the backfill
+                    # restores them
+                    base = read_layer(spark, text_idx_path)
+                    if base is not None:
+                        id_sources.append(base.select(F.col(id_col)))
             else:
                 # explicit candidate-bucket paths, not an isin filter
                 # on the layer root — the root read would LIST all N
@@ -2035,17 +2025,11 @@ def incremental_ingest(
                 # _indexed_verify_history)
                 id_sources = []
                 live_hb = _live_bucket_paths(spark, text_idx_path, hbks)
-                if live_hb:
-                    try:
-                        id_sources.append(
-                            spark.read.parquet(*live_hb).select(
-                                F.col(id_col)
-                            )
-                        )
-                    except Exception:
-                        # present-but-unreadable buckets: fall through
-                        # to the tail / all-missing handling below
-                        pass
+                # present-but-unreadable buckets fall through to the
+                # all-missing handling below
+                hb = read_layer(spark, *live_hb) if live_hb else None
+                if hb is not None:
+                    id_sources.append(hb.select(F.col(id_col)))
             # (tail ids were already anti-joined out of ht_ids above,
             # so id_sources here carry only the bucketed base)
             if id_sources:
@@ -2139,8 +2123,9 @@ def incremental_ingest(
         # very listing that could correct it). Rare path, priced like
         # the total recount it already shares.
         last_digest, last_n = None, None
-        if _exists(spark, docs_path):
-            base_total = spark.read.parquet(docs_path).count()
+        docs = read_layer(spark, docs_path)
+        if docs is not None:
+            base_total = docs.count()
             files_acc = {}
             # the discovered text index is an append layer too (r16
             # review #1): leaving it out would restart its accounting
@@ -2236,7 +2221,7 @@ def incremental_ingest(
                 spark, stats_path, n_total_docs, adm_digest, n_admitted,
                 files=files_acc,
             )
-    elif stats is None and _exists(spark, docs_path):
+    elif stats is None and read_layer(spark, docs_path) is not None:
         # migration write for a pre-marker lake: persist the one-time
         # recount (total AND measured file counts) so the next batch
         # reads 1 row instead of listing the corpus
@@ -2622,27 +2607,29 @@ def _read_lake_stats(
     empty dict — the counter simply starts at this lake's next
     admitting batch (an operator who suspects a legacy lake is
     already overgrown runs :func:`maintain_lake` once, which LISTS)."""
-    try:
-        df = spark.read.parquet(path)
-        if {"total_docs", "last_digest", "last_n"} - set(df.columns):
-            return None
-        row = df.head()
-        if row is None:
-            return None
-        files = (
-            dict(row["files_appended"])
-            if "files_appended" in df.columns
-            and row["files_appended"] is not None
-            else {}
-        )
-        return (
-            int(row["total_docs"]),
-            None if row["last_digest"] is None else int(row["last_digest"]),
-            None if row["last_n"] is None else int(row["last_n"]),
-            {str(k): int(v) for k, v in files.items()},
-        )
-    except Exception:
+    df = read_layer(spark, path)
+    if df is None or {"total_docs", "last_digest", "last_n"} - set(
+        df.columns
+    ):
         return None
+    try:
+        row = df.head()
+    except JVM_ERRORS:
+        return None
+    if row is None:
+        return None
+    files = (
+        dict(row["files_appended"])
+        if "files_appended" in df.columns
+        and row["files_appended"] is not None
+        else {}
+    )
+    return (
+        int(row["total_docs"]),
+        None if row["last_digest"] is None else int(row["last_digest"]),
+        None if row["last_n"] is None else int(row["last_n"]),
+        {str(k): int(v) for k, v in files.items()},
+    )
 
 
 def _write_lake_stats(
@@ -2675,12 +2662,8 @@ def recount_lake_docs(spark: SparkSession, out_root: str) -> int:
     out-of-band surgery on the docs layer (manual deletes, external
     compaction that drops rows) or on suspicion of drift; the normal
     ingest path never needs it."""
-    docs_path = f"{out_root}/docs"
-    n = (
-        spark.read.parquet(docs_path).count()
-        if _exists(spark, docs_path)
-        else 0
-    )
+    docs = read_layer(spark, f"{out_root}/docs")
+    n = docs.count() if docs is not None else 0
     # the recount re-syncs total_docs; the files-appended accounting
     # is orthogonal (appends-since-compaction, not rows) and carries
     # over unchanged — except when the marker itself is gone/torn, in
@@ -2796,7 +2779,7 @@ def _fold_tail_append(
     count, when it already holds one — :func:`maintain_lake` just
     paid a :func:`_spark_file_count` listing to route here, and
     re-listing the large bucketed base through the
-    ~3-round-trips-per-file iterator twice per fold was exactly the
+    ~3-round-trips-per-file walk twice per fold was exactly the
     py4j chatter the r18 reclaim fix removed elsewhere. ``None``
     (a direct caller) counts via the single-call listing itself.
 
@@ -2853,7 +2836,7 @@ def _fold_tail_append(
     # keeps the root-read fallback until the next full regen creates
     # it (an absent sidecar must stay absent — a partial one seeded
     # here would claim completeness it doesn't have).
-    if _dir_exists(spark, ids_path):
+    if path_exists(spark, ids_path):
         tail_df.select(idc).coalesce(8).write.mode("append").parquet(
             ids_path
         )
@@ -2861,9 +2844,10 @@ def _fold_tail_append(
         # two footer-only counts per fold; only the over-stating
         # direction triggers work, and the regen it triggers is the
         # same ids-only projection the full rewrite pays
+        base_df = read_layer(spark, path)
         try:
-            base_rows = spark.read.parquet(path).count()
-        except Exception:
+            base_rows = None if base_df is None else base_df.count()
+        except JVM_ERRORS:
             base_rows = None
         if base_rows is None:
             # base appended-to yet unreadable (torn beyond the fold's
@@ -2871,7 +2855,6 @@ def _fold_tail_append(
             # sidecar dead so heals take the root path
             fs.delete(hpath(ids_path), True)
         elif spark.read.parquet(ids_path).count() > base_rows:
-            base_df = spark.read.parquet(path)
             (
                 base_df.select(base_df.columns[0])
                 .coalesce(max(1, files_after // 32))
@@ -2895,26 +2878,17 @@ def read_text_index(
     delete) can leave identical rows in both — tolerated by every
     consumer (verify dedups output ids; heals dedup id sets) and
     removed by the next fold's full-row dropDuplicates."""
-    parts = []
-    try:
-        parts.append(
-            spark.read.parquet(
-                _text_index_path(out_root, buckets)
-            ).select(id_col, text_col)
+    # a gutted/unreadable base (crash residue) is skipped: the tail
+    # may still answer — consumers treat missing rows as heal work,
+    # never as absence of content
+    parts = [
+        df.select(id_col, text_col)
+        for df in (
+            read_layer(spark, _text_index_path(out_root, buckets)),
+            read_layer(spark, _text_index_tail_path(out_root, buckets)),
         )
-    except Exception:
-        # gutted/unreadable base (crash residue): the tail below may
-        # still answer — consumers treat missing rows as heal work,
-        # never as absence of content
-        pass
-    tail_p = _text_index_tail_path(out_root, buckets)
-    if _exists(spark, tail_p):
-        try:
-            parts.append(
-                spark.read.parquet(tail_p).select(id_col, text_col)
-            )
-        except Exception:
-            pass
+        if df is not None
+    ]
     if not parts:
         raise ValueError(
             f"text index b{buckets} under {out_root} has no readable "
@@ -2944,16 +2918,9 @@ def _discover_text_index(spark: SparkSession, out_root: str) -> int | None:
     indexless plan), never to a wrong admission — but we keep the
     loud re-raise discipline anyway so a flaky store shows up in the
     batch error rather than as a silent performance cliff."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    root = hpath(out_root)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return None
     prefix = "text_index_b"
     best = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
+    for name in child_names(spark, out_root) or ():
         if not name.startswith(prefix):
             continue
         try:
@@ -3056,7 +3023,8 @@ def build_text_index(
         # later candidate-carrying ingest on int(None)
         raise ValueError(f"buckets must be >= 1, got {buckets}")
     docs_path = f"{out_root}/docs"
-    if not _exists(spark, docs_path):
+    docs = read_layer(spark, docs_path)
+    if docs is None:
         raise ValueError(
             f"{out_root} has no readable docs layer to index"
         )
@@ -3067,8 +3035,7 @@ def build_text_index(
     size = fs.getContentSummary(hpath(docs_path)).getLength()
     n_out = max(1, int(size // (target_file_mb * 1024 * 1024)) + 1)
     df = (
-        spark.read.parquet(docs_path)
-        .select(id_col, text_col)
+        docs.select(id_col, text_col)
         .withColumn(
             "tb", F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(buckets)))
         )
@@ -3103,13 +3070,12 @@ def build_text_index(
         # but a stale LARGER one would shadow this build (their
         # _tail/_ids sidecars sweep with them; this build's own are
         # re-created below)
-        for st in fs.listStatus(hpath(out_root)):
-            name = st.getPath().getName()
+        for name in child_names(spark, out_root) or ():
             if (
                 name.startswith("text_index_b")
                 and name != f"text_index_b{int(buckets)}"
             ):
-                fs.delete(st.getPath(), True)
+                fs.delete(hpath(f"{out_root}/{name}"), True)
     # id-presence sidecar (r18, verdict #2): ids-only projection of
     # the fresh base so the heal's quarter-coverage path never reads
     # the text-bearing root — regenerated wholesale here and at every
@@ -3244,11 +3210,11 @@ def _indexed_verify_history(
         # younger than these docs): the cache answers nothing — use
         # the pre-index docs-scan plan wholesale
         return spark.read.parquet(docs_path).select(id_col, text_col)
-    try:
-        idx = spark.read.parquet(*live).select(id_col, text_col)
-    except Exception:
+    idx = read_layer(spark, *live)
+    if idx is None:
         # present-but-unreadable bucket dirs degrade the same way
         return spark.read.parquet(docs_path).select(id_col, text_col)
+    idx = idx.select(id_col, text_col)
     # append TAIL (r17): per-batch index appends land in the sibling
     # unpartitioned tail until maintain_lake folds them into the
     # buckets — it is small between folds and read WHOLE, so
@@ -3256,14 +3222,9 @@ def _indexed_verify_history(
     # instead of each falling to the per-id docs fallback below.
     # (Crash-residue duplicate rows between base and tail are
     # tolerated: verify output ids are distinct-ed.)
-    tail_p = idx_path + "_tail"
-    if _exists(spark, tail_p):
-        try:
-            idx = idx.unionByName(
-                spark.read.parquet(tail_p).select(id_col, text_col)
-            )
-        except Exception:
-            pass
+    tail = read_layer(spark, idx_path + "_tail")
+    if tail is not None:
+        idx = idx.unionByName(tail.select(id_col, text_col))
     found = (
         idx.join(
             F.broadcast(hist_ids.withColumnRenamed("seen_id", id_col)),
@@ -3312,19 +3273,15 @@ def _discover_bloom_geometry(
     silent failure mode the geometry-in-the-path design exists to
     prevent. A loud transient failure costs one retried batch; a
     silent one splits the filter lineage across geometries forever."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    root = hpath(out_root)
     # note: the "bloom" prefix cannot match a "url_bloom_*" layer —
     # startswith on the full '<layer>_k{K}h' string keeps the two
     # filter lineages disjoint by construction
     prefix = f"{layer}_k{bloom_ops.K_DEFAULT}h"
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    names = child_names(spark, out_root)
+    if names is None:
         return None
     best = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
+    for name in names:
         if not name.startswith(prefix):
             continue
         try:
@@ -3362,29 +3319,22 @@ def bloom_rebuild(
     to a probe against missing bits. Returns
     ``{"hex_chars", "bits_set", "fill_frac"}``."""
     if layer == "url_bloom":
-        uk_path = f"{out_root}/url_keys"
-        if not _exists(spark, uk_path):
-            raise ValueError(
-                f"lake at {out_root} has no url_keys layer to rebuild "
-                "the url Bloom sidecar from"
-            )
-        seen = spark.read.parquet(uk_path).select("canonical_url")
-        key_col = "canonical_url"
+        key_col, source = "canonical_url", "url_keys layer to rebuild the url"
+        seen = read_layer(spark, f"{out_root}/url_keys")
     else:
+        key_col, source = "fingerprint", "fingerprint layer to rebuild the"
         fp_table = (
             f"{catalog_prefix}_fingerprints" if catalog_prefix else None
         )
-        fp_path = f"{out_root}/fingerprints"
         if fp_table and spark.catalog.tableExists(fp_table):
-            seen = spark.table(fp_table).select("fingerprint")
-        elif _exists(spark, fp_path):
-            seen = spark.read.parquet(fp_path).select("fingerprint")
+            seen = spark.table(fp_table)
         else:
-            raise ValueError(
-                f"lake at {out_root} has no fingerprint layer to rebuild "
-                "the Bloom sidecar from"
-            )
-        key_col = "fingerprint"
+            seen = read_layer(spark, f"{out_root}/fingerprints")
+    if seen is None:
+        raise ValueError(
+            f"lake at {out_root} has no {source} Bloom sidecar from"
+        )
+    seen = seen.select(key_col)
     blm = bloom_ops.bloom_build(
         seen, key_col, hex_chars=hex_chars
     ).localCheckpoint()
@@ -3393,15 +3343,14 @@ def bloom_rebuild(
     # pay one request per file, and the filter is MB-scale
     blm.coalesce(8).write.mode("overwrite").parquet(path)
     if drop_others:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        root = hpath(out_root)
+        hpath = spark._jvm.org.apache.hadoop.fs.Path
+        fs = hpath(out_root).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
         prefix = f"{layer}_k{bloom_ops.K_DEFAULT}h"
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
+        for name in child_names(spark, out_root) or ():
             if name.startswith(prefix) and name != f"{prefix}{hex_chars}":
-                fs.delete(st.getPath(), True)
+                fs.delete(hpath(f"{out_root}/{name}"), True)
     stats = bloom_ops.bloom_fill_stats(blm, hex_chars).first()
     return {
         "hex_chars": hex_chars,
@@ -3451,34 +3400,17 @@ _APPEND_LAYERS = (
 def _spark_file_count(spark: SparkSession, path: str) -> int:
     """File count via ONE Spark file-index listing — ``inputFiles()``
     marshals the whole path array in a single py4j call, where the
-    :func:`_data_file_count` iterator shape costs ~3 driver round
+    :func:`_data_file_count` listing walk costs ~3 driver round
     trips PER FILE (the `_live_bucket_paths` measurement; reproduced
     at maintenance scale by the first ``fold_unit`` probe run —
     SCALE.md §r18). Use for layers that are parquet-readable and
     LARGE (the text index base: ≥ one file per non-empty bucket);
-    unreadable/missing layers fall back to the iterator, which
-    handles them as point probes."""
-    try:
-        return len(spark.read.parquet(path).inputFiles())
-    except Exception:
+    unreadable/missing layers fall back to the walk, which handles
+    them as point probes."""
+    df = read_layer(spark, path)
+    if df is None:
         return _data_file_count(spark, path)
-
-
-def _data_file_count(spark: SparkSession, path: str) -> int:
-    """Count a layer's data files (recursive, underscore-prefixed
-    bookkeeping like _SUCCESS excluded); 0 for a missing layer."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return 0
-    it, n = fs.listFiles(p, True), 0
-    while it.hasNext():
-        f = it.next()
-        if not f.getPath().getName().startswith("_"):
-            n += 1
-    return n
+    return len(df.inputFiles())
 
 
 def maintain_lake(
@@ -3675,15 +3607,11 @@ def maintain_lake(
             # then returns None; find the orphan explicitly so the
             # entry repair in compact_layer can finish the swap (the
             # static layers get this for free from _APPEND_LAYERS)
-            root_p = hpath(out_root)
-            fs_r = root_p.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs_r.exists(root_p):
-                for st in fs_r.listStatus(root_p):
-                    nm = st.getPath().getName()
-                    if nm.startswith("text_index_b") and nm.endswith(
-                        "__compact"
-                    ):
-                        sweep.append((nm[: -len("__compact")], "tb"))
+            for nm in child_names(spark, out_root) or ():
+                if nm.startswith("text_index_b") and nm.endswith(
+                    "__compact"
+                ):
+                    sweep.append((nm[: -len("__compact")], "tb"))
         for layer, layer_pby in sweep:
             path = f"{out_root}/{layer}"
             # the text index's append tail (r17) counts toward ITS
@@ -3701,15 +3629,15 @@ def maintain_lake(
             # the sweep the same way a crashed whole-layer swap does —
             # two more point probes on the trust_marker skip path
             bstage = layer_pby is not None and (
-                _dir_exists(spark, path + "__bcompact")
-                or _dir_exists(spark, path + "__bold")
+                path_exists(spark, path + "__bcompact")
+                or path_exists(spark, path + "__bold")
             )
             if (
                 marker_files is not None
                 and layer in marker_files
                 and marker_files[layer] <= int(compact_above_files)
-                and _dir_exists(spark, path)
-                and not _dir_exists(spark, path + "__compact")
+                and path_exists(spark, path)
+                and not path_exists(spark, path + "__compact")
                 and not bstage
             ):
                 continue
@@ -3724,7 +3652,8 @@ def maintain_lake(
                 else 0
             )
             n_files = n_files_base + tail_files
-            crashed = not _exists(spark, path) and _data_file_count(
+            alive = read_layer(spark, path) is not None
+            crashed = not alive and _data_file_count(
                 spark, path + "__compact"
             )
             if (
@@ -3741,7 +3670,7 @@ def maintain_lake(
                 # `compact_due` nonzero forever. maintain_lake just
                 # PAID the listing, so the measurement is free here;
                 # the ingest path never lists (the marker's point).
-                if _exists(spark, path):
+                if alive:
                     resync[layer] = n_files
                 # a crash after the swap's step 4 (live in place, old
                 # copy not yet deleted) leaves a stale `__old` dir
@@ -3889,7 +3818,7 @@ def maintain_lake(
                 continue
             fold_df = None
             fold_path = None
-            # presence probes, not readability (_exists): a GUTTED
+            # presence probes, not readability (read_layer): a GUTTED
             # base (dir present, data files lost to crash residue)
             # must still fold — compact_layer rebuilds it from the
             # tail (its read-failure handling covers unreadable-with-
@@ -3897,8 +3826,8 @@ def maintain_lake(
             # read rather than being silently dropped
             if (
                 tail_path is not None
-                and _dir_exists(spark, tail_path)
-                and _dir_exists(spark, path)
+                and path_exists(spark, tail_path)
+                and path_exists(spark, path)
             ):
                 # fold the tail into the bucketed base inside the
                 # compaction rewrite (the r17 LSM-tail design):
@@ -4034,7 +3963,7 @@ def maintain_lake(
     if (
         text_index_buckets is not None
         and _discover_text_index(spark, out_root) is None
-        and _exists(spark, f"{out_root}/docs")
+        and read_layer(spark, f"{out_root}/docs") is not None
     ):
         if units_left < 1:
             deferred_units += 1
@@ -4069,14 +3998,11 @@ def _read_bloom_layer(spark: SparkSession, path: str) -> DataFrame | None:
     crash during its overwrite may leave a partial directory, and the
     filter is a rebuildable cache of the fingerprint layer, so any
     read failure degrades to a rebuild instead of an error."""
-    try:
-        df = spark.read.parquet(path)
-        # cheap structural sanity: both columns present
-        if {"word_idx", "word"} - set(df.columns):
-            return None
-        return df
-    except Exception:
+    df = read_layer(spark, path)
+    # cheap structural sanity: both columns present
+    if df is None or {"word_idx", "word"} - set(df.columns):
         return None
+    return df
 
 
 def compact_layer(
@@ -4182,34 +4108,25 @@ def compact_layer(
             "Re-run write_training_shards to re-layout it instead."
         )
 
-    def _files(p) -> int:
-        it, n = fs.listFiles(p, True), 0
-        while it.hasNext():
-            f = it.next()
-            if not f.getPath().getName().startswith("_"):
-                n += 1
-        return n
-
-    files_before = _files(live)
+    files_before = _data_file_count(spark, path)
     size = fs.getContentSummary(live).getLength()
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        # a layer left data-less by out-of-band surgery or crash
-        # residue (dir present, no readable files) only has content
-        # to rewrite when a fold tail exists — without one, keep the
-        # loud failure (a plain compaction of nothing is a caller
-        # bug); with one, the fold REBUILDS a readable base from the
-        # tail so unattended maintenance can't wedge in a failing
-        # loop (missing older rows are the heal/fallback paths'
-        # responsibility — the cache contract)
-        if fold_df is None:
-            raise
-        df = None
+    # a layer left data-less by out-of-band surgery or crash residue
+    # (dir present, no readable files) only has content to rewrite
+    # when a fold tail exists — without one, keep Spark's loud read
+    # failure (a plain compaction of nothing is a caller bug); with
+    # one, the fold REBUILDS a readable base from the tail so
+    # unattended maintenance can't wedge in a failing loop (missing
+    # older rows are the heal/fallback paths' responsibility — the
+    # cache contract)
+    df = (
+        spark.read.parquet(path)
+        if fold_df is None
+        else read_layer(spark, path)
+    )
     if fold_df is not None:
         files_before += (
-            _files(hpath(fold_path))
-            if fold_path is not None and fs.exists(hpath(fold_path))
+            _data_file_count(spark, fold_path)
+            if fold_path is not None
             else 0
         )
         size += (
@@ -4285,7 +4202,7 @@ def compact_layer(
             )
     return {
         "files_before": files_before,
-        "files_after": _files(live),
+        "files_after": _data_file_count(spark, path),
         "rows": rows,
     }
 
@@ -4394,15 +4311,13 @@ def compact_index_buckets(
     # translation: one LIST sweep of the layer, not one per dir.
     def _per_bucket_files() -> dict[str, int]:
         counts: dict[str, int] = {}
-        try:
-            for fpath in spark.read.parquet(path).inputFiles():
-                seg = fpath.rstrip("/").rsplit("/", 2)
-                if len(seg) == 3 and seg[1].startswith("tb="):
-                    counts[seg[1]] = counts.get(seg[1], 0) + 1
-        except Exception:
-            # unreadable/empty layer: nothing selectable (entry
-            # repair above already resolved crash residue)
-            return {}
+        # an unreadable/empty layer has nothing selectable (entry
+        # repair above already resolved crash residue)
+        df = read_layer(spark, path)
+        for fpath in df.inputFiles() if df is not None else ():
+            seg = fpath.rstrip("/").rsplit("/", 2)
+            if len(seg) == 3 and seg[1].startswith("tb="):
+                counts[seg[1]] = counts.get(seg[1], 0) + 1
         return counts
 
     per_bucket = _per_bucket_files()
@@ -4535,9 +4450,8 @@ def _compact_ids_sidecar(spark: SparkSession, ids_path: str) -> None:
         fs.delete(old, True)
     if fs.exists(swap):
         fs.delete(swap, True)
-    try:
-        df = spark.read.parquet(ids_path)
-    except Exception:
+    df = read_layer(spark, ids_path)
+    if df is None:
         return  # unreadable sidecar: leave for the next full regen
     df.dropDuplicates().coalesce(8).write.mode("overwrite").parquet(
         ids_path + "__swap"
@@ -4621,10 +4535,10 @@ def update_line_census(
             "batches)."
         )
     digest = int(digest_row["d"])
-    if _exists(spark, census_path):
+    census = read_layer(spark, census_path)
+    if census is not None:
         seen = (
-            spark.read.parquet(census_path)
-            .filter(F.col("batch_digest") == digest)
+            census.filter(F.col("batch_digest") == digest)
             .limit(1)
             .count()
         )
@@ -4655,14 +4569,14 @@ def read_line_census(
     ``drop_common_lines(common=...)`` to cut boilerplate that only
     becomes visible across ingest batches. One groupBy over the
     sidecar (never the corpus); the result is boilerplate-sized."""
-    if not _exists(spark, census_path):
+    census = read_layer(spark, census_path)
+    if census is None:
         raise ValueError(
             f"no line census at {census_path} — build it with "
             "update_line_census / incremental_ingest(line_census=True)"
         )
     return (
-        spark.read.parquet(census_path)
-        .groupBy("line_key")
+        census.groupBy("line_key")
         .agg(F.sum("n_docs").alias("line_df"))
         .filter(F.col("line_df") >= int(min_df))
     )

@@ -34,6 +34,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import path_exists
+
 __all__ = [
     "sample_key",
     "hex_threshold",
@@ -780,7 +782,7 @@ def read_training_shards(
       shard-at-a-time reader resuming mid-shard)."""
     shards = spark.read.format(fmt).load(path)
     if verify:
-        if not _manifest_exists(spark, f"{path}/_manifest"):
+        if not path_exists(spark, f"{path}/_manifest"):
             raise ValueError(
                 f"shard layer {path} has no _manifest sidecar — write "
                 "it with write_training_shards(manifest=True), or pass "
@@ -815,13 +817,6 @@ def read_training_shards(
     if ordered:
         return shards.orderBy(F.col("__key"), F.col(id_col))
     return shards
-
-
-def _manifest_exists(spark, path: str) -> bool:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def global_prefix_sum(

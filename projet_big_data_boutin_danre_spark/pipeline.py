@@ -50,7 +50,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from .operators import cleaning, documents, usage
 from .schemas import DVF_SCHEMA
-from .sources.readers import read_csv_gz
+from .sources.readers import read_csv_gz, read_layer
 from .sources.sinks import index_documents, write_json, write_parquet
 
 # Index names, verbatim from the reference indexers
@@ -138,13 +138,15 @@ def transform_dvf(
     (``raw_to_fmt_dvf.py:19-21``); same here unless ``force``.
     Returns the formatted DataFrame (reading the layer just written).
     """
-    if force or not _parquet_exists(spark, lay.fmt_dvf):
+    fmt = None if force else read_layer(spark, lay.fmt_dvf)
+    if fmt is None:
         df = read_csv_gz(spark, lay.raw_dvf, schema=_DVF_CSV_SCHEMA)
         df = df.withColumn(
             "date_mutation", cleaning.coerce_timestamp("date_mutation")
         )
         write_parquet(df, lay.fmt_dvf)
-    return spark.read.parquet(lay.fmt_dvf)
+        fmt = spark.read.parquet(lay.fmt_dvf)
+    return fmt
 
 
 def transform_lbc(spark: SparkSession, lay: DatalakeLayout) -> DataFrame:
@@ -270,7 +272,7 @@ def compact_usage_layers(spark: SparkSession, lay: DatalakeLayout) -> dict[str, 
 
     out = {}
     for path in (lay.usage_market, lay.usage_opportunities):
-        if _parquet_exists(spark, path):
+        if read_layer(spark, path) is not None:
             out[path] = compact_layer(spark, path)
     return out
 
@@ -319,17 +321,6 @@ def run_pipeline(
     transform_lbc(spark, lay)                # extract→transform (LBC)
     compute_usage(spark, lay)                # [both] → usage
     return index_fan_out(spark, lay, send_actions)  # usage → 4 indexes
-
-
-def _parquet_exists(spark: SparkSession, path: str) -> bool:
-    """Driver-side layer-existence probe (the reference's
-    ``os.path.exists``, ``raw_to_fmt_dvf.py:19``) — works for any
-    Hadoop-compatible filesystem, not just local paths."""
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
 
 
 # Individually runnable stages — the CLI analog of the reference's

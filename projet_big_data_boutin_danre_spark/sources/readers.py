@@ -17,13 +17,26 @@ use. The Parquet readers infer from the footers: ``read_parquet_lake``
 on every call, ``load_table`` once per file listing and inference-conf
 key, after which it reads with the remembered schema pinned (no Spark
 job; see ``_read_parquet``).
+
+Optional lake layers (the reference's ``os.path.exists`` check before
+a rebuild, ``raw_to_fmt_dvf.py:19``) open through ``read_layer``: it
+returns the frame, or None when the layer is absent or unreadable —
+a missing path, an empty or ``_SUCCESS``-only directory, a garbage
+footer. Only JVM-side failures count as "cannot open"
+(``JVM_ERRORS``); a Python-side error or a lost gateway propagates.
+The frame it returns has already resolved its file listing and
+schema, so a caller that probes and then reads keeps it rather than
+paying a second resolution. ``path_exists``, ``child_names`` and
+``data_file_count`` answer presence, root listing and file-count
+questions from the driver-side Hadoop ``FileSystem``, with no job.
 """
 
 from __future__ import annotations
 
 import warnings
 
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -87,6 +100,64 @@ def _ship_package(spark: SparkSession) -> None:
     sc._pbd_pkg_shipped = True
 
 
+# What a Spark call raises when the JVM side fails: an exception
+# PySpark converted (AnalysisException for a missing path or a schema
+# it cannot infer, ...) or a raw Java one (a garbage Parquet footer).
+JVM_ERRORS = (CapturedException, Py4JJavaError)
+
+
+def read_layer(spark: SparkSession, *paths: str) -> DataFrame | None:
+    """``spark.read.parquet(*paths)``, or None when Spark cannot open
+    the layer (absent, empty, ``_SUCCESS``- or ``_temporary``-only,
+    unreadable footer). Python-side errors propagate."""
+    try:
+        return spark.read.parquet(*paths)
+    except JVM_ERRORS:
+        return None
+
+
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop ``Path``, its ``FileSystem``) for ``path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Point presence probe (one ``FileSystem.exists``, HEAD-shaped on
+    object stores): says nothing about readability."""
+    p, fs = _fs_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def child_names(spark: SparkSession, root: str) -> list[str] | None:
+    """Names of the entries directly under ``root``, or None when the
+    root does not exist. Any other listing failure raises."""
+    p, fs = _fs_path(spark, root)
+    if not fs.exists(p):
+        return None
+    return [st.getPath().getName() for st in fs.listStatus(p)]
+
+
+def data_file_count(spark: SparkSession, path: str) -> int:
+    """Data files under ``path``, recursively; 0 when it is absent.
+    Entries whose name starts with ``_`` or ``.`` (``_SUCCESS``,
+    ``_temporary``, stray dot-files) are skipped, as Spark's file
+    index skips them."""
+    p, fs = _fs_path(spark, path)
+    if not fs.exists(p):
+        return 0
+    n, dirs = 0, [p]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            if st.getPath().getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            else:
+                n += 1
+    return n
+
+
 # SQL confs that change the schema Parquet inference returns, or which
 # footers it reads: part of the schema memo's key.
 _INFERENCE_CONFS = (
@@ -102,9 +173,7 @@ _INFERENCE_CONFS = (
 def _list_files(spark: SparkSession, path: str) -> tuple | None:
     """(path, length, modification time) of every file under ``path``,
     from one driver-side Hadoop listing; None if the path is absent."""
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    p, fs = _fs_path(spark, path)
     if not fs.exists(p):
         return None
     # listStatus walk: one round-trip per directory, where the

@@ -19,8 +19,11 @@ from __future__ import annotations
 import datetime as dt
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.readers import JVM_ERRORS
 
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -97,22 +100,29 @@ def read_watermark(spark: SparkSession, state_path: str) -> str | None:
     under the session TZ and re-parsed the same way by
     ``incremental_batch`` — OS-TZ-independent end to end.
 
-    A MISSING state path is the first-run case and returns None; a
-    state file that EXISTS but yields no usable watermark (wrong
-    column, non-timestamp value → NULL after date_format) raises,
-    because treating corrupt state as "no watermark" would silently
-    reprocess — or worse, a NULL literal downstream would silently
-    drop every row (see ``incremental_batch``)."""
+    A state path with nothing committed (missing, empty, or
+    ``_SUCCESS``-only — Spark's AnalysisException) is the first-run
+    case and returns None; a state file that EXISTS but yields no
+    usable watermark (unreadable footer, wrong column, non-timestamp
+    value → NULL after date_format) raises, because treating corrupt
+    state as "no watermark" would silently reprocess — or worse, a
+    NULL literal downstream would silently drop every row (see
+    ``incremental_batch``)."""
     try:
         state = spark.read.parquet(state_path)
-    except Exception:
+    except AnalysisException:
         return None  # first run: no state yet
+    except JVM_ERRORS as exc:
+        raise ValueError(
+            f"watermark state at {state_path!r} exists but cannot be "
+            "opened; fix or delete the state file"
+        ) from exc
     try:
         rows = (
             state.select(F.date_format("last_fetched", TS_FMT).alias("wm"))
             .collect()
         )
-    except Exception as exc:
+    except JVM_ERRORS as exc:
         raise ValueError(
             f"watermark state at {state_path!r} exists but is corrupt: no "
             "readable 'last_fetched' timestamp; fix or delete the state file"

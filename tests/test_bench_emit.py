@@ -176,6 +176,32 @@ def test_env_canary_probe_live_values():
     assert out["env_cpu_sec"] < 10
 
 
+def test_failed_probe_names_its_cause_in_the_detail_line(monkeypatch):
+    """A probe that falls back to -1.0 records its exception class and
+    message head in the detail line; the compact line is unchanged."""
+    from projet_big_data_boutin_danre_spark.sources import readers
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("no documents table " + "x" * 300)
+
+    monkeypatch.setattr(bench, "PROBE_ERRORS", {})
+    monkeypatch.setattr(readers, "load_table", broken)
+    assert bench.near_dup_ingest_probe(None, "/nowhere") == -1.0
+    cause = bench.PROBE_ERRORS["near_dup_ingest"]
+    assert cause.startswith("RuntimeError: no documents table")
+    assert len(cause) == len("RuntimeError: ") + 120
+
+    names, timings, warm = _fake_round()
+    timings["near_dup_ingest"] = -1.0
+    args = (names, timings, warm, 321.5, 280.25, 0.1)
+    plain = bench.emit_lines(*args)
+    lines = bench.emit_lines(*args, probe_errors=bench.PROBE_ERRORS)
+    assert lines[-1] == plain[-1]
+    detail = json.loads(lines[0])
+    assert detail["probe_errors"] == {"near_dup_ingest": cause}
+    assert "probe_errors" not in json.loads(plain[0])
+
+
 def test_length_guard_keeps_totals_under_pathological_names():
     # Pathologically long slot names force the guard: totals survive;
     # whatever query entries remain are accounted for by

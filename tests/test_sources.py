@@ -16,9 +16,11 @@ from pyspark.sql import functions as F
 
 from projet_big_data_boutin_danre_spark.sources import readers
 from projet_big_data_boutin_danre_spark.sources.readers import (
+    data_file_count,
     load_table,
     read_csv_gz,
     read_json_ads,
+    read_layer,
     read_parquet_lake,
 )
 from projet_big_data_boutin_danre_spark.sources.sinks import (
@@ -119,6 +121,100 @@ def test_ship_package_failure_warns(spark, sf0001, monkeypatch):
     with pytest.warns(RuntimeWarning, match="Py4JError"):
         df = load_table(spark, sf0001, "region")
     assert df.count() > 0
+
+
+def _layer(spark, tmp_path, shape):
+    """A layer directory in one of the shapes a lake can hold."""
+    root = tmp_path / shape
+    df = spark.range(4).withColumn("k", F.col("id") % 2)
+    if shape == "ok":
+        df.write.parquet(str(root))
+    elif shape == "partitioned":
+        df.write.partitionBy("k").parquet(str(root))
+    elif shape == "zero_rows":
+        df.limit(0).write.parquet(str(root))
+    elif shape == "empty_dir":
+        root.mkdir()
+    elif shape == "success_only":
+        root.mkdir()
+        (root / "_SUCCESS").write_bytes(b"")
+    elif shape == "temporary_only":
+        # a crashed writer: real data files, all under _temporary
+        df.write.parquet(str(tmp_path / "staged"))
+        (root / "_temporary").mkdir(parents=True)
+        shutil.move(str(tmp_path / "staged"), str(root / "_temporary" / "0"))
+    elif shape == "garbage_footer":
+        root.mkdir()
+        (root / "part-00000.parquet").write_bytes(b"not parquet at all")
+    return str(root)
+
+
+@pytest.mark.parametrize(
+    "shape, rows",
+    [
+        ("ok", 4),
+        ("partitioned", 4),
+        ("zero_rows", 0),
+        ("missing", None),
+        ("empty_dir", None),
+        ("success_only", None),
+        ("temporary_only", None),
+        ("garbage_footer", None),
+    ],
+)
+def test_read_layer_verdicts(spark, tmp_path, shape, rows):
+    """read_layer opens a readable layer (zero rows included) and
+    answers None for every absent or unreadable one — the garbage
+    footer fails as a raw Py4JJavaError, the others as an
+    AnalysisException."""
+    df = read_layer(spark, _layer(spark, tmp_path, shape))
+    if rows is None:
+        assert df is None
+    else:
+        assert df is not None and df.count() == rows
+
+
+def test_read_layer_opens_several_paths(spark, tmp_path):
+    a = _layer(spark, tmp_path / "a", "ok")
+    b = _layer(spark, tmp_path / "b", "ok")
+    assert read_layer(spark, a, b).count() == 8
+    # one missing path makes the whole open fail, like spark.read
+    assert read_layer(spark, a, str(tmp_path / "nope")) is None
+
+
+def test_read_layer_propagates_python_errors(spark, tmp_path, monkeypatch):
+    """Only JVM-side failures read as "absent": a Python-side bug in
+    the open must surface, not turn into a silently skipped layer."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    path = _layer(spark, tmp_path, "ok")
+
+    def broken(self, *paths, **options):
+        raise TypeError("broken reader")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", broken)
+    with pytest.raises(TypeError, match="broken reader"):
+        read_layer(spark, path)
+
+
+def test_data_file_count_skips_hidden_files(spark, tmp_path):
+    """The driver-side counter and Spark's file index agree on a layer
+    holding bookkeeping (``_SUCCESS``, a ``_temporary`` dir) and a
+    stray dot-file that is not a checksum."""
+    from projet_big_data_boutin_danre_spark import corpus_pipeline as cp
+
+    path = _layer(spark, tmp_path, "partitioned")
+    (tmp_path / "partitioned" / ".stray").write_bytes(b"not data")
+    leftover = tmp_path / "partitioned" / "_temporary" / "0"
+    leftover.mkdir(parents=True)
+    (leftover / "part-9.parquet").write_bytes(b"half written")
+    n = len(spark.read.parquet(path).inputFiles())
+    assert n >= 2
+    assert data_file_count(spark, path) == n
+    assert cp._data_file_count(spark, path) == cp._spark_file_count(
+        spark, path
+    )
+    assert data_file_count(spark, str(tmp_path / "nope")) == 0
 
 
 def test_read_csv_gz_pinned_schema(spark, tmp_path):

@@ -103,6 +103,22 @@ def test_corrupt_watermark_state_fails_loudly(spark, tmp_path):
     assert incremental_batch(df, "ts", "2024-12-31T00:00:00+18:00").count() == 1
 
 
+def test_unreadable_watermark_state_is_not_a_first_run(spark, tmp_path):
+    """A state dir holding a file Spark cannot open (garbage footer)
+    raises naming the path; only a state with nothing committed
+    (missing path, empty dir) is the first run."""
+    import pytest
+
+    torn = tmp_path / "torn_state"
+    torn.mkdir()
+    (torn / "part-00000.parquet").write_bytes(b"not parquet at all")
+    with pytest.raises(ValueError, match="torn_state"):
+        read_watermark(spark, str(torn))
+    assert read_watermark(spark, str(tmp_path / "missing")) is None
+    (tmp_path / "empty").mkdir()
+    assert read_watermark(spark, str(tmp_path / "empty")) is None
+
+
 def test_empty_batch_keeps_watermark_state_readable(spark, tmp_path):
     """An empty batch writes zero-row state (not a NULL row), so NULL
     in state is unambiguously corruption."""
