@@ -567,6 +567,25 @@ def run_corpus_pipeline(
     return counts
 
 
+def _check_ingest_knobs(
+    bloom_rebuild_mode: str, url_bloom: bool, url_guard: bool
+) -> None:
+    """Refuse knob values no batch can run with. Both faces call it
+    first, so a bad value fails the call itself — not the first
+    micro-batch of an already-started stream."""
+    if bloom_rebuild_mode not in ("sync", "defer"):
+        raise ValueError(
+            f"bloom_rebuild_mode must be 'sync' or 'defer', got "
+            f"{bloom_rebuild_mode!r}"
+        )
+    if url_bloom and not url_guard:
+        raise ValueError(
+            "url_bloom=True is the url_guard's fastpath — it needs "
+            "url_guard=True (the filter is a cache of the url_keys "
+            "sidecar, which only a guarded lake maintains)"
+        )
+
+
 def incremental_ingest(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -958,17 +977,7 @@ def incremental_ingest(
     """
     from .functions.hashing import stable_fingerprint
 
-    if bloom_rebuild_mode not in ("sync", "defer"):
-        raise ValueError(
-            f"bloom_rebuild_mode must be 'sync' or 'defer', got "
-            f"{bloom_rebuild_mode!r}"
-        )
-    if url_bloom and not url_guard:
-        raise ValueError(
-            "url_bloom=True is the url_guard's fastpath — it needs "
-            "url_guard=True (the filter is a cache of the url_keys "
-            "sidecar, which only a guarded lake maintains)"
-        )
+    _check_ingest_knobs(bloom_rebuild_mode, url_bloom, url_guard)
     fp_path = f"{out_root}/fingerprints"
     docs_path = f"{out_root}/docs"
     bands_path = f"{out_root}/band_buckets"
@@ -4720,6 +4729,7 @@ def streaming_ingest(
     what any batch admits, so it is delivery-side maintenance POLICY
     like ``maintain_max_layers_per_batch`` and excluded from knob
     parity the same way."""
+    _check_ingest_knobs(bloom_rebuild_mode, url_bloom, url_guard)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         rep = incremental_ingest(

@@ -856,7 +856,7 @@ def global_prefix_sum(
     else:
         try:
             n = spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect: no driver-side SparkContext
+        except AttributeError:  # Spark Connect: no driver-side SparkContext
             n = 32
     local = (
         df.filter(F.col(order_col).isNotNull())

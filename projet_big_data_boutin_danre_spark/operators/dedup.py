@@ -28,6 +28,9 @@ Scale design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,7 +61,7 @@ def balance_for_fanout(df: DataFrame) -> DataFrame:
     the input is left as-is — a no-op, never an error."""
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no driver-side SparkContext
+    except AttributeError:  # Spark Connect: no driver-side SparkContext
         return df
     parts = _plan_partitions(df)
     if parts is not None and parts < target:
@@ -428,6 +431,78 @@ def lsh_bucket_profile(
     )
 
 
+def _probe_history(
+    history: DataFrame,
+    batch: DataFrame,
+    keys: list[str],
+    batch_id: str,
+    score: Callable[[DataFrame], DataFrame],
+    max_bucket: int | None,
+    max_broadcast_rows: int | None,
+) -> DataFrame:
+    """Probe a corpus-sized guard sidecar with a batch: the one plan
+    shared by :func:`lsh_seen_ids` and the media probes
+    (``multimodal.phash_seen_ids`` / ``vhash_seen_ids`` /
+    ``audio_seen_ids``). Each caller lays out both sides and passes
+    ``score``, which turns the matched rows
+    ``history.join(batch, keys)`` into output rows; the result is the
+    ``distinct()`` union of ``score`` over the batch chunks.
+
+    Broadcast (the 100 TB shape): the batch is always the explicit
+    ``broadcast`` side, so the history scan is probed map-side with
+    NO shuffle and NO sort of history, and only the matched rows feed
+    ``score``'s aggregation.
+
+    Hot keys: with ``max_bucket`` set, a key held by more than that
+    many HISTORY rows (boilerplate bands, all-black thumbnails, black
+    frames, silence) is dropped from the BATCH side before the join.
+    The per-key counts come from a pre-pass that joins history with
+    the chunk's distinct keys (broadcast), so only batch-carried keys
+    are counted and the main join never materializes the explosion.
+    Dropping a key can only remove matches: under-blocking, never
+    false blocking.
+
+    Chunking: a batch that outgrows broadcast is CHUNKED, never
+    shuffle-joined (a shuffle join would re-shuffle the full history
+    every batch). With ``max_broadcast_rows`` set, the batch is
+    materialized once (``localCheckpoint``, so the count and every
+    chunk read one computation of the batch side) and counted; above the
+    limit it is split into ⌈n/limit⌉ chunks by
+    ``pmod(xxhash64(batch_id), n_chunks)``, each probed as above, at
+    the cost of one extra map-side history scan per chunk. Chunking
+    is per ``batch_id``, so every row of one batch item (a video's
+    frame set, a recording's windows) lands in one chunk and
+    per-item scores are whole. ``max_broadcast_rows=None`` skips the
+    checkpoint and count when the caller knows the batch is
+    bounded."""
+
+    def _probe(chunk: DataFrame) -> DataFrame:
+        if max_bucket is not None:
+            hot = (
+                history.join(
+                    F.broadcast(chunk.select(*keys).distinct()), keys
+                )
+                .groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("__df"))
+                .filter(F.col("__df") > int(max_bucket))
+                .select(*keys)
+            )
+            chunk = chunk.join(F.broadcast(hot), keys, "left_anti")
+        return score(history.join(F.broadcast(chunk), keys))
+
+    n_chunks = 1
+    if max_broadcast_rows is not None:
+        batch = batch.localCheckpoint()
+        n_chunks = max(1, -(-batch.count() // int(max_broadcast_rows)))
+    chunks = [batch] if n_chunks == 1 else [
+        batch.filter(
+            F.pmod(F.xxhash64(F.col(batch_id)), F.lit(n_chunks)) == F.lit(i)
+        )
+        for i in range(n_chunks)
+    ]
+    return reduce(DataFrame.unionByName, map(_probe, chunks)).distinct()
+
+
 def lsh_seen_ids(
     batch: DataFrame | None,
     seen_bands: DataFrame,
@@ -469,29 +544,16 @@ def lsh_seen_ids(
     false-positive rate (band collision without true similarity) for
     never touching historical text.
 
-    Plan (the 100 TB shape): the batch's ``bands``·|batch| band rows
-    are explicitly ``broadcast`` — the corpus-sized ``seen_bands``
-    scan is probed map-side with NO shuffle and NO sort of history,
-    and the scan prunes to the two key columns (id/text never read).
-    One small aggregation (distinct batch ids) after.
-
-    Degenerate (mega-batch) inputs where the batch outgrows broadcast
-    are CHUNKED, never shuffle-joined (a shuffle join here would
-    re-shuffle the full history every batch): when the bands frame
-    exceeds ``max_broadcast_rows`` it is split by an id-hash modulus
-    into broadcast-sized chunks and the probe results unioned —
-    semantics identical (set-union of candidates), at the cost of one
-    extra map-side history scan per chunk. The guard materializes the
-    bands frame once (``localCheckpoint``) so the row count and every
-    chunk read one computation of the signatures. Pass
-    ``max_broadcast_rows=None`` to skip the guard (and the
-    checkpoint+count) when the caller knows the batch is bounded.
+    Plan: the batch's ``bands``·|batch| band rows are the broadcast
+    side of :func:`_probe_history` (history never shuffled or sorted;
+    mega-batches beyond ``max_broadcast_rows`` band rows are chunked
+    per doc id), and the ``seen_bands`` scan prunes to the two key
+    columns (id/text never read).
 
     ``max_bucket`` (r14 — the media probes' hot-bucket guard applied
     to the text gate): a band key held by more than that many HISTORY
     rows (degenerate near-empty shingle sets, boilerplate-dominated
-    docs) is dropped from the batch side before the join, discovered
-    by a hash-pruned broadcast pre-pass over the sidecar. Two effects,
+    docs) is dropped from the batch side before the join. Two effects,
     both wanted: the intermediate join explosion is bounded, and the
     gate's documented over-blocking NARROWS — a doc colliding ONLY on
     a degenerate bucket is admitted instead of silently blocked (it
@@ -522,54 +584,18 @@ def lsh_seen_ids(
             hash_family,
         )
 
-    def _probe(chunk: DataFrame) -> DataFrame:
-        if max_bucket is not None:
-            hot = (
-                seen_bands.select("band", "band_key")
-                .join(
-                    F.broadcast(
-                        chunk.select("band", "band_key").distinct()
-                    ),
-                    ["band", "band_key"],
-                )
-                .groupBy("band", "band_key")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .filter(F.col("__df") > int(max_bucket))
-                .select("band", "band_key")
-            )
-            chunk = chunk.join(
-                F.broadcast(hot), ["band", "band_key"], "left_anti"
-            )
-        if return_pairs:
-            return (
-                seen_bands.select(
-                    F.col("id").alias("seen_id"), "band", "band_key"
-                )
-                .join(F.broadcast(chunk), ["band", "band_key"])
-                .select(F.col("id").alias(id_col), "seen_id")
-            )
-        return (
-            seen_bands.select("band", "band_key")
-            .join(F.broadcast(chunk), ["band", "band_key"])
-            .select(F.col("id").alias(id_col))
+    if return_pairs:
+        history = seen_bands.select(
+            F.col("id").alias("seen_id"), "band", "band_key"
         )
-
-    if max_broadcast_rows is not None:
-        bands_df = bands_df.localCheckpoint()
-        n = bands_df.count()
-        if n > int(max_broadcast_rows):
-            n_chunks = -(-n // int(max_broadcast_rows))
-            out = None
-            for i in range(n_chunks):
-                part = _probe(
-                    bands_df.filter(
-                        F.pmod(F.xxhash64(F.col("id")), F.lit(n_chunks))
-                        == F.lit(i)
-                    )
-                )
-                out = part if out is None else out.unionByName(part)
-            return out.distinct()
-    return _probe(bands_df).distinct()
+        cols = [F.col("id").alias(id_col), F.col("seen_id")]
+    else:
+        history = seen_bands.select("band", "band_key")
+        cols = [F.col("id").alias(id_col)]
+    return _probe_history(
+        history, bands_df, ["band", "band_key"], "id",
+        lambda hits: hits.select(*cols), max_bucket, max_broadcast_rows,
+    )
 
 
 def _shingle_set(text: Column, k: int) -> Column:

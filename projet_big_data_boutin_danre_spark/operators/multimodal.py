@@ -22,7 +22,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from ..schemas import MEDIA_FEATURES_SCHEMA
+from .dedup import _probe_history
 
 FEATURE_DIM = 8
 
@@ -373,6 +374,55 @@ def perceptual_hash(
     return media.select(id_col, payload_col).mapInPandas(_hash, schema=schema)
 
 
+def _dhash_long(
+    hashes: DataFrame, id_col: str, id_as: str, prefix: str
+) -> DataFrame:
+    """Band-long layout of a :func:`perceptual_hash` layer: one row
+    per (image, band) carrying the id as ``id_as``, the four bands as
+    ``{prefix}0..3`` and the stacked ``(band, band_key)`` join key.
+    Column objects end to end (no ``selectExpr`` splicing), so an id
+    column whose name needs quoting works."""
+    stack_args: list = [F.lit(DHASH_BANDS)]
+    for j in range(DHASH_BANDS):
+        stack_args += [F.lit(j), F.col(f"band{j}")]
+    return hashes.filter(F.col("band0").isNotNull()).select(
+        F.col(id_col).alias(id_as),
+        *[
+            F.col(f"band{j}").alias(f"{prefix}{j}")
+            for j in range(DHASH_BANDS)
+        ],
+        F.stack(*stack_args).alias("band", "band_key"),
+    )
+
+
+def _hamming(a: str, b: str) -> Column:
+    """Hamming distance between the full 64-bit hashes carried as
+    ``{a}0..3`` and ``{b}0..3`` by two :func:`_dhash_long` layouts."""
+    ham = None
+    for j in range(DHASH_BANDS):
+        term = F.bit_count(
+            F.col(f"{a}{j}").bitwiseXOR(F.col(f"{b}{j}")).cast("long")
+        )
+        ham = term if ham is None else ham + term
+    return ham
+
+
+def _drop_hot_keys(
+    df: DataFrame, keys: list[str], max_bucket: int | None
+) -> DataFrame:
+    """Within-frame hot-key cap of the media pair generators: drop
+    every row whose key is held by more than ``max_bucket`` rows of
+    ``df`` (a no-op when ``max_bucket`` is None)."""
+    if max_bucket is None:
+        return df
+    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__bn"))
+    return (
+        df.join(sizes, keys)
+        .filter(F.col("__bn") <= int(max_bucket))
+        .drop("__bn")
+    )
+
+
 def phash_near_dup_pairs(
     hashes: DataFrame,
     id_col: str = "media_id",
@@ -402,23 +452,11 @@ def phash_near_dup_pairs(
     (buckets above the cap are dropped from PAIR generation — exact
     duplicates are cheaper found via ``dhash_hex`` group-by, the
     same split as exact_dedup vs minhash_lsh_pairs)."""
-    band_exprs = ", ".join(
-        f"{j}, band{j}" for j in range(DHASH_BANDS)
+    long = _drop_hot_keys(
+        _dhash_long(hashes, id_col, id_as=id_col, prefix="band"),
+        ["band", "band_key"],
+        max_bucket,
     )
-    long = hashes.filter(F.col("band0").isNotNull()).selectExpr(
-        id_col,
-        *[f"band{j}" for j in range(DHASH_BANDS)],
-        f"stack({DHASH_BANDS}, {band_exprs}) as (band, band_key)",
-    )
-    if max_bucket is not None:
-        sizes = long.groupBy("band", "band_key").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        long = (
-            long.join(sizes, ["band", "band_key"])
-            .filter(F.col("__bn") <= int(max_bucket))
-            .drop("__bn")
-        )
     a = long.select(
         F.col(id_col).alias("id_a"),
         *[F.col(f"band{j}").alias(f"a{j}") for j in range(DHASH_BANDS)],
@@ -431,16 +469,12 @@ def phash_near_dup_pairs(
         "band",
         "band_key",
     )
-    ham = None
-    for j in range(DHASH_BANDS):
-        term = F.bit_count(
-            F.col(f"a{j}").bitwiseXOR(F.col(f"b{j}")).cast("long")
-        )
-        ham = term if ham is None else ham + term
     return (
         a.join(b, ["band", "band_key"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", ham.cast("long").alias("hamming"))
+        .select(
+            "id_a", "id_b", _hamming("a", "b").cast("long").alias("hamming")
+        )
         .filter(F.col("hamming") <= int(max_hamming))
         .distinct()
     )
@@ -472,18 +506,15 @@ def phash_seen_ids(
     the pigeonhole recall argument of :func:`phash_near_dup_pairs`
     applies verbatim.
 
-    Plan (the 100 TB shape): batch band rows are explicitly
-    ``broadcast`` — the corpus-sized sidecar scan is probed map-side
-    with NO shuffle and NO sort of history. Mega-batches beyond
-    ``max_broadcast_rows`` band rows are chunked by an id-hash
-    modulus and unioned, mirroring ``lsh_seen_ids``. ``max_bucket``
-    (r14) is the hot-bucket guard of the other two probes applied to
-    bands: a (band, value) held by more than that many sidecar rows
-    (all-black thumbnails) is dropped from the BATCH side before the
-    join — the verify step keeps correctness either way (the block is
-    exact Hamming), the cap keeps a degenerate bucket from exploding
-    the candidate join; a capped image can still match through its
-    three other bands."""
+    Plan: batch band rows are the broadcast side of
+    :func:`..dedup._probe_history` (history never shuffled; batches
+    beyond ``max_broadcast_rows`` band rows are chunked per image).
+    ``max_bucket`` (r14) drops a (band, value) held by more than that
+    many sidecar rows (all-black thumbnails) from the batch side —
+    the verify step keeps correctness either way (the block is exact
+    Hamming), the cap keeps a degenerate bucket from exploding the
+    candidate join; a capped image can still match through its three
+    other bands."""
     # EVERY name the long layout generates, not just the stacked band
     # columns (r13 advisor): the prefixed id aliases (bid/sid) and the
     # per-band aliases (b0..3/s0..3) collide just as silently
@@ -503,74 +534,17 @@ def phash_seen_ids(
             f"{id_col!r} in the input"
         )
 
-    def _long(h: DataFrame, prefix: str) -> DataFrame:
-        # Column objects end-to-end (no selectExpr splicing, r12
-        # advisor): an id column needing backtick quoting parses
-        # fine, and the stack generator's outputs are aliased
-        # explicitly instead of riding on generated names
-        stack_args: list = [F.lit(DHASH_BANDS)]
-        for j in range(DHASH_BANDS):
-            stack_args += [F.lit(j), F.col(f"band{j}")]
-        return h.filter(F.col("band0").isNotNull()).select(
-            F.col(id_col).alias(f"{prefix}id"),
-            *[
-                F.col(f"band{j}").alias(f"{prefix}{j}")
-                for j in range(DHASH_BANDS)
-            ],
-            F.stack(*stack_args).alias("band", "band_key"),
-        )
-
-    seen_long = _long(seen_hashes, "s")
-    ham = None
-    for j in range(DHASH_BANDS):
-        term = F.bit_count(
-            F.col(f"b{j}").bitwiseXOR(F.col(f"s{j}")).cast("long")
-        )
-        ham = term if ham is None else ham + term
-
-    def _probe(chunk: DataFrame) -> DataFrame:
-        if max_bucket is not None:
-            # hot-bucket guard (vhash/audio_seen_ids shape): per-key
-            # sidecar row count for batch-carried band values only;
-            # over-common values leave the BATCH side pre-join
-            hot = (
-                seen_long.join(
-                    F.broadcast(
-                        chunk.select("band", "band_key").distinct()
-                    ),
-                    ["band", "band_key"],
-                )
-                .groupBy("band", "band_key")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .filter(F.col("__df") > int(max_bucket))
-                .select("band", "band_key")
-            )
-            chunk = chunk.join(
-                F.broadcast(hot), ["band", "band_key"], "left_anti"
-            )
-        return (
-            seen_long.join(F.broadcast(chunk), ["band", "band_key"])
-            .filter(ham <= int(max_hamming))
-            .select(F.col("bid").alias(id_col))
-        )
-
-    batch_long = _long(batch_hashes, "b")
-    if max_broadcast_rows is not None:
-        batch_long = batch_long.localCheckpoint()
-        n = batch_long.count()
-        if n > int(max_broadcast_rows):
-            n_chunks = -(-n // int(max_broadcast_rows))
-            out = None
-            for i in range(n_chunks):
-                part = _probe(
-                    batch_long.filter(
-                        F.pmod(F.xxhash64(F.col("bid")), F.lit(n_chunks))
-                        == F.lit(i)
-                    )
-                )
-                out = part if out is None else out.unionByName(part)
-            return out.distinct()
-    return _probe(batch_long).distinct()
+    return _probe_history(
+        _dhash_long(seen_hashes, id_col, "sid", "s"),
+        _dhash_long(batch_hashes, id_col, "bid", "b"),
+        ["band", "band_key"],
+        "bid",
+        lambda hits: hits.filter(
+            _hamming("b", "s") <= int(max_hamming)
+        ).select(F.col("bid").alias(id_col)),
+        max_bucket,
+        max_broadcast_rows,
+    )
 
 
 def vhash_seen_ids(
@@ -594,22 +568,17 @@ def vhash_seen_ids(
     stamped on every row so the probe never aggregates history
     (constant width per sampled frame, ~16 B + id).
 
-    Plan (the 100 TB shape): the batch's distinct frame set is
-    explicitly ``broadcast`` against the corpus-sized sidecar scan —
-    history is never shuffled or sorted; the only aggregation runs on
-    the matched rows (batch-driven). Jaccard =
+    Plan: the batch's distinct frame set is the broadcast side of
+    :func:`..dedup._probe_history` (history never shuffled; the only
+    aggregation runs on the matched rows). Jaccard =
     ``shared / (n_a + n_b - shared)`` in exact integers. Mega-batches
-    chunk by an id-hash modulus like :func:`phash_seen_ids` (chunking
-    is per batch VIDEO, so every pair's full intersection stays in
-    one chunk). Degenerate shared frames (black frames, test
+    are chunked per batch VIDEO, so every pair's full intersection
+    stays in one chunk. Degenerate shared frames (black frames, test
     patterns) are the hot-bucket hazard on the HISTORY side:
     ``max_bucket`` (r14) drops any frame hash held by more than that
-    many admitted videos from the probe — the over-common hashes are
-    discovered from a hash-pruned pre-pass of the sidecar against the
-    batch's (broadcast) distinct hash set and removed from the BATCH
-    side, so the exploded join never materializes. Dropping a hash
-    only lowers measured similarity (under-blocking, the conservative
-    failure — set sizes stay full). Pair it with the append-time cap
+    many admitted videos from the probe. Dropping a hash only lowers
+    measured similarity (under-blocking, the conservative failure —
+    set sizes stay full). Pair it with the append-time cap
     (``incremental_ingest(media_max_bucket=...)``) that keeps such
     hashes out of the sidecar in the first place."""
     reserved = {"bid", "sid", "n_a", "n_frames", "shared", "hash64"}
@@ -633,54 +602,20 @@ def vhash_seen_ids(
         F.col(id_col).alias("sid"), F.col("hash64"), F.col("n_frames")
     )
 
-    def _probe(chunk: DataFrame) -> DataFrame:
-        if max_bucket is not None:
-            # history-side hot-bucket guard: per-hash df over the
-            # sidecar, computed ONLY for hashes the batch carries
-            # (broadcast pre-pass, map-side agg on matched rows) —
-            # over-common hashes are dropped from the BATCH side so
-            # the main join below never materializes the explosion
-            hot = (
-                seen.join(
-                    F.broadcast(chunk.select("hash64").distinct()),
-                    "hash64",
-                )
-                .groupBy("hash64")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .filter(F.col("__df") > int(max_bucket))
-                .select("hash64")
-            )
-            chunk = chunk.join(F.broadcast(hot), "hash64", "left_anti")
-        shared = (
-            seen.join(F.broadcast(chunk), "hash64")
-            .groupBy("bid", "sid", "n_a", "n_frames")
-            .agg(F.count(F.lit(1)).alias("shared"))
+    def _score(hits: DataFrame) -> DataFrame:
+        shared = hits.groupBy("bid", "sid", "n_a", "n_frames").agg(
+            F.count(F.lit(1)).alias("shared")
         )
-        return (
-            shared.filter(
-                F.col("shared")
-                >= F.lit(float(min_jaccard))
-                * (F.col("n_a") + F.col("n_frames") - F.col("shared"))
-            )
-            .select(F.col("bid").alias(id_col))
-        )
+        return shared.filter(
+            F.col("shared")
+            >= F.lit(float(min_jaccard))
+            * (F.col("n_a") + F.col("n_frames") - F.col("shared"))
+        ).select(F.col("bid").alias(id_col))
 
-    if max_broadcast_rows is not None:
-        prepared = prepared.localCheckpoint()
-        n = prepared.count()
-        if n > int(max_broadcast_rows):
-            n_chunks = -(-n // int(max_broadcast_rows))
-            out = None
-            for i in range(n_chunks):
-                part = _probe(
-                    prepared.filter(
-                        F.pmod(F.xxhash64(F.col("bid")), F.lit(n_chunks))
-                        == F.lit(i)
-                    )
-                )
-                out = part if out is None else out.unionByName(part)
-            return out.distinct()
-    return _probe(prepared).distinct()
+    return _probe_history(
+        seen, prepared, ["hash64"], "bid", _score, max_bucket,
+        max_broadcast_rows,
+    )
 
 
 def audio_seen_ids(
@@ -704,20 +639,19 @@ def audio_seen_ids(
     voting is shift-tolerant where set-Jaccard is not: a re-encoded
     copy trimmed by k hops still votes ``≥ min_votes`` at offset k.
 
-    Plan: batch window rows ``broadcast`` against the corpus-sized
-    sidecar scan (history never shuffled); the (bid, sid, offset)
-    vote aggregation runs on matched rows only. Mega-batches chunk by
-    an id-hash modulus (per batch recording, so each pair's votes
-    stay in one chunk). Silence/zero-run hash buckets are the
+    Plan: batch window rows are the broadcast side of
+    :func:`..dedup._probe_history` (history never shuffled); the
+    (bid, sid, offset) vote aggregation runs on matched rows only.
+    Mega-batches are chunked per batch recording, so each pair's
+    votes stay in one chunk. Silence/zero-run hash buckets are the
     history-side hot-bucket hazard — AND a correctness one, not just
     cost (r13 advisor): ``_audio_hash32_py`` maps every constant byte
     run to hash 0, so two UNRELATED recordings sharing ``min_votes``
     hops of silence/zero padding at aligned offsets would vote past
     the threshold and the new audio would be falsely blocked forever.
     ``max_bucket`` (r14) drops any window hash with more than that
-    many sidecar rows from the probe (hash-pruned broadcast pre-pass,
-    removed from the BATCH side so the join never explodes) — capping
-    only lowers votes: under-blocking, never false blocking. Pair it
+    many sidecar rows from the probe — capping only lowers votes:
+    under-blocking, never false blocking. Pair it
     with the append-time cap (``incremental_ingest(
     media_max_bucket=...)``)."""
     reserved = {"bid", "sid", "wb", "ws", "offset", "votes", "hash32"}
@@ -739,49 +673,18 @@ def audio_seen_ids(
         F.col("hash32"),
     )
 
-    def _probe(chunk: DataFrame) -> DataFrame:
-        if max_bucket is not None:
-            # hot-bucket guard, vhash_seen_ids shape: per-hash row
-            # count over the sidecar for batch-carried hashes only;
-            # over-common hashes leave the BATCH side before the join
-            hot = (
-                seen.join(
-                    F.broadcast(chunk.select("hash32").distinct()),
-                    "hash32",
-                )
-                .groupBy("hash32")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .filter(F.col("__df") > int(max_bucket))
-                .select("hash32")
-            )
-            chunk = chunk.join(F.broadcast(hot), "hash32", "left_anti")
-        votes = (
-            seen.join(F.broadcast(chunk), "hash32")
-            .groupBy(
-                "bid", "sid", (F.col("wb") - F.col("ws")).alias("offset")
-            )
-            .agg(F.count(F.lit(1)).alias("votes"))
-        )
+    def _score(hits: DataFrame) -> DataFrame:
+        votes = hits.groupBy(
+            "bid", "sid", (F.col("wb") - F.col("ws")).alias("offset")
+        ).agg(F.count(F.lit(1)).alias("votes"))
         return votes.filter(F.col("votes") >= int(min_votes)).select(
             F.col("bid").alias(id_col)
         )
 
-    if max_broadcast_rows is not None:
-        bw = bw.localCheckpoint()
-        n = bw.count()
-        if n > int(max_broadcast_rows):
-            n_chunks = -(-n // int(max_broadcast_rows))
-            out = None
-            for i in range(n_chunks):
-                part = _probe(
-                    bw.filter(
-                        F.pmod(F.xxhash64(F.col("bid")), F.lit(n_chunks))
-                        == F.lit(i)
-                    )
-                )
-                out = part if out is None else out.unionByName(part)
-            return out.distinct()
-    return _probe(bw).distinct()
+    return _probe_history(
+        seen, bw, ["hash32"], "bid", _score, max_bucket,
+        max_broadcast_rows,
+    )
 
 
 def video_frame_hashes(
@@ -890,13 +793,7 @@ def video_near_dup_pairs(
         F.col(id_col).alias("vid"), F.col("hash64")
     ).distinct()
     sizes = fh.groupBy("vid").agg(F.count(F.lit(1)).alias("n_frames"))
-    if max_bucket is not None:
-        bsz = fh.groupBy("hash64").agg(F.count(F.lit(1)).alias("__bn"))
-        fh = (
-            fh.join(bsz, "hash64")
-            .filter(F.col("__bn") <= int(max_bucket))
-            .drop("__bn")
-        )
+    fh = _drop_hot_keys(fh, ["hash64"], max_bucket)
     a = fh.select(F.col("vid").alias("id_a"), "hash64")
     b = fh.select(F.col("vid").alias("id_b"), "hash64")
     shared = (
@@ -1024,13 +921,7 @@ def audio_match_pairs(
     wh = window_hashes.select(
         F.col(id_col).alias("vid"), "win_idx", "hash32"
     )
-    if max_bucket is not None:
-        bsz = wh.groupBy("hash32").agg(F.count(F.lit(1)).alias("__bn"))
-        wh = (
-            wh.join(bsz, "hash32")
-            .filter(F.col("__bn") <= int(max_bucket))
-            .drop("__bn")
-        )
+    wh = _drop_hot_keys(wh, ["hash32"], max_bucket)
     a = wh.select(
         F.col("vid").alias("id_a"), F.col("win_idx").alias("wa"), "hash32"
     )

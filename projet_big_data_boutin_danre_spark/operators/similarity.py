@@ -352,7 +352,7 @@ def cosine_topk_grid(
     if c_parts is None or q_parts is None:
         try:
             total = spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect
+        except AttributeError:  # Spark Connect
             total = 36
         side = max(1, int(total**0.5))
         c_parts = c_parts or side
@@ -820,7 +820,7 @@ def _cogroup_score_by_bucket(
     are unchanged bit-for-bit."""
     try:
         default = c.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
+    except AttributeError:  # Spark Connect: no sparkContext
         default = 64
     n_parts = n_parts or default
     ck = c.withColumn("__p", F.pmod(F.hash("bucket"), F.lit(n_parts)))

@@ -679,11 +679,7 @@ def test_media_clusters_and_keepers(spark):
     }
 
 
-def test_phash_seen_ids_probe_and_chunking(spark):
-    """The media history probe finds exactly the batch images within
-    the Hamming window of history, and the mega-batch fallback
-    (chunked broadcast) returns the identical id set — semantics are
-    a set union over chunks, never a shuffle of history."""
+def _phash_probe_case(spark):
     import random
 
     rng = random.Random(31)
@@ -701,18 +697,101 @@ def test_phash_seen_ids_probe_and_chunking(spark):
     )
     seen_h = multimodal.perceptual_hash(hist).localCheckpoint()
     batch_h = multimodal.perceptual_hash(batch).localCheckpoint()
-    hits = {
-        r["media_id"]
-        for r in multimodal.phash_seen_ids(batch_h, seen_h).collect()
-    }
-    assert hits == {10}  # the re-encode; fresh + NULL payload pass
-    chunked = {
-        r["media_id"]
-        for r in multimodal.phash_seen_ids(
-            batch_h, seen_h, max_broadcast_rows=1
-        ).collect()
-    }
-    assert chunked == hits
+    # the re-encode hits; fresh + NULL payload pass
+    return (
+        lambda **kw: multimodal.phash_seen_ids(batch_h, seen_h, **kw),
+        {10},
+    )
+
+
+def _vhash_probe_case(spark):
+    H = 777  # a frame hash held by six admitted videos
+    seen = spark.createDataFrame(
+        [(v, H, 2) for v in range(1, 6)]
+        + [(v, 100 + v, 2) for v in range(1, 6)]
+        + [(6, 200, 3), (6, 201, 3), (6, H, 3)],
+        "media_id long, hash64 long, n_frames long",
+    )
+    batch = spark.createDataFrame(
+        [(9, H), (9, 101), (10, 200), (10, 201)],
+        "media_id long, hash64 long",
+    )
+    return (
+        lambda **kw: multimodal.vhash_seen_ids(
+            batch, seen, min_jaccard=0.5, **kw
+        ),
+        {9, 10},
+    )
+
+
+def _audio_probe_case(spark):
+    wschema = "media_id long, win_idx int, hash32 long"
+    # recording 1: two silence hops (hash 0) + a unique tail
+    seen = spark.createDataFrame(
+        [(1, 0, 0), (1, 1, 0), (1, 2, 1000), (1, 3, 1001)], wschema
+    )
+    # 9 is the silence only; 8 is the tail alone, at another offset
+    batch = spark.createDataFrame(
+        [(9, 0, 0), (9, 1, 0), (8, 0, 1000), (8, 1, 1001)], wschema
+    )
+    return (
+        lambda **kw: multimodal.audio_seen_ids(
+            batch, seen, min_votes=2, **kw
+        ),
+        {8, 9},
+    )
+
+
+def _lsh_probe_case(spark):
+    hist = spark.createDataFrame(
+        [(i, f"history doc number {i} with some repeated body text")
+         for i in range(20)],
+        "doc_id long, text string",
+    )
+    # a 2-band recipe keeps the chunk count (one per band row) small
+    recipe = {"num_hashes": 4, "bands": 2, "hash_family": "fast"}
+    seen = dedup.lsh_bands(
+        dedup.minhash_signatures(hist, "doc_id", "text", 4,
+                                 hash_family="fast"),
+        **recipe,
+    ).localCheckpoint()
+    batch = spark.createDataFrame(
+        [(100, "history doc number 7 with some repeated body text"),
+         (101, "completely fresh unseen payload")],
+        "doc_id long, text string",
+    )
+    return (
+        lambda **kw: dedup.lsh_seen_ids(
+            batch, seen, "doc_id", "text", **recipe, **kw
+        ),
+        {100},
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_phash_probe_case, _vhash_probe_case, _audio_probe_case,
+     _lsh_probe_case],
+    ids=["phash", "vhash", "audio", "lsh"],
+)
+def test_seen_ids_probe_and_chunking(spark, case):
+    """Each history probe finds exactly the batch items that match
+    history, and the mega-batch fallback (chunked broadcast, one row
+    per chunk) returns the identical id set, with and without the
+    hot-key cap — semantics are a set union over per-item chunks,
+    never a shuffle of history."""
+    probe, want = case(spark)
+
+    def ids(max_broadcast_rows, **kw):
+        return {
+            r[0]
+            for r in probe(
+                max_broadcast_rows=max_broadcast_rows, **kw
+            ).collect()
+        }
+
+    assert ids(None) == want == ids(1)
+    assert ids(1, max_bucket=1) == ids(None, max_bucket=1)
 
 
 def test_frame_sample_counts(spark):
@@ -831,6 +910,32 @@ def test_assemble_chunks_with_separator(spark):
         for r in assemble_chunks(df, sep="|").collect()
     }
     assert got == {1: ("a|b|c", 3), 2: ("solo", 1)}
+
+
+def test_balance_for_fanout_falls_back_only_without_a_context():
+    """No Spark needed: a session without a driver-side SparkContext
+    (Spark Connect raises PySparkAttributeError, an AttributeError)
+    leaves the input as-is; any other failure propagates."""
+    from pyspark.errors import PySparkAttributeError
+
+    class _Frame:
+        def __init__(self, exc):
+            def _raise(_):
+                raise exc
+
+            self.sparkSession = type(
+                "_Session", (), {"sparkContext": property(_raise)}
+            )()
+
+    connect = _Frame(
+        PySparkAttributeError(
+            errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+            messageParameters={"attr_name": "sparkContext"},
+        )
+    )
+    assert dedup.balance_for_fanout(connect) is connect
+    with pytest.raises(RuntimeError, match="boom"):
+        dedup.balance_for_fanout(_Frame(RuntimeError("boom")))
 
 
 def test_fast_hash_family_dedup_parity(spark, docs):
@@ -1226,6 +1331,28 @@ def test_phash_seen_ids_id_column_hygiene(spark):
                 seen_h,
                 id_col=bad,
             )
+
+
+def test_phash_near_dup_pairs_quoted_id_column(spark):
+    """The pair generator builds its band layout from Column objects
+    like the history probe: an id column whose name needs quoting
+    gives the same pairs as a plain name."""
+    import random
+
+    rng = random.Random(53)
+    base = bytes(rng.randrange(256) for _ in range(600))
+    media = spark.createDataFrame(
+        [(1, "image", base), (2, "image", base[:300] + b"~" + base[301:]),
+         (3, "image", bytes(rng.randrange(256) for _ in range(600)))],
+        "media_id long, kind string, payload binary",
+    )
+    hashes = multimodal.perceptual_hash(media).localCheckpoint()
+    plain = multimodal.phash_near_dup_pairs(hashes).collect()
+    assert [(r["id_a"], r["id_b"]) for r in plain] == [(1, 2)]
+    quoted = multimodal.phash_near_dup_pairs(
+        hashes.withColumnRenamed("media_id", "media-id"), id_col="media-id"
+    ).collect()
+    assert sorted(map(tuple, quoted)) == sorted(map(tuple, plain))
 
 
 def test_media_seen_ids_hot_bucket_caps(spark):

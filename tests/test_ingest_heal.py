@@ -4,6 +4,7 @@ run covers (the rest of the ingest battery is marked slow)."""
 
 from __future__ import annotations
 
+import pytest
 from ingest_docs import _BASE, _av_docs, _av_payloads, _near_docs
 
 
@@ -109,6 +110,29 @@ def test_streaming_ingest_exposes_full_batch_knob_surface():
                      "index_compact_above_files")
     }
     assert batch_knobs == stream_knobs
+
+
+@pytest.mark.parametrize(
+    "knobs", [{"bloom_rebuild_mode": "bogus"}, {"url_bloom": True}]
+)
+def test_streaming_ingest_rejects_bad_knobs_before_start(
+    spark, tmp_path, knobs
+):
+    """A knob value no batch can run with fails the streaming call
+    itself: no query is started that would only fail inside its first
+    micro-batch."""
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        streaming_ingest,
+    )
+
+    stream = spark.readStream.format("rate").load()
+    try:
+        with pytest.raises(ValueError):
+            streaming_ingest(stream, str(tmp_path / "lake"), **knobs)
+        assert spark.streams.active == []
+    finally:
+        for q in spark.streams.active:
+            q.stop()
 
 
 def test_media_guard_video_audio_heal_on_replay(spark, tmp_path):

@@ -8,6 +8,7 @@ columns — fails CI rather than only showing up in the benchmark."""
 from __future__ import annotations
 
 import __spark_entry__ as entrymod
+import pytest
 
 
 def _plan(df) -> str:
@@ -478,6 +479,46 @@ def test_lsh_seen_probe_broadcasts_batch_never_shuffles_history(
     assert fields == {"band", "band_key"}, schemas[0]
     # and it actually hits
     assert [r["doc_id"] for r in probe.collect()] == [100]
+
+
+@pytest.mark.parametrize("probe", ["phash", "vhash", "audio"])
+def test_media_seen_probes_broadcast_batch_never_shuffle_history(
+    spark, tmp_path, probe
+):
+    """The media history probes keep the same contract as the text
+    probe above: the sidecar read from Parquet is joined only by
+    BroadcastHashJoin (the batch is the build side), with and without
+    the hot-key cap and the mega-batch chunking."""
+    from projet_big_data_boutin_danre_spark.operators import multimodal
+
+    if probe == "phash":
+        sidecar = spark.createDataFrame(
+            [(i, i, i + 1, i + 2, i + 3) for i in range(8)],
+            "media_id long, band0 int, band1 int, band2 int, band3 int",
+        )
+        batch = sidecar.filter("media_id < 1")
+        run = multimodal.phash_seen_ids
+    elif probe == "vhash":
+        sidecar = spark.createDataFrame(
+            [(i, 100 + i % 3, 2) for i in range(8)],
+            "media_id long, hash64 long, n_frames long",
+        )
+        batch = sidecar.select("media_id", "hash64").filter("media_id < 3")
+        run = multimodal.vhash_seen_ids
+    else:
+        sidecar = spark.createDataFrame(
+            [(i, w, 1000 + w) for i in range(4) for w in range(3)],
+            "media_id long, win_idx int, hash32 long",
+        )
+        batch = sidecar.filter("media_id < 1")
+        run = multimodal.audio_seen_ids
+    layer = str(tmp_path / f"{probe}_sidecar")
+    sidecar.write.parquet(layer)
+    for kw in ({}, {"max_bucket": 1, "max_broadcast_rows": 1}):
+        plan = _plan(run(batch, spark.read.parquet(layer), **kw))
+        assert "BroadcastHashJoin" in plan, kw
+        assert "SortMergeJoin" not in plan, kw
+        assert "ShuffledHashJoin" not in plan, kw
 
 
 def test_lsh_seen_mega_batch_chunks_instead_of_lifting_broadcast(
