@@ -41,6 +41,7 @@ from ..functions.hashing import (
     normalize_text,
     normalize_text_aligned,
 )
+from ..sources.readers import JVM_ERRORS
 
 
 def balance_for_fanout(df: DataFrame) -> DataFrame:
@@ -69,6 +70,12 @@ def balance_for_fanout(df: DataFrame) -> DataFrame:
     return df
 
 
+# what reaching a frame's JVM plan or RDD raises where there is none:
+# Spark Connect has no ``_jdf`` (AttributeError) and no ``df.rdd``
+# (NotImplementedError); a classic plan can fail JVM-side
+_NO_JVM_PLAN = (AttributeError, NotImplementedError, *JVM_ERRORS)
+
+
 def _plan_partitions(df: DataFrame) -> int | None:
     """Best-effort input split count from the physical plan's RDD
     (partition metadata only — no job runs for a non-adaptive plan).
@@ -84,11 +91,11 @@ def _plan_partitions(df: DataFrame) -> int | None:
         if "AdaptiveSparkPlan" in plan.getClass().getSimpleName():
             return None
         return plan.execute().getNumPartitions()
-    except Exception:
+    except _NO_JVM_PLAN:
         pass
     try:
         return df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect or other non-classic backend
+    except _NO_JVM_PLAN:  # Spark Connect or other non-classic backend
         return None
 
 
@@ -431,6 +438,11 @@ def lsh_bucket_profile(
     )
 
 
+# default batch-side limit of the guard-sidecar probes (lsh_seen_ids
+# and the media *_seen_ids): above it the batch is chunked
+PROBE_MAX_BROADCAST_ROWS = 2_000_000
+
+
 def _probe_history(
     history: DataFrame,
     batch: DataFrame,
@@ -513,7 +525,7 @@ def lsh_seen_ids(
     shingle_k: int = 8,
     hash_family: str = "md5",
     bands_df: DataFrame | None = None,
-    max_broadcast_rows: int | None = 2_000_000,
+    max_broadcast_rows: int | None = PROBE_MAX_BROADCAST_ROWS,
     max_bucket: int | None = None,
     return_pairs: bool = False,
 ) -> DataFrame:
@@ -1034,7 +1046,7 @@ def _free_local_checkpoint(df: DataFrame) -> None:
     requirement."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
+    except _NO_JVM_PLAN:
         pass
 
 

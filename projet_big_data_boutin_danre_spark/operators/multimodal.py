@@ -33,7 +33,7 @@ from pyspark.sql.types import (
 )
 
 from ..schemas import MEDIA_FEATURES_SCHEMA
-from .dedup import _probe_history
+from .dedup import PROBE_MAX_BROADCAST_ROWS, _probe_history
 
 FEATURE_DIM = 8
 
@@ -485,7 +485,7 @@ def phash_seen_ids(
     seen_hashes: DataFrame,
     id_col: str = "media_id",
     max_hamming: int = 3,
-    max_broadcast_rows: int | None = 2_000_000,
+    max_broadcast_rows: int | None = PROBE_MAX_BROADCAST_ROWS,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Cross-corpus perceptual-membership probe: the distinct batch
@@ -552,7 +552,7 @@ def vhash_seen_ids(
     seen_frames: DataFrame,
     id_col: str = "media_id",
     min_jaccard: float = 0.5,
-    max_broadcast_rows: int | None = 2_000_000,
+    max_broadcast_rows: int | None = PROBE_MAX_BROADCAST_ROWS,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Cross-corpus VIDEO-membership probe: the distinct batch video
@@ -623,7 +623,7 @@ def audio_seen_ids(
     seen_wins: DataFrame,
     id_col: str = "media_id",
     min_votes: int = 4,
-    max_broadcast_rows: int | None = 2_000_000,
+    max_broadcast_rows: int | None = PROBE_MAX_BROADCAST_ROWS,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Cross-corpus AUDIO-membership probe: the distinct batch audio

@@ -14,21 +14,28 @@ Reference behaviors re-expressed:
 The raw-format readers (CSV, JSON, ORC) take explicit schemas;
 inference is opt-in via ``schema=None`` and flagged for non-production
 use. The Parquet readers infer from the footers: ``read_parquet_lake``
-on every call, ``load_table`` once per file listing and inference-conf
-key, after which it reads with the remembered schema pinned (no Spark
-job; see ``_read_parquet``).
+on every call; ``load_table`` and ``read_layer`` once per file listing
+and inference-conf key, after which they read with the remembered
+schema pinned (no Spark job; both go through ``_read_parquet`` and
+share its memo).
 
 Optional lake layers (the reference's ``os.path.exists`` check before
 a rebuild, ``raw_to_fmt_dvf.py:19``) open through ``read_layer``: it
 returns the frame, or None when the layer is absent or unreadable —
-a missing path, an empty or ``_SUCCESS``-only directory, a garbage
-footer. Only JVM-side failures count as "cannot open"
+a missing path, an empty or ``_SUCCESS``- or ``_temporary``-only
+directory, a garbage footer. The absent and empty verdicts come from
+a driver-side Hadoop listing with no Spark call; an unchanged layer
+opens from the memo with no job; only a new or changed listing pays
+Spark's inference job, and only a footer Spark cannot read fails
+there. Only JVM-side failures count as "cannot open"
 (``JVM_ERRORS``); a Python-side error or a lost gateway propagates.
 The frame it returns has already resolved its file listing and
 schema, so a caller that probes and then reads keeps it rather than
 paying a second resolution. ``path_exists``, ``child_names`` and
 ``data_file_count`` answer presence, root listing and file-count
-questions from the driver-side Hadoop ``FileSystem``, with no job.
+questions from the driver-side Hadoop ``FileSystem``, with no job;
+the file count and ``read_layer`` skip hidden names by one rule
+(``_hidden``, Spark's).
 """
 
 from __future__ import annotations
@@ -109,9 +116,19 @@ JVM_ERRORS = (CapturedException, Py4JJavaError)
 def read_layer(spark: SparkSession, *paths: str) -> DataFrame | None:
     """``spark.read.parquet(*paths)``, or None when Spark cannot open
     the layer (absent, empty, ``_SUCCESS``- or ``_temporary``-only,
-    unreadable footer). Python-side errors propagate."""
+    unreadable footer). Python-side errors propagate.
+
+    The verdict starts from one driver-side listing per path: an
+    absent path, or paths that hold no data file between them, answer
+    None with no Spark call (an empty path beside readable ones adds
+    no files, as in Spark). Otherwise the open goes through the
+    ``load_table`` schema memo (``_read_parquet``), keyed by those
+    listings, so only a changed layer pays Spark's inference job."""
+    listings = tuple(_list_files(spark, p) for p in paths)
+    if any(ls is None for ls in listings) or not any(listings):
+        return None
     try:
-        return spark.read.parquet(*paths)
+        return _read_parquet(spark, *paths, listings=listings)
     except JVM_ERRORS:
         return None
 
@@ -138,24 +155,44 @@ def child_names(spark: SparkSession, root: str) -> list[str] | None:
     return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
-def data_file_count(spark: SparkSession, path: str) -> int:
-    """Data files under ``path``, recursively; 0 when it is absent.
-    Entries whose name starts with ``_`` or ``.`` (``_SUCCESS``,
-    ``_temporary``, stray dot-files) are skipped, as Spark's file
-    index skips them."""
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: a name starting with ``.`` is hidden,
+    and so is one starting with ``_`` unless it is a ``col=value``
+    partition directory (``_SUCCESS``, ``_temporary`` and checksum
+    files are hidden; ``_k=1`` is data)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _list_files(spark: SparkSession, path: str) -> tuple | None:
+    """(path, length, modification time) of every data file under
+    ``path`` (hidden entries skipped, as Spark's file index skips
+    them), from one driver-side Hadoop listing; None if the path is
+    absent."""
     p, fs = _fs_path(spark, path)
     if not fs.exists(p):
-        return 0
-    n, dirs = 0, [p]
+        return None
+    # listStatus walk: one round-trip per directory, where the
+    # recursive listFiles iterator costs several per file
+    files, dirs = [], [p]
     while dirs:
         for st in fs.listStatus(dirs.pop()):
-            if st.getPath().getName().startswith(("_", ".")):
+            if _hidden(st.getPath().getName()):
                 continue
             if st.isDirectory():
                 dirs.append(st.getPath())
             else:
-                n += 1
-    return n
+                files.append((
+                    st.getPath().toString(), st.getLen(),
+                    st.getModificationTime(),
+                ))
+    return tuple(sorted(files))
+
+
+def data_file_count(spark: SparkSession, path: str) -> int:
+    """Data files under ``path``, recursively; 0 when it is absent.
+    Hidden entries (``_SUCCESS``, ``_temporary``, stray dot-files) are
+    skipped, as Spark's file index skips them."""
+    return len(_list_files(spark, path) or ())
 
 
 # SQL confs that change the schema Parquet inference returns, or which
@@ -169,55 +206,47 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.respectSummaryFiles",
 )
 
-
-def _list_files(spark: SparkSession, path: str) -> tuple | None:
-    """(path, length, modification time) of every file under ``path``,
-    from one driver-side Hadoop listing; None if the path is absent."""
-    p, fs = _fs_path(spark, path)
-    if not fs.exists(p):
-        return None
-    # listStatus walk: one round-trip per directory, where the
-    # recursive listFiles iterator costs several per file
-    files, dirs = [], [p]
-    while dirs:
-        for st in fs.listStatus(dirs.pop()):
-            if st.isDirectory():
-                dirs.append(st.getPath())
-            else:
-                files.append((
-                    st.getPath().toString(), st.getLen(),
-                    st.getModificationTime(),
-                ))
-    return tuple(sorted(files))
+# entries kept per SparkContext: a stream of ingest batches opens ever
+# new sets of text-index bucket paths, and each entry holds a listing
+_MEMO_ENTRIES = 256
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` without its schema-inference job when
-    the same files were read before under the same inference confs.
+def _read_parquet(
+    spark: SparkSession, *paths: str, listings: tuple | None = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without its schema-inference job
+    when the same files were read before under the same inference
+    confs.
 
     Spark launches one inference job per Parquet read, even for a file
     it just opened. The schema it inferred is remembered on the
     SparkContext (so a context restart infers again), one entry per
-    path, valid while the path's file listing and the values of
+    tuple of paths, valid while the paths' file listings (``listings``,
+    taken here unless the caller already has them) and the values of
     ``_INFERENCE_CONFS`` are unchanged; a hit reads with that schema
     pinned, which launches no job. Schemas are cached, never frames:
     every call builds a fresh relation with fresh attribute ids, so a
     table loaded twice still self-joins unambiguously."""
     # listed before the read: a file replaced in between, or a racing
     # thread's entry, leaves a key the next listing no longer matches
-    files = _list_files(spark, path)
-    if files is None:  # Spark raises its usual missing-path error
-        return spark.read.parquet(path)
+    if listings is None:
+        listings = tuple(_list_files(spark, p) for p in paths)
+    if any(ls is None for ls in listings):
+        # Spark raises its usual missing-path error
+        return spark.read.parquet(*paths)
     sc = spark.sparkContext
     memo = getattr(sc, "_pbd_parquet_schemas", None)
     if memo is None:
         memo = sc._pbd_parquet_schemas = {}
-    key = (files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
-    hit = memo.get(path)
+    key = (listings, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = memo.get(paths)
     if hit is not None and hit[0] == key:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    memo[path] = (key, df.schema)
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    memo.pop(paths, None)
+    if len(memo) >= _MEMO_ENTRIES:
+        memo.pop(next(iter(memo)), None)
+    memo[paths] = (key, df.schema)
     return df
 
 

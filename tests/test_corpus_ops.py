@@ -938,6 +938,33 @@ def test_balance_for_fanout_falls_back_only_without_a_context():
         dedup.balance_for_fanout(_Frame(RuntimeError("boom")))
 
 
+def test_plan_probes_fall_back_only_without_a_jvm_plan():
+    """No Spark needed: a frame with no ``_jdf`` and no ``rdd`` (Spark
+    Connect) reports an unknown split count and frees nothing; any
+    other failure propagates."""
+    from pyspark.errors import PySparkNotImplementedError
+
+    class _Connect:
+        @property
+        def rdd(self):
+            raise PySparkNotImplementedError(
+                errorClass="NOT_IMPLEMENTED",
+                messageParameters={"feature": "rdd"},
+            )
+
+    class _Broken:
+        @property
+        def _jdf(self):
+            raise RuntimeError("boom")
+
+    assert dedup._plan_partitions(_Connect()) is None
+    assert dedup._free_local_checkpoint(_Connect()) is None
+    with pytest.raises(RuntimeError, match="boom"):
+        dedup._plan_partitions(_Broken())
+    with pytest.raises(RuntimeError, match="boom"):
+        dedup._free_local_checkpoint(_Broken())
+
+
 def test_fast_hash_family_dedup_parity(spark, docs):
     """hash_family="fast" (xxhash64 longs) must preserve dedup
     SEMANTICS: identical exact-dup groups (content-deterministic under

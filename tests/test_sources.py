@@ -197,6 +197,54 @@ def test_read_layer_propagates_python_errors(spark, tmp_path, monkeypatch):
         read_layer(spark, path)
 
 
+@pytest.mark.parametrize(
+    "shape", ["missing", "empty_dir", "success_only", "temporary_only"]
+)
+def test_read_layer_absent_verdict_launches_no_job(spark, tmp_path, shape):
+    path = _layer(spark, tmp_path, shape)
+    df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    assert df is None and jobs == 0
+
+
+def test_read_layer_second_open_launches_no_job(spark, tmp_path):
+    path = _layer(spark, tmp_path, "partitioned")
+    first = read_layer(spark, path)
+    df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    assert jobs == 0
+    assert df.schema == first.schema
+    assert sorted(df.collect()) == sorted(first.collect())
+
+
+def test_read_layer_infers_again_after_an_append(spark, tmp_path):
+    path = _layer(spark, tmp_path, "ok")
+    assert read_layer(spark, path).count() == 4
+    spark.range(10, 13).withColumn("k", F.col("id") % 2).write.mode(
+        "append"
+    ).parquet(path)
+    df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    assert jobs >= 1  # a changed listing is a memo miss
+    assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3, 10, 11, 12]
+
+
+def test_read_layer_twice_self_joins(spark, tmp_path):
+    path = _layer(spark, tmp_path, "ok")
+    a, b = read_layer(spark, path), read_layer(spark, path)
+    # ids whose value equals another row's k: both sides must resolve
+    # to their own attributes
+    assert a.join(b, a["id"] == b["k"]).count() == 4
+
+
+def test_read_layer_reads_underscore_partition_column(spark, tmp_path):
+    """``_k=0`` is a partition directory, not a hidden one."""
+    path = str(tmp_path / "under")
+    spark.range(4).withColumn("_k", F.col("id") % 2).write.partitionBy(
+        "_k"
+    ).parquet(path)
+    df = read_layer(spark, path)
+    assert df is not None and df.count() == 4 and "_k" in df.columns
+    assert data_file_count(spark, path) == len(df.inputFiles()) >= 2
+
+
 def test_data_file_count_skips_hidden_files(spark, tmp_path):
     """The driver-side counter and Spark's file index agree on a layer
     holding bookkeeping (``_SUCCESS``, a ``_temporary`` dir) and a
