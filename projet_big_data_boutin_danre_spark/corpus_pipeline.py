@@ -68,6 +68,7 @@ from .sources.readers import (
     read_layer,
 )
 from .sources.readers import data_file_count as _data_file_count
+from .sources.sinks import write_parquet
 
 
 @dataclass(frozen=True)
@@ -1112,9 +1113,9 @@ def incremental_ingest(
             # tiny_df (r20): a cores-wide parallelized 1-row frame
             # under coalesce(1) drains every slice through ONE Python
             # worker serially — measured 5-6 s per marker write
-            tiny_df(spark, [(mode,)], "mode string").write.mode(
-                "overwrite"
-            ).parquet(marker_path)
+            write_parquet(
+                tiny_df(spark, [(mode,)], "mode string"), marker_path
+            )
             recorded = mode
     if recorded is not None and recorded != mode:
         raise ValueError(
@@ -1156,9 +1157,7 @@ def incremental_ingest(
                 "otherwise repair the fingerprints layer before "
                 "ingesting"
             )
-        tiny_df(spark, [(mode,)], "mode string").write.mode(
-            "overwrite"
-        ).parquet(marker_path)
+        write_parquet(tiny_df(spark, [(mode,)], "mode string"), marker_path)
 
     # within-batch keeper: smallest id per fingerprint (deterministic);
     # NULL text -> sentinel so the anti-join can actually match it
@@ -1875,14 +1874,14 @@ def incremental_ingest(
         if fp_ids is not None:
             healable = healable.join(fp_ids, id_col, "left_anti")
         admitted = flagged.filter(F.col("__prior").isNull()).drop("__prior")
-        n_admitted = admitted.count()
+        n_admitted, adm_digest = _count_and_digest(admitted, id_col)
     else:
         # one materialization for the consumers below (count +
         # appends) — otherwise the dedup + guard joins re-run per
         # consumer, and the appends could even admit different row
         # sets if an input file changed between jobs
         admitted = admitted.localCheckpoint()
-        n_admitted = admitted.count()
+        n_admitted, adm_digest = _count_and_digest(admitted, id_col)
     # sidecar heals, one per guard sidecar in commit order: same proof
     # obligation as the fingerprint heal, one crash window later — a
     # doc row (and possibly its fingerprint) landed but the sidecar
@@ -1914,7 +1913,7 @@ def incremental_ingest(
         h = h.localCheckpoint()
         healed[s.healed_key] = h.select(s.id_col).distinct().count()
         if healed[s.healed_key]:
-            h.write.mode("append").parquet(path)
+            write_parquet(h, path, mode="append")
             heal_frames[s.layer] = h
     # text-index heal (r16): same id-absence proof, one more sidecar —
     # a doc row landed but its index append did not, leaving the text
@@ -2091,11 +2090,10 @@ def incremental_ingest(
         # — a backfill is just a late append, and the partitioned
         # write's one-file-per-bucket cost is exactly what the tail
         # exists to avoid
-        (
-            healable_text.select(id_col, text_col)
-            .coalesce(8)
-            .write.mode("append")
-            .parquet(text_idx_tail)
+        write_parquet(
+            healable_text.select(id_col, text_col).coalesce(8),
+            text_idx_tail,
+            mode="append",
         )
     n_healed = healable.count() if healable is not None else 0
     if n_healed:
@@ -2107,7 +2105,7 @@ def incremental_ingest(
                 .saveAsTable(fp_table)
             )
         else:
-            healable.write.mode("append").parquet(fp_path)
+            write_parquet(healable, fp_path, mode="append")
             heal_frames["fingerprints"] = healable
     # Running total (r14, verdict #3): the corpus-sized docs layer is
     # NEVER re-counted on the normal path — at 100 TB a per-batch
@@ -2230,7 +2228,6 @@ def incremental_ingest(
             layer_inc[tkey] = min(8, max(n_admitted, 1))
             if n_healed_text:
                 layer_inc[tkey] += min(8, n_healed_text)
-        adm_digest = _lake_docs_digest(admitted, id_col)
         if adm_digest == last_digest and n_admitted == last_n:
             # replayed batch: its increment already landed
             pass
@@ -2286,7 +2283,7 @@ def incremental_ingest(
                 id_col, text_col, min_len=line_census_min_len,
             )
             n_census_lines = cen["batch_lines"]
-        admitted.drop("fingerprint").write.mode("append").parquet(docs_path)
+        write_parquet(admitted.drop("fingerprint"), docs_path, mode="append")
         if bucketed:
             # append order docs → ids → fingerprints: a crash between
             # ids and fingerprints is caught by the id guard on replay
@@ -2311,19 +2308,24 @@ def incremental_ingest(
                 .saveAsTable(fp_table)
             )
         else:
-            admitted.select("fingerprint", id_col).write.mode(
-                "append"
-            ).parquet(fp_path)
+            write_parquet(
+                admitted.select("fingerprint", id_col), fp_path,
+                mode="append",
+            )
         # then the guard sidecars in list order (bands → media →
         # vframes → awins → url keys): a crash before any of these
         # lands is healed on replay by the guards above + that
         # sidecar's id-absence backfill
         for s in sidecars:
-            s.rows.join(
-                admitted.select(F.col(id_col).alias(s.id_col)),
-                s.id_col,
-                "left_semi",
-            ).write.mode("append").parquet(f"{out_root}/{s.layer}")
+            write_parquet(
+                s.rows.join(
+                    admitted.select(F.col(id_col).alias(s.id_col)),
+                    s.id_col,
+                    "left_semi",
+                ),
+                f"{out_root}/{s.layer}",
+                mode="append",
+            )
         if text_idx_n is not None:
             # maintain-if-present (the filter-freshness rule): a lake
             # that carries a text index gets this batch's (id, text)
@@ -2339,11 +2341,10 @@ def incremental_ingest(
             # the tail write is sidecar-shaped (≤8 files); readers
             # union base ∪ tail, maintain_lake folds the tail into
             # the bucketed base inside the layer's compaction.
-            (
-                admitted.select(id_col, text_col)
-                .coalesce(8)
-                .write.mode("append")
-                .parquet(text_idx_tail)
+            write_parquet(
+                admitted.select(id_col, text_col).coalesce(8),
+                text_idx_tail,
+                mode="append",
             )
     # saturation check on each guarded filter (rebuild-on-fill, or
     # the owed rebuild reported under bloom_rebuild_mode="defer") —
@@ -2530,7 +2531,7 @@ class _BloomLineage:
         # is MB-scale, but an uncoalesced write leaves one file per
         # shuffle partition — every later batch then pays that many
         # opens (requests, on object stores) just to read the filter
-        merged.coalesce(8).write.mode("overwrite").parquet(self.path)
+        write_parquet(merged.coalesce(8), self.path)
 
     def report(
         self, n_admitted: int, sync: bool, catalog_prefix: str | None
@@ -2605,16 +2606,23 @@ def _bloom_fill(blm: DataFrame, hex_chars: int) -> float:
     )
 
 
-def _lake_docs_digest(df: DataFrame, id_col: str) -> int:
-    """Order-free id-set digest (``bit_xor(xxhash64(id))`` — the
-    line-census / shard-manifest digest) used to make the
-    ``_lake_stats`` running-total increment replay-idempotent."""
+def _count_and_digest(df: DataFrame, id_col: str) -> tuple[int, int]:
+    """Row count and order-free id-set digest (``bit_xor(xxhash64(id))``
+    — the line-census / shard-manifest digest, which makes the
+    ``_lake_stats`` running-total increment replay-idempotent), from
+    one aggregate."""
     row = df.agg(
+        F.count(F.lit(1)).alias("n"),
         F.coalesce(
             F.bit_xor(F.xxhash64(F.col(id_col))), F.lit(0)
-        ).alias("d")
+        ).alias("d"),
     ).first()
-    return int(row["d"])
+    return int(row["n"]), int(row["d"])
+
+
+def _lake_docs_digest(df: DataFrame, id_col: str) -> int:
+    """The id-set digest of :func:`_count_and_digest` alone."""
+    return _count_and_digest(df, id_col)[1]
 
 
 # the marker's one file inside ``_lake_stats/`` (kept a directory, so
@@ -2882,8 +2890,8 @@ def _fold_tail_append(
     # it (an absent sidecar must stay absent — a partial one seeded
     # here would claim completeness it doesn't have).
     if path_exists(spark, ids_path):
-        tail_df.select(idc).coalesce(8).write.mode("append").parquet(
-            ids_path
+        write_parquet(
+            tail_df.select(idc).coalesce(8), ids_path, mode="append"
         )
         # cross-check (r19, verdict #4; contract in the docstring):
         # two footer-only counts per fold; only the over-stating
@@ -2900,11 +2908,11 @@ def _fold_tail_append(
             # sidecar dead so heals take the root path
             fs.delete(hpath(ids_path), True)
         elif spark.read.parquet(ids_path).count() > base_rows:
-            (
-                base_df.select(base_df.columns[0])
-                .coalesce(max(1, files_after // 32))
-                .write.mode("overwrite")
-                .parquet(ids_path)
+            write_parquet(
+                base_df.select(base_df.columns[0]).coalesce(
+                    max(1, files_after // 32)
+                ),
+                ids_path,
             )
     fs.delete(hpath(tail_path), True)
     return {
@@ -3386,7 +3394,7 @@ def bloom_rebuild(
     path = _bloom_layer_path(out_root, hex_chars, layer=layer)
     # coalesced like the ingest-side merges: per-batch filter reads
     # pay one request per file, and the filter is MB-scale
-    blm.coalesce(8).write.mode("overwrite").parquet(path)
+    write_parquet(blm.coalesce(8), path)
     if drop_others:
         hpath = spark._jvm.org.apache.hadoop.fs.Path
         fs = hpath(out_root).getFileSystem(
@@ -3843,11 +3851,11 @@ def maintain_lake(
                         reclaim_files_after += res["files_after"]
                         units_left -= 1
                         base_df = spark.read.parquet(path)
-                        (
-                            base_df.select(base_df.columns[0])
-                            .coalesce(max(1, res["files_after"] // 32))
-                            .write.mode("overwrite")
-                            .parquet(_text_index_ids_path(out_root, nb))
+                        write_parquet(
+                            base_df.select(base_df.columns[0]).coalesce(
+                                max(1, res["files_after"] // 32)
+                            ),
+                            _text_index_ids_path(out_root, nb),
                         )
                 if pass_done:
                     # the completed pass IS the compaction event the
@@ -3912,11 +3920,11 @@ def maintain_lake(
                 # can only UNDER-state presence — extra heals, never
                 # a wrong admission.
                 base_df = spark.read.parquet(path)
-                (
-                    base_df.select(base_df.columns[0])
-                    .coalesce(max(1, res["files_after"] // 32))
-                    .write.mode("overwrite")
-                    .parquet(_text_index_ids_path(out_root, nb))
+                write_parquet(
+                    base_df.select(base_df.columns[0]).coalesce(
+                        max(1, res["files_after"] // 32)
+                    ),
+                    _text_index_ids_path(out_root, nb),
                 )
         if resync:
             st = _read_lake_stats(spark, f"{out_root}/_lake_stats")
@@ -4598,7 +4606,7 @@ def update_line_census(
         .withColumnRenamed("line_df", "n_docs")
         .withColumn("batch_digest", F.lit(digest))
     )
-    counts.write.mode("append").parquet(census_path)
+    write_parquet(counts, census_path, mode="append")
     n = spark.read.parquet(census_path).filter(
         F.col("batch_digest") == digest
     ).count()

@@ -30,6 +30,12 @@ Differences from the reference, all deliberate and Spark-first:
   memory; here every stage is executor-parallel and the only driver
   data is counters.
 
+The index tasks run as parallel branches in the reference; here the
+five index deliveries run concurrently on one driver pool. Layers pass
+between stages only through the lake, and each read-back opens with
+the schema its write recorded (``sources/readers.read_parquet``), so it
+launches no inference job.
+
 Scale: each stage is a scan→narrow-map→(agg|join)→write plan.
 ``market_stats`` is one partial-aggregated shuffle on ``code_commune``;
 the opportunities join broadcasts the per-commune aggregate
@@ -42,15 +48,16 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .operators import cleaning, documents, usage
 from .schemas import DVF_SCHEMA
-from .sources.readers import read_csv_gz, read_layer
+from .sources.readers import read_csv_gz, read_layer, read_parquet
 from .sources.sinks import index_documents, write_json, write_parquet
 
 # Index names, verbatim from the reference indexers
@@ -145,7 +152,7 @@ def transform_dvf(
             "date_mutation", cleaning.coerce_timestamp("date_mutation")
         )
         write_parquet(df, lay.fmt_dvf)
-        fmt = spark.read.parquet(lay.fmt_dvf)
+        fmt = read_parquet(spark, lay.fmt_dvf)
     return fmt
 
 
@@ -169,7 +176,7 @@ def transform_lbc(spark: SparkSession, lay: DatalakeLayout) -> DataFrame:
     # unparseable and missing both → 0.0
     deduped = deduped.withColumn("price", cleaning.coerce_numeric("price"))
     write_parquet(deduped, lay.fmt_lbc)
-    return spark.read.parquet(lay.fmt_lbc)
+    return read_parquet(spark, lay.fmt_lbc)
 
 
 def compute_usage(
@@ -181,7 +188,7 @@ def compute_usage(
 
     The schema presence guard (P10) mirrors the reference's
     ``has_cols`` driver check — metadata-only, no job."""
-    dvf = spark.read.parquet(lay.fmt_dvf)
+    dvf = read_parquet(spark, lay.fmt_dvf)
     required = ["valeur_fonciere", "surface_reelle_bati", "code_commune"]
     if not cleaning.has_cols(dvf, required):
         raise ValueError(
@@ -191,9 +198,9 @@ def compute_usage(
         )
     stats = usage.market_stats(dvf)
     write_parquet(stats, lay.usage_market)
-    stats = spark.read.parquet(lay.usage_market)
+    stats = read_parquet(spark, lay.usage_market)
 
-    lbc = spark.read.parquet(lay.fmt_lbc)
+    lbc = read_parquet(spark, lay.fmt_lbc)
     # formatted LBC carries city/zipcode as top-level columns; the
     # usage join key is the zipcode (P3 extract in the reference is on
     # the still-nested frame, compute_usage.py:73)
@@ -201,7 +208,7 @@ def compute_usage(
         lbc.withColumn("zip", F.col("zipcode")), stats, "zip", "code_commune"
     )
     write_parquet(opp, lay.usage_opportunities)
-    return stats, spark.read.parquet(lay.usage_opportunities)
+    return stats, read_parquet(spark, lay.usage_opportunities)
 
 
 def index_fan_out(
@@ -223,18 +230,27 @@ def index_fan_out(
     actions (executor-side batching); without one each index lands as
     newline-JSON under ``index/<name>/<day>`` — the offline form of
     the same documents. Returns per-index document counts (the
-    reference's per-run tallies, A4)."""
-    opp = spark.read.parquet(lay.usage_opportunities)
-    stats = spark.read.parquet(lay.usage_market)
-    dvf = spark.read.parquet(lay.fmt_dvf)
-    lbc = spark.read.parquet(lay.fmt_lbc)
+    reference's per-run tallies, A4).
+
+    The five deliveries run concurrently on one pool, one thread per
+    index, like the reference's parallel index tasks. Offline, each
+    count rides its index's write as an ``Observation``; through a
+    transport it is a ``count()`` first (an ``Observation`` on the
+    sink's ``foreachPartition`` is never filled). Every delivery has
+    finished before the call returns or raises its first failure."""
+    opp = read_parquet(spark, lay.usage_opportunities)
+    stats = read_parquet(spark, lay.usage_market)
+    dvf = read_parquet(spark, lay.fmt_dvf)
+    lbc = read_parquet(spark, lay.fmt_lbc)
 
     dvf_docs = documents.quality_filter(dvf).withColumn(
         "pin", documents.geo_pin()
     )
     dvf_all, dvf_paris = documents.fan_out_prefix(dvf_docs, "code_commune")
     # one scan, two indexes: persist the quality-filtered docs so the
-    # paris subset doesn't rescan the formatted layer
+    # paris subset doesn't rescan the formatted layer. The two writes
+    # run concurrently and may both compute it; that measured level
+    # with not persisting (0.62 against 0.63 s per fan-out, 4 cores)
     dvf_all = dvf_all.persist()
 
     plan: list[tuple[str, DataFrame, str | None]] = [
@@ -244,20 +260,32 @@ def index_fan_out(
         (IDX_DVF_PARIS, dvf_paris, "id_mutation"),
         (IDX_LBC, lbc, "id"),
     ]
-    counts: dict[str, int] = {}
+
+    def deliver(index_name: str, df: DataFrame, id_key: str | None) -> int:
+        if send_actions is None:
+            obs = Observation()
+            write_json(
+                df.observe(obs, F.count(F.lit(1)).alias("n")),
+                lay.offline_index(index_name),
+            )
+            return obs.get["n"]
+        n = df.count()
+        index_documents(
+            df,
+            index_name,
+            send_actions,
+            id_key=id_key,
+            batch_size=IDX_BATCH_SIZES[index_name],
+        )
+        return n
+
     try:
-        for index_name, df, id_key in plan:
-            counts[index_name] = df.count()
-            if send_actions is not None:
-                index_documents(
-                    df,
-                    index_name,
-                    send_actions,
-                    id_key=id_key,
-                    batch_size=IDX_BATCH_SIZES[index_name],
-                )
-            else:
-                write_json(df, lay.offline_index(index_name))
+        with ThreadPoolExecutor(max_workers=len(plan)) as pool:
+            futures = [(name, pool.submit(deliver, name, df, key))
+                       for name, df, key in plan]
+            # read inside the block: on a failure, leaving it waits
+            # for the other deliveries before the error propagates
+            counts = {name: f.result() for name, f in futures}
     finally:
         dvf_all.unpersist()
     return counts

@@ -14,10 +14,20 @@ Reference behaviors re-expressed:
 The raw-format readers (CSV, JSON, ORC) take explicit schemas;
 inference is opt-in via ``schema=None`` and flagged for non-production
 use. The Parquet readers infer from the footers: ``read_parquet_lake``
-on every call; ``load_table`` and ``read_layer`` once per file listing
-and inference-conf key, after which they read with the remembered
-schema pinned (no Spark job; both go through ``_read_parquet`` and
-share its memo).
+on every call; ``read_parquet``, ``load_table`` and ``read_layer``
+once per file listing and inference-conf key, after which they read
+with the remembered schema pinned (no Spark job; all three share
+``read_parquet``'s memo).
+
+The engine's own Parquet writes fill the same memo
+(``record_parquet_write``, called by ``sinks.write_parquet``), so a
+layer the engine just wrote opens with no inference job. An overwrite
+of an unpartitioned layer always records; an append records when the
+layer held no data file before it, or when its pre-append listing was
+already in the memo with the appended frame's schema. Everything else
+still infers on its next open: a schema-changing append, an append to
+a layer never opened, a partitioned write, a bucketed ``saveAsTable``,
+a non-Parquet sink, and any file written by another program.
 
 Optional lake layers (the reference's ``os.path.exists`` check before
 a rebuild, ``raw_to_fmt_dvf.py:19``) open through ``read_layer``: it
@@ -46,7 +56,13 @@ from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 TABLE_NAMES = (
     "region",
@@ -122,13 +138,15 @@ def read_layer(spark: SparkSession, *paths: str) -> DataFrame | None:
     absent path, or paths that hold no data file between them, answer
     None with no Spark call (an empty path beside readable ones adds
     no files, as in Spark). Otherwise the open goes through the
-    ``load_table`` schema memo (``_read_parquet``), keyed by those
-    listings, so only a changed layer pays Spark's inference job."""
+    schema memo (``read_parquet``), keyed by those listings, so only a
+    layer changed by someone other than this engine's own
+    ``write_parquet`` pays Spark's inference job."""
+    _ship_package(spark)
     listings = tuple(_list_files(spark, p) for p in paths)
     if any(ls is None for ls in listings) or not any(listings):
         return None
     try:
-        return _read_parquet(spark, *paths, listings=listings)
+        return read_parquet(spark, *paths, listings=listings)
     except JVM_ERRORS:
         return None
 
@@ -211,12 +229,33 @@ _INFERENCE_CONFS = (
 _MEMO_ENTRIES = 256
 
 
-def _read_parquet(
+def _schema_memo(spark: SparkSession) -> dict:
+    """paths → ((listings, conf values), schema), on the SparkContext."""
+    sc = spark.sparkContext
+    memo = getattr(sc, "_pbd_parquet_schemas", None)
+    if memo is None:
+        memo = sc._pbd_parquet_schemas = {}
+    return memo
+
+
+def _remember(spark: SparkSession, paths: tuple, key: tuple, schema) -> None:
+    memo = _schema_memo(spark)
+    memo.pop(paths, None)
+    if len(memo) >= _MEMO_ENTRIES:
+        memo.pop(next(iter(memo)), None)
+    memo[paths] = (key, schema)
+
+
+def _conf_key(spark: SparkSession) -> tuple:
+    return tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+
+
+def read_parquet(
     spark: SparkSession, *paths: str, listings: tuple | None = None
 ) -> DataFrame:
     """``spark.read.parquet(*paths)`` without its schema-inference job
-    when the same files were read before under the same inference
-    confs.
+    when the same files were read or written before under the same
+    inference confs.
 
     Spark launches one inference job per Parquet read, even for a file
     it just opened. The schema it inferred is remembered on the
@@ -224,9 +263,11 @@ def _read_parquet(
     tuple of paths, valid while the paths' file listings (``listings``,
     taken here unless the caller already has them) and the values of
     ``_INFERENCE_CONFS`` are unchanged; a hit reads with that schema
-    pinned, which launches no job. Schemas are cached, never frames:
-    every call builds a fresh relation with fresh attribute ids, so a
-    table loaded twice still self-joins unambiguously."""
+    pinned, which launches no job. ``record_parquet_write`` adds the
+    entries of the engine's own writes. Schemas are cached, never
+    frames: every call builds a fresh relation with fresh attribute
+    ids, so a table loaded twice still self-joins unambiguously. A
+    missing path raises Spark's usual error."""
     # listed before the read: a file replaced in between, or a racing
     # thread's entry, leaves a key the next listing no longer matches
     if listings is None:
@@ -234,20 +275,66 @@ def _read_parquet(
     if any(ls is None for ls in listings):
         # Spark raises its usual missing-path error
         return spark.read.parquet(*paths)
-    sc = spark.sparkContext
-    memo = getattr(sc, "_pbd_parquet_schemas", None)
-    if memo is None:
-        memo = sc._pbd_parquet_schemas = {}
-    key = (listings, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
-    hit = memo.get(paths)
+    key = (listings, _conf_key(spark))
+    hit = _schema_memo(spark).get(paths)
     if hit is not None and hit[0] == key:
         return spark.read.schema(hit[1]).parquet(*paths)
     df = spark.read.parquet(*paths)
-    memo.pop(paths, None)
-    if len(memo) >= _MEMO_ENTRIES:
-        memo.pop(next(iter(memo)), None)
-    memo[paths] = (key, df.schema)
+    _remember(spark, paths, key, df.schema)
     return df
+
+
+def _as_inferred(t: DataType) -> DataType:
+    """``t`` as Spark's Parquet inference returns it for a file Spark
+    wrote: every field, array element and map value nullable (Spark's
+    ``asNullable``); names, metadata and user-defined types kept."""
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _as_inferred(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_inferred(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(
+            _as_inferred(t.keyType), _as_inferred(t.valueType), True
+        )
+    return t
+
+
+def record_parquet_write(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    appended_to: tuple | None = (),
+) -> None:
+    """Remember the schema of a Parquet layer this engine just wrote
+    unpartitioned at ``path`` from a frame of ``schema``, so the next
+    ``read_parquet`` / ``read_layer`` of it launches no inference job.
+
+    ``appended_to`` is, for an append, the layer's listing taken just
+    before the write (None or empty when it held no data file); an
+    overwrite passes the default. An append onto data files records
+    only when that pre-append listing was already in the memo with
+    this same schema: the layer then holds files of one schema, the
+    one inference would return. Otherwise (a schema-changing append,
+    or a layer never opened) nothing is recorded and the next open
+    infers. Spark writes its own schema into each footer, and
+    inference reads it back from there whatever the inference confs
+    say, so the recorded form is ``schema`` made nullable; the key is
+    the post-write listing and the confs, as in ``read_parquet``.
+    Single writer per layer: a file another program adds between the
+    write and this listing would be taken as ours."""
+    paths = (path,)
+    schema = _as_inferred(schema)
+    confs = _conf_key(spark)
+    if appended_to:
+        hit = _schema_memo(spark).get(paths)
+        if hit is None or hit != (((appended_to,), confs), schema):
+            return
+    listing = _list_files(spark, path)
+    if listing:
+        _remember(spark, paths, ((listing,), confs), schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -273,7 +360,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     wrote the data.
 
     The Parquet read infers the schema once per file listing and
-    inference-conf values, then reads with it pinned (``_read_parquet``),
+    inference-conf values, then reads with it pinned (``read_parquet``),
     so reopening an unchanged table launches no Spark job.
     """
     # timestamp formatting (date_format), naive-string parsing
@@ -285,7 +372,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ship_package(spark)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     # TIMESTAMP_NTZ → TIMESTAMP under the UTC session pin: same

@@ -2,7 +2,12 @@
 
 - K1 Parquet sink: native, snappy default; partitioned layers use
   ``partitionBy`` + dynamic partition overwrite (the reference's
-  manual ``<YYYYMMDD>`` directories become real partitions).
+  manual ``<YYYYMMDD>`` directories become real partitions). An
+  unpartitioned overwrite or append records the written schema in the
+  readers' memo (``readers.record_parquet_write``), so the layer
+  reopens with no inference job; partitioned writes record nothing and
+  their next open infers, as do the bucketed ``saveAsTable`` sidecars
+  and the JSON/ORC sinks, which do not go through ``write_parquet``.
 - K2 JSON sink: native.
 - K3 ES bulk sink: the reference row-iterates + ``helpers.bulk``
   (``dags/lib/index_to_es.py:81-341``). Here: ``foreachPartition``
@@ -18,6 +23,8 @@ import datetime as dt
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, Row
+
+from .readers import _list_files, record_parquet_write
 
 
 def write_parquet(
@@ -35,7 +42,11 @@ def write_parquet(
     stats become selective for those columns: a pushed filter on a
     clustered column skips whole row groups instead of scanning them.
     The cheap half of Z-ordering, right whenever a layer has one
-    dominant filter column (ts, commune, id)."""
+    dominant filter column (ts, commune, id).
+
+    An unpartitioned ``overwrite`` or ``append`` records the written
+    schema for the readers (``readers.record_parquet_write``; an
+    append lists the layer once before the write for that)."""
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
     writer = df.write.mode(mode)
@@ -43,7 +54,12 @@ def write_parquet(
         writer = writer.option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(*partition_by)
+    record = not partition_by and mode in ("overwrite", "append")
+    spark = df.sparkSession
+    before = _list_files(spark, path) if record and mode == "append" else ()
     writer.parquet(path)
+    if record:
+        record_parquet_write(spark, path, df.schema, appended_to=before)
 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -137,6 +137,51 @@ def test_normalize_regex_agrees(spark):
     assert got_spark == got_duck
 
 
+def test_normalize_text_matches_lower_on_every_code_point(spark):
+    """normalize_text folds case without ``lower()``; over every code
+    point but the surrogates, alone and between ASCII letters, and on
+    a few mixed strings, it equals the ``lower()`` form it replaced."""
+    from projet_big_data_boutin_danre_spark.functions.hashing import (
+        normalize_text,
+    )
+
+    def by_lower(c):
+        return F.trim(F.regexp_replace(
+            F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "), " +", " "
+        ))
+
+    cps = (
+        spark.range(0x110000)
+        .filter(~F.col("id").between(0xD800, 0xDFFF))
+        # big-endian UTF-32 after a leading "A", so that U+FEFF is not
+        # taken for a byte-order mark
+        .select(F.expr(
+            "substr(decode(unhex(concat('00000041', lpad(hex(id), 8, '0'))),"
+            " 'UTF-32'), 2)"
+        ).alias("c"))
+    )
+    mixed = spark.createDataFrame(
+        [("ΟΔΟΣ ΣΟΦΟΣ",), ("İstanbul",), ("Straße STRASSE",),
+         ("\u212aelvin 42\u212a",), ("ǅemal",)],
+        "c string",
+    )
+    texts = cps.select(
+        "c", F.concat(F.lit("a"), "c", F.lit("B")).alias("acb")
+    ).unionByName(mixed.select("c", F.col("c").alias("acb")))
+
+    def differs(c):
+        return ~normalize_text(F.col(c)).eqNullSafe(by_lower(F.col(c)))
+
+    row = texts.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.length("c") == 0).alias("undecoded"),
+        F.count_if(differs("c") | differs("acb")).alias("diff"),
+    ).first()
+    assert row["n"] == 0x110000 - 0x800 + 5
+    assert row["undecoded"] == 0
+    assert row["diff"] == 0
+
+
 # r9 battery: line/sentence/word structure — tabs, VT/FF, bullets,
 # unicode ellipsis, mixed terminators, unterminated tails
 STRUCTURED = [

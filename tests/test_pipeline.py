@@ -340,3 +340,98 @@ def test_extract_dvf_feeds_transform(spark, datalake, tmp_path):
     assert pipeline.extract_dvf(lay2, src_url).skipped
     fmt = pipeline.transform_dvf(spark, lay2)
     assert fmt.count() == 7
+
+
+def _jobs_launched(spark, fn):
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - before
+
+
+def test_dag_layers_reopen_as_inferred(spark, datalake, pipeline_run):
+    """The four Parquet layers of a DAG run reopen with no Spark job,
+    with the schema inference would give."""
+    from projet_big_data_boutin_danre_spark.sources.readers import (
+        read_parquet,
+    )
+
+    # a fresh run: other tests compact these layers in place
+    pipeline.run_pipeline(spark, datalake, run_day=RUN_DAY)
+    lay = pipeline.DatalakeLayout(datalake, RUN_DAY)
+    for path in (lay.fmt_dvf, lay.fmt_lbc, lay.usage_market,
+                 lay.usage_opportunities):
+        df, jobs = _jobs_launched(spark, lambda: read_parquet(spark, path))
+        assert jobs == 0, path
+        assert df.schema == spark.read.parquet(path).schema, path
+
+
+def _pool_threads():
+    import threading
+
+    return {t for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor")}
+
+
+def test_index_fan_out_counts_equal_each_index(
+    spark, datalake, pipeline_run, tmp_path
+):
+    """Offline counts come from the writes, transport counts from a
+    count(); both equal what each index holds, the transport path
+    returns, and no pool thread outlives either call."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    lay = pipeline.DatalakeLayout(datalake, RUN_DAY)
+    before = _pool_threads()
+    offline = pipeline.index_fan_out(spark, lay)
+    assert list(offline) == list(pipeline.IDX_BATCH_SIZES)
+    assert offline == {
+        name: spark.read.json(lay.offline_index(name)).count()
+        for name in offline
+    }
+    spool = str(tmp_path)
+
+    def send(actions):
+        import json as _json
+        import os as _os
+        import uuid as _uuid
+
+        with open(_os.path.join(spool, f"{_uuid.uuid4().hex}.json"), "w") as f:
+            _json.dump([a["_index"] for a in actions], f)
+
+    with ThreadPoolExecutor(1) as runner:
+        sent = runner.submit(
+            pipeline.index_fan_out, spark, lay, send
+        ).result(timeout=300)
+    delivered: dict[str, int] = {}
+    for fn in os.listdir(spool):
+        with open(os.path.join(spool, fn)) as f:
+            for name in json.load(f):
+                delivered[name] = delivered.get(name, 0) + 1
+    assert sent == offline
+    assert delivered == {k: v for k, v in offline.items() if v}
+    assert _pool_threads() <= before
+
+
+def test_index_fan_out_failure_waits_for_other_writes(
+    spark, datalake, pipeline_run, monkeypatch
+):
+    import time
+
+    lay = pipeline.DatalakeLayout(datalake, RUN_DAY)
+    real = pipeline.write_json
+    finished = []
+
+    def flaky(df, path, mode="overwrite"):
+        if pipeline.IDX_MARKET_STATS in path:
+            raise RuntimeError("index write failed")
+        time.sleep(1.0)
+        real(df, path, mode)
+        finished.append(path)
+
+    monkeypatch.setattr(pipeline, "write_json", flaky)
+    before = _pool_threads()
+    with pytest.raises(RuntimeError, match="index write failed"):
+        pipeline.index_fan_out(spark, lay)
+    assert len(finished) == 4
+    assert _pool_threads() <= before

@@ -84,10 +84,10 @@ def test_schema_memo_keys_on_inference_confs(spark, sf0001, tmp_path):
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, "true")
-        ntz = readers._read_parquet(spark, path)
+        ntz = readers.read_parquet(spark, path)
         spark.conf.set(key, "false")
         ltz, jobs = _jobs_launched(
-            spark, lambda: readers._read_parquet(spark, path)
+            spark, lambda: readers.read_parquet(spark, path)
         )
     finally:
         spark.conf.set(key, old)
@@ -442,3 +442,191 @@ def test_read_media_dir_binary_files(spark, tmp_path):
 
     out = feats.collect()
     assert len(out) == 1 and len(out[0]["feature"]) == FEATURE_DIM
+
+
+def test_media_ingest_ships_the_package_from_any_cwd(tmp_path):
+    """A driver that has the engine only on its own ``sys.path`` (run
+    from another directory, no ``PYTHONPATH``) and never called
+    ``load_table`` still runs a media-guard ingest: the Python workers
+    get the package too."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(f"""
+        import random, sys
+        sys.path.insert(0, {repo!r})
+        from projet_big_data_boutin_danre_spark.session import get_spark
+        from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+            incremental_ingest,
+        )
+        spark = get_spark("ship", master="local[2]", shuffle_partitions=2)
+        spark.sparkContext.setLogLevel("ERROR")
+        rng = random.Random(5)
+        p = bytes(rng.randrange(256) for _ in range(600))
+        # a video row: its frame kernel calls package functions in
+        # the workers
+        docs = spark.createDataFrame(
+            [(1, "video alpha", p, "video", 3000)],
+            "doc_id long, text string, payload binary, kind string, "
+            "duration_ms long",
+        )
+        r = incremental_ingest(spark, docs, "lake", media_guard=True)
+        print("ADMITTED", r["admitted"])
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "ADMITTED 1" in out.stdout, out.stderr[-3000:]
+
+
+def _fresh_schema(spark, path):
+    """The schema Spark's inference returns, bypassing the memo."""
+    return spark.read.parquet(path).schema
+
+
+def test_layer_opens_without_a_job_after_write_parquet(spark, tmp_path):
+    path = str(tmp_path / "layer")
+    write_parquet(spark.range(3).withColumn("k", F.col("id") % 2), path)
+    for opener in (readers.read_parquet, read_layer):
+        df, jobs = _jobs_launched(spark, lambda: opener(spark, path))
+        assert jobs == 0 and df.count() == 3
+    write_parquet(
+        spark.range(10, 12).withColumn("k", F.col("id") % 2), path,
+        mode="append",
+    )
+    for opener in (readers.read_parquet, read_layer):
+        df, jobs = _jobs_launched(spark, lambda: opener(spark, path))
+        assert jobs == 0
+        assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 10, 11]
+    assert df.schema == _fresh_schema(spark, path)
+
+
+def test_append_to_an_absent_layer_is_recorded(spark, tmp_path):
+    path = str(tmp_path / "new")
+    write_parquet(spark.range(2), path, mode="append")
+    df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    assert jobs == 0 and df.schema == _fresh_schema(spark, path)
+
+
+def test_schema_changing_append_still_infers(spark, tmp_path):
+    path = str(tmp_path / "grow")
+    key = "spark.sql.parquet.mergeSchema"
+    old = spark.conf.get(key)
+    try:
+        # merged inference sees the new column whichever footer sorts
+        # first
+        spark.conf.set(key, "true")
+        write_parquet(spark.range(2), path)
+        assert _jobs_launched(spark, lambda: read_layer(spark, path))[1] == 0
+        write_parquet(
+            spark.range(5, 7).withColumn("extra", F.lit("x")), path,
+            mode="append",
+        )
+        df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    finally:
+        spark.conf.set(key, old)
+    assert jobs >= 1
+    assert df.columns == ["id", "extra"]
+    assert sorted((r["id"], r["extra"]) for r in df.collect()) == [
+        (0, None), (1, None), (5, "x"), (6, "x"),
+    ]
+
+
+def test_partitioned_write_still_infers(spark, tmp_path):
+    path = str(tmp_path / "parts")
+    write_parquet(
+        spark.range(4).withColumn("k", F.col("id") % 2), path,
+        partition_by=("k",),
+    )
+    df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    assert jobs >= 1
+    assert dict(df.dtypes)["k"] == "int"  # inferred from k=0 / k=1
+
+
+def test_outside_rewrite_after_write_parquet_infers(spark, tmp_path):
+    path = str(tmp_path / "outside")
+    write_parquet(spark.range(2), path)
+    spark.range(3).selectExpr("cast(id as string) as s").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    assert jobs >= 1
+    assert df.columns == ["s"] and df.count() == 3
+
+
+def test_recorded_schema_equals_inference_on_a_hostile_frame(spark, tmp_path):
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, DateType, DecimalType, IntegerType, LongType,
+        MapType, StringType, StructField, StructType, TimestampNTZType,
+        TimestampType,
+    )
+
+    inner = StructType([StructField("x", IntegerType(), False, {"u": 1})])
+    schema = StructType([
+        StructField("id", LongType(), False, {"comment": "key"}),
+        StructField(
+            "m", MapType(StringType(), ArrayType(inner, False), False), False
+        ),
+        StructField("d", DecimalType(38, 18), True),
+        StructField("day", DateType(), False),
+        StructField("ts", TimestampType(), True),
+        StructField("ntz", TimestampNTZType(), True),
+        StructField("b", BinaryType(), False),
+        StructField("v", VectorUDT(), True),
+    ])
+    t = dt.datetime(2024, 2, 29, 12, 30)
+    df = spark.createDataFrame(
+        [(1, {"a": [(7,)]}, Decimal("1.5"), t.date(), t, t, b"\x00",
+          Vectors.dense([1.0, 2.0]))],
+        schema,
+    )
+    path = str(tmp_path / "hostile")
+    write_parquet(df, path)
+    got, jobs = _jobs_launched(spark, lambda: readers.read_parquet(spark, path))
+    assert jobs == 0 and got.schema == _fresh_schema(spark, path)
+    write_parquet(df, path, mode="append")
+    got, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+    assert jobs == 0 and got.schema == _fresh_schema(spark, path)
+    assert got.count() == 2
+
+
+def test_near_dup_ingest_layers_reopen_as_inferred(spark, tmp_path):
+    """Every layer of a near-dup ingest lake reopens with no job after
+    a second batch, with the schema inference would give."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from ingest_docs import _BASE, _near_docs
+
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        incremental_ingest,
+    )
+
+    root = str(tmp_path / "lake")
+    incremental_ingest(spark, _near_docs(spark, [(1, _BASE)]), root,
+                       near_dup=True)
+    incremental_ingest(
+        spark, _near_docs(spark, [(2, "a different text entirely here")]),
+        root, near_dup=True,
+    )
+    layers = sorted(
+        n for n in os.listdir(root) if n != "_lake_stats"
+    )
+    assert {"docs", "fingerprints", "band_buckets", "_lake_mode"} <= set(
+        layers
+    )
+    for name in layers:
+        path = f"{root}/{name}"
+        df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+        assert jobs == 0, name
+        assert df.schema == _fresh_schema(spark, path), name
