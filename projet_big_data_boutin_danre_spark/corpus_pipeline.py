@@ -49,11 +49,12 @@ tools/scale_probe.py).
 from __future__ import annotations
 
 import functools
+import inspect
 import json
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.localdf import tiny_df
@@ -594,6 +595,18 @@ def _check_ingest_knobs(
         )
 
 
+# Columns incremental_ingest adds to the batch: the content fingerprint
+# and the per-row flags of its two admission passes (and of the url
+# keeper window). An input column of the same name would be
+# overwritten or collide in a flag join, so it is refused.
+_RESERVED_COLUMNS = (
+    "fingerprint",
+    "__contam", "__qkeep", "__blocked",  # pass A: the policy gates
+    "__curl", "__rn_url",  # the url keeper window
+    "__ug", "__nd", "__ndr", "__md", "__prior",  # pass B: history, ids
+)
+
+
 def incremental_ingest(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -849,8 +862,9 @@ def incremental_ingest(
     (:func:`operators.multimodal.audio_seen_ids` — shift-tolerant,
     so a trimmed/re-padded copy is still caught). Within-batch
     dedup unions all three modalities' pairs into ONE components
-    pass; the three history probes union into ONE flag-join, so the
-    payload-bearing batch is never re-materialized per modality.
+    pass; the three history probes union into ONE flag of pass B
+    (below), so the payload-bearing batch is never re-materialized
+    per modality.
     Each sidecar gets the docs→sidecar append order and its own
     id-absence heal (``healed_video`` / ``healed_audio``). The
     routing decision, the video frame cadence, AND the presence of
@@ -950,6 +964,28 @@ def incremental_ingest(
     ``url_bloom_fastpath``, ``url_bloom_fill_pct``,
     ``url_bloom_rebuilt_hex``, ``url_bloom_rebuild_due``.
 
+    ADMISSION IN TWO FLAG PASSES: every way a batch row is refused
+    is a per-row flag, so the rows are materialized twice in all, not
+    once per guard. Pass A flags the exact-deduped batch with the
+    policy gates — decontamination, the quality gates, the domain
+    blocklist — checkpoints it once (a plain checkpoint when no gate
+    is on but a url, near-dup or media guard is), reads
+    ``contaminated_skipped`` (distinct ids), ``quality_rejected`` and
+    ``domain_blocked`` (rows, billed to the first gate that fired, in
+    that order) from one aggregate, and keeps the unflagged rows. The
+    within-batch keeper drops (url window, near-dup and media
+    components) and the fingerprint guard run on that frame. Pass B
+    joins onto the survivors the hit ids of the url, near-dup and
+    media history probes, the verify-rescued ids and the id guard's
+    prior ids (each broadcast, distinct on the id), checkpoints once,
+    and one aggregate returns the history hits billed to the first
+    guard that fired (url → near-dup → media), the rescued rows the
+    url guard let through, and the count and id-set digest of the
+    admitted rows — those with no flag. The fingerprint heal
+    candidates are the prior rows no history guard flagged. An input
+    column named like the fingerprint or a flag is refused before
+    anything is written.
+
     Returns counts: arrived, admitted (new + first-copy),
     healed_fingerprints (replay backfills), total_docs (from the
     ``_lake_stats`` running-total marker, one small JSON file —
@@ -986,6 +1022,24 @@ def incremental_ingest(
     from .functions.hashing import stable_fingerprint
 
     _check_ingest_knobs(bloom_rebuild_mode, url_bloom, url_guard)
+    # checked on every batch, before anything is written: an input
+    # column the passes would overwrite or join over is refused
+    reserved = sorted(set(new_docs.columns) & set(_RESERVED_COLUMNS))
+    if reserved:
+        raise ValueError(
+            f"incremental_ingest reserves the column name(s) {reserved} "
+            "for the content fingerprint and its admission flags — "
+            "rename them in the input"
+        )
+    for on, col, knobs in (
+        (url_guard or bool(url_blocklist), url_col, "url_guard/url_blocklist"),
+        (media_guard, media_col, "media_guard"),
+    ):
+        if on and col not in new_docs.columns:
+            raise ValueError(
+                f"incremental_ingest({knobs}) needs a {col!r} column in "
+                "the input batch"
+            )
     fp_path = f"{out_root}/fingerprints"
     docs_path = f"{out_root}/docs"
     bands_path = f"{out_root}/band_buckets"
@@ -1165,82 +1219,85 @@ def incremental_ingest(
         "fingerprint",
         F.coalesce(stable_fingerprint(text_col), F.lit("<null-text>")),
     )
-    # The payload-bearing batch is materialized in the block manager
-    # AT MOST ONCE (r13, advisor): the quality gate, near_dup, and
-    # media_guard blocks each need the batch-sized frame truncated,
-    # but checkpointing it per guard re-materializes the full payload
-    # two or three times per ingest call. Later guard blocks extend
-    # the checkpointed base with cheap batch-sized joins only.
-    batch_is_ckpt = False
-    n_contaminated = 0
+    # Pass A, the policy gates at ADMISSION: decontamination (an
+    # eval-leak n-gram hit, text.ngram_contamination with the probe
+    # grams broadcast), the quality gates (Gopher verdict and n-gram
+    # repetition caps — the batch pipeline's gate helpers) and the
+    # C4-style domain blocklist (registered-domain match on the
+    # canonical host; NULL/unparseable urls carry no evidence and
+    # pass). Rejected docs leave no fingerprint, so if a gate later
+    # loosens the same content can be admitted then — the content
+    # guard, not a gate, owns identity. Each gate is one flag on the
+    # exact-deduped batch; every verdict is per id (or per row), never
+    # a function of the other ids, so evaluating all of them on the
+    # same frame decides what the gates applied one after another
+    # would. The payload-bearing batch is materialized ONCE here: the
+    # counters come from one aggregate over that checkpoint, billed to
+    # the first gate that fired, and every later block reads it.
+    # report key -> "gate fired" predicate, in billing order
+    gates: dict[str, Column] = {}
+    unflagged = batch
     if decontaminate_probes is not None:
-        # eval-leak gate at ADMISSION (text.ngram_contamination —
-        # probe grams broadcast, the batch never re-shuffles):
-        # contaminated docs are rejected before any sidecar sees
-        # them, so they leave no fingerprint — if the probe set later
-        # shrinks, the same content can be admitted then (the content
-        # guard, not this gate, owns identity)
-        contam_ids = (
-            text.ngram_contamination(
-                batch, id_col, text_col,
-                decontaminate_probes, id_col, text_col,
-                n=decontam_ngram,
-            )
-            .select(F.col(id_col))
-            .distinct()
-            .localCheckpoint()
+        contam_ids = text.ngram_contamination(
+            unflagged, id_col, text_col,
+            decontaminate_probes, id_col, text_col,
+            n=decontam_ngram,
+        ).select(F.col(id_col)).distinct()
+        batch = batch.join(
+            F.broadcast(contam_ids.withColumn("__contam", F.lit(True))),
+            id_col,
+            "left",
         )
-        n_contaminated = contam_ids.count()
-        if n_contaminated:
-            batch = batch.join(contam_ids, id_col, "left_anti")
-
-    n_quality_rejected = 0
+        gates["contaminated_skipped"] = F.col("__contam").isNotNull()
     if gopher_gate or max_top_ngram_frac or max_dup_ngram_frac:
-        # quality gates at ADMISSION (r10 — the decontamination
-        # precedent): spam/boilerplate-shaped docs are rejected
-        # before any sidecar sees them, so they leave no fingerprint
-        # — if the gates later loosen, the same content can be
-        # admitted then (the content guard owns identity). One
-        # batch-sized count brackets the gate for the rejected total.
-        before = batch.count()
+        kept = unflagged
         if max_top_ngram_frac or max_dup_ngram_frac:
-            batch = apply_ngram_caps(
-                batch, id_col, text_col,
+            kept = apply_ngram_caps(
+                kept, id_col, text_col,
                 max_top_ngram_frac, max_dup_ngram_frac,
             )
         if gopher_gate:
-            batch = apply_gopher_gate(
-                batch, id_col, text_col,
+            kept = apply_gopher_gate(
+                kept, id_col, text_col,
                 min_words=gopher_min_words,
                 min_stop_hits=gopher_min_stop_hits,
             )
-        batch = batch.localCheckpoint()
-        batch_is_ckpt = True
-        n_quality_rejected = before - batch.count()
-
-    n_domain_blocked = 0
+        batch = batch.join(
+            kept.select(F.col(id_col)).distinct()
+            .withColumn("__qkeep", F.lit(True)),
+            id_col,
+            "left",
+        )
+        gates["quality_rejected"] = F.col("__qkeep").isNull()
     if url_blocklist:
-        # C4-style domain blocklist at ADMISSION (the quality-gate
-        # precedent: blocked docs leave no fingerprint, so removing a
-        # domain from the blocklist later lets its content in — the
-        # content guard owns identity). Registered-domain match on
-        # the canonicalized host; NULL/unparseable urls carry no
-        # domain evidence and pass.
-        if url_col not in batch.columns:
-            raise ValueError(
-                f"incremental_ingest(url_blocklist=...) needs a "
-                f"{url_col!r} column in the input batch"
+        batch = batch.withColumn(
+            "__blocked",
+            F.coalesce(
+                urls_ops.registered_domain(
+                    F.col(url_col), extra_suffixes=url_extra_suffixes,
+                    psl_rules=url_psl_rules,
+                ).isin([d.lower() for d in url_blocklist]),
+                F.lit(False),
+            ),
+        )
+        gates["domain_blocked"] = F.col("__blocked")
+    gate_counts: dict[str, int] = {}
+    if gates:
+        flagged = batch.localCheckpoint()
+        earlier = F.lit(False)
+        counters = []
+        for key, fired in gates.items():
+            counters.append(
+                # contaminated docs count by distinct id (the first gate)
+                F.count_distinct(F.when(fired, F.col(id_col)))
+                if key == "contaminated_skipped"
+                else F.count(F.when(~earlier & fired, 1))
             )
-        before_b = batch.count()
-        blocked = urls_ops.registered_domain(
-            F.col(url_col), extra_suffixes=url_extra_suffixes,
-            psl_rules=url_psl_rules,
-        ).isin([d.lower() for d in url_blocklist])
-        batch = batch.filter(
-            ~F.coalesce(blocked, F.lit(False))
-        ).localCheckpoint()
-        batch_is_ckpt = True
-        n_domain_blocked = before_b - batch.count()
+            earlier = earlier | fired
+        gate_counts = dict(zip(gates, map(int, flagged.agg(*counters).first())))
+        batch = flagged.filter(~earlier).drop("__contam", "__qkeep", "__blocked")
+    elif url_guard or near_dup or media_guard:
+        batch = batch.localCheckpoint()
 
     n_url_skipped = 0
     # heal-coverage base (r17, ADVICE medium): id frames computed
@@ -1262,20 +1319,6 @@ def incremental_ingest(
         # canonical url; the history probe below blocks urls already
         # admitted. NULL/unparseable urls carry no evidence: admitted,
         # kept out of the sidecar (the NULL-payload rule).
-        if url_col not in batch.columns:
-            raise ValueError(
-                f"incremental_ingest(url_guard=True) needs a "
-                f"{url_col!r} column in the input batch"
-            )
-        for rname in ("__curl", "__rn_url", "__ug"):
-            if rname in batch.columns:
-                raise ValueError(
-                    "incremental_ingest(url_guard=True) reserves the "
-                    f"column name {rname!r} — rename it in the input"
-                )
-        if not batch_is_ckpt:
-            batch = batch.localCheckpoint()
-            batch_is_ckpt = True
         from pyspark.sql import Window as _W
 
         uproj = batch.select(
@@ -1305,21 +1348,6 @@ def incremental_ingest(
     n_near_skipped = 0
     n_near_rescued = 0
     if near_dup:
-        if "__nd" in batch.columns or "__ndr" in batch.columns:
-            raise ValueError(
-                "incremental_ingest(near_dup=True) reserves the "
-                "column names '__nd'/'__ndr' for its history guard — "
-                "rename "
-                "it in the input"
-            )
-        # the exact-deduped batch feeds the band computation, the
-        # within-batch anti-join, the members count, and the guards
-        # below — checkpoint the batch-sized frame once instead of
-        # re-running the dedup window per consumer (skipped when the
-        # quality block already materialized it)
-        if not batch_is_ckpt:
-            batch = batch.localCheckpoint()
-            batch_is_ckpt = True
         # band keys of the exact-deduped batch, computed ONCE
         # (checkpointed: the within-batch pair stage, the history
         # probe, and the sidecar append all read them) — batch-sized
@@ -1398,29 +1426,11 @@ def incremental_ingest(
     n_media_skipped = 0
     n_video_no_duration = 0
     if media_guard:
-        if media_col not in batch.columns:
-            raise ValueError(
-                f"incremental_ingest(media_guard=True) needs a "
-                f"{media_col!r} binary column in the input batch"
-            )
-        if "__md" in batch.columns:
-            raise ValueError(
-                "incremental_ingest(media_guard=True) reserves the "
-                "column name '__md' for its history guard — rename "
-                "it in the input"
-            )
         # perceptual hashes of the batch payloads, computed ONCE
         # (checkpointed: within-batch pairing, the history probe, and
         # the sidecar append all read them) — constant width per row
-        # regardless of payload size. The batch itself is
-        # checkpointed at most once per call (flag above); when the
-        # quality or near_dup block already materialized it, this
-        # block only stacks batch-sized joins on the existing
-        # checkpoint — the hash layers are their own checkpoints, so
-        # payloads are still read exactly once per kernel.
-        if not batch_is_ckpt:
-            batch = batch.localCheckpoint()
-            batch_is_ckpt = True
+        # regardless of payload size, so payloads are read exactly
+        # once per kernel on top of pass A's one batch checkpoint.
         if media_routed:
             # per-kind routing (r13): each modality's kernel sees
             # only its own rows — a video's bytes are never hashed as
@@ -1622,6 +1632,10 @@ def incremental_ingest(
         admitted = batch.join(seen, "fingerprint", "left_anti")
     else:
         admitted = batch
+    # pass B's flags, in billing order: each history guard's hit ids
+    # (url → near-dup → media, plus the verify-rescued ids) and the id
+    # guard's prior ids, every one batch-bounded and distinct on the id
+    pass_b: dict[str, DataFrame] = {}
     if url_history:
         # URL history probe: a ONE-column scan of the url_keys
         # sidecar probed by the BROADCAST batch keys — the
@@ -1630,8 +1644,7 @@ def incremental_ingest(
         # only broadcast-build on HISTORY, so it would shuffle the
         # sidecar every batch; inner-joining history against the
         # broadcast batch probes it map-side with no history shuffle
-        # or sort. ONE flag-join on the admitted frame after, like
-        # the near_dup/media guards below.
+        # or sort.
         probe_urls = batch_urls
         if url_bloom:
             # Bloom front for the url guard (r15): of the five
@@ -1653,10 +1666,7 @@ def incremental_ingest(
                 .select(id_col)
                 .distinct()
             )
-            admitted, n_hit, _ = _flag_drop(
-                admitted, url_hits, id_col, "__ug"
-            )
-            n_url_skipped += n_hit
+            pass_b["__ug"] = url_hits
     seen_b = read_layer(spark, bands_path) if near_dup else None
     if seen_b is not None:
         # history probe: batch band rows BROADCAST against a
@@ -1670,7 +1680,6 @@ def incremental_ingest(
         probe_limit = dedup.PROBE_MAX_BROADCAST_ROWS
         if lsh_bands * arrived <= probe_limit:
             probe_limit = None
-        rescued_ids = None
         if near_dup_verify is None:
             near_hits = dedup.lsh_seen_ids(
                 None, seen_b, id_col, text_col, bands_df=batch_bands,
@@ -1726,24 +1735,18 @@ def incremental_ingest(
                 # every one of these would have been blocked, so the
                 # count is the knob's measured value per batch (and
                 # the tuning signal for the Jaccard threshold). Ids
-                # only, batch-bounded; counted by the same flag-join
-                # that counts the blocks (rescued rows stay admitted).
-                rescued_ids = cand_pairs.select(F.col(id_col)).join(
+                # only, batch-bounded; a flag of pass B that only
+                # counts (rescued rows stay admitted).
+                pass_b["__ndr"] = cand_pairs.select(F.col(id_col)).join(
                     near_hits, id_col, "left_anti"
                 ).distinct()
-        admitted, n_hit, n_rescued = _flag_drop(
-            admitted, near_hits, id_col, "__nd", rescued=rescued_ids
-        )
-        n_near_skipped += n_hit
-        n_near_rescued += n_rescued
+        pass_b["__nd"] = near_hits
     if media_guard:
         # media history probes: batch hash rows BROADCAST against the
         # constant-width media sidecars (history never shuffled or
         # payload-read per batch) — image bands with exact Hamming
         # verify, video frame-set Jaccard, audio offset voting. The
-        # per-modality hit sets UNION into ONE flag-join (the same
-        # shape as the near_dup guard above), so the payload-bearing
-        # admitted frame is materialized once, not once per modality.
+        # per-modality hit sets UNION into ONE flag of pass B.
         media_hits = []
         seen_m = read_layer(spark, media_bands_path)
         if seen_m is not None:
@@ -1777,15 +1780,9 @@ def incremental_ingest(
                 max_bucket=media_max_bucket,
             ))
         if media_hits:
-            admitted, n_hit, _ = _flag_drop(
-                admitted,
-                functools.reduce(
-                    lambda a, b: a.unionByName(b), media_hits
-                ).distinct(),
-                id_col,
-                "__md",
-            )
-            n_media_skipped += n_hit
+            pass_b["__md"] = functools.reduce(
+                DataFrame.unionByName, media_hits
+            ).distinct()
     # crash-replay guard: ids already admitted are never re-appended
     # even if their fingerprint append didn't land
     prior_ids = None
@@ -1796,18 +1793,12 @@ def incremental_ingest(
         prior_ids = read_layer(spark, docs_path)
         if prior_ids is not None:
             prior_ids = prior_ids.select(id_col)
-    healable = None
     if prior_ids is not None:
-        if "__prior" in admitted.columns:
-            raise ValueError(
-                "incremental_ingest reserves the column name "
-                "'__prior' for its id guard — rename it in the input"
-            )
         # ONE corpus-id scan per batch (r16 review #7): the id guard
         # and every sidecar heal need only "which BATCH ids are
         # prior" — intersect the batch ids with the prior set once
-        # into a batch-bounded checkpointed frame, and let the
-        # flag-join and all six heals consume the BROADCAST tiny
+        # into a batch-bounded checkpointed frame, and let pass B and
+        # all six heals consume the BROADCAST tiny
         # frame instead of each re-materializing a semi-join against
         # the corpus-sized id column (previously one docs/id-table
         # scan per heal site per batch). The base is the post-drop
@@ -1820,6 +1811,8 @@ def incremental_ingest(
         # joins covered this case). A replay whose CHANGED content
         # gates or keeper-drops differently remains outside heal
         # coverage, as before (the documented re-crawl residual).
+        # The deduped intersection also keeps the flag join from
+        # fanning out on a prior id stored twice.
         heal_base = batch.select(id_col)
         for extra in pre_keeper_id_frames:
             heal_base = heal_base.unionByName(extra)
@@ -1829,22 +1822,47 @@ def incremental_ingest(
             .join(prior_ids, id_col, "left_semi")
             .localCheckpoint()
         )
-        # id guard as ONE flag-join (not a semi + anti pair, which
-        # would run the dedup + fingerprint-guard subplan twice):
-        # rows with a prior id split into the two outcomes below.
-        # - no prior id → genuinely new, admit;
-        # - prior id present → skip the doc (already admitted), and
-        #   CHECK it for the fingerprint-sidecar backfill below.
-        # (the deduped intersection frame also removes the old
-        # fan-out case — a prior id appearing twice in the corpus no
-        # longer duplicates the flagged row)
-        flagged = admitted.join(
-            F.broadcast(
-                prior_batch_ids.withColumn("__prior", F.lit(True))
-            ),
-            id_col,
-            "left",
-        ).localCheckpoint()
+        pass_b["__prior"] = prior_batch_ids
+    # Pass B: every history flag and the id guard's prior flag join
+    # the post-fingerprint-guard frame (each side broadcast), which is
+    # checkpointed ONCE — the one materialization the counters, the
+    # appends and the heal read, so they agree on one row set even if
+    # an input file changes between jobs — and ONE aggregate returns
+    # every counter: the history hits billed to the first guard that
+    # fired (url → near-dup → media), the verify-rescued rows the url
+    # guard let through, and the count and id-set digest of the
+    # admitted rows (no flag at all).
+    flagged = admitted
+    for flag, ids in pass_b.items():
+        flagged = flagged.join(
+            F.broadcast(ids.withColumn(flag, F.lit(True))), id_col, "left"
+        )
+    flagged = flagged.localCheckpoint()
+
+    def _hit(flag: str) -> Column:
+        return F.col(flag).isNotNull() if flag in pass_b else F.lit(False)
+
+    url_hit, near_hit, media_hit, prior = map(
+        _hit, ("__ug", "__nd", "__md", "__prior")
+    )
+    history = url_hit | near_hit | media_hit
+    kept = ~history & ~prior
+    row = flagged.agg(
+        F.count(F.when(url_hit, 1)),
+        F.count(F.when(~url_hit & near_hit, 1)),
+        F.count(F.when(~url_hit & _hit("__ndr"), 1)),
+        F.count(F.when(~url_hit & ~near_hit & media_hit, 1)),
+        F.count(F.when(kept, 1)),
+        _id_set_digest(id_col, where=kept),
+    ).first()
+    n_url_skipped += row[0]
+    n_near_skipped += row[1]
+    n_near_rescued += row[2]
+    n_media_skipped += row[3]
+    n_admitted, adm_digest = int(row[4]), int(row[5])
+    admitted = flagged.filter(kept).drop(*pass_b)
+    healable = None
+    if prior_batch_ids is not None:
         # BACKFILL candidates: doc row landed but its fingerprint
         # append did NOT. "fingerprint absent from the sidecar" alone
         # does not prove that — the SAME id can legitimately return
@@ -1853,9 +1871,10 @@ def incremental_ingest(
         # appending it would permanently block that content under any
         # future id). The proof is the id's ABSENCE from the
         # sidecar's own id column: a fully-landed doc always has its
-        # (original) fingerprint row there. So heal = __prior rows
-        # anti-joined against the sidecar ids — empty on every
-        # healthy batch, and exact for partial fingerprint appends.
+        # (original) fingerprint row there. So heal = prior rows no
+        # history guard flagged, anti-joined against the sidecar ids
+        # — empty on every healthy batch, and exact for partial
+        # fingerprint appends.
         # dropDuplicates: the same id can arrive twice in ONE batch
         # with different content (exact_dedup keys on content, not
         # id); both rows are legitimate heal candidates.
@@ -1867,21 +1886,12 @@ def incremental_ingest(
             if fp_ids is not None:
                 fp_ids = fp_ids.select(id_col)
         healable = (
-            flagged.filter(F.col("__prior"))
+            flagged.filter(prior & ~history)
             .select("fingerprint", id_col)
             .dropDuplicates()
         )
         if fp_ids is not None:
             healable = healable.join(fp_ids, id_col, "left_anti")
-        admitted = flagged.filter(F.col("__prior").isNull()).drop("__prior")
-        n_admitted, adm_digest = _count_and_digest(admitted, id_col)
-    else:
-        # one materialization for the consumers below (count +
-        # appends) — otherwise the dedup + guard joins re-run per
-        # consumer, and the appends could even admit different row
-        # sets if an input file changed between jobs
-        admitted = admitted.localCheckpoint()
-        n_admitted, adm_digest = _count_and_digest(admitted, id_col)
     # sidecar heals, one per guard sidecar in commit order: same proof
     # obligation as the fingerprint heal, one crash window later — a
     # doc row (and possibly its fingerprint) landed but the sidecar
@@ -2382,8 +2392,8 @@ def incremental_ingest(
         out["url_skipped"] = n_url_skipped
         out["healed_urls"] = healed["healed_urls"]
     out.update(url_report)
-    if url_blocklist:
-        out["domain_blocked"] = n_domain_blocked
+    if "domain_blocked" in gate_counts:
+        out["domain_blocked"] = gate_counts["domain_blocked"]
     if compact_above_files is not None:
         # compaction-due signal (r16, verdict #1) — the
         # ``bloom_rebuild_due`` pattern for the one maintenance action
@@ -2401,10 +2411,9 @@ def incremental_ingest(
         )
     if line_census:
         out["census_lines"] = n_census_lines
-    if decontaminate_probes is not None:
-        out["contaminated_skipped"] = n_contaminated
-    if gopher_gate or max_top_ngram_frac or max_dup_ngram_frac:
-        out["quality_rejected"] = n_quality_rejected
+    for key in ("contaminated_skipped", "quality_rejected"):
+        if key in gate_counts:
+            out[key] = gate_counts[key]
     out.update(fp_report)
     return out
 
@@ -2571,58 +2580,27 @@ class _BloomLineage:
         }
 
 
-def _flag_drop(
-    df: DataFrame,
-    hits: DataFrame,
-    id_col: str,
-    flag: str,
-    rescued: DataFrame | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Drop the rows of ``df`` whose id is in ``hits`` with ONE
-    flag-join (the id-guard trick): the count and the filter both read
-    one checkpoint instead of a semi and an anti join each re-running
-    the guard subplan. ``rescued`` ids ride the same join under
-    ``<flag>r`` and stay kept — that flag only counts. Returns
-    ``(kept, n_dropped, n_rescued)``."""
-    flagged = df.join(hits.withColumn(flag, F.lit(True)), id_col, "left")
-    rflag = f"{flag}r"
-    if rescued is not None:
-        flagged = flagged.join(
-            rescued.withColumn(rflag, F.lit(True)), id_col, "left"
-        )
-    flagged = flagged.localCheckpoint()
-    if rescued is not None:
-        row = flagged.agg(F.count(flag), F.count(rflag)).first()
-        n_dropped, n_rescued = int(row[0]), int(row[1])
-    else:
-        n_dropped, n_rescued = flagged.filter(F.col(flag)).count(), 0
-    kept = flagged.filter(F.col(flag).isNull()).drop(flag, rflag)
-    return kept, n_dropped, n_rescued
-
-
 def _bloom_fill(blm: DataFrame, hex_chars: int) -> float:
     return float(
         bloom_ops.bloom_fill_stats(blm, hex_chars).first()["fill_frac"]
     )
 
 
-def _count_and_digest(df: DataFrame, id_col: str) -> tuple[int, int]:
-    """Row count and order-free id-set digest (``bit_xor(xxhash64(id))``
-    — the line-census / shard-manifest digest, which makes the
-    ``_lake_stats`` running-total increment replay-idempotent), from
-    one aggregate."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64(F.col(id_col))), F.lit(0)
-        ).alias("d"),
-    ).first()
-    return int(row["n"]), int(row["d"])
+def _id_set_digest(id_col: str, where: Column | None = None) -> Column:
+    """Order-free id-set digest ``bit_xor(xxhash64(id))`` as an
+    aggregate Column, 0 for an empty set — the line-census /
+    shard-manifest digest, which makes the census append and the
+    ``_lake_stats`` running-total increment replay-idempotent.
+    ``where`` restricts it to the rows it holds for."""
+    h = F.xxhash64(F.col(id_col))
+    if where is not None:
+        h = F.when(where, h)
+    return F.coalesce(F.bit_xor(h), F.lit(0))
 
 
 def _lake_docs_digest(df: DataFrame, id_col: str) -> int:
-    """The id-set digest of :func:`_count_and_digest` alone."""
-    return _count_and_digest(df, id_col)[1]
+    """The id-set digest (:func:`_id_set_digest`) of ``df``."""
+    return int(df.agg(_id_set_digest(id_col)).first()[0])
 
 
 # the marker's one file inside ``_lake_stats/`` (kept a directory, so
@@ -4559,14 +4537,12 @@ def update_line_census(
     Returns ``{"batch_lines": keys appended, "new_batch": 0|1,
     "batch_digest": the stamp}``."""
     digest_row = batch.agg(
-        F.coalesce(
-            F.bit_xor(F.xxhash64(F.col(id_col))), F.lit(0)
-        ).alias("d"),
-        # count(id), not count(1): a NULL id contributes nothing to
-        # the XOR digest (xxhash64(NULL) is NULL, dropped by bit_xor)
-        # and nothing to count_distinct, so comparing against the raw
-        # row count would flag a single NULL id as a spurious
-        # "duplicate ids" hard error — NULLs get their own message.
+        _id_set_digest(id_col).alias("d"),
+        # count(id), not count(1): a NULL id hashes to the seed
+        # (xxhash64(NULL) = 42), so two of them cancel out of the XOR
+        # digest, and count_distinct skips it — comparing against the
+        # raw row count would report a single NULL id as a spurious
+        # "duplicate ids" error, so NULLs get their own message.
         F.count(F.col(id_col)).alias("n"),
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct(F.col(id_col)).alias("nd"),
@@ -4774,51 +4750,23 @@ def streaming_ingest(
     like ``maintain_max_layers_per_batch`` and excluded from knob
     parity the same way."""
     _check_ingest_knobs(bloom_rebuild_mode, url_bloom, url_guard)
+    # the batch-face knobs, forwarded by name from this face's own
+    # arguments (the knob-parity test pins both signatures)
+    args = locals()
+    knobs = {
+        name: args[name]
+        for name in inspect.signature(incremental_ingest).parameters
+        if name not in ("spark", "new_docs", "out_root")
+    }
+    maintain_knobs = {
+        name: knobs[name]
+        for name in ("catalog_prefix", "bloom_max_fill",
+                     "compact_above_files", "url_bloom_max_fill")
+    }
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         rep = incremental_ingest(
-            batch_df.sparkSession,
-            batch_df,
-            out_root,
-            id_col=id_col,
-            text_col=text_col,
-            catalog_prefix=catalog_prefix,
-            near_dup=near_dup,
-            lsh_num_hashes=lsh_num_hashes,
-            lsh_bands=lsh_bands,
-            lsh_shingle_k=lsh_shingle_k,
-            lsh_hash_family=lsh_hash_family,
-            lsh_max_bucket=lsh_max_bucket,
-            near_dup_verify=near_dup_verify,
-            verify_max_broadcast_chars=verify_max_broadcast_chars,
-            line_census=line_census,
-            line_census_min_len=line_census_min_len,
-            decontaminate_probes=decontaminate_probes,
-            decontam_ngram=decontam_ngram,
-            gopher_gate=gopher_gate,
-            gopher_min_words=gopher_min_words,
-            gopher_min_stop_hits=gopher_min_stop_hits,
-            max_top_ngram_frac=max_top_ngram_frac,
-            max_dup_ngram_frac=max_dup_ngram_frac,
-            bloom_guard=bloom_guard,
-            bloom_max_fill=bloom_max_fill,
-            bloom_rebuild_mode=bloom_rebuild_mode,
-            media_guard=media_guard,
-            media_col=media_col,
-            media_max_hamming=media_max_hamming,
-            media_kind_col=media_kind_col,
-            media_video_every_ms=media_video_every_ms,
-            media_video_min_jaccard=media_video_min_jaccard,
-            media_audio_min_votes=media_audio_min_votes,
-            media_max_bucket=media_max_bucket,
-            url_guard=url_guard,
-            url_col=url_col,
-            url_blocklist=url_blocklist,
-            url_extra_suffixes=url_extra_suffixes,
-            url_psl_rules=url_psl_rules,
-            url_bloom=url_bloom,
-            url_bloom_max_fill=url_bloom_max_fill,
-            compact_above_files=compact_above_files,
+            batch_df.sparkSession, batch_df, out_root, **knobs
         )
         if maintain_due is not None:
             due = (
@@ -4830,13 +4778,10 @@ def streaming_ingest(
                 mres = maintain_lake(
                     batch_df.sparkSession,
                     out_root,
-                    catalog_prefix=catalog_prefix,
-                    bloom_max_fill=bloom_max_fill,
-                    compact_above_files=compact_above_files,
-                    url_bloom_max_fill=url_bloom_max_fill,
                     trust_marker=True,
                     max_layers=maintain_max_layers_per_batch,
                     index_compact_above_files=index_compact_above_files,
+                    **maintain_knobs,
                 )
                 for mk, mv in mres.items():
                     rep[f"maintain_{mk}"] = mv
