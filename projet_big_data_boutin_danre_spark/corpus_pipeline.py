@@ -51,6 +51,7 @@ from __future__ import annotations
 import functools
 import inspect
 import json
+import re
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
@@ -1298,19 +1299,17 @@ def incremental_ingest(
         batch = flagged.filter(~earlier).drop("__contam", "__qkeep", "__blocked")
     elif url_guard or near_dup or media_guard:
         batch = batch.localCheckpoint()
+    # heal-coverage base (r17, ADVICE medium): the batch ids BEFORE
+    # any within-batch keeper drop, so prior_batch_ids below covers
+    # batch-composition-dependent LOSERS too — a prior id whose
+    # sidecar append crashed can re-arrive with UNCHANGED content and
+    # lose keeper selection to a different doc in THIS batch (keeper
+    # choice depends on batch composition, not content); a heal base
+    # taken after the drops would leave it out of every sidecar heal
+    # forever
+    heal_base = batch.select(id_col)
 
     n_url_skipped = 0
-    # heal-coverage base (r17, ADVICE medium): id frames computed
-    # BEFORE each within-batch keeper drop, accumulated so
-    # prior_batch_ids below can cover batch-composition-dependent
-    # LOSERS too — a prior id whose sidecar append crashed can
-    # re-arrive with UNCHANGED content and lose keeper selection to a
-    # different doc in THIS batch (keeper choice depends on batch
-    # composition, not content); deriving the heal base from the
-    # post-drop batch alone would drop it from every sidecar heal
-    # forever. Each frame is already checkpointed by its own block,
-    # so these are cheap column re-reads, not new jobs.
-    pre_keeper_id_frames: list[DataFrame] = []
     if url_guard:
         # RefinedWeb URL dedup at ADMISSION — the cheapest guard, run
         # before any content hashing: one canonical-url window over
@@ -1331,9 +1330,6 @@ def incremental_ingest(
                 _W.partitionBy("__curl").orderBy(F.col(id_col).asc())
             ),
         ).localCheckpoint()
-        # url-candidate ids INCLUDING losers — the url-drop slice of
-        # the heal-coverage base
-        pre_keeper_id_frames.append(ranked.select(F.col(id_col)))
         losers = ranked.filter(F.col("__rn_url") > 1).select(id_col)
         n_url_losers = losers.count()
         if n_url_losers:
@@ -1359,11 +1355,6 @@ def incremental_ingest(
             ),
             lsh_num_hashes, lsh_bands, lsh_hash_family,
         ).localCheckpoint()
-        # band-bearing ids pre-near-dup-drop: covers near-dup losers
-        # in the heal base (bandless NULL-text docs can't lose)
-        pre_keeper_id_frames.append(
-            batch_bands.select(F.col("id").alias(id_col)).distinct()
-        )
         # within-batch near-dedup: two near-dup copies arriving in the
         # same batch admit one keeper (the same contract the exact
         # guard gives exact copies) — pairs → components → anti-join,
@@ -1520,18 +1511,6 @@ def incremental_ingest(
                 payload_col=media_col,
                 kinds=(),
             ).localCheckpoint()
-        # media-hash-bearing ids pre-media-drop: covers media losers
-        # in the heal base (hashless docs can't lose media selection)
-        pre_keeper_id_frames.append(
-            batch_mhashes.select(F.col(id_col)).distinct()
-        )
-        if media_routed:
-            pre_keeper_id_frames.append(
-                batch_vside.select(F.col(id_col)).distinct()
-            )
-            pre_keeper_id_frames.append(
-                batch_awins.select(F.col(id_col)).distinct()
-            )
         # within-batch perceptual dedup: two near-identical media
         # arriving together admit one keeper — each modality's pairs
         # union into ONE components pass (kind-disjoint ids, so no
@@ -1801,21 +1780,12 @@ def incremental_ingest(
         # all six heals consume the BROADCAST tiny
         # frame instead of each re-materializing a semi-join against
         # the corpus-sized id column (previously one docs/id-table
-        # scan per heal site per batch). The base is the post-drop
-        # batch UNIONED with the pre-keeper-drop id frames collected
-        # above (r17, ADVICE medium): keeper selection depends on
-        # batch COMPOSITION, so a prior id with unchanged content can
-        # lose the url/near-dup/media keeper race in a later,
-        # non-identical batch — without the union its crashed sidecar
-        # appends would never be healed (the pre-r16 full-prior-ids
-        # joins covered this case). A replay whose CHANGED content
-        # gates or keeper-drops differently remains outside heal
-        # coverage, as before (the documented re-crawl residual).
+        # scan per heal site per batch). The base is the pass-A batch
+        # (heal_base above), so keeper-drop losers are covered; a
+        # replay whose CHANGED content gates differently remains
+        # outside heal coverage (the documented re-crawl residual).
         # The deduped intersection also keeps the flag join from
         # fanning out on a prior id stored twice.
-        heal_base = batch.select(id_col)
-        for extra in pre_keeper_id_frames:
-            heal_base = heal_base.unionByName(extra)
         prior_batch_ids = (
             heal_base
             .dropDuplicates()
@@ -2773,6 +2743,20 @@ def _text_index_ids_path(out_root: str, buckets: int) -> str:
     return f"{out_root}/text_index_b{int(buckets)}_ids"
 
 
+def _write_ids_sidecar(
+    base: DataFrame, ids_path: str, base_files: int
+) -> None:
+    """Regenerate the id-presence sidecar wholesale from the index
+    ``base``: its id column (the first), one file per ~32 base files.
+    The input is the base, never the sidecar, so a direct overwrite
+    is safe; a crash mid-write leaves a partial sidecar that can only
+    UNDER-state presence — extra heals, never a wrong admission."""
+    write_parquet(
+        base.select(base.columns[0]).coalesce(max(1, base_files // 32)),
+        ids_path,
+    )
+
+
 def _fold_tail_append(
     spark: SparkSession, path: str, tail_path: str, ids_path: str,
     nb: int,
@@ -2808,11 +2792,9 @@ def _fold_tail_append(
 
     ``base_files`` (r19, advisor): the caller's pre-fold base file
     count, when it already holds one — :func:`maintain_lake` just
-    paid a :func:`_spark_file_count` listing to route here, and
-    re-listing the large bucketed base through the
-    ~3-round-trips-per-file walk twice per fold was exactly the
-    py4j chatter the r18 reclaim fix removed elsewhere. ``None``
-    (a direct caller) counts via the single-call listing itself.
+    listed the base to route here, so the fold lists it once (after
+    the append), not twice. ``None`` (a direct caller) lists it
+    before the append too.
 
     Sidecar↔base cross-check (r19, verdict #4 — the partial-gut
     staleness window): after the appends, one footer-only row count
@@ -2840,7 +2822,7 @@ def _fold_tail_append(
     files_before = (
         base_files
         if base_files is not None
-        else _spark_file_count(spark, path)
+        else _data_file_count(spark, path)
     ) + _data_file_count(spark, tail_path)
     tail_df = spark.read.parquet(tail_path)
     # the tail schema is exactly (id, text) in write order — the id
@@ -2859,7 +2841,7 @@ def _fold_tail_append(
         .partitionBy("tb")
         .parquet(path)
     )
-    files_after = _spark_file_count(spark, path)
+    files_after = _data_file_count(spark, path)
     # presence sidecar: APPEND the folded ids (≤8 small files per
     # fold) — never a rewrite; the next build/full compaction
     # regenerates it wholesale and resets its file count. Appended
@@ -2886,12 +2868,7 @@ def _fold_tail_append(
             # sidecar dead so heals take the root path
             fs.delete(hpath(ids_path), True)
         elif spark.read.parquet(ids_path).count() > base_rows:
-            write_parquet(
-                base_df.select(base_df.columns[0]).coalesce(
-                    max(1, files_after // 32)
-                ),
-                ids_path,
-            )
+            _write_ids_sidecar(base_df, ids_path, files_after)
     fs.delete(hpath(tail_path), True)
     return {
         "files_before": files_before,
@@ -3110,16 +3087,11 @@ def build_text_index(
     # id-presence sidecar (r18, verdict #2): ids-only projection of
     # the fresh base so the heal's quarter-coverage path never reads
     # the text-bearing root — regenerated wholesale here and at every
-    # full compaction; cheap folds only APPEND to it. Reads the base
-    # (never itself), so direct overwrite is safe; a crash leaves a
-    # partial sidecar that only UNDER-states presence (extra heals,
-    # never a wrong admission).
-    base_df = spark.read.parquet(path)
-    (
-        base_df.select(base_df.columns[0])
-        .coalesce(max(1, files // 32))
-        .write.mode("overwrite")
-        .parquet(_text_index_ids_path(out_root, int(buckets)))
+    # full compaction; cheap folds only APPEND to it
+    _write_ids_sidecar(
+        spark.read.parquet(path),
+        _text_index_ids_path(out_root, int(buckets)),
+        files,
     )
     # seed/reset the append accounting for the new layer (and drop
     # entries for swept stale layers) so compact_due starts clean.
@@ -3428,22 +3400,6 @@ _APPEND_LAYERS = (
 )
 
 
-def _spark_file_count(spark: SparkSession, path: str) -> int:
-    """File count via ONE Spark file-index listing — ``inputFiles()``
-    marshals the whole path array in a single py4j call, where the
-    :func:`_data_file_count` listing walk costs ~3 driver round
-    trips PER FILE (the `_live_bucket_paths` measurement; reproduced
-    at maintenance scale by the first ``fold_unit`` probe run —
-    SCALE.md §r18). Use for layers that are parquet-readable and
-    LARGE (the text index base: ≥ one file per non-empty bucket);
-    unreadable/missing layers fall back to the walk, which handles
-    them as point probes."""
-    df = read_layer(spark, path)
-    if df is None:
-        return _data_file_count(spark, path)
-    return len(df.inputFiles())
-
-
 def maintain_lake(
     spark: SparkSession,
     out_root: str,
@@ -3639,9 +3595,9 @@ def maintain_lake(
             # entry repair in compact_layer can finish the swap (the
             # static layers get this for free from _APPEND_LAYERS)
             for nm in child_names(spark, out_root) or ():
-                if nm.startswith("text_index_b") and nm.endswith(
-                    "__compact"
-                ):
+                # the id sidecar's residue (text_index_b<N>_ids
+                # __compact) is not an index layer
+                if re.fullmatch(r"text_index_b[0-9]+__compact", nm):
                     sweep.append((nm[: -len("__compact")], "tb"))
         for layer, layer_pby in sweep:
             path = f"{out_root}/{layer}"
@@ -3672,11 +3628,7 @@ def maintain_lake(
                 and not bstage
             ):
                 continue
-            n_files_base = (
-                _spark_file_count(spark, path)
-                if layer_pby
-                else _data_file_count(spark, path)
-            )
+            n_files_base = _data_file_count(spark, path)
             tail_files = (
                 _data_file_count(spark, tail_path)
                 if tail_path is not None
@@ -3793,11 +3745,18 @@ def maintain_lake(
                         # sidecar hygiene rides the same unit: its
                         # cheap-fold appends accumulate now that the
                         # whole-layer regen is off the common path
+                        # (an unreadable sidecar waits for that regen)
                         ids_p = _text_index_ids_path(out_root, nb)
-                        if _data_file_count(
-                            spark, ids_p
-                        ) > int(compact_above_files):
-                            _compact_ids_sidecar(spark, ids_p)
+                        if (
+                            _data_file_count(spark, ids_p)
+                            > int(compact_above_files)
+                            and read_layer(spark, ids_p) is not None
+                        ):
+                            compact_layer(
+                                spark, ids_p,
+                                target_file_mb=compact_target_file_mb,
+                                dedup_rows=True,
+                            )
                     elif n_files_base > max(
                         base_thr, resb["buckets_total"]
                     ):
@@ -3828,12 +3787,10 @@ def maintain_lake(
                         reclaim_files_before += res["files_before"]
                         reclaim_files_after += res["files_after"]
                         units_left -= 1
-                        base_df = spark.read.parquet(path)
-                        write_parquet(
-                            base_df.select(base_df.columns[0]).coalesce(
-                                max(1, res["files_after"] // 32)
-                            ),
+                        _write_ids_sidecar(
+                            spark.read.parquet(path),
                             _text_index_ids_path(out_root, nb),
+                            res["files_after"],
                         )
                 if pass_done:
                     # the completed pass IS the compaction event the
@@ -3892,17 +3849,11 @@ def maintain_lake(
                 # id-presence sidecar wholesale from the fresh base
                 # (the cheap fold only ever APPENDS to it — this is
                 # its compaction point, and the creation point for a
-                # lake that predates the sidecar). Direct overwrite
-                # is safe: the input is the base, never the sidecar;
-                # a crash mid-overwrite leaves a partial sidecar that
-                # can only UNDER-state presence — extra heals, never
-                # a wrong admission.
-                base_df = spark.read.parquet(path)
-                write_parquet(
-                    base_df.select(base_df.columns[0]).coalesce(
-                        max(1, res["files_after"] // 32)
-                    ),
+                # lake that predates the sidecar)
+                _write_ids_sidecar(
+                    spark.read.parquet(path),
                     _text_index_ids_path(out_root, nb),
+                    res["files_after"],
                 )
         if resync:
             st = _read_lake_stats(spark, f"{out_root}/_lake_stats")
@@ -4447,54 +4398,6 @@ def compact_index_buckets(
         after_counts.get(nm, 0) for _n, nm, _s in chosen
     )
     return out
-
-
-def _compact_ids_sidecar(spark: SparkSession, ids_path: str) -> None:
-    """Rewrite the id-presence sidecar (dedup + coalesce) — its
-    cheap-fold appends (≤8 files each) accumulate now that the
-    whole-layer rewrite (whose regen used to reset it) is off the
-    common path. Ids-only bytes (~1-2% of the index), so a wholesale
-    rewrite is fine. Swap protocol (the sidecar reads itself, so a
-    direct overwrite would clobber its own input): write ``__swap``,
-    rename live → ``__old``, rename swap → live, delete old; entry
-    repair resolves each crash window, and a window that leaves the
-    sidecar absent only degrades the heal to the root read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(ids_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    live, swap, old = (
-        hpath(ids_path),
-        hpath(ids_path + "__swap"),
-        hpath(ids_path + "__old"),
-    )
-    # entry repair
-    if not fs.exists(live):
-        if fs.exists(swap) and fs.exists(
-            hpath(ids_path + "__swap/_SUCCESS")
-        ):
-            fs.rename(swap, live)
-        elif fs.exists(old):
-            fs.rename(old, live)
-        else:
-            return  # nothing to compact (absence = root-read fallback)
-    if fs.exists(old):
-        fs.delete(old, True)
-    if fs.exists(swap):
-        fs.delete(swap, True)
-    df = read_layer(spark, ids_path)
-    if df is None:
-        return  # unreadable sidecar: leave for the next full regen
-    df.dropDuplicates().coalesce(8).write.mode("overwrite").parquet(
-        ids_path + "__swap"
-    )
-    if not fs.rename(live, old):
-        fs.delete(swap, True)
-        return
-    if not fs.rename(swap, live):
-        fs.rename(old, live)  # roll back
-        fs.delete(swap, True)
-        return
-    fs.delete(old, True)
 
 
 def update_line_census(

@@ -57,7 +57,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from .operators import cleaning, documents, usage
 from .schemas import DVF_SCHEMA
-from .sources.readers import read_csv_gz, read_layer, read_parquet
+from .sources.readers import path_exists, read_csv_gz, read_layer, read_parquet
 from .sources.sinks import index_documents, write_json, write_parquet
 
 # Index names, verbatim from the reference indexers
@@ -247,11 +247,6 @@ def index_fan_out(
         "pin", documents.geo_pin()
     )
     dvf_all, dvf_paris = documents.fan_out_prefix(dvf_docs, "code_commune")
-    # one scan, two indexes: persist the quality-filtered docs so the
-    # paris subset doesn't rescan the formatted layer. The two writes
-    # run concurrently and may both compute it; that measured level
-    # with not persisting (0.62 against 0.63 s per fan-out, 4 cores)
-    dvf_all = dvf_all.persist()
 
     plan: list[tuple[str, DataFrame, str | None]] = [
         (IDX_OPPORTUNITIES, opp, None),
@@ -279,29 +274,29 @@ def index_fan_out(
         )
         return n
 
-    try:
-        with ThreadPoolExecutor(max_workers=len(plan)) as pool:
-            futures = [(name, pool.submit(deliver, name, df, key))
-                       for name, df, key in plan]
-            # read inside the block: on a failure, leaving it waits
-            # for the other deliveries before the error propagates
-            counts = {name: f.result() for name, f in futures}
-    finally:
-        dvf_all.unpersist()
-    return counts
+    with ThreadPoolExecutor(max_workers=len(plan)) as pool:
+        futures = [(name, pool.submit(deliver, name, df, key))
+                   for name, df, key in plan]
+        # read inside the block: on a failure, leaving it waits for
+        # the other deliveries before the error propagates
+        return {name: f.result() for name, f in futures}
 
 
 def compact_usage_layers(spark: SparkSession, lay: DatalakeLayout) -> dict[str, int]:
     """Maintenance stage: compact the append-heavy usage layers
-    (sources/sinks.compact_layer) — run periodically, not per DAG run;
-    hourly runs otherwise accrete thousands of small files. Returns
-    {layer path: new file count}."""
-    from .sources.sinks import compact_layer
+    (corpus_pipeline.compact_layer's verified swap) — run
+    periodically, not per DAG run; hourly runs otherwise accrete
+    thousands of small files. A layer whose last swap crashed (only
+    ``__compact`` left) is resumed. Returns {layer path: new file
+    count}."""
+    from .corpus_pipeline import compact_layer
 
     out = {}
     for path in (lay.usage_market, lay.usage_opportunities):
-        if read_layer(spark, path) is not None:
-            out[path] = compact_layer(spark, path)
+        if read_layer(spark, path) is not None or path_exists(
+            spark, path + "__compact"
+        ):
+            out[path] = compact_layer(spark, path)["files_after"]
     return out
 
 

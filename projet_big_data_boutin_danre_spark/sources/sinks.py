@@ -108,66 +108,6 @@ def bulk_sink(
     df.foreachPartition(_send)
 
 
-def compact_layer(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: tuple[str, ...] = (),
-    sort_within_by: tuple[str, ...] = (),
-) -> int:
-    """Small-file compaction for a Parquet layer — the maintenance job
-    every per-run-appending lake needs: hourly pipeline runs write a
-    few MB each, and a year later the scan pays per-file open cost on
-    thousands of tiny files (task scheduling, footer reads, no
-    vectorized runway).
-
-    Rewrites the layer into ``ceil(total_bytes / target)`` files via
-    one round-robin repartition, staging into a sibling ``.compact``
-    directory and swapping in rename-first order: the live layer is
-    renamed ASIDE (``path`` → ``path.old``) before the staged layer
-    takes its place, so every intermediate state after a crash is
-    recoverable by hand (the data exists at ``path``, ``path.old``,
-    or ``path.compact`` — never deleted before the replacement is
-    live). Local-filesystem paths only — on any other scheme this
-    raises up front; object stores should point readers at a new
-    layer version instead of renaming. Returns the new file count.
-    """
-    import math
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"compact_layer swaps via local-FS rename; path scheme "
-            f"{scheme!r} is not supported — rewrite to a new layer "
-            f"version and repoint readers instead"
-        )
-
-    df = spark.read.parquet(path)
-    files = [urlparse(f).path for f in df.inputFiles()]
-    total = sum(os.path.getsize(f) for f in files if os.path.exists(f))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-
-    staged = path.rstrip("/") + ".compact"
-    write_parquet(
-        df.repartition(n_files),
-        staged,
-        partition_by=partition_by,
-        sort_within_by=sort_within_by,
-    )
-    local = urlparse(path).path or path
-    local_staged = urlparse(staged).path or staged
-    aside = local.rstrip("/") + ".old"
-    if os.path.exists(aside):
-        shutil.rmtree(aside)  # leftover from an interrupted prior swap
-    os.rename(local, aside)
-    os.rename(local_staged, local)
-    shutil.rmtree(aside)
-    return n_files
-
-
 def es_actions(
     batch: list[dict], index: str, id_key: str | None = None
 ) -> list[dict]:

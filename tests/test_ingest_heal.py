@@ -43,6 +43,28 @@ def test_ingest_heal_ignores_changed_content_under_reused_id(spark, tmp_path):
     assert r3["total_docs"] == 2
 
 
+def test_maintain_lake_ignores_id_sidecar_swap_residue(spark, tmp_path):
+    """An interrupted id-sidecar compaction leaves
+    ``text_index_b4_ids__compact``. On a lake with no live index the
+    orphan scan for a crashed index swap must not take it for an
+    index layer (its bucket count would parse from ``4_ids``)."""
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        incremental_ingest,
+        maintain_lake,
+    )
+
+    root = str(tmp_path / "lake_ids_residue")
+    incremental_ingest(spark, spark.createDataFrame(
+        [(1, "alpha content")], "doc_id long, text string"
+    ), root)
+    spark.range(3).withColumnRenamed("id", "doc_id").write.parquet(
+        f"{root}/text_index_b4_ids__compact"
+    )
+    res = maintain_lake(spark, root, compact_above_files=1)
+    assert res["compacted_layers"] == 0
+    assert res["text_index_built"] == 0
+
+
 def test_near_dup_ingest_heals_missing_bands_on_replay(spark, tmp_path):
     """Crash window: docs/fingerprints landed, bands append did not.
     The replay must backfill the bands (healed_bands) so the near-dup

@@ -248,16 +248,6 @@ def test_es_actions_id_rules():
     )
 
 
-def test_compact_layer_rejects_remote_schemes(spark):
-    """compact_layer's swap is local-FS rename; a non-file scheme must
-    fail up front instead of silently mis-sizing and then failing
-    after the staged write."""
-    from projet_big_data_boutin_danre_spark.sources.sinks import compact_layer
-
-    with pytest.raises(ValueError, match="scheme"):
-        compact_layer(spark, "hdfs://namenode/warehouse/layer")
-
-
 def test_per_index_batch_size_parity(spark, datalake, pipeline_run, monkeypatch):
     """VERDICT r4 #5: each index flushes its bulk buffer at the
     reference's per-index threshold — 1000 docs for opportunities/lbc
@@ -322,6 +312,36 @@ def test_compact_stage_preserves_usage_layers(spark, datalake, pipeline_run):
     }
     assert after == before
     assert len(spark.read.parquet(lay.usage_market).inputFiles()) == out[lay.usage_market]
+
+
+def test_compact_stage_resumes_crashed_swap(
+    spark, datalake, pipeline_run, tmp_path
+):
+    """A compaction that crashed between its renames — the live
+    usage_market moved aside to ``__old``, the verified rewrite left
+    at ``__compact`` — is finished by the next compact stage instead
+    of skipped: the layer is back with its rows and no residue."""
+    import shutil
+
+    lake = str(tmp_path / "lake")
+    shutil.copytree(datalake, lake)
+    lay = pipeline.DatalakeLayout(lake, RUN_DAY)
+    live = lay.usage_market
+
+    def market():
+        return {
+            r["code_commune"]: r["nb_ventes"]
+            for r in spark.read.parquet(live).collect()
+        }
+
+    before = market()
+    shutil.copytree(live, live + "__compact")
+    os.rename(live, live + "__old")
+    out = pipeline.compact_usage_layers(spark, lay)
+    assert set(out) == {lay.usage_market, lay.usage_opportunities}
+    assert market() == before
+    assert not os.path.exists(live + "__old")
+    assert not os.path.exists(live + "__compact")
 
 
 def test_extract_dvf_feeds_transform(spark, datalake, tmp_path):

@@ -249,8 +249,6 @@ def test_data_file_count_skips_hidden_files(spark, tmp_path):
     """The driver-side counter and Spark's file index agree on a layer
     holding bookkeeping (``_SUCCESS``, a ``_temporary`` dir) and a
     stray dot-file that is not a checksum."""
-    from projet_big_data_boutin_danre_spark import corpus_pipeline as cp
-
     path = _layer(spark, tmp_path, "partitioned")
     (tmp_path / "partitioned" / ".stray").write_bytes(b"not data")
     leftover = tmp_path / "partitioned" / "_temporary" / "0"
@@ -259,9 +257,6 @@ def test_data_file_count_skips_hidden_files(spark, tmp_path):
     n = len(spark.read.parquet(path).inputFiles())
     assert n >= 2
     assert data_file_count(spark, path) == n
-    assert cp._data_file_count(spark, path) == cp._spark_file_count(
-        spark, path
-    )
     assert data_file_count(spark, str(tmp_path / "nope")) == 0
 
 
@@ -337,9 +332,8 @@ def test_orc_roundtrip_and_partitioned(spark, tmp_path):
 def test_compact_layer_merges_small_files(spark, tmp_path):
     """Compaction rewrites a many-small-files layer into few files with
     identical rows (the per-run-append maintenance job)."""
-    from projet_big_data_boutin_danre_spark.sources.sinks import (
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
         compact_layer,
-        write_parquet,
     )
 
     out = str(tmp_path / "fragmented")
@@ -349,7 +343,7 @@ def test_compact_layer_merges_small_files(spark, tmp_path):
     n_before = len(spark.read.parquet(out).inputFiles())
     assert n_before >= 32
 
-    n_target = compact_layer(spark, out, target_file_bytes=10**9)
+    n_target = compact_layer(spark, out, target_file_mb=1000)["files_after"]
     assert n_target == 1
     compacted = spark.read.parquet(out)
     assert len(compacted.inputFiles()) == 1
@@ -376,9 +370,8 @@ def test_write_parquet_sort_within_clusters_rows(spark, tmp_path):
 
 
 def test_compact_layer_preserves_partitioning(spark, tmp_path):
-    from projet_big_data_boutin_danre_spark.sources.sinks import (
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
         compact_layer,
-        write_parquet,
     )
 
     out = str(tmp_path / "part_frag")
@@ -386,7 +379,7 @@ def test_compact_layer_preserves_partitioning(spark, tmp_path):
         "ds", F.when(F.col("id") % 2 == 0, "d1").otherwise("d2")
     )
     write_parquet(df.repartition(16), out, partition_by=("ds",))
-    compact_layer(spark, out, target_file_bytes=10**9, partition_by=("ds",))
+    compact_layer(spark, out, target_file_mb=1000, partition_by="ds")
     back = spark.read.parquet(out)
     assert back.count() == 2_000
     # partition columns survive and prune

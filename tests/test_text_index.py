@@ -1477,38 +1477,48 @@ def test_deferred_reclaim_keeps_signal_standing_until_drained(
     _index_equals_docs(spark, root)
 
 
-def test_fold_never_iterator_lists_the_base(spark, tmp_path, monkeypatch):
-    """r19 (advisor, medium): the cheap fold used to count the large
-    bucketed base TWICE per fold through the ~3-py4j-round-trips-
-    per-file iterator (`_data_file_count`) — at 4096 buckets that is
-    tens of thousands of driver round trips on the hot maintenance
-    path. Pin the fix shape: during maintain_lake's fold,
-    `_data_file_count` is never called on the BASE layer path (the
-    caller's `_spark_file_count` routing count is passed in; the
-    post-append count uses the single-call listing; the iterator
-    remains legitimate for the small tail/ids sidecars)."""
-    from projet_big_data_boutin_danre_spark import corpus_pipeline as cp
+def test_fold_lists_the_base_without_input_files(
+    spark, tmp_path, monkeypatch
+):
+    """The cheap fold counts the bucketed base through the driver
+    listing (`readers._list_files`) that `read_layer` walks anyway —
+    a Spark file-index count (`inputFiles()`) pays that same walk and
+    then more driver calls and jobs. Pin it over one maintain_lake
+    fold, at 4 and at 40 buckets: the base listing is walked at most
+    4 times and no frame's `inputFiles()` is called."""
+    from projet_big_data_boutin_danre_spark.sources import readers
 
-    root = str(tmp_path / "lake_nl")
     kw_off = dict(near_dup=True, lsh_hash_family="fast")
-    incremental_ingest(spark, _batch(spark, 0, 20, "nl"), root,
-                       **kw_off)
-    build_text_index(spark, root, buckets=4)
-    incremental_ingest(spark, _batch(spark, 100, 8, "nm"), root,
-                       **kw_off)
-    base_path = f"{root}/text_index_b4"
-    real = cp._data_file_count
-    base_iter_calls = []
+    frame_cls = type(spark.range(1))  # the concrete (classic) frame
+    real_list = readers._list_files
+    real_input_files = frame_cls.inputFiles
+    for buckets in (4, 40):
+        root = str(tmp_path / f"lake_nl{buckets}")
+        incremental_ingest(spark, _batch(spark, 0, 20, "nl"), root,
+                           **kw_off)
+        build_text_index(spark, root, buckets=buckets)
+        incremental_ingest(spark, _batch(spark, 100, 8, "nm"), root,
+                           **kw_off)
+        base_path = f"{root}/text_index_b{buckets}"
+        base_walks = []
+        input_files_calls = []
 
-    def spy(spark_, path):
-        if path.rstrip("/") == base_path:
-            base_iter_calls.append(path)
-        return real(spark_, path)
+        def list_spy(spark_, path):
+            if path.rstrip("/") == base_path:
+                base_walks.append(path)
+            return real_list(spark_, path)
 
-    monkeypatch.setattr(cp, "_data_file_count", spy)
-    res = maintain_lake(spark, root, compact_above_files=1)
-    assert res["folded_tails"] == 1
-    assert base_iter_calls == [], base_iter_calls
+        def input_files_spy(df):
+            input_files_calls.append(df)
+            return real_input_files(df)
+
+        monkeypatch.setattr(readers, "_list_files", list_spy)
+        monkeypatch.setattr(frame_cls, "inputFiles", input_files_spy)
+        res = maintain_lake(spark, root, compact_above_files=1)
+        monkeypatch.undo()
+        assert res["folded_tails"] == 1
+        assert len(base_walks) <= 4, (buckets, base_walks)
+        assert input_files_calls == [], buckets
 
 
 def test_torn_build_leaves_sidecar_absent_not_stale(

@@ -331,6 +331,26 @@ def s_compaction(spark, tmp, c):
     lake.maintain(compact_above_files=2, trust_marker=True)
 
 
+def s_index_maintenance(spark, tmp, c):
+    # one small bucket count and one with mostly empty buckets; every
+    # maintain_lake call runs a cheap tail fold, then a per-bucket
+    # reclaim (index threshold 4, one file allowed per bucket) with
+    # the id-sidecar compaction it carries; the second is a
+    # trust_marker pass
+    bs = text_batches(c, 4)
+    for buckets in (4, 48):
+        lake = Lake(spark, tmp, f"index_maintenance_b{buckets}",
+                    near_dup=True, near_dup_verify=0.5)
+        lake.ingest(bs[0])
+        lake.ingest(bs[1])
+        cp.build_text_index(spark, lake.root, buckets=buckets)
+        lake.ingest(bs[2])
+        lake.maintain(compact_above_files=1, index_compact_above_files=4)
+        lake.ingest(bs[3])
+        lake.maintain(compact_above_files=1, index_compact_above_files=4,
+                      trust_marker=True)
+
+
 SCENARIOS = {
     "plain": s_plain,
     "catalog": s_catalog,
@@ -342,6 +362,7 @@ SCENARIOS = {
     "media": s_media,
     "heal": s_heal,
     "compaction": s_compaction,
+    "index_maintenance": s_index_maintenance,
 }
 
 
