@@ -68,6 +68,7 @@ from .sources.readers import (
     child_names,
     path_exists,
     read_layer,
+    record_parquet_write,
 )
 from .sources.readers import data_file_count as _data_file_count
 from .sources.sinks import write_parquet
@@ -577,6 +578,31 @@ def run_corpus_pipeline(
     return counts
 
 
+# The lake's fixed schema and recipe. Every lake layer keys its rows by
+# _ID_COL and stores text under _TEXT_COL, so the ingest, the text
+# index and the line census read what the others wrote. The near-dup
+# guard's MinHash recipe (hashes, shingle size, hash family) is spelled
+# into the ``_lake_mode`` marker with the caller's band count. The url
+# Bloom filter grows past _URL_BLOOM_MAX_FILL, both when an ingest
+# merges into it and when maintain_lake checks it. Rewrites aim at
+# files of _TARGET_FILE_MB. Each media modality's within-batch pair
+# finder and its history probe take one threshold, so batch and
+# history admission agree: image Hamming bits, video frame-set
+# Jaccard, audio offset votes. The line census keys lines of at least
+# _LINE_CENSUS_MIN_LEN chars.
+_ID_COL = "doc_id"
+_TEXT_COL = "text"
+_LSH_HASHES = 8
+_LSH_SHINGLE_K = 8
+_LSH_HASH_FAMILY = "fast"
+_URL_BLOOM_MAX_FILL = 0.1
+_TARGET_FILE_MB = 128
+_MEDIA_MAX_HAMMING = 3
+_VIDEO_MIN_JACCARD = 0.5
+_AUDIO_MIN_VOTES = 4
+_LINE_CENSUS_MIN_LEN = 15
+
+
 def _check_ingest_knobs(
     bloom_rebuild_mode: str, url_bloom: bool, url_guard: bool
 ) -> None:
@@ -596,13 +622,13 @@ def _check_ingest_knobs(
         )
 
 
-# Columns incremental_ingest adds to the batch: the content fingerprint
-# and the per-row flags of its two admission passes (and of the url
-# keeper window). An input column of the same name would be
-# overwritten or collide in a flag join, so it is refused.
+# Columns incremental_ingest adds to the batch: the content fingerprint,
+# the quality gates' row key and the per-row flags of its two admission
+# passes (and of the url keeper window). An input column of the same
+# name would be overwritten or collide in a flag join, so it is refused.
 _RESERVED_COLUMNS = (
     "fingerprint",
-    "__contam", "__qkeep", "__blocked",  # pass A: the policy gates
+    "__contam", "__row", "__qkeep", "__blocked",  # pass A: the policy gates
     "__curl", "__rn_url",  # the url keeper window
     "__ug", "__nd", "__ndr", "__md", "__prior",  # pass B: history, ids
 )
@@ -612,49 +638,36 @@ def incremental_ingest(
     spark: SparkSession,
     new_docs: DataFrame,
     out_root: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     catalog_prefix: str | None = None,
     near_dup: bool = False,
-    lsh_num_hashes: int = 8,
     lsh_bands: int = 4,
-    lsh_shingle_k: int = 8,
-    lsh_hash_family: str = "fast",
     lsh_max_bucket: int | None = None,
     near_dup_verify: float | None = None,
     verify_max_broadcast_chars: int | None = 20_000_000,
     line_census: bool = False,
-    line_census_min_len: int = 15,
     decontaminate_probes: DataFrame | None = None,
-    decontam_ngram: int = 8,
     gopher_gate: bool = False,
-    gopher_min_words: int = 50,
-    gopher_min_stop_hits: int = 2,
     max_top_ngram_frac: Mapping[int, float] | None = None,
     max_dup_ngram_frac: Mapping[int, float] | None = None,
     bloom_guard: bool = False,
     bloom_max_fill: float = 0.5,
     bloom_rebuild_mode: str = "sync",
     media_guard: bool = False,
-    media_col: str = "payload",
-    media_max_hamming: int = 3,
-    media_kind_col: str = "kind",
     media_video_every_ms: int = 1000,
-    media_video_min_jaccard: float = 0.5,
-    media_audio_min_votes: int = 4,
     media_max_bucket: int | None = None,
     url_guard: bool = False,
-    url_col: str = "url",
     url_blocklist: tuple[str, ...] = (),
     url_extra_suffixes: tuple[str, ...] = (),
     url_psl_rules: tuple[str, ...] | None = None,
     url_bloom: bool = False,
-    url_bloom_max_fill: float = 0.1,
     compact_above_files: int | None = None,
 ) -> dict[str, int]:
     """Incremental corpus ingestion: admit only documents whose
     normalized-content fingerprint has never been seen, then append
-    them (and their fingerprints) to the lake.
+    them (and their fingerprints) to the lake. The batch carries the
+    lake's ``doc_id`` and ``text`` columns (``_ID_COL``,
+    ``_TEXT_COL``), plus ``url`` for the url guard and blocklist and
+    ``payload`` for the media guard.
 
     This is the corpus-side analog of the usage layer's watermark
     incremental read (streaming/watermark.py): state is the
@@ -741,10 +754,11 @@ def incremental_ingest(
     candidate sets, lower it on a small driver, ``None`` disables
     the guard (always broadcast — the pre-r17 crash-by-OOM regime).
     Both verify knobs are tuning knobs, not lake identity:
-    verification only narrows the
-    gate and the sidecar layout is unchanged. The LSH recipe is
-    stamped
-    into the ``_lake_mode`` marker, so every batch provably uses the
+    verification only narrows the gate and the sidecar layout is
+    unchanged. The LSH recipe — ``lsh_bands`` bands over the 8
+    MinHash values of 8-char shingles, ``"fast"`` hash family (the
+    ``_LSH_*`` constants) — is stamped into the ``_lake_mode``
+    marker, so every batch provably uses the
     same banding (mismatched keys would silently never collide) and a
     guarded lake refuses unguarded calls (docs skipping the guard
     would be invisible to it forever). Append order docs → ids →
@@ -830,13 +844,13 @@ def incremental_ingest(
     layer. Applies identically to the ``url_bloom`` lineage.
 
     ``media_guard`` (r12) upgrades admission with PERCEPTUAL media
-    dedup for batches that carry a binary ``media_col`` column: a
+    dedup for batches that carry a binary ``payload`` column: a
     ``media_bands`` sidecar persists the 64-bit perceptual hash
     (4×16-bit bands, :func:`operators.multimodal.perceptual_hash` —
     constant width per image regardless of payload size); each batch
     drops (a) its own perceptual-cluster non-keepers (banded Hamming
     pairs → connected components, batch-sized) and (b) images within
-    ``media_max_hamming`` bits of ANY admitted image
+    3 bits of ANY admitted image
     (:func:`operators.multimodal.phash_seen_ids` — batch hash rows
     broadcast against the sidecar, exact Hamming verify in the probe,
     history never shuffled or payload-read). Unlike the text LSH gate
@@ -849,8 +863,8 @@ def incremental_ingest(
     bands: admitted (no perceptual evidence), kept out of the
     sidecar.
 
-    KIND ROUTING (r13, verdict #2): when the batch carries
-    ``media_kind_col`` (default ``"kind"``), admission is
+    KIND ROUTING (r13, verdict #2): when the batch carries a
+    ``kind`` column, admission is
     per-modality — a re-encoded duplicate *video* or *audio* file is
     blocked, not just images. Images go through the pHash guard
     above; videos through a ``media_vframes`` sidecar (one row per
@@ -947,8 +961,8 @@ def incremental_ingest(
     crash degrades to harmless false positives, never to a url
     missing its bits. The filter is a CACHE of ``url_keys`` —
     absent/torn, it rebuilds from the layer; geometry lives in the
-    ``url_bloom_k{k}h{hex}`` path and grows on saturation under
-    ``url_bloom_max_fill`` (default 0.1 — STRICTER than the
+    ``url_bloom_k{k}h{hex}`` path and grows on saturation past a
+    fill of 0.1 (``_URL_BLOOM_MAX_FILL`` — STRICTER than the
     fingerprint lineage's 0.5 on purpose: this filter's value is
     skipping the scan OUTRIGHT, which needs ``fpp·|batch| < 1``,
     i.e. fill^4·batch < 1 — at fill 0.5 a 5k-url batch always
@@ -1033,8 +1047,8 @@ def incremental_ingest(
             "rename them in the input"
         )
     for on, col, knobs in (
-        (url_guard or bool(url_blocklist), url_col, "url_guard/url_blocklist"),
-        (media_guard, media_col, "media_guard"),
+        (url_guard or bool(url_blocklist), "url", "url_guard/url_blocklist"),
+        (media_guard, "payload", "media_guard"),
     ):
         if on and col not in new_docs.columns:
             raise ValueError(
@@ -1081,8 +1095,8 @@ def incremental_ingest(
         # disabling the guard — so it lives in the marker and every
         # batch must match it
         mode += (
-            f"+lsh:{lsh_num_hashes}x{lsh_bands}x{lsh_shingle_k}"
-            f":{lsh_hash_family}"
+            f"+lsh:{_LSH_HASHES}x{lsh_bands}x{_LSH_SHINGLE_K}"
+            f":{_LSH_HASH_FAMILY}"
         )
     if url_guard:
         # the URL guard is lake identity like the LSH recipe: docs
@@ -1098,7 +1112,7 @@ def incremental_ingest(
     # part of the lake's identity like the kernels themselves: a
     # routed lake's video sidecar is invisible to a legacy call and
     # vice versa, so the marker makes a face mismatch loud.
-    media_routed = media_guard and media_kind_col in new_docs.columns
+    media_routed = media_guard and "kind" in new_docs.columns
     media_has_dur = "duration_ms" in new_docs.columns
     if media_guard:
         # the perceptual-hash kernel is part of the lake's identity
@@ -1216,9 +1230,9 @@ def incremental_ingest(
 
     # within-batch keeper: smallest id per fingerprint (deterministic);
     # NULL text -> sentinel so the anti-join can actually match it
-    batch = dedup.exact_dedup(new_docs, id_col, text_col).withColumn(
+    batch = dedup.exact_dedup(new_docs, _ID_COL, _TEXT_COL).withColumn(
         "fingerprint",
-        F.coalesce(stable_fingerprint(text_col), F.lit("<null-text>")),
+        F.coalesce(stable_fingerprint(_TEXT_COL), F.lit("<null-text>")),
     )
     # Pass A, the policy gates at ADMISSION: decontamination (an
     # eval-leak n-gram hit, text.ngram_contamination with the probe
@@ -1229,53 +1243,56 @@ def incremental_ingest(
     # pass). Rejected docs leave no fingerprint, so if a gate later
     # loosens the same content can be admitted then — the content
     # guard, not a gate, owns identity. Each gate is one flag on the
-    # exact-deduped batch; every verdict is per id (or per row), never
-    # a function of the other ids, so evaluating all of them on the
-    # same frame decides what the gates applied one after another
-    # would. The payload-bearing batch is materialized ONCE here: the
-    # counters come from one aggregate over that checkpoint, billed to
-    # the first gate that fired, and every later block reads it.
+    # exact-deduped batch; every verdict is per id (decontamination)
+    # or per row, never a function of the other rows, so evaluating
+    # all of them on the same frame decides what the gates applied one
+    # after another would. The payload-bearing batch is materialized
+    # ONCE here: the counters come from one aggregate over that
+    # checkpoint, billed to the first gate that fired, and every later
+    # block reads it.
     # report key -> "gate fired" predicate, in billing order
     gates: dict[str, Column] = {}
     unflagged = batch
     if decontaminate_probes is not None:
         contam_ids = text.ngram_contamination(
-            unflagged, id_col, text_col,
-            decontaminate_probes, id_col, text_col,
-            n=decontam_ngram,
-        ).select(F.col(id_col)).distinct()
+            unflagged, _ID_COL, _TEXT_COL,
+            decontaminate_probes, _ID_COL, _TEXT_COL,
+        ).select(F.col(_ID_COL)).distinct()
         batch = batch.join(
             F.broadcast(contam_ids.withColumn("__contam", F.lit(True))),
-            id_col,
+            _ID_COL,
             "left",
         )
         gates["contaminated_skipped"] = F.col("__contam").isNotNull()
     if gopher_gate or max_top_ngram_frac or max_dup_ngram_frac:
-        kept = unflagged
+        # the quality gates judge a row, not an id: keyed by the id and
+        # the fingerprint, an id arriving twice with two texts gets a
+        # verdict per text (a fingerprint never holds a "/"). No id is
+        # NULL here: exact_dedup's semi-join on the id drops those rows
+        row_key = F.concat_ws(
+            "/", "fingerprint", F.col(_ID_COL).cast("string")
+        )
+        kept = unflagged.withColumn("__row", row_key)
         if max_top_ngram_frac or max_dup_ngram_frac:
             kept = apply_ngram_caps(
-                kept, id_col, text_col,
+                kept, "__row", _TEXT_COL,
                 max_top_ngram_frac, max_dup_ngram_frac,
             )
         if gopher_gate:
-            kept = apply_gopher_gate(
-                kept, id_col, text_col,
-                min_words=gopher_min_words,
-                min_stop_hits=gopher_min_stop_hits,
-            )
-        batch = batch.join(
-            kept.select(F.col(id_col)).distinct()
+            kept = apply_gopher_gate(kept, "__row", _TEXT_COL)
+        batch = batch.withColumn("__row", row_key).join(
+            kept.select("__row").distinct()
             .withColumn("__qkeep", F.lit(True)),
-            id_col,
+            "__row",
             "left",
-        )
+        ).drop("__row")
         gates["quality_rejected"] = F.col("__qkeep").isNull()
     if url_blocklist:
         batch = batch.withColumn(
             "__blocked",
             F.coalesce(
                 urls_ops.registered_domain(
-                    F.col(url_col), extra_suffixes=url_extra_suffixes,
+                    F.col("url"), extra_suffixes=url_extra_suffixes,
                     psl_rules=url_psl_rules,
                 ).isin([d.lower() for d in url_blocklist]),
                 F.lit(False),
@@ -1290,7 +1307,7 @@ def incremental_ingest(
         for key, fired in gates.items():
             counters.append(
                 # contaminated docs count by distinct id (the first gate)
-                F.count_distinct(F.when(fired, F.col(id_col)))
+                F.count_distinct(F.when(fired, F.col(_ID_COL)))
                 if key == "contaminated_skipped"
                 else F.count(F.when(~earlier & fired, 1))
             )
@@ -1307,7 +1324,7 @@ def incremental_ingest(
     # choice depends on batch composition, not content); a heal base
     # taken after the drops would leave it out of every sidecar heal
     # forever
-    heal_base = batch.select(id_col)
+    heal_base = batch.select(_ID_COL)
 
     n_url_skipped = 0
     if url_guard:
@@ -1321,23 +1338,23 @@ def incremental_ingest(
         from pyspark.sql import Window as _W
 
         uproj = batch.select(
-            F.col(id_col),
-            urls_ops.canonicalize_url(F.col(url_col)).alias("__curl"),
+            F.col(_ID_COL),
+            urls_ops.canonicalize_url(F.col("url")).alias("__curl"),
         ).filter(F.col("__curl").isNotNull())
         ranked = uproj.withColumn(
             "__rn_url",
             F.row_number().over(
-                _W.partitionBy("__curl").orderBy(F.col(id_col).asc())
+                _W.partitionBy("__curl").orderBy(F.col(_ID_COL).asc())
             ),
         ).localCheckpoint()
-        losers = ranked.filter(F.col("__rn_url") > 1).select(id_col)
+        losers = ranked.filter(F.col("__rn_url") > 1).select(_ID_COL)
         n_url_losers = losers.count()
         if n_url_losers:
             n_url_skipped += n_url_losers
-            batch = batch.join(losers, id_col, "left_anti")
+            batch = batch.join(losers, _ID_COL, "left_anti")
         # keeper url keys: probe input, sidecar append, heal source
         batch_urls = ranked.filter(F.col("__rn_url") == 1).select(
-            id_col, F.col("__curl").alias("canonical_url")
+            _ID_COL, F.col("__curl").alias("canonical_url")
         )
 
     arrived = new_docs.count()
@@ -1350,18 +1367,18 @@ def incremental_ingest(
         # × bands rows, never corpus-sized
         batch_bands = dedup.lsh_bands(
             dedup.minhash_signatures(
-                batch, id_col, text_col, lsh_num_hashes,
-                lsh_shingle_k, lsh_hash_family,
+                batch, _ID_COL, _TEXT_COL, _LSH_HASHES,
+                _LSH_SHINGLE_K, _LSH_HASH_FAMILY,
             ),
-            lsh_num_hashes, lsh_bands, lsh_hash_family,
+            _LSH_HASHES, lsh_bands, _LSH_HASH_FAMILY,
         ).localCheckpoint()
         # within-batch near-dedup: two near-dup copies arriving in the
         # same batch admit one keeper (the same contract the exact
         # guard gives exact copies) — pairs → components → anti-join,
         # all batch-sized
         pairs = dedup.minhash_lsh_pairs(
-            batch, id_col, text_col,
-            scale_profile="production", hash_family=lsh_hash_family,
+            batch, _ID_COL, _TEXT_COL,
+            scale_profile="production", hash_family=_LSH_HASH_FAMILY,
             bands_df=batch_bands,
         )
         wb_rejected = None
@@ -1379,15 +1396,15 @@ def incremental_ingest(
             # anti-join read it instead of re-running the band join.
             raw_pairs = pairs.localCheckpoint()
             verified = dedup.verify_pairs_jaccard(
-                batch, id_col, text_col, raw_pairs,
-                shingle_k=lsh_shingle_k, min_jaccard=near_dup_verify,
+                batch, _ID_COL, _TEXT_COL, raw_pairs,
+                shingle_k=_LSH_SHINGLE_K, min_jaccard=near_dup_verify,
             ).localCheckpoint()
             wb_rejected = raw_pairs.join(
                 verified, ["id_a", "id_b"], "left_anti"
             )
             pairs = verified
         members = dedup.connected_components(pairs)
-        batch = dedup.drop_near_duplicates(batch, id_col, members)
+        batch = dedup.drop_near_duplicates(batch, _ID_COL, members)
         # skip accounting from the members frame (pairs-sized) — the
         # non-keepers ARE the dropped rows, so this replaces two
         # batch-subplan counts with one job on a smaller frame
@@ -1435,9 +1452,9 @@ def incremental_ingest(
                 else F.lit(None).cast("long")
             )
             msrc = batch.select(
-                F.col(id_col),
-                F.col(media_kind_col).alias("kind"),
-                F.col(media_col),
+                F.col(_ID_COL),
+                F.col("kind"),
+                F.col("payload"),
                 duration.alias("duration_ms"),
             )
             # degraded-path visibility (r13 verdict note): a video row
@@ -1449,20 +1466,20 @@ def incremental_ingest(
             # One narrow job over the checkpointed batch projection.
             n_video_no_duration = msrc.filter(
                 (F.col("kind") == "video")
-                & F.col(media_col).isNotNull()
+                & F.col("payload").isNotNull()
                 & F.col("duration_ms").isNull()
             ).count()
             batch_mhashes = multimodal.perceptual_hash(
                 msrc,
-                id_col=id_col,
-                payload_col=media_col,
+                id_col=_ID_COL,
+                payload_col="payload",
                 kinds=("image",),
             ).localCheckpoint()
             batch_vfh = multimodal.video_frame_hashes(
                 msrc,
                 every_ms=media_video_every_ms,
-                id_col=id_col,
-                payload_col=media_col,
+                id_col=_ID_COL,
+                payload_col="payload",
             )
             # the video sidecar shape: one row per DISTINCT frame
             # hash with the video's distinct-hash count stamped on
@@ -1470,16 +1487,16 @@ def incremental_ingest(
             # corpus-sized layer (vhash_seen_ids plan notes).
             # Checkpoint the distinct set (payloads decode exactly
             # once, into it), then the count join is hash-sized.
-            vdist = batch_vfh.select(id_col, "hash64").distinct(
+            vdist = batch_vfh.select(_ID_COL, "hash64").distinct(
             ).localCheckpoint()
             batch_vside = vdist.join(
-                vdist.groupBy(id_col).agg(
+                vdist.groupBy(_ID_COL).agg(
                     F.count(F.lit(1)).alias("n_frames")
                 ),
-                id_col,
+                _ID_COL,
             ).localCheckpoint()
             batch_awins = multimodal.audio_window_hashes(
-                msrc, id_col=id_col, payload_col=media_col
+                msrc, id_col=_ID_COL, payload_col="payload"
             ).localCheckpoint()
             # append-facing capped views (media_max_bucket): hashes
             # over-common WITHIN this batch never enter the sidecars,
@@ -1506,9 +1523,9 @@ def incremental_ingest(
             # legacy (r12) shape — kinds=(): every payload hashes as
             # an image; the caller owns kind routing
             batch_mhashes = multimodal.perceptual_hash(
-                batch.select(id_col, media_col),
-                id_col=id_col,
-                payload_col=media_col,
+                batch.select(_ID_COL, "payload"),
+                id_col=_ID_COL,
+                payload_col="payload",
                 kinds=(),
             ).localCheckpoint()
         # within-batch perceptual dedup: two near-identical media
@@ -1518,28 +1535,28 @@ def incremental_ingest(
         # batch-sized (the media mirror of the near_dup block above)
         mpairs = multimodal.phash_near_dup_pairs(
             batch_mhashes,
-            id_col=id_col,
-            max_hamming=media_max_hamming,
+            id_col=_ID_COL,
+            max_hamming=_MEDIA_MAX_HAMMING,
             max_bucket=media_max_bucket,
         ).select("id_a", "id_b")
         if media_routed:
             mpairs = mpairs.unionByName(
                 multimodal.video_near_dup_pairs(
                     batch_vside,
-                    id_col=id_col,
-                    min_jaccard=media_video_min_jaccard,
+                    id_col=_ID_COL,
+                    min_jaccard=_VIDEO_MIN_JACCARD,
                     max_bucket=media_max_bucket,
                 ).select("id_a", "id_b")
             ).unionByName(
                 multimodal.audio_match_pairs(
                     batch_awins,
-                    id_col=id_col,
-                    min_votes=media_audio_min_votes,
+                    id_col=_ID_COL,
+                    min_votes=_AUDIO_MIN_VOTES,
                     max_bucket=media_max_bucket,
                 ).select("id_a", "id_b")
             )
         mmembers = dedup.connected_components(mpairs)
-        batch = dedup.drop_near_duplicates(batch, id_col, mmembers)
+        batch = dedup.drop_near_duplicates(batch, _ID_COL, mmembers)
         n_media_skipped += mmembers.filter(
             F.col("node") != F.col("component")
         ).count()
@@ -1561,18 +1578,18 @@ def incremental_ingest(
         sidecars.append(
             _Sidecar("media_bands",
                      batch_mhashes.filter(F.col("band0").isNotNull()),
-                     id_col, "healed_media", batch_mhashes)
+                     _ID_COL, "healed_media", batch_mhashes)
         )
     if media_routed:
         sidecars += [
-            _Sidecar("media_vframes", batch_vside_app, id_col,
+            _Sidecar("media_vframes", batch_vside_app, _ID_COL,
                      "healed_video", batch_vside),
-            _Sidecar("media_awins", batch_awins_app, id_col,
+            _Sidecar("media_awins", batch_awins_app, _ID_COL,
                      "healed_audio", batch_awins),
         ]
     if url_guard:
         sidecars.append(
-            _Sidecar("url_keys", batch_urls, id_col, "healed_urls",
+            _Sidecar("url_keys", batch_urls, _ID_COL, "healed_urls",
                      batch_urls)
         )
     if bucketed and spark.catalog.tableExists(fp_table):
@@ -1597,7 +1614,7 @@ def incremental_ingest(
     url_filter = _BloomLineage(
         spark, out_root, "url_bloom", "canonical_url",
         keys=url_keys if url_history else None,
-        guard=url_bloom, max_fill=url_bloom_max_fill,
+        guard=url_bloom, max_fill=_URL_BLOOM_MAX_FILL,
     )
     if seen is not None and bloom_guard:
         # Bloom pre-filter: map-side probe (k broadcast joins, zero
@@ -1642,7 +1659,7 @@ def incremental_ingest(
             url_hits = (
                 url_keys()
                 .join(F.broadcast(probe_urls), "canonical_url")
-                .select(id_col)
+                .select(_ID_COL)
                 .distinct()
             )
             pass_b["__ug"] = url_hits
@@ -1661,7 +1678,7 @@ def incremental_ingest(
             probe_limit = None
         if near_dup_verify is None:
             near_hits = dedup.lsh_seen_ids(
-                None, seen_b, id_col, text_col, bands_df=batch_bands,
+                None, seen_b, _ID_COL, _TEXT_COL, bands_df=batch_bands,
                 max_bucket=lsh_max_bucket, max_broadcast_rows=probe_limit,
             )
         else:
@@ -1678,12 +1695,12 @@ def incremental_ingest(
             # entirely (one cheap first() on the materialized frame
             # instead of planning the corpus-sized verify job)
             cand_pairs = dedup.lsh_seen_ids(
-                None, seen_b, id_col, text_col, bands_df=batch_bands,
+                None, seen_b, _ID_COL, _TEXT_COL, bands_df=batch_bands,
                 max_bucket=lsh_max_bucket, max_broadcast_rows=probe_limit,
                 return_pairs=True,
             ).localCheckpoint()
             if cand_pairs.first() is None:
-                near_hits = cand_pairs.select(F.col(id_col))
+                near_hits = cand_pairs.select(F.col(_ID_COL))
             else:
                 # history texts through the bucket-pruned text index
                 # when the lake carries one (r16) — candidate buckets
@@ -1693,19 +1710,19 @@ def incremental_ingest(
                 if text_idx_n is not None:
                     verify_hist = _indexed_verify_history(
                         spark, docs_path, text_idx_path, text_idx_n,
-                        cand_pairs, id_col, text_col,
+                        cand_pairs, _ID_COL, _TEXT_COL,
                     )
                 else:
                     verify_hist = spark.read.parquet(docs_path).select(
-                        id_col, text_col
+                        _ID_COL, _TEXT_COL
                     )
                 near_hits = dedup.verify_candidates_jaccard(
                     batch,
                     verify_hist,
                     cand_pairs,
-                    id_col,
-                    text_col,
-                    shingle_k=lsh_shingle_k,
+                    _ID_COL,
+                    _TEXT_COL,
+                    shingle_k=_LSH_SHINGLE_K,
                     min_jaccard=near_dup_verify,
                     max_broadcast_chars=verify_max_broadcast_chars,
                 ).localCheckpoint()
@@ -1716,8 +1733,8 @@ def incremental_ingest(
                 # the tuning signal for the Jaccard threshold). Ids
                 # only, batch-bounded; a flag of pass B that only
                 # counts (rescued rows stay admitted).
-                pass_b["__ndr"] = cand_pairs.select(F.col(id_col)).join(
-                    near_hits, id_col, "left_anti"
+                pass_b["__ndr"] = cand_pairs.select(F.col(_ID_COL)).join(
+                    near_hits, _ID_COL, "left_anti"
                 ).distinct()
         pass_b["__nd"] = near_hits
     if media_guard:
@@ -1732,8 +1749,8 @@ def incremental_ingest(
             media_hits.append(multimodal.phash_seen_ids(
                 batch_mhashes,
                 seen_m,
-                id_col=id_col,
-                max_hamming=media_max_hamming,
+                id_col=_ID_COL,
+                max_hamming=_MEDIA_MAX_HAMMING,
                 max_bucket=media_max_bucket,
             ))
         seen_v = (
@@ -1743,8 +1760,8 @@ def incremental_ingest(
             media_hits.append(multimodal.vhash_seen_ids(
                 batch_vside,
                 seen_v,
-                id_col=id_col,
-                min_jaccard=media_video_min_jaccard,
+                id_col=_ID_COL,
+                min_jaccard=_VIDEO_MIN_JACCARD,
                 max_bucket=media_max_bucket,
             ))
         seen_a = (
@@ -1754,8 +1771,8 @@ def incremental_ingest(
             media_hits.append(multimodal.audio_seen_ids(
                 batch_awins,
                 seen_a,
-                id_col=id_col,
-                min_votes=media_audio_min_votes,
+                id_col=_ID_COL,
+                min_votes=_AUDIO_MIN_VOTES,
                 max_bucket=media_max_bucket,
             ))
         if media_hits:
@@ -1767,11 +1784,11 @@ def incremental_ingest(
     prior_ids = None
     prior_batch_ids = None
     if bucketed and spark.catalog.tableExists(id_table):
-        prior_ids = spark.table(id_table).select(id_col)
+        prior_ids = spark.table(id_table).select(_ID_COL)
     elif not bucketed:
         prior_ids = read_layer(spark, docs_path)
         if prior_ids is not None:
-            prior_ids = prior_ids.select(id_col)
+            prior_ids = prior_ids.select(_ID_COL)
     if prior_ids is not None:
         # ONE corpus-id scan per batch (r16 review #7): the id guard
         # and every sidecar heal need only "which BATCH ids are
@@ -1789,7 +1806,7 @@ def incremental_ingest(
         prior_batch_ids = (
             heal_base
             .dropDuplicates()
-            .join(prior_ids, id_col, "left_semi")
+            .join(prior_ids, _ID_COL, "left_semi")
             .localCheckpoint()
         )
         pass_b["__prior"] = prior_batch_ids
@@ -1805,7 +1822,7 @@ def incremental_ingest(
     flagged = admitted
     for flag, ids in pass_b.items():
         flagged = flagged.join(
-            F.broadcast(ids.withColumn(flag, F.lit(True))), id_col, "left"
+            F.broadcast(ids.withColumn(flag, F.lit(True))), _ID_COL, "left"
         )
     flagged = flagged.localCheckpoint()
 
@@ -1823,7 +1840,7 @@ def incremental_ingest(
         F.count(F.when(~url_hit & _hit("__ndr"), 1)),
         F.count(F.when(~url_hit & ~near_hit & media_hit, 1)),
         F.count(F.when(kept, 1)),
-        _id_set_digest(id_col, where=kept),
+        _id_set_digest(_ID_COL, where=kept),
     ).first()
     n_url_skipped += row[0]
     n_near_skipped += row[1]
@@ -1850,18 +1867,18 @@ def incremental_ingest(
         # id); both rows are legitimate heal candidates.
         fp_ids = None
         if bucketed and spark.catalog.tableExists(fp_table):
-            fp_ids = spark.table(fp_table).select(id_col)
+            fp_ids = spark.table(fp_table).select(_ID_COL)
         elif not bucketed:
             fp_ids = read_layer(spark, fp_path)
             if fp_ids is not None:
-                fp_ids = fp_ids.select(id_col)
+                fp_ids = fp_ids.select(_ID_COL)
         healable = (
             flagged.filter(prior & ~history)
-            .select("fingerprint", id_col)
+            .select("fingerprint", _ID_COL)
             .dropDuplicates()
         )
         if fp_ids is not None:
-            healable = healable.join(fp_ids, id_col, "left_anti")
+            healable = healable.join(fp_ids, _ID_COL, "left_anti")
     # sidecar heals, one per guard sidecar in commit order: same proof
     # obligation as the fingerprint heal, one crash window later — a
     # doc row (and possibly its fingerprint) landed but the sidecar
@@ -1879,7 +1896,7 @@ def incremental_ingest(
     for s in sidecars if prior_batch_ids is not None else []:
         path = f"{out_root}/{s.layer}"
         h = s.rows.join(
-            F.broadcast(prior_batch_ids.withColumnRenamed(id_col, s.id_col)),
+            F.broadcast(prior_batch_ids.withColumnRenamed(_ID_COL, s.id_col)),
             s.id_col,
             "left_semi",
         )
@@ -1929,7 +1946,7 @@ def incremental_ingest(
         # `flagged` would miss exactly the rows this heal exists for
         ht_ids = prior_batch_ids.withColumn(
             "tb",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(text_idx_n)),
+            F.pmod(F.xxhash64(F.col(_ID_COL)), F.lit(text_idx_n)),
         )
         # TAIL FIRST (r17): recent appends — exactly the rows a
         # crash-replay window re-arrives over — live in the small
@@ -1944,7 +1961,7 @@ def incremental_ingest(
         if tail is not None:
             try:
                 ht_ids = ht_ids.join(
-                    tail.select(F.col(id_col)), id_col, "left_anti"
+                    tail.select(F.col(_ID_COL)), _ID_COL, "left_anti"
                 ).localCheckpoint()
             except JVM_ERRORS:
                 pass  # unreadable tail rows: the base check below answers
@@ -2011,7 +2028,7 @@ def incremental_ingest(
                 )
                 if _sdf is not None:
                     id_sources.append(
-                        _sdf.select(F.col(_sdf.columns[0]).alias(id_col))
+                        _sdf.select(F.col(_sdf.columns[0]).alias(_ID_COL))
                     )
                 else:
                     # an unreadable/absent base leaves id_sources
@@ -2020,7 +2037,7 @@ def incremental_ingest(
                     # restores them
                     base = read_layer(spark, text_idx_path)
                     if base is not None:
-                        id_sources.append(base.select(F.col(id_col)))
+                        id_sources.append(base.select(F.col(_ID_COL)))
             else:
                 # explicit candidate-bucket paths, not an isin filter
                 # on the layer root — the root read would LIST all N
@@ -2032,7 +2049,7 @@ def incremental_ingest(
                 # all-missing handling below
                 hb = read_layer(spark, *live_hb) if live_hb else None
                 if hb is not None:
-                    id_sources.append(hb.select(F.col(id_col)))
+                    id_sources.append(hb.select(F.col(_ID_COL)))
             # (tail ids were already anti-joined out of ht_ids above,
             # so id_sources here carry only the bucketed base)
             if id_sources:
@@ -2040,7 +2057,7 @@ def incremental_ingest(
                 for extra_src in id_sources[1:]:
                     idx_ids = idx_ids.unionByName(extra_src)
                 missing_ids = ht_ids.join(
-                    idx_ids.dropDuplicates(), id_col, "left_anti"
+                    idx_ids.dropDuplicates(), _ID_COL, "left_anti"
                 ).localCheckpoint()
             else:
                 # nothing readable anywhere (torn layer, index younger
@@ -2054,10 +2071,10 @@ def incremental_ingest(
             if missing_ids.first() is not None:
                 healable_text = (
                     spark.read.parquet(docs_path)
-                    .select(id_col, text_col)
+                    .select(_ID_COL, _TEXT_COL)
                     .join(
-                        F.broadcast(missing_ids.select(id_col)),
-                        id_col,
+                        F.broadcast(missing_ids.select(_ID_COL)),
+                        _ID_COL,
                         "left_semi",
                     )
                     .localCheckpoint()
@@ -2071,7 +2088,7 @@ def incremental_ingest(
         # write's one-file-per-bucket cost is exactly what the tail
         # exists to avoid
         write_parquet(
-            healable_text.select(id_col, text_col).coalesce(8),
+            healable_text.select(_ID_COL, _TEXT_COL).coalesce(8),
             text_idx_tail,
             mode="append",
         )
@@ -2248,7 +2265,7 @@ def incremental_ingest(
         fp_filter.merge(admitted)
         if url_guard:
             url_filter.merge(
-                batch_urls.join(admitted.select(id_col), id_col, "left_semi")
+                batch_urls.join(admitted.select(_ID_COL), _ID_COL, "left_semi")
             )
         if line_census:
             # census BEFORE the docs append: a crash after this lands
@@ -2259,8 +2276,7 @@ def incremental_ingest(
             # would leave open (docs landed → replay admits nothing →
             # that batch's lines never counted).
             cen = update_line_census(
-                spark, f"{out_root}/line_census", admitted,
-                id_col, text_col, min_len=line_census_min_len,
+                spark, f"{out_root}/line_census", admitted
             )
             n_census_lines = cen["batch_lines"]
         write_parquet(admitted.drop("fingerprint"), docs_path, mode="append")
@@ -2274,14 +2290,14 @@ def incremental_ingest(
             # commit-boundary-wide at-least-once window is the price
             # of never scanning the corpus-sized docs layer per batch.
             (
-                admitted.select(id_col)
+                admitted.select(_ID_COL)
                 .write.mode("append")
                 .format("parquet")
-                .bucketBy(32, id_col)
+                .bucketBy(32, _ID_COL)
                 .saveAsTable(id_table)
             )
             (
-                admitted.select("fingerprint", id_col)
+                admitted.select("fingerprint", _ID_COL)
                 .write.mode("append")
                 .format("parquet")
                 .bucketBy(32, "fingerprint")
@@ -2289,7 +2305,7 @@ def incremental_ingest(
             )
         else:
             write_parquet(
-                admitted.select("fingerprint", id_col), fp_path,
+                admitted.select("fingerprint", _ID_COL), fp_path,
                 mode="append",
             )
         # then the guard sidecars in list order (bands → media →
@@ -2299,7 +2315,7 @@ def incremental_ingest(
         for s in sidecars:
             write_parquet(
                 s.rows.join(
-                    admitted.select(F.col(id_col).alias(s.id_col)),
+                    admitted.select(F.col(_ID_COL).alias(s.id_col)),
                     s.id_col,
                     "left_semi",
                 ),
@@ -2322,7 +2338,7 @@ def incremental_ingest(
             # union base ∪ tail, maintain_lake folds the tail into
             # the bucketed base inside the layer's compaction.
             write_parquet(
-                admitted.select(id_col, text_col).coalesce(8),
+                admitted.select(_ID_COL, _TEXT_COL).coalesce(8),
                 text_idx_tail,
                 mode="append",
             )
@@ -2878,8 +2894,7 @@ def _fold_tail_append(
 
 
 def read_text_index(
-    spark: SparkSession, out_root: str, buckets: int,
-    id_col: str = "doc_id", text_col: str = "text",
+    spark: SparkSession, out_root: str, buckets: int
 ) -> DataFrame:
     """The index's full (id, text) content: bucketed base ∪ append
     tail. Crash residue (a fold interrupted between swap and tail
@@ -2890,7 +2905,7 @@ def read_text_index(
     # may still answer — consumers treat missing rows as heal work,
     # never as absence of content
     parts = [
-        df.select(id_col, text_col)
+        df.select(_ID_COL, _TEXT_COL)
         for df in (
             read_layer(spark, _text_index_path(out_root, buckets)),
             read_layer(spark, _text_index_tail_path(out_root, buckets)),
@@ -2979,10 +2994,6 @@ def build_text_index(
     spark: SparkSession,
     out_root: str,
     buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    target_file_mb: int = 128,
-    drop_others: bool = True,
 ) -> dict[str, int]:
     """Build (or rebuild) the lake's ``text_index_b{N}`` layer: a
     bucket-partitioned (id, text) CACHE of the docs layer, bucketed by
@@ -3041,11 +3052,11 @@ def build_text_index(
     hpath = jvm.org.apache.hadoop.fs.Path
     fs = hpath(out_root).getFileSystem(spark._jsc.hadoopConfiguration())
     size = fs.getContentSummary(hpath(docs_path)).getLength()
-    n_out = max(1, int(size // (target_file_mb * 1024 * 1024)) + 1)
+    n_out = max(1, int(size // (_TARGET_FILE_MB * 1024 * 1024)) + 1)
     df = (
-        docs.select(id_col, text_col)
+        docs.select(_ID_COL, _TEXT_COL)
         .withColumn(
-            "tb", F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(buckets)))
+            "tb", F.pmod(F.xxhash64(F.col(_ID_COL)), F.lit(int(buckets)))
         )
     )
     # delete any existing id-presence sidecar BEFORE the in-place
@@ -3072,18 +3083,16 @@ def build_text_index(
     tail_p = hpath(_text_index_tail_path(out_root, buckets))
     if fs.exists(tail_p):
         fs.delete(tail_p, True)
-    if drop_others:
-        # sweep stale layers built at other bucket counts — discovery
-        # follows the largest N, so a stale SMALLER layer is inert,
-        # but a stale LARGER one would shadow this build (their
-        # _tail/_ids sidecars sweep with them; this build's own are
-        # re-created below)
-        for name in child_names(spark, out_root) or ():
-            if (
-                name.startswith("text_index_b")
-                and name != f"text_index_b{int(buckets)}"
-            ):
-                fs.delete(hpath(f"{out_root}/{name}"), True)
+    # sweep stale layers built at other bucket counts — discovery
+    # follows the largest N, so a stale SMALLER layer is inert, but a
+    # stale LARGER one would shadow this build (their _tail/_ids
+    # sidecars sweep with them; this build's own are re-created below)
+    for name in child_names(spark, out_root) or ():
+        if (
+            name.startswith("text_index_b")
+            and name != f"text_index_b{int(buckets)}"
+        ):
+            fs.delete(hpath(f"{out_root}/{name}"), True)
     # id-presence sidecar (r18, verdict #2): ids-only projection of
     # the fresh base so the heal's quarter-coverage path never reads
     # the text-bearing root — regenerated wholesale here and at every
@@ -3405,10 +3414,7 @@ def maintain_lake(
     out_root: str,
     catalog_prefix: str | None = None,
     bloom_max_fill: float = 0.5,
-    max_steps: int = 8,
     compact_above_files: int | None = None,
-    compact_target_file_mb: int = 128,
-    url_bloom_max_fill: float = 0.1,
     trust_marker: bool = False,
     text_index_buckets: int | None = None,
     max_layers: int | None = None,
@@ -3429,23 +3435,23 @@ def maintain_lake(
     nonzero, at whatever cadence amortizes the fingerprint rescan.
 
     ``compact_above_files`` (r15, verdict #1) adds the SMALL-FILE
-    sweep: every per-batch append layer the lake carries (docs +
-    every guard sidecar — ``_APPEND_LAYERS``) whose data-file count
-    exceeds the threshold is rewritten to ~``compact_target_file_mb``
-    files via :func:`compact_layer` (crash-safe rename swap; content
+    sweep: every per-batch append layer the lake carries (docs + every
+    guard sidecar — ``_APPEND_LAYERS``) whose data-file count exceeds
+    the threshold is rewritten to ~128 MB files (``_TARGET_FILE_MB``)
+    via :func:`compact_layer` (crash-safe rename swap; content
     identical, so every guard's behavior is unchanged by
     construction). Per-batch appends grow file counts without bound —
     one file set per micro-batch — and the r14 measurement (SCALE.md)
     put the metadata cost of that at 4.7× on a LOCAL fs for a
     footer-only count at 2 000 files, paid by EVERY guard's sidecar
-    scan on EVERY batch, worse on object stores. The sweep runs
-    BEFORE the Bloom check so a rebuild's fingerprint rescan reads
-    the compacted layer. A layer left live-less by a compaction crash
+    scan on EVERY batch, worse on object stores. The sweep runs BEFORE
+    the Bloom check so a rebuild's fingerprint rescan reads the
+    compacted layer. A layer left live-less by a compaction crash
     (``__compact`` present, live missing) is swept regardless of the
     threshold so the entry repair in :func:`compact_layer` finishes
     the swap. Default ``None`` keeps the pre-r15 bloom-only behavior.
-    The sweep is also the RE-SYNC point for the ``compact_due``
-    append accounting (r16): swept layers reset to 0 (via
+    The sweep is also the RE-SYNC point for the ``compact_due`` append
+    accounting (r16): swept layers reset to 0 (via
     :func:`compact_layer`), examined-but-under-threshold layers are
     set to their MEASURED file count — the per-batch counter is a
     write-time upper bound (empty appends count 1, write 0), and
@@ -3725,7 +3731,6 @@ def maintain_lake(
                     resb = compact_index_buckets(
                         spark, path, nb,
                         files_above=max(1, base_thr // int(nb)),
-                        target_file_mb=compact_target_file_mb,
                     )
                     if resb["buckets_compacted"] or resb["repaired"]:
                         compacted_layers += 1
@@ -3752,11 +3757,7 @@ def maintain_lake(
                             > int(compact_above_files)
                             and read_layer(spark, ids_p) is not None
                         ):
-                            compact_layer(
-                                spark, ids_p,
-                                target_file_mb=compact_target_file_mb,
-                                dedup_rows=True,
-                            )
+                            compact_layer(spark, ids_p, dedup_rows=True)
                     elif n_files_base > max(
                         base_thr, resb["buckets_total"]
                     ):
@@ -3776,7 +3777,6 @@ def maintain_lake(
                         # corpus-scale rewrite every sweep).
                         res = compact_layer(
                             spark, path,
-                            target_file_mb=compact_target_file_mb,
                             partition_by=layer_pby,
                             partition_values=nb,
                             dedup_rows=True,
@@ -3833,7 +3833,7 @@ def maintain_lake(
                 )
                 fold_path = tail_path
             res = compact_layer(
-                spark, path, target_file_mb=compact_target_file_mb,
+                spark, path,
                 partition_by=layer_pby,
                 partition_values=nb,
                 fold_df=fold_df,
@@ -3914,7 +3914,7 @@ def maintain_lake(
             steps = 1
         else:
             fill = fill_probe
-        while fill > max_fill and steps < max_steps:
+        while fill > max_fill and steps < 8:  # at most 8 rebuilds
             hex_cur += _bloom_growth_steps(fill, max_fill)
             res = bloom_rebuild(
                 spark, out_root, hex_cur,
@@ -3930,7 +3930,7 @@ def maintain_lake(
         }
 
     fp = _maintain_filter("bloom", bloom_max_fill)
-    ub = _maintain_filter("url_bloom", url_bloom_max_fill)
+    ub = _maintain_filter("url_bloom", _URL_BLOOM_MAX_FILL)
     # text-index provisioning (r16): maintenance is the natural place
     # to pay the one-time corpus rewrite a verify index costs — the
     # same contract as the deferred Bloom rebuild (admission stays
@@ -3938,9 +3938,7 @@ def maintain_lake(
     # discover and maintain it from then on). Only builds when NO
     # index exists: an existing one is already maintained per batch
     # and resized with an explicit build_text_index call (a resize is
-    # a deliberate operator decision, not idle maintenance). Default
-    # id/text column names — a lake with custom columns calls
-    # build_text_index directly.
+    # a deliberate operator decision, not idle maintenance).
     text_index_built = 0
     if (
         text_index_buckets is not None
@@ -3990,7 +3988,7 @@ def _read_bloom_layer(spark: SparkSession, path: str) -> DataFrame | None:
 def compact_layer(
     spark: SparkSession,
     path: str,
-    target_file_mb: int = 128,
+    target_file_mb: int = _TARGET_FILE_MB,
     partition_by: str | None = None,
     partition_values: int | None = None,
     fold_df: DataFrame | None = None,
@@ -4158,6 +4156,11 @@ def compact_layer(
         fs.rename(old, live)
         raise
     fs.delete(old, True)
+    if partition_by is None:
+        # the swapped-in files are one Spark write of ``df``, so its
+        # schema is what the next open would infer: remember it, and
+        # that open launches no inference job
+        record_parquet_write(spark, path, df.schema)
     if fold_path is not None and fs.exists(hpath(fold_path)):
         # tail folded into the swapped-in layer: delete it LAST — a
         # crash before this line leaves exact-duplicate rows (readers
@@ -4195,7 +4198,6 @@ def compact_index_buckets(
     nb: int,
     files_above: int = 1,
     max_buckets: int | None = 256,
-    target_file_mb: int = 128,
 ) -> dict[str, int]:
     """PER-BUCKET incremental compaction for the text index (r18 —
     the stall-floor fix the `guard_probe.py fold` measurement
@@ -4345,7 +4347,7 @@ def compact_index_buckets(
         ).collect()
     }
     size = sum(s for _n, _nm, s in chosen)
-    n_out = max(1, int(size // (target_file_mb * 1024 * 1024)) + 1)
+    n_out = max(1, int(size // (_TARGET_FILE_MB * 1024 * 1024)) + 1)
     (
         _bucket_sliced(ded, "tb", n_out, n_values=len(chosen))
         .write.mode("overwrite")
@@ -4401,21 +4403,16 @@ def compact_index_buckets(
 
 
 def update_line_census(
-    spark: SparkSession,
-    census_path: str,
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 15,
+    spark: SparkSession, census_path: str, batch: DataFrame
 ) -> dict[str, int]:
     """Maintain a cross-batch LINE CENSUS sidecar — the incremental
     half of the RefinedWeb line dedup (:func:`operators.dedup.
-    drop_common_lines`): per batch, append each qualifying line's md5
-    key with its batch-local DISTINCT-doc count, so
-    :func:`read_line_census` can answer "which exact lines has this
-    LAKE seen in >= min_df docs" without ever re-reading historical
-    text — the same lake-is-the-state design as the fingerprint and
-    band sidecars.
+    drop_common_lines`): per batch, append the md5 key of each line of
+    at least ``_LINE_CENSUS_MIN_LEN`` (15) chars with its batch-local
+    DISTINCT-doc count, so :func:`read_line_census` can answer "which
+    exact lines has this LAKE seen in >= min_df docs" without ever
+    re-reading historical text — the same lake-is-the-state design as
+    the fingerprint and band sidecars.
 
     Crash/replay safety: every append is stamped with an order-free
     ID-SET digest of the batch (``bit_xor(xxhash64(id))`` — the
@@ -4440,26 +4437,26 @@ def update_line_census(
     Returns ``{"batch_lines": keys appended, "new_batch": 0|1,
     "batch_digest": the stamp}``."""
     digest_row = batch.agg(
-        _id_set_digest(id_col).alias("d"),
+        _id_set_digest(_ID_COL).alias("d"),
         # count(id), not count(1): a NULL id hashes to the seed
         # (xxhash64(NULL) = 42), so two of them cancel out of the XOR
         # digest, and count_distinct skips it — comparing against the
         # raw row count would report a single NULL id as a spurious
         # "duplicate ids" error, so NULLs get their own message.
-        F.count(F.col(id_col)).alias("n"),
+        F.count(F.col(_ID_COL)).alias("n"),
         F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct(F.col(id_col)).alias("nd"),
+        F.count_distinct(F.col(_ID_COL)).alias("nd"),
     ).first()
     if digest_row["n_rows"] != digest_row["n"]:
         raise ValueError(
             f"line-census batch has {digest_row['n_rows'] - digest_row['n']} "
-            f"NULL {id_col} value(s) — a NULL id is invisible to the "
+            f"NULL {_ID_COL} value(s) — a NULL id is invisible to the "
             "XOR replay digest, so the skip decision would be "
             "unsound. Drop or key the NULL-id rows first."
         )
     if digest_row["n"] != digest_row["nd"]:
         raise ValueError(
-            f"line-census batch has duplicate {id_col} values "
+            f"line-census batch has duplicate {_ID_COL} values "
             f"({digest_row['n']} rows, {digest_row['nd']} distinct) — "
             "duplicate ids cancel pairwise out of the XOR replay "
             "digest, so the skip decision would be unsound. Exact-"
@@ -4480,7 +4477,8 @@ def update_line_census(
             }
     counts = (
         dedup.common_lines(
-            batch, id_col, text_col, min_df=1, min_len=min_len
+            batch, _ID_COL, _TEXT_COL,
+            min_df=1, min_len=_LINE_CENSUS_MIN_LEN,
         )
         .withColumnRenamed("line_df", "n_docs")
         .withColumn("batch_digest", F.lit(digest))
@@ -4517,45 +4515,29 @@ def read_line_census(
 def streaming_ingest(
     stream_df: DataFrame,
     out_root: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     checkpoint: str | None = None,
     catalog_prefix: str | None = None,
     near_dup: bool = False,
-    lsh_num_hashes: int = 8,
     lsh_bands: int = 4,
-    lsh_shingle_k: int = 8,
-    lsh_hash_family: str = "fast",
     lsh_max_bucket: int | None = None,
     near_dup_verify: float | None = None,
     verify_max_broadcast_chars: int | None = 20_000_000,
     line_census: bool = False,
-    line_census_min_len: int = 15,
     decontaminate_probes: DataFrame | None = None,
-    decontam_ngram: int = 8,
     gopher_gate: bool = False,
-    gopher_min_words: int = 50,
-    gopher_min_stop_hits: int = 2,
     max_top_ngram_frac: Mapping[int, float] | None = None,
     max_dup_ngram_frac: Mapping[int, float] | None = None,
     bloom_guard: bool = False,
     bloom_max_fill: float = 0.5,
     bloom_rebuild_mode: str = "sync",
     media_guard: bool = False,
-    media_col: str = "payload",
-    media_max_hamming: int = 3,
-    media_kind_col: str = "kind",
     media_video_every_ms: int = 1000,
-    media_video_min_jaccard: float = 0.5,
-    media_audio_min_votes: int = 4,
     media_max_bucket: int | None = None,
     url_guard: bool = False,
-    url_col: str = "url",
     url_blocklist: tuple[str, ...] = (),
     url_extra_suffixes: tuple[str, ...] = (),
     url_psl_rules: tuple[str, ...] | None = None,
     url_bloom: bool = False,
-    url_bloom_max_fill: float = 0.1,
     compact_above_files: int | None = None,
     on_report=None,
     maintain_due: int | None = None,
@@ -4589,11 +4571,10 @@ def streaming_ingest(
     has; ``bloom_guard`` forwards the Bloom pre-filter (the
     bit_or-idempotent sidecar composes with replay exactly like the
     census — see :func:`incremental_ingest`), and the full batch-face
-    knob surface forwards with it (r13, advisor): the LSH recipe
-    params (a non-default recipe is part of the lake's identity — a
-    streaming face that couldn't pass them would be refused by the
-    mode marker), ``line_census_min_len``, ``decontam_ngram``,
-    ``bloom_max_fill`` and ``bloom_rebuild_mode`` — streaming lakes
+    knob surface forwards with it (r13, advisor): ``lsh_bands`` (part
+    of the lake's identity — a streaming face that couldn't pass it
+    would be refused by the mode marker), ``bloom_max_fill`` and
+    ``bloom_rebuild_mode`` — streaming lakes
     in particular want ``"defer"``, which keeps the saturation
     rebuild out of micro-batch latency and leaves it to an
     out-of-band :func:`maintain_lake` run; ``media_guard`` (r12)
@@ -4664,7 +4645,7 @@ def streaming_ingest(
     maintain_knobs = {
         name: knobs[name]
         for name in ("catalog_prefix", "bloom_max_fill",
-                     "compact_above_files", "url_bloom_max_fill")
+                     "compact_above_files")
     }
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:

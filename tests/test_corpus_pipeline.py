@@ -2136,7 +2136,7 @@ def test_near_dup_verify_before_block(spark, tmp_path):
     probe = spark.createDataFrame(
         [(doc, by_id[doc])], "doc_id long, text string"
     )
-    kw = dict(near_dup=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True)
     # verify OFF: the band collision alone blocks the non-duplicate
     lake0 = str(tmp_path / "lake_noverify")
     incremental_ingest(spark, hist, lake0, **kw)
@@ -2212,7 +2212,7 @@ def test_maintain_lake_compaction_sweep(spark, tmp_path):
     schema = "doc_id long, text string, url string"
     root = str(tmp_path / "lake_sweep")
     kw = dict(near_dup=True, url_guard=True, line_census=True,
-              bloom_guard=True, lsh_hash_family="fast")
+              bloom_guard=True)
     def _text(n):
         # per-doc DISTINCT word material (texts that share most of
         # their 8-char shingles would near-dup-block each other)
@@ -3016,7 +3016,7 @@ def test_streaming_face_compaction_battery(spark, tmp_path):
     root = str(tmp_path / "lake_stream_compact")
     src = tmp_path / "compact_incoming"
     src.mkdir()
-    kw = dict(near_dup=True, url_guard=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True, url_guard=True)
 
     def _text(n):
         return " ".join(f"s{n}q{j}r{(n * 11 + j) % 89}" for j in range(12))
@@ -3649,7 +3649,7 @@ def test_lake_lifecycle_soak(spark, tmp_path):
 
     root = str(tmp_path / "lake_soak")
     base = dict(
-        near_dup=True, near_dup_verify=0.5, lsh_hash_family="fast",
+        near_dup=True, near_dup_verify=0.5,
         url_guard=True, url_blocklist=("blocked.ex",),
         media_guard=True, line_census=True,
         bloom_rebuild_mode="defer", compact_above_files=2,
@@ -4057,7 +4057,7 @@ def test_compact_accounting_survives_torn_marker_and_tracks_layers(
             "doc_id long, text string",
         )
 
-    kw = dict(near_dup=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True)
     for b in range(3):
         incremental_ingest(spark, docs(b * 10, 3), root, **kw)
     st = _read_lake_stats(spark, f"{root}/_lake_stats")
@@ -4139,7 +4139,7 @@ def test_verify_max_broadcast_chars_forwards_through_faces(
         [(2, base + " thirteen")], "doc_id long, text string"
     )
     kw = dict(
-        near_dup=True, lsh_hash_family="fast", near_dup_verify=0.5,
+        near_dup=True, near_dup_verify=0.5,
         verify_max_broadcast_chars=123_456,
     )
     root = str(tmp_path / "lake_bc")
@@ -4175,7 +4175,6 @@ def test_maintain_max_layers_staggers_and_converges(spark, tmp_path):
                 ),
                 root,
                 near_dup=True,
-                lsh_hash_family="fast",
             )
     # max_layers=0: everything due is deferred, nothing moves
     r0 = maintain_lake(spark, roots[1], compact_above_files=1,
@@ -4244,7 +4243,6 @@ def test_stream_maintain_failure_replays_idempotently(
     monkeypatch.setattr(cp, "maintain_lake", flaky)
     kw = dict(
         near_dup=True,
-        lsh_hash_family="fast",
         compact_above_files=1,
         maintain_due=1,
         checkpoint=str(tmp_path / "rt_ckpt"),

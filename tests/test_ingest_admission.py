@@ -57,7 +57,9 @@ def test_ingest_refuses_reserved_columns_on_the_first_batch(
 def test_policy_gates_bill_each_row_to_the_first_gate(spark, tmp_path):
     """Decontamination → quality → blocklist: a row several gates
     reject counts once, under the first; contaminated docs count by
-    id; an id arriving twice with different text is judged per id."""
+    id; an id arriving twice with different text is judged per row; a
+    NULL-id row reaches no gate (exact dedup drops it) and is neither
+    admitted nor billed."""
     from projet_big_data_boutin_danre_spark.corpus_pipeline import (
         incremental_ingest,
     )
@@ -76,9 +78,10 @@ def test_policy_gates_bill_each_row_to_the_first_gate(spark, tmp_path):
         (4, f"{spam()} {prompt}", "https://ok.ex/4"),    # contaminated + quality
         (5, prose(), "https://blocked.ex/5"),            # blocked
         (6, prose(), "https://ok.ex/6"),                 # one id, two texts:
-        (6, spam(), "https://ok.ex/6b"),                 # the n-gram cap
-        (7, spam(), "https://ok.ex/7"),                  # judges the id, so
-        (7, spam(), "https://ok.ex/7b"),                 # both rows go
+        (6, spam(), "https://ok.ex/6b"),                 # each row judged,
+        (7, spam(), "https://ok.ex/7"),                  # so the prose row
+        (7, spam(), "https://ok.ex/7b"),                 # is admitted
+        (None, prose(), "https://ok.ex/n"),              # NULL id: dropped
     ]
     rep = incremental_ingest(
         spark,
@@ -90,9 +93,9 @@ def test_policy_gates_bill_each_row_to_the_first_gate(spark, tmp_path):
         url_blocklist=("blocked.ex",),
     )
     assert rep == {
-        "arrived": 9, "admitted": 1, "healed_fingerprints": 0,
-        "total_docs": 1, "domain_blocked": 1,
-        "contaminated_skipped": 2, "quality_rejected": 5,
+        "arrived": 10, "admitted": 2, "healed_fingerprints": 0,
+        "total_docs": 2, "domain_blocked": 1,
+        "contaminated_skipped": 2, "quality_rejected": 4,
     }
     assert list(rep) == [
         "arrived", "admitted", "healed_fingerprints", "total_docs",

@@ -1,6 +1,7 @@
-"""Ingest crash-replay heals and the streaming face's knob surface:
-the sidecar lifecycle of ``incremental_ingest`` that the default test
-run covers (the rest of the ingest battery is marked slow)."""
+"""Ingest crash-replay heals, the knob surface of the lake's entry
+points and the ``_lake_mode`` string a fresh lake stamps: the sidecar
+lifecycle of ``incremental_ingest`` that the default test run covers
+(the rest of the ingest battery is marked slow)."""
 
 from __future__ import annotations
 
@@ -104,12 +105,19 @@ def test_streaming_ingest_exposes_full_batch_knob_surface():
     the same knob surface — a batch-face knob missing from
     streaming_ingest (bloom_max_fill was, pre-r13) means streaming
     lakes silently run defaults they cannot tune. Locks names AND
-    defaults, so the next knob cannot ship half-surfaced."""
+    defaults, so the next knob cannot ship half-surfaced. The exact
+    parameter names of the lake's entry points are pinned too, so a
+    new knob shows up here as a reviewed diff: the lake's column
+    names, its LSH recipe parts, the url filter's fill target and the
+    rewrite file size are module constants, not knobs."""
     import inspect
 
     from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        build_text_index,
         incremental_ingest,
+        maintain_lake,
         streaming_ingest,
+        update_line_census,
     )
 
     batch = inspect.signature(incremental_ingest).parameters
@@ -132,6 +140,58 @@ def test_streaming_ingest_exposes_full_batch_knob_surface():
                      "index_compact_above_files")
     }
     assert batch_knobs == stream_knobs
+    assert list(batch) == [
+        "spark", "new_docs", "out_root", "catalog_prefix", "near_dup",
+        "lsh_bands", "lsh_max_bucket", "near_dup_verify",
+        "verify_max_broadcast_chars", "line_census",
+        "decontaminate_probes", "gopher_gate", "max_top_ngram_frac",
+        "max_dup_ngram_frac", "bloom_guard", "bloom_max_fill",
+        "bloom_rebuild_mode", "media_guard", "media_video_every_ms",
+        "media_max_bucket", "url_guard", "url_blocklist",
+        "url_extra_suffixes", "url_psl_rules", "url_bloom",
+        "compact_above_files",
+    ]
+    assert list(inspect.signature(maintain_lake).parameters) == [
+        "spark", "out_root", "catalog_prefix", "bloom_max_fill",
+        "compact_above_files", "trust_marker", "text_index_buckets",
+        "max_layers", "index_compact_above_files",
+    ]
+    assert list(inspect.signature(build_text_index).parameters) == [
+        "spark", "out_root", "buckets",
+    ]
+    assert list(inspect.signature(update_line_census).parameters) == [
+        "spark", "census_path", "batch",
+    ]
+
+
+@pytest.mark.parametrize("face", ["near_dup", "routed_media", "url"])
+def test_lake_mode_marker_spells_the_fixed_recipe(spark, tmp_path, face):
+    """The ``_lake_mode`` string a fresh lake stamps is lake identity:
+    an existing lake refuses any call whose mode differs. Lakes
+    already on disk carry these literals, so a change to the recipe
+    constants that would lock them out fails here."""
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        incremental_ingest,
+    )
+
+    if face == "near_dup":
+        batch = _near_docs(spark, [(1, _BASE)])
+        knobs, mode = {"near_dup": True}, "path+lsh:8x4x8:fast"
+    elif face == "routed_media":
+        vid = _av_payloads()[0]
+        batch = _av_docs(spark, [(1, "video alpha", vid, "video", 5000)])
+        knobs = {"media_guard": True}
+        mode = "path+media:dhash+vframes:1000:dur+awins:64/32"
+    else:
+        batch = spark.createDataFrame(
+            [(1, _BASE, "https://a.ex/1")],
+            "doc_id long, text string, url string",
+        )
+        knobs, mode = {"url_guard": True}, "path+url"
+    root = str(tmp_path / "lake")
+    incremental_ingest(spark, batch, root, **knobs)
+    stamped = spark.read.parquet(f"{root}/_lake_mode").first()["mode"]
+    assert stamped == mode
 
 
 @pytest.mark.parametrize(

@@ -100,7 +100,7 @@ def test_near_dup_probe_does_not_rematerialize_bands(
     a batch whose band rows are bounded under the probe's limit skips
     the probe's second checkpoint + count, and a batch over the limit
     is still chunked, admitting the same ids."""
-    kw = dict(near_dup=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True)
     base = tmp_path / "base"
     incremental_ingest(spark, _docs(spark, 0, 4), str(base), **kw)
     near = spark.createDataFrame(

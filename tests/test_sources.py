@@ -623,3 +623,28 @@ def test_near_dup_ingest_layers_reopen_as_inferred(spark, tmp_path):
         df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
         assert jobs == 0, name
         assert df.schema == _fresh_schema(spark, path), name
+
+
+def test_compacted_layers_reopen_without_a_job(spark, tmp_path):
+    """A layer ``maintain_lake`` just compacted reopens with no job,
+    with the schema inference would give."""
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        incremental_ingest,
+        maintain_lake,
+    )
+
+    root = str(tmp_path / "lake")
+    for b in range(3):
+        incremental_ingest(spark, spark.createDataFrame(
+            [(b * 10 + i, f"batch {b} document {i} text") for i in range(4)],
+            "doc_id long, text string",
+        ), root)
+    res = maintain_lake(spark, root, compact_above_files=1)
+    assert res["compacted_layers"] >= 2
+    for name in ("docs", "fingerprints"):
+        path = f"{root}/{name}"
+        assert data_file_count(spark, path) == 1
+        df, jobs = _jobs_launched(spark, lambda: read_layer(spark, path))
+        assert jobs == 0, name
+        assert df.schema == _fresh_schema(spark, path), name
+        assert df.count() == 12

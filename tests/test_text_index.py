@@ -86,7 +86,7 @@ def _find_collider(spark):
     return false_pos[0], by_id[false_pos[0]]
 
 
-KW = dict(near_dup=True, lsh_hash_family="fast", near_dup_verify=0.5)
+KW = dict(near_dup=True, near_dup_verify=0.5)
 
 
 def _index_equals_docs(spark, root):
@@ -171,7 +171,7 @@ def test_maintain_if_present_and_heal(spark, tmp_path):
     import shutil
 
     root = str(tmp_path / "lake")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")  # verify off
+    kw_off = dict(near_dup=True)  # verify off
     b1 = spark.createDataFrame([(1, BASE)], "doc_id long, text string")
     b2 = spark.createDataFrame(
         [(2, "completely different words " * 6)],
@@ -221,7 +221,7 @@ def test_compaction_preserves_partition_layout(spark, tmp_path):
     partition-preserving rewrite: content identical, tb= dirs still
     present, pruned verify still correct afterwards."""
     root = str(tmp_path / "lake")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     words = ["red", "green", "blue", "amber", "violet", "teal"]
     for i, w in enumerate(words):
         df = spark.createDataFrame(
@@ -276,7 +276,7 @@ def test_append_accounting_row(spark, tmp_path):
     )
 
     root = str(tmp_path / "lake")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(
         spark,
         spark.createDataFrame([(1, BASE)], "doc_id long, text string"),
@@ -365,7 +365,7 @@ def test_torn_marker_recount_includes_index(spark, tmp_path):
     )
 
     root = str(tmp_path / "lake")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(
         spark,
         spark.createDataFrame([(1, BASE)], "doc_id long, text string"),
@@ -432,7 +432,7 @@ def test_maintain_lake_provisions_index(spark, tmp_path):
     rewrite out-of-band), never rebuilds an existing one, and the
     next ingest discovers + maintains it."""
     root = str(tmp_path / "lake")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(
         spark,
         spark.createDataFrame([(1, BASE)], "doc_id long, text string"),
@@ -513,7 +513,7 @@ def test_trust_marker_maintenance_covers_index(spark, tmp_path):
     an over-threshold one is still listed and swept
     partition-preserving."""
     root = str(tmp_path / "lake")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     for i in range(4):
         incremental_ingest(
             spark,
@@ -557,7 +557,7 @@ def test_heal_quarter_coverage_skips_per_bucket_probes(
     from projet_big_data_boutin_danre_spark import corpus_pipeline as cp
 
     root = str(tmp_path / "lake_qc")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     b1 = spark.createDataFrame(
         [(i, f"{BASE} tail marker {i} " + "pad words " * 3)
          for i in range(1, 9)],
@@ -597,7 +597,7 @@ def test_tail_append_is_sidecar_shaped(spark, tmp_path):
     )
 
     root = str(tmp_path / "lake_tail")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
 
     def batch(lo, n):
         return spark.createDataFrame(
@@ -636,7 +636,7 @@ def test_fold_crash_residue_deduped_on_next_fold(spark, tmp_path):
     )
 
     root = str(tmp_path / "lake_fold")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     b1 = spark.createDataFrame(
         [(i, " ".join(f"fd{i}w{j}" for j in range(12)))
          for i in range(20)],
@@ -702,7 +702,6 @@ def test_streaming_maintain_due_folds_tail_in_stream(spark, tmp_path):
         spark.read.parquet(str(src / "w0")),
         root,
         near_dup=True,
-        lsh_hash_family="fast",
     )
     build_text_index(spark, root, buckets=8)
     got = []
@@ -713,7 +712,6 @@ def test_streaming_maintain_due_folds_tail_in_stream(spark, tmp_path):
         root,
         checkpoint=str(tmp_path / "sf_ckpt"),
         near_dup=True,
-        lsh_hash_family="fast",
         compact_above_files=3,
         maintain_due=1,
         on_report=lambda bid, rep: got.append(rep),
@@ -749,7 +747,7 @@ def test_fold_rebuilds_gutted_base_from_tail(spark, tmp_path):
     )
 
     root = str(tmp_path / "lake_gut")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(
         spark,
         spark.createDataFrame(
@@ -830,7 +828,7 @@ def test_cheap_fold_appends_tail_into_buckets(spark, tmp_path):
     )
 
     root = str(tmp_path / "lake_cheap")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 20), root, **kw_off)
     build_text_index(spark, root, buckets=4)
     ids_dir = tmp_path / "lake_cheap" / "text_index_b4_ids"
@@ -885,7 +883,7 @@ def test_bucket_compaction_clears_residue_and_sidecar_tracks(
     )
 
     root = str(tmp_path / "lake_full")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 12, "ff"), root, **kw_off)
     build_text_index(spark, root, buckets=4)
     incremental_ingest(spark, _batch(spark, 100, 6, "fg"), root, **kw_off)
@@ -945,7 +943,7 @@ def test_quarter_coverage_heal_reads_ids_sidecar_not_root(
     missing, and re-heal the whole batch into a fresh tail; the
     sidecar path heals nothing and leaves no tail."""
     root = str(tmp_path / "lake_sc")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     b1 = _batch(spark, 0, 8, "sc")
     incremental_ingest(spark, b1, root, **kw_off)
     build_text_index(spark, root, buckets=4)
@@ -991,7 +989,6 @@ def test_streaming_maintain_stagger_bounds_per_batch_work(
         spark.read.parquet(str(src / "w0")),
         root,
         near_dup=True,
-        lsh_hash_family="fast",
     )
     build_text_index(spark, root, buckets=8)
     got = []
@@ -1002,7 +999,6 @@ def test_streaming_maintain_stagger_bounds_per_batch_work(
         root,
         checkpoint=str(tmp_path / "sg_ckpt"),
         near_dup=True,
-        lsh_hash_family="fast",
         compact_above_files=3,
         maintain_due=1,
         maintain_max_layers_per_batch=1,
@@ -1053,7 +1049,7 @@ def test_bucket_compaction_rewrites_only_overgrown_buckets(
     )
 
     root = str(tmp_path / "lake_pb")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 40, "pb"), root, **kw_off)
     build_text_index(spark, root, buckets=64)
     incremental_ingest(spark, _batch(spark, 500, 10, "pq"), root,
@@ -1145,7 +1141,7 @@ def test_bucket_compaction_crash_repair(spark, tmp_path):
     )
 
     root = str(tmp_path / "lake_cr")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 30, "cr"), root, **kw_off)
     build_text_index(spark, root, buckets=8)
     incremental_ingest(spark, _batch(spark, 500, 10, "cs"), root,
@@ -1206,7 +1202,7 @@ def test_bucket_floor_never_rewritten_and_signal_terminates(
     )
 
     root = str(tmp_path / "lake_fb")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 16, "fb"), root, **kw_off)
     build_text_index(spark, root, buckets=4)
     base_dir = tmp_path / "lake_fb" / "text_index_b4"
@@ -1261,8 +1257,7 @@ def test_completed_maintain_resets_marker_and_due_terminates(
     )
 
     root = str(tmp_path / "lake_mr")
-    kw = dict(near_dup=True, lsh_hash_family="fast",
-              compact_above_files=2)
+    kw = dict(near_dup=True, compact_above_files=2)
     incremental_ingest(spark, _batch(spark, 0, 20, "mr"), root, **kw)
     build_text_index(spark, root, buckets=8)  # buckets > threshold 2
     incremental_ingest(spark, _batch(spark, 100, 6, "ms"), root, **kw)
@@ -1301,7 +1296,7 @@ def test_threshold_split_default_keeps_reclaim_off_small_base(
     setting). Without the split, compact_above_files=1 would fire
     per-bucket rewrites on every single fold."""
     root = str(tmp_path / "lake_ts")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 20, "ts"), root,
                        **kw_off)
     build_text_index(spark, root, buckets=4)
@@ -1348,7 +1343,7 @@ def test_fold_crosscheck_regenerates_overstating_sidecar(
     import shutil
 
     root = str(tmp_path / "lake_cc")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 16, "cc"), root,
                        **kw_off)
     build_text_index(spark, root, buckets=4)
@@ -1444,7 +1439,7 @@ def test_deferred_reclaim_keeps_signal_standing_until_drained(
     )
 
     root = str(tmp_path / "lake_dr")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 2000, "dr"), root,
                        **kw_off)
     build_text_index(spark, root, buckets=512)
@@ -1488,7 +1483,7 @@ def test_fold_lists_the_base_without_input_files(
     4 times and no frame's `inputFiles()` is called."""
     from projet_big_data_boutin_danre_spark.sources import readers
 
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     frame_cls = type(spark.range(1))  # the concrete (classic) frame
     real_list = readers._list_files
     real_input_files = frame_cls.inputFiles
@@ -1535,7 +1530,7 @@ def test_torn_build_leaves_sidecar_absent_not_stale(
     from projet_big_data_boutin_danre_spark import corpus_pipeline as cp
 
     root = str(tmp_path / "lake_tb")
-    kw_off = dict(near_dup=True, lsh_hash_family="fast")
+    kw_off = dict(near_dup=True)
     incremental_ingest(spark, _batch(spark, 0, 12, "tb"), root,
                        **kw_off)
     build_text_index(spark, root, buckets=4)

@@ -567,9 +567,7 @@ def verify_main(n_docs: int, buckets: int = 4096) -> None:
         )
 
         t0 = time.time()
-        bres = build_text_index(
-            spark, work, buckets=buckets, id_col="doc_id"
-        )
+        bres = build_text_index(spark, work, buckets=buckets)
         t_build = time.time() - t0
         cand_ck = dedup.lsh_seen_ids(
             None, seen_b, "doc_id", "text",
@@ -692,7 +690,7 @@ def verify_index_main(n_max: int, buckets: int = 4096) -> None:
             hist_docs = spark.read.parquet(f"{kd}/docs")
             seen_b = spark.read.parquet(f"{kd}/band_buckets")
             t0 = time.time()
-            build_text_index(spark, kd, buckets=buckets, id_col="doc_id")
+            build_text_index(spark, kd, buckets=buckets)
             builds[k] = round(time.time() - t0, 2)
             # 250 true near-dups of scattered history docs + 250
             # genuinely fresh docs (fresh ids, fresh alphabet)
@@ -857,7 +855,7 @@ def index_ingest_main(n_max: int, buckets: int = 4096) -> None:
     work = tempfile.mkdtemp(prefix="guard_probe_iingest_")
     ks = [1, 4, 16, 32]
     base_n = max(n_max // 32, 1)
-    kw = dict(near_dup=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True)
     results: dict[str, dict[int, float]] = {}
     builds: dict[int, float] = {}
     fadds: dict[int, int] = {}
@@ -909,8 +907,7 @@ def index_ingest_main(n_max: int, buckets: int = 4096) -> None:
             idx = f"{kd}/indexed"
             shutil.copytree(f"{kd}/base", idx)
             t0 = time.time()
-            build_text_index(spark, idx, buckets=buckets,
-                             id_col="doc_id")
+            build_text_index(spark, idx, buckets=buckets)
             builds[k] = round(time.time() - t0, 2)
             _arm(idx, replay500, "replay500_with_index")
             _arm(idx, replay5k, "replay5k_with_index")
@@ -1000,7 +997,7 @@ def fold_main(n_max: int, buckets: int = 4096) -> None:
     work = tempfile.mkdtemp(prefix="guard_probe_fold_")
     ks = [1, 4, 16, 32]
     base_n = max(n_max // 32, 1)
-    kw = dict(near_dup=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True)
     results: dict[str, dict[int, float]] = {}
     meta: dict[str, dict[int, int]] = {}
 
@@ -1017,8 +1014,7 @@ def fold_main(n_max: int, buckets: int = 4096) -> None:
                 _doc_text_unique(F.col("id")).alias("text"),
             )
             incremental_ingest(spark, hist, src, **kw)
-            build_text_index(spark, src, buckets=buckets,
-                             id_col="doc_id")
+            build_text_index(spark, src, buckets=buckets)
             novel = spark.range(5_000).select(
                 (F.col("id") + F.lit(10 * n)).alias("doc_id"),
                 _doc_text_unique(F.col("id") + F.lit(10 * n),
@@ -1158,7 +1154,7 @@ def fold_bytes_main(n_max: int, buckets: int = 512) -> None:
     work = tempfile.mkdtemp(prefix="guard_probe_foldb_")
     ks = [1, 4, 16, 32]
     base_n = max(n_max // 32, 1)
-    kw = dict(near_dup=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True)
 
     def _long_text(idc, prefix: str = "u") -> F.Column:
         parts = [
@@ -1180,8 +1176,7 @@ def fold_bytes_main(n_max: int, buckets: int = 512) -> None:
                 _long_text(F.col("id")).alias("text"),
             )
             incremental_ingest(spark, hist, src, **kw)
-            build_text_index(spark, src, buckets=buckets,
-                             id_col="doc_id")
+            build_text_index(spark, src, buckets=buckets)
             novel = spark.range(5_000).select(
                 (F.col("id") + F.lit(10 * n)).alias("doc_id"),
                 _long_text(F.col("id") + F.lit(10 * n),
@@ -1274,7 +1269,7 @@ def fold_unit_main(n_rows: int, buckets: int = 4096) -> None:
     spark = get_spark("guard_probe_fold_unit")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="guard_probe_funit_")
-    kw = dict(near_dup=True, lsh_hash_family="fast")
+    kw = dict(near_dup=True)
     out: dict[str, float] = {}
     try:
         src = f"{work}/src"
@@ -1283,7 +1278,7 @@ def fold_unit_main(n_rows: int, buckets: int = 4096) -> None:
             _doc_text_unique(F.col("id")).alias("text"),
         )
         incremental_ingest(spark, hist, src, **kw)
-        build_text_index(spark, src, buckets=buckets, id_col="doc_id")
+        build_text_index(spark, src, buckets=buckets)
         novel = spark.range(5_000).select(
             (F.col("id") + F.lit(10 * n_rows)).alias("doc_id"),
             _doc_text_unique(F.col("id") + F.lit(10 * n_rows),
