@@ -55,7 +55,7 @@ import re
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.localdf import tiny_df
@@ -628,10 +628,63 @@ def _check_ingest_knobs(
 # name would be overwritten or collide in a flag join, so it is refused.
 _RESERVED_COLUMNS = (
     "fingerprint",
-    "__contam", "__row", "__qkeep", "__blocked",  # pass A: the policy gates
+    # pass A: the exact keeper, the policy gates, an id's lead row
+    "__exact", "__contam", "__row", "__qkeep", "__blocked", "__lead",
     "__curl", "__rn_url",  # the url keeper window
-    "__ug", "__nd", "__ndr", "__md", "__prior",  # pass B: history, ids
+    # pass B: the within-batch keepers' losers (url, near-dup, raw-graph
+    # near-dup, media), the fingerprint guard, the history hits (url,
+    # near-dup, verify-rescued, media) and the id guard's prior ids
+    "__uw", "__nw", "__nwr", "__mw", "__fp",
+    "__ug", "__nd", "__ndr", "__md", "__prior",
 )
+
+
+def _with_flag(df: DataFrame, flag: str, ids: DataFrame) -> DataFrame:
+    """``df`` with the column ``flag``: true on the rows whose id is in
+    ``ids``, NULL elsewhere. ``ids`` is batch-bounded and distinct on
+    the id (a repeated id would fan rows out), so it is broadcast."""
+    return df.join(
+        F.broadcast(ids.select(_ID_COL).withColumn(flag, F.lit(True))),
+        _ID_COL,
+        "left",
+    )
+
+
+def _non_keepers(members: DataFrame) -> DataFrame:
+    """The ids a ``connected_components`` result refuses: every member
+    that is not its component's keeper (the smallest id)."""
+    return members.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias(_ID_COL)
+    )
+
+
+def _first_fired(
+    flags: list[tuple[str | None, Column]],
+) -> tuple[dict[str, Column], Column]:
+    """Bill each row to the first of ``flags`` that fired on it: the
+    row predicate of each report key (a key may own several flags; a
+    ``None`` key refuses without billing), and the predicate of the
+    rows no flag refused."""
+    billed: dict[str, Column] = {}
+    earlier = F.lit(False)
+    for key, fired in flags:
+        if key is not None:
+            first = ~earlier & fired
+            billed[key] = billed[key] | first if key in billed else first
+        earlier = earlier | fired
+    return billed, ~earlier
+
+
+def _rows(pred: Column) -> Column:
+    return F.count(F.when(pred, 1))
+
+
+def _tally(df: DataFrame, **aggs: Column) -> dict[str, int]:
+    """The aggregates ``aggs`` over the batch-sized checkpoint ``df``
+    in ONE job: a single task reads it, so the global aggregate needs
+    no exchange."""
+    row = df.coalesce(1).agg(*(a.alias(k) for k, a in aggs.items())).first()
+    return {key: int(v) for key, v in row.asDict().items()}
 
 
 def incremental_ingest(
@@ -672,9 +725,9 @@ def incremental_ingest(
     This is the corpus-side analog of the usage layer's watermark
     incremental read (streaming/watermark.py): state is the
     ``fingerprints`` layer itself — no driver state, no state store.
-    Per batch: one broadcast-or-shuffle left-anti join of the new
-    batch against the fingerprint table (scan prunes to ONE column),
-    plus a within-batch exact dedup so two copies arriving together
+    Per batch: one broadcast-or-shuffle join of the new batch
+    against the fingerprint table's keys (scan prunes to ONE column),
+    plus a within-batch exact keeper so two copies arriving together
     admit one. Append-only writes keep the layer valid under
     concurrent readers; dedup decisions are a pure function of
     content, so replaying a batch admits nothing twice (idempotent
@@ -694,13 +747,13 @@ def incremental_ingest(
     latency, not permanent. NULL
     text fingerprints to a reserved sentinel (never a hex digest), so
     NULL-content dedup works instead of NULL-propagating through the
-    anti-join and re-admitting every batch.
+    join and re-admitting every batch.
 
     At 100 TB the fingerprint layer is a ~2% sidecar of the corpus
     (32-char hex + id per doc). Pass ``catalog_prefix`` to maintain
     BOTH guard sidecars — ``<prefix>_fingerprints`` bucketed on
     ``fingerprint`` and ``<prefix>_ids`` bucketed on the id — as
-    catalog tables (sources/bucketing.py): each per-batch anti-join
+    catalog tables (sources/bucketing.py): each per-batch guard join
     then reads its sidecar bucket-aligned with NO Exchange on the
     corpus-sized side; only the small batch shuffles into bucket
     layout. Without it (default, path-only lake) both guards are
@@ -807,7 +860,7 @@ def incremental_ingest(
 
     ``bloom_guard`` (r10) maintains a Bloom sidecar
     (``<out_root>/bloom`` — operators/bloom.py, sparse 64-bit words,
-    ≤2^24 bits) in FRONT of the fingerprint anti-join: the batch is
+    ≤2^24 bits) in FRONT of the fingerprint join: the batch is
     probed map-side (k broadcast joins, zero batch exchanges) and
     only the "maybe seen" residue pays the exact join — the
     "definitely new" majority of a novel stream skips the
@@ -981,34 +1034,41 @@ def incremental_ingest(
 
     ADMISSION IN TWO FLAG PASSES: every way a batch row is refused
     is a per-row flag, so the rows are materialized twice in all, not
-    once per guard. Pass A flags the exact-deduped batch with the
-    policy gates — decontamination, the quality gates, the domain
-    blocklist — checkpoints it once (a plain checkpoint when no gate
-    is on but a url, near-dup or media guard is), reads
-    ``contaminated_skipped`` (distinct ids), ``quality_rejected`` and
-    ``domain_blocked`` (rows, billed to the first gate that fired, in
-    that order) from one aggregate, and keeps the unflagged rows. The
-    within-batch keeper drops (url window, near-dup and media
-    components) and the fingerprint guard run on that frame. Pass B
-    joins onto the survivors the hit ids of the url, near-dup and
-    media history probes, the verify-rescued ids and the id guard's
-    prior ids (each broadcast, distinct on the id), checkpoints once,
-    and one aggregate returns the history hits billed to the first
-    guard that fired (url → near-dup → media), the rescued rows the
-    url guard let through, and the count and id-set digest of the
-    admitted rows — those with no flag. The fingerprint heal
-    candidates are the prior rows no history guard flagged. An input
-    column named like the fingerprint or a flag is refused before
-    anything is written.
+    once per guard, and every refusal is billed from one aggregate
+    over one of the two checkpoints (one job each) to the first flag
+    that fired on the row. Pass A flags the batch with the exact keeper (a row
+    whose id is not the smallest id of its content), the policy gates
+    — decontamination, the quality gates, the domain blocklist — and
+    one row per id (of an id's rows the gates pass, the one with the
+    smallest fingerprint), checkpoints it, and bills ``arrived``
+    (every row), ``contaminated_skipped`` (distinct ids),
+    ``quality_rejected`` and ``domain_blocked`` (rows), in that order.
+    The within-batch keepers — url window, near-dup components, media
+    components — each read the rows no earlier keeper refused and
+    flag their losers, and the fingerprint guard flags the rows whose
+    content the lake holds. Pass B joins onto those rows the hit ids
+    of the url, near-dup and media history probes, the
+    verify-rescued ids and the id guard's prior ids (each broadcast,
+    distinct on the id), checkpoints once, and bills in the order url
+    window → near-dup window → media window → fingerprint guard → url
+    history → near-dup history → media history → id guard:
+    ``url_skipped``, ``near_dup_blocked`` and ``media_skipped`` each
+    count their window's losers plus their history's hits; next to
+    them ``near_dup_rescued``, ``video_no_duration`` and the count and
+    id-set digest of the admitted rows — those with no flag. The
+    fingerprint heal candidates are the prior rows no other flag
+    marks. An input column named like the fingerprint or a flag is
+    refused before anything is written.
 
-    Returns counts: arrived, admitted (new + first-copy),
-    healed_fingerprints (replay backfills), total_docs (from the
+    Returns counts, each refused row billed once, to the first flag in
+    the order above: arrived (every input row), admitted (new +
+    first-copy), healed_fingerprints (replay backfills), total_docs (from the
     ``_lake_stats`` running-total marker, one small JSON file —
     replay-idempotent via an admitted-id-set digest; the corpus-sized docs layer is
     never re-listed per batch, and :func:`recount_lake_docs` is the
     explicit re-sync entry point); with
-    ``near_dup`` also near_dup_blocked (batch-internal non-keepers +
-    history hits; verified when ``near_dup_verify`` is on),
+    ``near_dup`` also near_dup_blocked (window non-keepers + history
+    hits; verified when ``near_dup_verify`` is on),
     near_dup_rescued (candidates ADMITTED because verification
     cleared them — 0 with the knob off; the threshold-tuning
     signal), near_dup_skipped (pre-r16 alias of blocked) and
@@ -1228,51 +1288,46 @@ def incremental_ingest(
             )
         write_parquet(tiny_df(spark, [(mode,)], "mode string"), marker_path)
 
-    # within-batch keeper: smallest id per fingerprint (deterministic);
-    # NULL text -> sentinel so the anti-join can actually match it
-    batch = dedup.exact_dedup(new_docs, _ID_COL, _TEXT_COL).withColumn(
+    # Pass A. The exact keeper is exact_dedup's rule grouped on the
+    # fingerprint (the content is hashed once per row; NULL text groups
+    # under the sentinel, and a NULL id keeps nothing). The gates are
+    # decontamination (text.ngram_contamination, probe grams
+    # broadcast), the quality gates (the batch pipeline's Gopher and
+    # n-gram cap helpers) and the domain blocklist (NULL/unparseable
+    # urls carry no evidence). Rejected docs leave no fingerprint, so a
+    # loosened gate can admit the same content later. Every verdict is
+    # per id (decontamination) or per row, judged on the exact keepers,
+    # so evaluating all gates on one frame decides what applying them
+    # one after another would.
+    batch = new_docs.withColumn(
         "fingerprint",
         F.coalesce(stable_fingerprint(_TEXT_COL), F.lit("<null-text>")),
+    ).withColumn(
+        "__exact",
+        F.coalesce(
+            F.col(_ID_COL)
+            != F.min(_ID_COL).over(Window.partitionBy("fingerprint")),
+            F.lit(True),
+        ),
     )
-    # Pass A, the policy gates at ADMISSION: decontamination (an
-    # eval-leak n-gram hit, text.ngram_contamination with the probe
-    # grams broadcast), the quality gates (Gopher verdict and n-gram
-    # repetition caps — the batch pipeline's gate helpers) and the
-    # C4-style domain blocklist (registered-domain match on the
-    # canonical host; NULL/unparseable urls carry no evidence and
-    # pass). Rejected docs leave no fingerprint, so if a gate later
-    # loosens the same content can be admitted then — the content
-    # guard, not a gate, owns identity. Each gate is one flag on the
-    # exact-deduped batch; every verdict is per id (decontamination)
-    # or per row, never a function of the other rows, so evaluating
-    # all of them on the same frame decides what the gates applied one
-    # after another would. The payload-bearing batch is materialized
-    # ONCE here: the counters come from one aggregate over that
-    # checkpoint, billed to the first gate that fired, and every later
-    # block reads it.
+    exact = F.col("__exact")
+    keepers = batch.filter(~exact)
     # report key -> "gate fired" predicate, in billing order
     gates: dict[str, Column] = {}
-    unflagged = batch
     if decontaminate_probes is not None:
         contam_ids = text.ngram_contamination(
-            unflagged, _ID_COL, _TEXT_COL,
+            keepers, _ID_COL, _TEXT_COL,
             decontaminate_probes, _ID_COL, _TEXT_COL,
         ).select(F.col(_ID_COL)).distinct()
-        batch = batch.join(
-            F.broadcast(contam_ids.withColumn("__contam", F.lit(True))),
-            _ID_COL,
-            "left",
-        )
+        batch = _with_flag(batch, "__contam", contam_ids)
         gates["contaminated_skipped"] = F.col("__contam").isNotNull()
     if gopher_gate or max_top_ngram_frac or max_dup_ngram_frac:
-        # the quality gates judge a row, not an id: keyed by the id and
-        # the fingerprint, an id arriving twice with two texts gets a
-        # verdict per text (a fingerprint never holds a "/"). No id is
-        # NULL here: exact_dedup's semi-join on the id drops those rows
+        # a verdict per row, keyed by the id and the fingerprint (which
+        # never holds a "/"); no keeper id is NULL
         row_key = F.concat_ws(
             "/", "fingerprint", F.col(_ID_COL).cast("string")
         )
-        kept = unflagged.withColumn("__row", row_key)
+        kept = keepers.withColumn("__row", row_key)
         if max_top_ngram_frac or max_dup_ngram_frac:
             kept = apply_ngram_caps(
                 kept, "__row", _TEXT_COL,
@@ -1299,44 +1354,47 @@ def incremental_ingest(
             ),
         )
         gates["domain_blocked"] = F.col("__blocked")
-    gate_counts: dict[str, int] = {}
-    if gates:
-        flagged = batch.localCheckpoint()
-        earlier = F.lit(False)
-        counters = []
-        for key, fired in gates.items():
-            counters.append(
-                # contaminated docs count by distinct id (the first gate)
-                F.count_distinct(F.when(fired, F.col(_ID_COL)))
-                if key == "contaminated_skipped"
-                else F.count(F.when(~earlier & fired, 1))
-            )
-            earlier = earlier | fired
-        gate_counts = dict(zip(gates, map(int, flagged.agg(*counters).first())))
-        batch = flagged.filter(~earlier).drop("__contam", "__qkeep", "__blocked")
-    elif url_guard or near_dup or media_guard:
-        batch = batch.localCheckpoint()
-    # heal-coverage base (r17, ADVICE medium): the batch ids BEFORE
-    # any within-batch keeper drop, so prior_batch_ids below covers
-    # batch-composition-dependent LOSERS too — a prior id whose
-    # sidecar append crashed can re-arrive with UNCHANGED content and
-    # lose keeper selection to a different doc in THIS batch (keeper
-    # choice depends on batch composition, not content); a heal base
-    # taken after the drops would leave it out of every sidecar heal
-    # forever
+    # an id's lead row: its first row by fingerprint among those the
+    # gates pass, else among its gated exact keepers, else among the
+    # rest; a passing row other than the lead is refused
+    gated = functools.reduce(Column.__or__, gates.values(), F.lit(False))
+    batch = batch.withColumn(
+        "__lead",
+        F.row_number().over(
+            Window.partitionBy(_ID_COL).orderBy(exact, gated, "fingerprint")
+        ) == 1,
+    )
+    billed, passed = _first_fired(
+        [(None, exact), *gates.items(), (None, ~F.col("__lead"))]
+    )
+    aggs = {key: _rows(pred) for key, pred in billed.items()}
+    if "contaminated_skipped" in billed:
+        # decontamination judges an id: its rows count once
+        aggs["contaminated_skipped"] = F.count_distinct(
+            F.when(billed["contaminated_skipped"], F.col(_ID_COL))
+        )
+    batch = batch.localCheckpoint()
+    counts = _tally(batch, arrived=F.count(F.lit(1)), **aggs)
+    arrived = counts["arrived"]
+    gate_counts = {key: counts[key] for key in gates}
+    batch = batch.filter(passed).drop(
+        "__exact", "__contam", "__qkeep", "__blocked", "__lead"
+    )
+    # heal-coverage base: the ids BEFORE the within-batch keepers, so a
+    # prior id whose sidecar append crashed is healed even when it
+    # re-arrives and loses keeper selection to another doc of the batch
     heal_base = batch.select(_ID_COL)
+    columns = batch.columns
 
-    n_url_skipped = 0
+    # The within-batch keepers, in billing order: each stage reads the
+    # rows no earlier keeper refused, and its losers become one more
+    # flag column of the batch, billed by pass B's counters.
+    wb_refused = F.lit(False)
     if url_guard:
-        # RefinedWeb URL dedup at ADMISSION — the cheapest guard, run
-        # before any content hashing: one canonical-url window over
-        # the batch (id + canonical string only — the payload-bearing
-        # frame never rides the shuffle) keeps the min-id keeper per
-        # canonical url; the history probe below blocks urls already
-        # admitted. NULL/unparseable urls carry no evidence: admitted,
-        # kept out of the sidecar (the NULL-payload rule).
-        from pyspark.sql import Window as _W
-
+        # RefinedWeb URL dedup, before any content hashing: one
+        # canonical-url window over (id, canonical url) only keeps the
+        # min-id keeper per url. NULL/unparseable urls carry no
+        # evidence: admitted, kept out of the sidecar.
         uproj = batch.select(
             F.col(_ID_COL),
             urls_ops.canonicalize_url(F.col("url")).alias("__curl"),
@@ -1344,106 +1402,71 @@ def incremental_ingest(
         ranked = uproj.withColumn(
             "__rn_url",
             F.row_number().over(
-                _W.partitionBy("__curl").orderBy(F.col(_ID_COL).asc())
+                Window.partitionBy("__curl").orderBy(F.col(_ID_COL).asc())
             ),
         ).localCheckpoint()
-        losers = ranked.filter(F.col("__rn_url") > 1).select(_ID_COL)
-        n_url_losers = losers.count()
-        if n_url_losers:
-            n_url_skipped += n_url_losers
-            batch = batch.join(losers, _ID_COL, "left_anti")
+        batch = _with_flag(
+            batch, "__uw", ranked.filter(F.col("__rn_url") > 1)
+        )
+        wb_refused = F.col("__uw").isNotNull()
         # keeper url keys: probe input, sidecar append, heal source
         batch_urls = ranked.filter(F.col("__rn_url") == 1).select(
             _ID_COL, F.col("__curl").alias("canonical_url")
         )
-
-    arrived = new_docs.count()
-    n_near_skipped = 0
-    n_near_rescued = 0
     if near_dup:
-        # band keys of the exact-deduped batch, computed ONCE
-        # (checkpointed: the within-batch pair stage, the history
-        # probe, and the sidecar append all read them) — batch-sized
-        # × bands rows, never corpus-sized
+        live = batch.filter(~wb_refused)
+        # band keys, checkpointed once for the pair stage, the history
+        # probe and the sidecar append
         batch_bands = dedup.lsh_bands(
             dedup.minhash_signatures(
-                batch, _ID_COL, _TEXT_COL, _LSH_HASHES,
+                live, _ID_COL, _TEXT_COL, _LSH_HASHES,
                 _LSH_SHINGLE_K, _LSH_HASH_FAMILY,
             ),
             _LSH_HASHES, lsh_bands, _LSH_HASH_FAMILY,
         ).localCheckpoint()
-        # within-batch near-dedup: two near-dup copies arriving in the
-        # same batch admit one keeper (the same contract the exact
-        # guard gives exact copies) — pairs → components → anti-join,
-        # all batch-sized
+        # two near copies in one batch admit one keeper: pairs →
+        # components → the non-keepers' flag, all batch-sized
         pairs = dedup.minhash_lsh_pairs(
-            batch, _ID_COL, _TEXT_COL,
+            live, _ID_COL, _TEXT_COL,
             scale_profile="production", hash_family=_LSH_HASH_FAMILY,
             bands_df=batch_bands,
         )
         wb_rejected = None
         raw_pairs = pairs
         if near_dup_verify is not None:
-            # verify-before-block applies to the WITHIN-BATCH stage
-            # too (r15 — the history gate alone would leave an
-            # asymmetry): a bare band collision between two unrelated
-            # batch docs would otherwise merge their components and
-            # permanently drop one. Pair-set-sized work (two joins
-            # against a shingle projection of the batch).
-            # Both the verified set and its complement are needed for
-            # the blocked/rescued split below (r16, verdict #2) —
-            # checkpoint the raw pair set so the verify plan and the
-            # anti-join read it instead of re-running the band join.
+            # verify-before-block within the batch too, so a bare band
+            # collision cannot merge two unrelated docs' components;
+            # the raw pairs are checkpointed for the verify plan and
+            # the rejected-pair anti-join
             raw_pairs = pairs.localCheckpoint()
             verified = dedup.verify_pairs_jaccard(
-                batch, _ID_COL, _TEXT_COL, raw_pairs,
+                live, _ID_COL, _TEXT_COL, raw_pairs,
                 shingle_k=_LSH_SHINGLE_K, min_jaccard=near_dup_verify,
             ).localCheckpoint()
             wb_rejected = raw_pairs.join(
                 verified, ["id_a", "id_b"], "left_anti"
             )
             pairs = verified
-        members = dedup.connected_components(pairs)
-        batch = dedup.drop_near_duplicates(batch, _ID_COL, members)
-        # skip accounting from the members frame (pairs-sized) — the
-        # non-keepers ARE the dropped rows, so this replaces two
-        # batch-subplan counts with one job on a smaller frame
-        n_wb_blocked = members.filter(
-            F.col("node") != F.col("component")
-        ).count()
-        n_near_skipped += n_wb_blocked
+        batch = _with_flag(
+            batch, "__nw", _non_keepers(dedup.connected_components(pairs))
+        )
         if wb_rejected is not None and wb_rejected.first() is not None:
-            # rescued accounting (r16, verdict #2): docs that verify
-            # saved from a within-batch block = non-keepers under the
-            # RAW (unverified) pair graph minus non-keepers under the
-            # verified graph. Verified pairs ⊆ raw pairs, so verified
-            # components REFINE raw components and every verified
-            # non-keeper is also a raw non-keeper (a smaller id in its
-            # verified component sits in its raw component too) — the
-            # count difference is exactly the rescued-set size. The
-            # extra connected_components run is pair-set-sized
-            # (batch-bounded) and is SKIPPED on the common path: an
-            # empty rejected set (one cheap first() on the
-            # checkpointed anti-join) proves rescued = 0.
-            n_raw_nonkeep = (
-                dedup.connected_components(raw_pairs)
-                .filter(F.col("node") != F.col("component"))
-                .count()
+            # the docs verify rescued are the RAW graph's non-keepers
+            # the verified graph keeps (verified components refine raw
+            # ones); skipped when no pair was rejected
+            batch = _with_flag(
+                batch, "__nwr",
+                _non_keepers(dedup.connected_components(raw_pairs)),
             )
-            n_near_rescued += n_raw_nonkeep - n_wb_blocked
-    n_media_skipped = 0
-    n_video_no_duration = 0
+        wb_refused = wb_refused | F.col("__nw").isNotNull()
+    video_no_duration = F.lit(False)
     if media_guard:
-        # perceptual hashes of the batch payloads, computed ONCE
-        # (checkpointed: within-batch pairing, the history probe, and
-        # the sidecar append all read them) — constant width per row
-        # regardless of payload size, so payloads are read exactly
-        # once per kernel on top of pass A's one batch checkpoint.
+        live = batch.filter(~wb_refused)
+        # perceptual hashes, checkpointed once for the pair stage, the
+        # history probe and the sidecar append
         if media_routed:
-            # per-kind routing (r13): each modality's kernel sees
-            # only its own rows — a video's bytes are never hashed as
-            # an image. Other kinds / NULL payloads carry no
-            # perceptual evidence and are admitted.
+            # per-kind routing: each modality's kernel sees only its
+            # own rows; other kinds and NULL payloads are admitted
             duration = (
                 F.col("duration_ms").cast("long")
                 if "duration_ms" in batch.columns
@@ -1451,24 +1474,20 @@ def incremental_ingest(
                 # whole-stream frame (deterministic, documented)
                 else F.lit(None).cast("long")
             )
-            msrc = batch.select(
+            msrc = live.select(
                 F.col(_ID_COL),
                 F.col("kind"),
                 F.col("payload"),
                 duration.alias("duration_ms"),
             )
-            # degraded-path visibility (r13 verdict note): a video row
-            # with a NULL duration runs the one-whole-stream-frame
-            # plan, which turns the Jaccard guard into an effectively
-            # exact-payload check for that row (a re-encode admits).
-            # Deterministic and documented — but the operator needs to
-            # SEE how much of the stream runs degraded, so count it.
-            # One narrow job over the checkpointed batch projection.
-            n_video_no_duration = msrc.filter(
-                (F.col("kind") == "video")
+            # a video with no duration runs the one-frame plan, an
+            # effectively exact-payload check: pass B counts them
+            video_no_duration = (
+                ~wb_refused
+                & (F.col("kind") == "video")
                 & F.col("payload").isNotNull()
-                & F.col("duration_ms").isNull()
-            ).count()
+                & duration.isNull()
+            )
             batch_mhashes = multimodal.perceptual_hash(
                 msrc,
                 id_col=_ID_COL,
@@ -1523,16 +1542,14 @@ def incremental_ingest(
             # legacy (r12) shape — kinds=(): every payload hashes as
             # an image; the caller owns kind routing
             batch_mhashes = multimodal.perceptual_hash(
-                batch.select(_ID_COL, "payload"),
+                live.select(_ID_COL, "payload"),
                 id_col=_ID_COL,
                 payload_col="payload",
                 kinds=(),
             ).localCheckpoint()
-        # within-batch perceptual dedup: two near-identical media
-        # arriving together admit one keeper — each modality's pairs
-        # union into ONE components pass (kind-disjoint ids, so no
-        # cross-modality edges), pairs → components → anti-join, all
-        # batch-sized (the media mirror of the near_dup block above)
+        # two near-identical media in one batch admit one keeper: each
+        # modality's pairs union into ONE components pass (kind-disjoint
+        # ids), then the non-keepers' flag
         mpairs = multimodal.phash_near_dup_pairs(
             batch_mhashes,
             id_col=_ID_COL,
@@ -1555,11 +1572,11 @@ def incremental_ingest(
                     max_bucket=media_max_bucket,
                 ).select("id_a", "id_b")
             )
-        mmembers = dedup.connected_components(mpairs)
-        batch = dedup.drop_near_duplicates(batch, _ID_COL, mmembers)
-        n_media_skipped += mmembers.filter(
-            F.col("node") != F.col("component")
-        ).count()
+        batch = _with_flag(
+            batch, "__mw", _non_keepers(dedup.connected_components(mpairs))
+        )
+        wb_refused = wb_refused | F.col("__mw").isNotNull()
+    live = batch.filter(~wb_refused)  # the rows no keeper refused
     # The guard sidecars in their crash-commit order — each appends
     # after docs → ids → fingerprints and before the text-index tail,
     # so a crash anywhere before a sidecar's append leaves that batch
@@ -1616,63 +1633,41 @@ def incremental_ingest(
         keys=url_keys if url_history else None,
         guard=url_bloom, max_fill=_URL_BLOOM_MAX_FILL,
     )
-    if seen is not None and bloom_guard:
-        # Bloom pre-filter: map-side probe (k broadcast joins, zero
-        # batch exchanges); only the "maybe seen" residue pays the
-        # exact anti-join
-        definite, maybe = fp_filter.probe(batch)
-        admitted = definite.unionByName(
-            maybe.join(seen, "fingerprint", "left_anti")
-        )
-    elif seen is not None:
-        admitted = batch.join(seen, "fingerprint", "left_anti")
-    else:
-        admitted = batch
-    # pass B's flags, in billing order: each history guard's hit ids
-    # (url → near-dup → media, plus the verify-rescued ids) and the id
-    # guard's prior ids, every one batch-bounded and distinct on the id
-    pass_b: dict[str, DataFrame] = {}
+    if seen is not None:
+        # the fingerprint guard's flag, joined on the distinct sidecar
+        # keys (a key stored twice must not fan a row out)
+        fp_hits = seen.distinct().withColumn("__fp", F.lit(True))
+        if bloom_guard:
+            # Bloom pre-filter: only the "maybe seen" residue of the
+            # rows no keeper refused pays the exact join
+            definite, maybe = fp_filter.probe(live)
+            batch = definite.unionByName(
+                maybe.join(fp_hits, "fingerprint", "left"),
+                allowMissingColumns=True,
+            ).unionByName(batch.filter(wb_refused), allowMissingColumns=True)
+        else:
+            batch = batch.join(fp_hits, "fingerprint", "left")
+    # the history guards' hit ids (url → near-dup → media, plus the
+    # verify-rescued ids), each batch-bounded and distinct on the id;
+    # a hit on a row a keeper refused bills to that keeper
     if url_history:
-        # URL history probe: a ONE-column scan of the url_keys
-        # sidecar probed by the BROADCAST batch keys — the
-        # lsh_seen_ids/phash_seen_ids inversion (r15 advisor): a
-        # left-semi with the corpus-sized sidecar on the right could
-        # only broadcast-build on HISTORY, so it would shuffle the
-        # sidecar every batch; inner-joining history against the
-        # broadcast batch probes it map-side with no history shuffle
-        # or sort.
+        # the url_keys sidecar scan probed by the BROADCAST batch keys
+        # (map-side, no history shuffle); with url_bloom only the
+        # "maybe" residue probes, and a batch with none skips the scan
         probe_urls = batch_urls
         if url_bloom:
-            # Bloom front for the url guard (r15): of the five
-            # guards, this probe was the only one whose per-batch
-            # cost grows with lake size unmitigated (the sidecar SCAN
-            # — measured exponent 0.55 to 32M rows, SCALE.md §r15;
-            # the band/media probes read constant-width sidecars,
-            # the fingerprint guard already has bloom_guard). Only
-            # the "maybe" residue joins the sidecar scan — and a
-            # batch with NO maybes (the novel-stream common case)
-            # skips the corpus-sized scan entirely.
             _, probe_urls = url_filter.probe(batch_urls)
             if probe_urls.first() is None:
                 probe_urls = None
         if probe_urls is not None:
-            url_hits = (
-                url_keys()
-                .join(F.broadcast(probe_urls), "canonical_url")
-                .select(_ID_COL)
-                .distinct()
-            )
-            pass_b["__ug"] = url_hits
+            batch = _with_flag(batch, "__ug", url_keys().join(
+                F.broadcast(probe_urls), "canonical_url"
+            ).select(_ID_COL).distinct())
     seen_b = read_layer(spark, bands_path) if near_dup else None
     if seen_b is not None:
-        # history probe: batch band rows BROADCAST against a
-        # two-column scan of the persisted band layer — history is
-        # never shuffled or text-read per batch (lsh_seen_ids plan
-        # notes). batch_bands is already checkpointed and holds at
-        # most lsh_bands rows per arrived doc: under the probe's
-        # limit that bound proves no chunking is due, so the probe
-        # skips its own checkpoint + count; above it the mega-batch
-        # chunk guard stays.
+        # batch band rows BROADCAST against the band layer scan. At most
+        # lsh_bands rows per arrived doc: under the probe's limit no
+        # chunking is due, so the probe skips its checkpoint + count
         probe_limit = dedup.PROBE_MAX_BROADCAST_ROWS
         if lsh_bands * arrived <= probe_limit:
             probe_limit = None
@@ -1682,18 +1677,11 @@ def incremental_ingest(
                 max_bucket=lsh_max_bucket, max_broadcast_rows=probe_limit,
             )
         else:
-            # verify-before-block (r15, verdict #2): rescore the
-            # bounded candidate pairs with exact char-shingle Jaccard
-            # against the docs layer before blocking anything — the
-            # text-gate analog of the media probes' Hamming verify.
-            # Same shingle_k as the LSH recipe, so the threshold sits
-            # on the banding curve the recipe was tuned for.
-            # checkpoint the batch-bounded pair set: the verifier
-            # reads it three times (candidate ids both sides + the
-            # final join), and a CANDIDATE-FREE batch — the common
-            # case on a novel stream — skips the docs-layer scan
-            # entirely (one cheap first() on the materialized frame
-            # instead of planning the corpus-sized verify job)
+            # verify-before-block: rescore the candidate pairs with
+            # exact char-shingle Jaccard (the recipe's shingle_k)
+            # against the history texts. The pairs are checkpointed:
+            # the verifier reads them three times, and a candidate-free
+            # batch skips the history read
             cand_pairs = dedup.lsh_seen_ids(
                 None, seen_b, _ID_COL, _TEXT_COL, bands_df=batch_bands,
                 max_bucket=lsh_max_bucket, max_broadcast_rows=probe_limit,
@@ -1703,10 +1691,7 @@ def incremental_ingest(
                 near_hits = cand_pairs.select(F.col(_ID_COL))
             else:
                 # history texts through the bucket-pruned text index
-                # when the lake carries one (r16) — candidate buckets
-                # only, with an exact per-id fallback to the docs scan
-                # for anything the index is missing; an indexless lake
-                # keeps the (id, text)-pruned full scan
+                # when the lake has one, else the (id, text) docs scan
                 if text_idx_n is not None:
                     verify_hist = _indexed_verify_history(
                         spark, docs_path, text_idx_path, text_idx_n,
@@ -1717,7 +1702,7 @@ def incremental_ingest(
                         _ID_COL, _TEXT_COL
                     )
                 near_hits = dedup.verify_candidates_jaccard(
-                    batch,
+                    live,
                     verify_hist,
                     cand_pairs,
                     _ID_COL,
@@ -1726,23 +1711,16 @@ def incremental_ingest(
                     min_jaccard=near_dup_verify,
                     max_broadcast_chars=verify_max_broadcast_chars,
                 ).localCheckpoint()
-                # rescued accounting (r16, verdict #2): band-collision
-                # candidates that verify CLEARED — without the knob
-                # every one of these would have been blocked, so the
-                # count is the knob's measured value per batch (and
-                # the tuning signal for the Jaccard threshold). Ids
-                # only, batch-bounded; a flag of pass B that only
-                # counts (rescued rows stay admitted).
-                pass_b["__ndr"] = cand_pairs.select(F.col(_ID_COL)).join(
-                    near_hits, _ID_COL, "left_anti"
-                ).distinct()
-        pass_b["__nd"] = near_hits
+                # the candidates verify cleared: a flag that only
+                # counts (near_dup_rescued); the rows stay admitted
+                batch = _with_flag(batch, "__ndr", cand_pairs.select(
+                    F.col(_ID_COL)
+                ).join(near_hits, _ID_COL, "left_anti").distinct())
+        batch = _with_flag(batch, "__nd", near_hits)
     if media_guard:
-        # media history probes: batch hash rows BROADCAST against the
-        # constant-width media sidecars (history never shuffled or
-        # payload-read per batch) — image bands with exact Hamming
-        # verify, video frame-set Jaccard, audio offset voting. The
-        # per-modality hit sets UNION into ONE flag of pass B.
+        # batch hash rows BROADCAST against the media sidecars: image
+        # bands with exact Hamming verify, video frame-set Jaccard,
+        # audio offset voting, their hits UNIONed into one flag
         media_hits = []
         seen_m = read_layer(spark, media_bands_path)
         if seen_m is not None:
@@ -1776,9 +1754,9 @@ def incremental_ingest(
                 max_bucket=media_max_bucket,
             ))
         if media_hits:
-            pass_b["__md"] = functools.reduce(
+            batch = _with_flag(batch, "__md", functools.reduce(
                 DataFrame.unionByName, media_hits
-            ).distinct()
+            ).distinct())
     # crash-replay guard: ids already admitted are never re-appended
     # even if their fingerprint append didn't land
     prior_ids = None
@@ -1790,64 +1768,58 @@ def incremental_ingest(
         if prior_ids is not None:
             prior_ids = prior_ids.select(_ID_COL)
     if prior_ids is not None:
-        # ONE corpus-id scan per batch (r16 review #7): the id guard
-        # and every sidecar heal need only "which BATCH ids are
-        # prior" — intersect the batch ids with the prior set once
-        # into a batch-bounded checkpointed frame, and let pass B and
-        # all six heals consume the BROADCAST tiny
-        # frame instead of each re-materializing a semi-join against
-        # the corpus-sized id column (previously one docs/id-table
-        # scan per heal site per batch). The base is the pass-A batch
-        # (heal_base above), so keeper-drop losers are covered; a
-        # replay whose CHANGED content gates differently remains
-        # outside heal coverage (the documented re-crawl residual).
-        # The deduped intersection also keeps the flag join from
-        # fanning out on a prior id stored twice.
+        # ONE corpus-id scan per batch: the batch ids (distinct, pass
+        # A keeps one row per id) that are prior, checkpointed once for
+        # the id guard's flag and every sidecar heal. A replay whose
+        # CHANGED content gates differently stays outside heal coverage
+        # (the documented re-crawl residual).
         prior_batch_ids = (
-            heal_base
-            .dropDuplicates()
-            .join(prior_ids, _ID_COL, "left_semi")
-            .localCheckpoint()
+            heal_base.join(prior_ids, _ID_COL, "left_semi").localCheckpoint()
         )
-        pass_b["__prior"] = prior_batch_ids
-    # Pass B: every history flag and the id guard's prior flag join
-    # the post-fingerprint-guard frame (each side broadcast), which is
-    # checkpointed ONCE — the one materialization the counters, the
-    # appends and the heal read, so they agree on one row set even if
-    # an input file changes between jobs — and ONE aggregate returns
-    # every counter: the history hits billed to the first guard that
-    # fired (url → near-dup → media), the verify-rescued rows the url
-    # guard let through, and the count and id-set digest of the
-    # admitted rows (no flag at all).
-    flagged = admitted
-    for flag, ids in pass_b.items():
-        flagged = flagged.join(
-            F.broadcast(ids.withColumn(flag, F.lit(True))), _ID_COL, "left"
-        )
-    flagged = flagged.localCheckpoint()
+        batch = _with_flag(batch, "__prior", prior_batch_ids)
+    # Pass B: the batch with every flag is checkpointed ONCE — the one
+    # materialization the counters, the appends and the heal read, so
+    # they agree on one row set even if an input file changes between
+    # jobs — and one aggregate over it bills each row to the first flag
+    # that fired; the admitted rows are those with no flag at all.
+    flags = [c for c in batch.columns if c not in columns]
 
     def _hit(flag: str) -> Column:
-        return F.col(flag).isNotNull() if flag in pass_b else F.lit(False)
+        return F.col(flag).isNotNull() if flag in flags else F.lit(False)
 
-    url_hit, near_hit, media_hit, prior = map(
-        _hit, ("__ug", "__nd", "__md", "__prior")
+    billed, kept = _first_fired([
+        ("url_skipped", _hit("__uw")),
+        ("near_dup_blocked", _hit("__nw")),
+        ("media_skipped", _hit("__mw")),
+        (None, _hit("__fp")),
+        ("url_skipped", _hit("__ug")),
+        ("near_dup_blocked", _hit("__nd")),
+        ("media_skipped", _hit("__md")),
+        (None, _hit("__prior")),
+    ])
+    # the rows the history probes judge: no within-batch or
+    # fingerprint flag
+    history_in = ~wb_refused & ~_hit("__fp")
+    history = _hit("__ug") | _hit("__nd") | _hit("__md")
+    flagged = batch.localCheckpoint()
+    counts = _tally(
+        flagged,
+        **{key: _rows(pred) for key, pred in billed.items()},
+        # the raw-graph non-keepers the verified graph keeps, plus the
+        # history candidates verification cleared that reach the
+        # near-dup history guard
+        near_dup_rescued=_rows(_hit("__nwr") & ~_hit("__nw"))
+        + _rows(history_in & ~_hit("__ug") & _hit("__ndr")),
+        video_no_duration=_rows(video_no_duration),
+        admitted=_rows(kept),
+        digest=_id_set_digest(_ID_COL, where=kept),
     )
-    history = url_hit | near_hit | media_hit
-    kept = ~history & ~prior
-    row = flagged.agg(
-        F.count(F.when(url_hit, 1)),
-        F.count(F.when(~url_hit & near_hit, 1)),
-        F.count(F.when(~url_hit & _hit("__ndr"), 1)),
-        F.count(F.when(~url_hit & ~near_hit & media_hit, 1)),
-        F.count(F.when(kept, 1)),
-        _id_set_digest(_ID_COL, where=kept),
-    ).first()
-    n_url_skipped += row[0]
-    n_near_skipped += row[1]
-    n_near_rescued += row[2]
-    n_media_skipped += row[3]
-    n_admitted, adm_digest = int(row[4]), int(row[5])
-    admitted = flagged.filter(kept).drop(*pass_b)
+    n_admitted, adm_digest = counts["admitted"], counts["digest"]
+    admitted = flagged.filter(kept).drop(*flags)
+    # batch-bounded, so broadcast to the url-filter merge and the
+    # sidecar appends: the planner's size estimate of a checkpoint with
+    # flag joins is far too large and would shuffle those joins
+    admitted_ids = F.broadcast(admitted.select(_ID_COL))
     healable = None
     if prior_batch_ids is not None:
         # BACKFILL candidates: doc row landed but its fingerprint
@@ -1859,12 +1831,9 @@ def incremental_ingest(
         # future id). The proof is the id's ABSENCE from the
         # sidecar's own id column: a fully-landed doc always has its
         # (original) fingerprint row there. So heal = prior rows no
-        # history guard flagged, anti-joined against the sidecar ids
-        # — empty on every healthy batch, and exact for partial
+        # other flag marks, anti-joined against the sidecar ids —
+        # empty on every healthy batch, and exact for partial
         # fingerprint appends.
-        # dropDuplicates: the same id can arrive twice in ONE batch
-        # with different content (exact_dedup keys on content, not
-        # id); both rows are legitimate heal candidates.
         fp_ids = None
         if bucketed and spark.catalog.tableExists(fp_table):
             fp_ids = spark.table(fp_table).select(_ID_COL)
@@ -1872,11 +1841,9 @@ def incremental_ingest(
             fp_ids = read_layer(spark, fp_path)
             if fp_ids is not None:
                 fp_ids = fp_ids.select(_ID_COL)
-        healable = (
-            flagged.filter(prior & ~history)
-            .select("fingerprint", _ID_COL)
-            .dropDuplicates()
-        )
+        healable = flagged.filter(
+            history_in & ~history & _hit("__prior")
+        ).select("fingerprint", _ID_COL)
         if fp_ids is not None:
             healable = healable.join(fp_ids, _ID_COL, "left_anti")
     # sidecar heals, one per guard sidecar in commit order: same proof
@@ -2265,7 +2232,7 @@ def incremental_ingest(
         fp_filter.merge(admitted)
         if url_guard:
             url_filter.merge(
-                batch_urls.join(admitted.select(_ID_COL), _ID_COL, "left_semi")
+                batch_urls.join(admitted_ids, _ID_COL, "left_semi")
             )
         if line_census:
             # census BEFORE the docs append: a crash after this lands
@@ -2315,7 +2282,7 @@ def incremental_ingest(
         for s in sidecars:
             write_parquet(
                 s.rows.join(
-                    admitted.select(F.col(_ID_COL).alias(s.id_col)),
+                    admitted_ids.withColumnRenamed(_ID_COL, s.id_col),
                     s.id_col,
                     "left_semi",
                 ),
@@ -2363,19 +2330,19 @@ def incremental_ingest(
         # signal for tuning its Jaccard threshold (always 0 with the
         # knob off). ``near_dup_skipped`` stays as the pre-r16 alias
         # of blocked so existing consumers keep working.
-        out["near_dup_skipped"] = n_near_skipped
-        out["near_dup_blocked"] = n_near_skipped
-        out["near_dup_rescued"] = n_near_rescued
+        out["near_dup_skipped"] = counts["near_dup_blocked"]
+        out["near_dup_blocked"] = counts["near_dup_blocked"]
+        out["near_dup_rescued"] = counts["near_dup_rescued"]
         out["healed_bands"] = healed["healed_bands"]
     if media_guard:
-        out["media_skipped"] = n_media_skipped
+        out["media_skipped"] = counts["media_skipped"]
         out["healed_media"] = healed["healed_media"]
         if media_routed:
             out["healed_video"] = healed["healed_video"]
             out["healed_audio"] = healed["healed_audio"]
-            out["video_no_duration"] = n_video_no_duration
+            out["video_no_duration"] = counts["video_no_duration"]
     if url_guard:
-        out["url_skipped"] = n_url_skipped
+        out["url_skipped"] = counts["url_skipped"]
         out["healed_urls"] = healed["healed_urls"]
     out.update(url_report)
     if "domain_blocked" in gate_counts:
