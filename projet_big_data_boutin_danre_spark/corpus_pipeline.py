@@ -1071,8 +1071,7 @@ def incremental_ingest(
     hits; verified when ``near_dup_verify`` is on),
     near_dup_rescued (candidates ADMITTED because verification
     cleared them — 0 with the knob off; the threshold-tuning
-    signal), near_dup_skipped (pre-r16 alias of blocked) and
-    healed_bands; with ``media_guard``
+    signal) and healed_bands; with ``media_guard``
     also media_skipped and healed_media; with ``line_census``
     also census_lines (keys appended this call); with any quality
     gate on, also quality_rejected; with ``bloom_guard``, also
@@ -2328,9 +2327,7 @@ def incremental_ingest(
         # counts candidates ADMITTED because ``near_dup_verify``
         # cleared them — the knob's measured value per batch and the
         # signal for tuning its Jaccard threshold (always 0 with the
-        # knob off). ``near_dup_skipped`` stays as the pre-r16 alias
-        # of blocked so existing consumers keep working.
-        out["near_dup_skipped"] = counts["near_dup_blocked"]
+        # knob off).
         out["near_dup_blocked"] = counts["near_dup_blocked"]
         out["near_dup_rescued"] = counts["near_dup_rescued"]
         out["healed_bands"] = healed["healed_bands"]

@@ -998,7 +998,7 @@ def test_near_dup_ingest_blocks_perturbed_recrawls(spark, tmp_path):
     r1 = incremental_ingest(
         spark, _near_docs(spark, [(1, _BASE)]), root, near_dup=True
     )
-    assert r1["admitted"] == 1 and r1["near_dup_skipped"] == 0
+    assert r1["admitted"] == 1 and r1["near_dup_blocked"] == 0
     # batch 2: a one-word perturbation (near-dup of history), plus an
     # unrelated doc, plus TWO near-identical new docs (within-batch)
     other = (
@@ -1022,7 +1022,7 @@ def test_near_dup_ingest_blocks_perturbed_recrawls(spark, tmp_path):
     # 10 blocked against history; 11/12 cluster within the batch and
     # admit one keeper
     assert r2["admitted"] == 1
-    assert r2["near_dup_skipped"] == 2
+    assert r2["near_dup_blocked"] == 2
     assert r2["total_docs"] == 2
     # replay of batch 2 admits nothing and heals nothing
     r2b = incremental_ingest(
@@ -1097,7 +1097,7 @@ def test_bands_heal_covers_within_batch_keeper_losers(spark, tmp_path):
         near_dup=True,
     )
     assert r["admitted"] == 1  # the wolf near-dup, via the blind window
-    assert r["near_dup_skipped"] == 1  # id 5 lost keeper selection
+    assert r["near_dup_blocked"] == 1  # id 5 lost keeper selection
     assert r["healed_bands"] == 1  # id 5 bands backfilled anyway
     # sight restored: a third perturbation is blocked by the healed
     # layer (id 5 bands) without needing the id-1 bands to match
@@ -1107,7 +1107,7 @@ def test_bands_heal_covers_within_batch_keeper_losers(spark, tmp_path):
         root,
         near_dup=True,
     )
-    assert r2["admitted"] == 0 and r2["near_dup_skipped"] == 1
+    assert r2["admitted"] == 0 and r2["near_dup_blocked"] == 1
 
 
 def _media_docs(spark, rows):
@@ -1283,7 +1283,7 @@ def test_all_three_admission_guards_compose(spark, tmp_path):
     )
     r2 = incremental_ingest(spark, b2, root, **kw)
     assert r2["admitted"] == 1  # only doc 12
-    assert r2["near_dup_skipped"] == 1  # doc 10
+    assert r2["near_dup_blocked"] == 1  # doc 10
     assert r2["media_skipped"] == 1  # doc 11
     docs = {
         row["doc_id"]
@@ -1472,7 +1472,7 @@ def test_near_dup_ingest_composes_with_catalog_mode(spark, tmp_path):
             catalog_prefix=px,
             near_dup=True,
         )
-        assert r2["admitted"] == 1 and r2["near_dup_skipped"] == 1
+        assert r2["admitted"] == 1 and r2["near_dup_blocked"] == 1
         mode = spark.read.parquet(f"{root}/_lake_mode").head()["mode"]
         assert mode.startswith("catalog:") and "+lsh:" in mode
     finally:
@@ -2141,9 +2141,8 @@ def test_near_dup_verify_before_block(spark, tmp_path):
     lake0 = str(tmp_path / "lake_noverify")
     incremental_ingest(spark, hist, lake0, **kw)
     r0 = incremental_ingest(spark, probe, lake0, **kw)
-    assert r0["admitted"] == 0 and r0["near_dup_skipped"] == 1
-    # r16 verdict #2 split: blocked mirrors skipped; nothing can be
-    # rescued with the verify knob off
+    assert r0["admitted"] == 0
+    # nothing can be rescued with the verify knob off
     assert r0["near_dup_blocked"] == 1 and r0["near_dup_rescued"] == 0
     # verify ON: the same doc is rescored against the real text and
     # ADMITTED; a true near-duplicate is still blocked
@@ -2151,7 +2150,7 @@ def test_near_dup_verify_before_block(spark, tmp_path):
     kwv = dict(kw, near_dup_verify=0.5)
     incremental_ingest(spark, hist, lake1, **kwv)
     r1 = incremental_ingest(spark, probe, lake1, **kwv)
-    assert r1["admitted"] == 1 and r1["near_dup_skipped"] == 0
+    assert r1["admitted"] == 1
     # r16 verdict #2: the admitted collider is counted as RESCUED —
     # a band-collision candidate that verification cleared
     assert r1["near_dup_blocked"] == 0 and r1["near_dup_rescued"] == 1
@@ -2160,12 +2159,12 @@ def test_near_dup_verify_before_block(spark, tmp_path):
     )
     assert _jac(base, base + " thirteen") >= 0.5
     r2 = incremental_ingest(spark, true_dup, lake1, **kwv)
-    assert r2["admitted"] == 0 and r2["near_dup_skipped"] == 1
+    assert r2["admitted"] == 0
     # a verified true block is blocked, not rescued
     assert r2["near_dup_blocked"] == 1 and r2["near_dup_rescued"] == 0
     # replay stays idempotent through the verify path
     r1b = incremental_ingest(spark, probe, lake1, **kwv)
-    assert r1b["admitted"] == 0 and r1b["near_dup_skipped"] == 0
+    assert r1b["admitted"] == 0
     # the replay's collider is caught by the EXACT guard upstream, so
     # the near-dup stage neither blocks nor rescues anything
     assert r1b["near_dup_blocked"] == 0 and r1b["near_dup_rescued"] == 0
@@ -2180,13 +2179,12 @@ def test_near_dup_verify_before_block(spark, tmp_path):
     r_off = incremental_ingest(
         spark, wb, str(tmp_path / "lake_wb_off"), **kw
     )
-    assert r_off["near_dup_skipped"] >= 2  # collider AND true dup drop
+    assert r_off["near_dup_blocked"] >= 2  # collider AND true dup drop
     assert r_off["near_dup_rescued"] == 0
     r_on = incremental_ingest(
         spark, wb, str(tmp_path / "lake_wb_on"), **kwv
     )
     assert r_on["admitted"] == 2  # base + collider; true dup dropped
-    assert r_on["near_dup_skipped"] == 1
     # within-batch split (r16, verdict #2): the true dup is the one
     # verified block; the collider — a raw-graph non-keeper that the
     # verified graph keeps — is the one rescue
@@ -2272,7 +2270,7 @@ def test_maintain_lake_compaction_sweep(spark, tmp_path):
         root,
         **kw,
     )
-    assert r2["url_skipped"] == 1 and r2["near_dup_skipped"] >= 1
+    assert r2["url_skipped"] == 1 and r2["near_dup_blocked"] >= 1
     assert r2["admitted"] == 1 and r2["total_docs"] == 16
     # idempotent: a second sweep finds nothing over the threshold
     m2 = maintain_lake(spark, root, compact_above_files=64)
@@ -3140,7 +3138,7 @@ def test_keeper_stability_under_incremental_cluster_growth(spark, tmp_path):
         root,
         near_dup=True,
     )
-    assert r3["admitted"] == 0 and r3["near_dup_skipped"] == 1
+    assert r3["admitted"] == 0 and r3["near_dup_blocked"] == 1
     kept = {
         r["doc_id"]
         for r in spark.read.parquet(f"{root}/docs").select("doc_id").collect()
@@ -3161,7 +3159,7 @@ def test_keeper_stability_under_incremental_cluster_growth(spark, tmp_path):
         root,
         near_dup=True,
     )
-    assert r4["admitted"] == 0 and r4["near_dup_skipped"] == 2
+    assert r4["admitted"] == 0 and r4["near_dup_blocked"] == 2
     assert {
         r["doc_id"]
         for r in spark.read.parquet(f"{root}/docs").select("doc_id").collect()
@@ -4145,7 +4143,7 @@ def test_verify_max_broadcast_chars_forwards_through_faces(
     root = str(tmp_path / "lake_bc")
     incremental_ingest(spark, hist, root, **kw)
     r = incremental_ingest(spark, probe, root, **kw)
-    assert r["near_dup_skipped"] == 1  # the verify stage really ran
+    assert r["near_dup_blocked"] == 1  # the verify stage really ran
     assert captured["max_broadcast_chars"] == 123_456
 
 

@@ -1,7 +1,8 @@
-"""Ingest admission counters: the reserved input columns, and which
+"""Ingest admission counters: the reserved input columns, which
 counter each refused row is billed to when several gates or guards
-fire on it (pass A: the policy gates; pass B: the history guards and
-the id guard of ``incremental_ingest``)."""
+fire on it (pass A: the policy gates; pass B: the within-batch
+keepers, the fingerprint guard, the history guards and the id guard of
+``incremental_ingest``), and one admitted row per id."""
 
 from __future__ import annotations
 
@@ -151,11 +152,69 @@ def test_history_guards_bill_each_row_to_the_first_guard(spark, tmp_path):
     ])
     assert rep == {
         "arrived": 3, "admitted": 1, "healed_fingerprints": 0,
-        "total_docs": 4, "near_dup_skipped": 0, "near_dup_blocked": 0,
-        "near_dup_rescued": 1, "healed_bands": 1, "url_skipped": 1,
-        "healed_urls": 0,
+        "total_docs": 4, "near_dup_blocked": 0, "near_dup_rescued": 1,
+        "healed_bands": 1, "url_skipped": 1, "healed_urls": 0,
     }
     assert list(rep)[4:] == [
-        "near_dup_skipped", "near_dup_blocked", "near_dup_rescued",
-        "healed_bands", "url_skipped", "healed_urls",
+        "near_dup_blocked", "near_dup_rescued", "healed_bands",
+        "url_skipped", "healed_urls",
     ]
+
+
+def test_an_id_is_admitted_once_per_batch(spark, tmp_path):
+    """Two rows of one id that both pass admit one doc; of an id's
+    passing rows with different texts, the smallest fingerprint
+    wins."""
+    import hashlib
+
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        incremental_ingest,
+    )
+
+    root = str(tmp_path / "lake")
+    twice = [(1, "same words here"), (1, "same words here"),
+             (2, "other text entirely")]
+    rep = incremental_ingest(
+        spark, spark.createDataFrame(twice, "doc_id long, text string"), root
+    )
+    assert (rep["arrived"], rep["admitted"], rep["total_docs"]) == (3, 2, 2)
+    for layer in ("docs", "fingerprints"):
+        assert spark.read.parquet(f"{root}/{layer}").count() == 2
+    texts = ["alpha words", "beta words"]
+    rows = [(3, t) for t in texts]
+    rep = incremental_ingest(
+        spark, spark.createDataFrame(rows, "doc_id long, text string"), root
+    )
+    assert (rep["arrived"], rep["admitted"]) == (2, 1)
+    kept = min(texts, key=lambda t: hashlib.md5(t.encode()).hexdigest())
+    assert [r["text"] for r in spark.read.parquet(f"{root}/docs")
+            .filter("doc_id = 3").collect()] == [kept]
+
+
+def test_keeper_losers_bill_before_the_fingerprint_guard(spark, tmp_path):
+    """A url-window loser whose content the lake already holds counts
+    under url_skipped: the within-batch keepers bill before the
+    fingerprint guard."""
+    from projet_big_data_boutin_danre_spark.corpus_pipeline import (
+        incremental_ingest,
+    )
+
+    _, _, prose = _writer(7)
+    a_text, b_text = prose(), prose()
+    root = str(tmp_path / "lake")
+    schema = "doc_id long, text string, url string"
+
+    def ingest(rows):
+        return incremental_ingest(
+            spark, spark.createDataFrame(rows, schema), root,
+            url_guard=True, near_dup=True,
+        )
+
+    ingest([(1, a_text, "https://a.ex/1")])
+    rep = ingest([
+        (4, b_text, "https://b.ex/4"),
+        (5, a_text, "https://b.ex/4"),  # loses the url AND was seen
+    ])
+    assert (rep["admitted"], rep["url_skipped"], rep["near_dup_blocked"]) == (
+        1, 1, 0
+    )

@@ -97,7 +97,7 @@ def test_near_dup_ingest_heals_missing_bands_on_replay(spark, tmp_path):
         root,
         near_dup=True,
     )
-    assert r2["admitted"] == 0 and r2["near_dup_skipped"] == 1
+    assert r2["admitted"] == 0 and r2["near_dup_blocked"] == 1
 
 
 def test_streaming_ingest_exposes_full_batch_knob_surface():

@@ -18,13 +18,7 @@ from projet_big_data_boutin_danre_spark.corpus_pipeline import (
 from projet_big_data_boutin_danre_spark.functions.localdf import tiny_df
 from projet_big_data_boutin_danre_spark.operators import dedup
 
-
-def _jobs_launched(spark, fn):
-    """(fn's result, Spark jobs submitted while it ran)."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    out = fn()
-    return out, dag.nextJobId() - before
+from conftest import _jobs_launched
 
 
 def _docs(spark, lo, n):
@@ -146,3 +140,29 @@ def test_near_dup_probe_does_not_rematerialize_bands(
         chunked = ingest("chunked")
     assert limits == [4]
     assert chunked[:2] == (report, ids)
+
+
+def test_steady_near_dup_batch_job_ceiling(spark, tmp_path):
+    """A near-dup batch on a lake with history, carrying one near copy
+    of its own doc, bills every refusal from the counters the two flag
+    passes observe on their checkpoints: at most 32 Spark jobs.
+    Before the keepers became flags it took 39 jobs: ``arrived``
+    and the window's non-keepers were counted by jobs of their own."""
+    root = str(tmp_path / "lake")
+    incremental_ingest(spark, _docs(spark, 0, 6), root, near_dup=True)
+    twin = spark.createDataFrame(
+        [(200, " ".join(f"md100w{j}" for j in range(12)) + " extra")],
+        "doc_id long, text string",
+    )
+    batch = _docs(spark, 100, 3).unionByName(twin)
+    report, jobs = _jobs_launched(
+        spark, lambda: incremental_ingest(spark, batch, root, near_dup=True)
+    )
+    assert {k: report[k] for k in (
+        "arrived", "admitted", "total_docs", "near_dup_blocked",
+        "near_dup_rescued",
+    )} == {
+        "arrived": 4, "admitted": 3, "total_docs": 9,
+        "near_dup_blocked": 1, "near_dup_rescued": 0,
+    }
+    assert jobs <= 32

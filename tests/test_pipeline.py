@@ -16,6 +16,8 @@ import pytest
 from projet_big_data_boutin_danre_spark import pipeline
 from projet_big_data_boutin_danre_spark.sources.sinks import es_actions
 
+from conftest import _jobs_launched
+
 RUN_DAY = "20250115"
 
 DVF_HEADER = [
@@ -360,13 +362,6 @@ def test_extract_dvf_feeds_transform(spark, datalake, tmp_path):
     assert pipeline.extract_dvf(lay2, src_url).skipped
     fmt = pipeline.transform_dvf(spark, lay2)
     assert fmt.count() == 7
-
-
-def _jobs_launched(spark, fn):
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    out = fn()
-    return out, dag.nextJobId() - before
 
 
 def test_dag_layers_reopen_as_inferred(spark, datalake, pipeline_run):

@@ -28,20 +28,14 @@ from projet_big_data_boutin_danre_spark.sources.sinks import (
     write_parquet,
 )
 
+from conftest import _jobs_launched
+
 
 def _copy_tables(sf_dir, tmp_path, *names):
     """Writable copies of testdata tables (the originals are read-only)."""
     for n in names:
         shutil.copy(f"{sf_dir}/{n}.parquet", tmp_path / f"{n}.parquet")
     return str(tmp_path)
-
-
-def _jobs_launched(spark, fn):
-    """(fn's result, Spark jobs submitted while it ran)."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    out = fn()
-    return out, dag.nextJobId() - before
 
 
 def test_load_table_second_open_launches_no_job(spark, sf0001, tmp_path):

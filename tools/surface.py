@@ -6,10 +6,11 @@ lake's entry points.
 Run it from the repository root or from anywhere else: paths resolve
 from this file. Prints the ``wc -l`` line count and the count of
 non-blank, non-comment lines of the package plus ``__spark_entry__.py``,
-then, for each public lake entry point of ``corpus_pipeline``, its
-knob count (the parameters with a default value, read with
-``inspect.signature``) and the total. Importing the package starts no
-Spark session.
+the source line count of the two heaviest functions (``HEAVY``, read
+with ``inspect.getsourcelines``), then, for each public lake entry
+point of ``corpus_pipeline``, its knob count (the parameters with a
+default value, read with ``inspect.signature``) and the total.
+Importing the package starts no Spark session.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ sys.path.insert(0, ROOT)
 from projet_big_data_boutin_danre_spark import corpus_pipeline as cp  # noqa: E402
 
 PACKAGE = "projet_big_data_boutin_danre_spark"
+HEAVY = (cp.incremental_ingest, cp.maintain_lake)
 ENTRY_POINTS = (
     cp.incremental_ingest,
     cp.streaming_ingest,
@@ -63,6 +65,8 @@ def main() -> None:
     total, code = line_counts(source_files())
     print(f"lines (wc -l): {total}")
     print(f"lines (non-blank, non-comment): {code}")
+    for fn in HEAVY:
+        print(f"lines {fn.__name__}: {len(inspect.getsourcelines(fn)[0])}")
     counts = {fn.__name__: knobs(fn) for fn in ENTRY_POINTS}
     for name, n in counts.items():
         print(f"knobs {name}: {n}")
